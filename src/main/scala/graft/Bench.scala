@@ -84,7 +84,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   // Foreign-CPU attribution lives in [[graft.util.ProcCpu]] (shared with
-  // the QueryProbe/DetectProbe adjudication mains). History of why it is
+  // the QueryProbe adjudication main). History of why it is
   // /proc-delta based and why reaped children count as own: a first-cut
   // loadavg−ownCpuEMA estimate false-flagged six clean rows (our own
   // I/O-blocked threads count in loadavg but burn no CPU time), and the

@@ -3,7 +3,6 @@ package graft
 /** One-query diagnostic runner: time a single `SparkEntry.queries` entry
   * against a testdata dir without the full Bench/Verify sweep — for
   * attributing a single row's regression (pair with the env-gated
-  * diagnosis hooks: SPARK_GRAFT_CC_DEBUG sweep counts,
   * SPARK_GRAFT_POLL_DEBUG poll series).
   *
   * Usage: tools/run.sh graft.QueryProbe <name> [sfDir] [trials]

@@ -864,9 +864,7 @@ object Dedup {
       if (nodes <= bGate) broadcast(df) else df
     var changed = 1L
     var it = 0
-    val ccDebug = sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1")
     while (changed > 0 && it < maxIters) {
-      val t0 = System.nanoTime()
       // pointer links: id↔label rows folded into the edge list make the
       // single neighbor-min aggregate below ALSO perform pointer jumping
       // (label(v) picks up label(label(v)) through the v→label(v) row).
@@ -920,25 +918,19 @@ object Dedup {
       val next = barrier(pre) // the sweep's ONE barrier (eager: truncates lineage)
       // fixpoint test over the just-checkpointed blocks: no join, no
       // shuffle — a local scan comparing the carried `old` column
-      val t1 = System.nanoTime()
       m.unpersist(false)
       m2.unpersist(false)
       changed = next.filter(col("label") =!= col("old")).count()
-      if (ccDebug)
-        System.err.println(f"dupClusters sweep $it: checkpoint ${(t1 - t0) / 1e9}%.2f s, " +
-          f"count ${(System.nanoTime() - t1) / 1e9}%.2f s, changed $changed")
       releaseCheckpoint(labelsCk) // real block release, not the CacheManager no-op
       labelsCk = next
       labels = statsReset(next).select(col("id"), col("label"))
       it += 1
     }
     releaseCheckpoint(p0) // the pair graph: every sweep has scanned its last
-    // diagnosis hook (cf. the poll-series hook in Bench): d7's wall time
-    // is sweeps × per-sweep job cost, so attributing a regression needs
-    // the sweep count, which nothing else surfaces
-    if (sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1"))
-      System.err.println(s"dupClusters: converged in $it sweeps")
-    lastSweeps = it // bench telemetry (sf1_d7_sweeps), same diagnostic role
+    // bench telemetry (sf1_d7_sweeps): d7's wall time is sweeps ×
+    // per-sweep job cost, so attributing a regression needs the sweep
+    // count, which nothing else surfaces
+    lastSweeps = it
     if (changed != 0) {
       releaseCheckpoint(labelsCk) // don't leak the last sweep's checkpoint blocks
       throw new IllegalArgumentException(

@@ -59,12 +59,9 @@ object Similarity {
       .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
     val c = corpus.select(col(idCol).as("c_id"), col(vecCol).as("cv"))
       .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
-    val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
+    rankTopK(c.join(broadcast(q), col("q_id") =!= col("c_id"))
       .withColumn("cos", cosine(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rank"))
+      .select(col("q_id"), col("c_id"), col("cos")), k)
   }
 
   /** Near-duplicate embedding pairs above a cosine threshold, blocked on a
@@ -316,67 +313,69 @@ object Similarity {
     * probing their `nprobe` nearest cells. Exact within probed cells; a
     * query touches ~nprobe/C of the corpus.
     *
-    * Scale shape: the centroid table is broadcast (C is small by
-    * construction), corpus cell assignment is a map-side `max_by`
-    * aggregation — no window, no sort — and the candidate join is a
-    * broadcast hash join on the cell id. Complements `lshTopKMulti`:
-    * IVF wins when the corpus is clustered (cells match density), LSH
-    * when it isn't.
+    * This is [[buildIvfIndex]] then [[ivfTopKIndexed]] over a float32
+    * layout that is never written: the same seeding and Lloyd refine
+    * ([[trainCentroids]]), the same map-only cell assignment
+    * ([[assignCells]]), the same probe ([[probeCells]]) and the same
+    * float scorer ([[scoreFloat]]) — so it answers row for row like an
+    * index built from the same corpus (IvfIndexSpec pins it). Corpus ids
+    * must be unique (each row is its own candidate); query ids must be
+    * unique too, and a duplicate fails the probe by name. Complements
+    * `lshTopKMulti`: IVF wins when the corpus is clustered (cells match
+    * density), LSH when it isn't.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               centroidPred: String, nprobe: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfTopKFrom(queries, corpus, k,
-      corpus.filter(centroidPred).select(col(idCol).as("cid"), col(vecCol).as("cv0")),
+    rankTopK(ivfRefinedScored(queries, corpus, centroidPred, nprobe, dim = 0,
+      refineIters = 0, idCol = idCol, vecCol = vecCol), k)
+
+  /** IVF-flat with Lloyd-refined centroids: seed cells from `centroidPred`
+    * (a sampling predicate — the init every IVF build starts from), run
+    * `refineIters` refinement sweeps, then query as [[ivfTopK]]. Each
+    * sweep is one corpus pass (map-only assignment, one shuffle for the
+    * cell means); one sweep is usually enough to snap sampled seeds onto
+    * cluster structure when the corpus has any — see PlantedClusters for
+    * the gate fixture.
+    */
+  def ivfTopKRefined(queries: DataFrame, corpus: DataFrame, k: Int,
+                     centroidPred: String, nprobe: Int, dim: Int,
+                     refineIters: Int = 1, gridScale: Int = 1024,
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    rankTopK(ivfRefinedScored(queries, corpus, centroidPred, nprobe, dim,
+      refineIters, gridScale, idCol, vecCol), k)
+
+  /** The scored candidate relation behind [[ivfTopK]] and
+    * [[ivfTopKRefined]] — one (q_id, c_id, cos) row per (query, corpus
+    * vector in a probed cell) pair. Exposed, like [[lshMultiScored]], so
+    * recall gates can log the candidate fraction alongside the recall
+    * they report. `refineIters = 0` keeps the seeds (`dim` is then
+    * unused).
+    */
+  def ivfRefinedScored(queries: DataFrame, corpus: DataFrame,
+                       centroidPred: String, nprobe: Int, dim: Int,
+                       refineIters: Int = 1, gridScale: Int = 1024,
+                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val cents = collectCentEntries(trainCentroids(corpus, centroidPred, dim,
+      refineIters, gridScale, idCol, vecCol))
+    val (qCells, qLoc, _) = probeCells(queries.sparkSession, queries, cents,
       nprobe, idCol, vecCol)
+    scoreFloat(assignCells(corpus, cents, idCol, vecCol, Nil), qCells, qLoc)
+  }
 
-  /** IVF-flat top-k against an explicit centroid table (cid, cv0) — the
-    * entry point once centroids come from [[refineCentroids]] instead of a
-    * sampling predicate.
+  /** Coarse-quantizer training shared by [[buildIvfIndex]] and the
+    * in-memory path: seed centroids at the `centroidPred` rows of `train`,
+    * then run `refineIters` [[refineCentroids]] sweeps over `train`.
+    * Returns the (cid, cv0) relation, unmaterialized.
     */
-  def ivfTopKFrom(queries: DataFrame, corpus: DataFrame, k: Int,
-                  centroids: DataFrame, nprobe: Int,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    rankTopK(ivfScoredFrom(queries, corpus, centroids, nprobe, idCol, vecCol), k)
-
-  /** The scored candidate relation behind [[ivfTopKFrom]] — one
-    * (q_id, c_id, cos) row per (query, corpus vector in a probed cell)
-    * pair. Exposed, like [[lshMultiScored]], so recall gates can log the
-    * candidate fraction alongside the recall they report.
-    */
-  def ivfScoredFrom(queries: DataFrame, corpus: DataFrame,
-                    centroids: DataFrame, nprobe: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val dot = nativeDot(corpus)
-    val cents = broadcast(centroids
-      .select(col("cid"), col("cv0"))
-      .withColumn("cn0", sqrt(dot(col("cv0"), col("cv0")))))
-
-    val c = corpus.select(col(idCol).as("c_id"), col(vecCol).as("v"))
-      .withColumn("n", sqrt(dot(col("v"), col("v"))))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("v"))
-      .withColumn("n", sqrt(dot(col("v"), col("v"))))
-
-    // argmax centroid per corpus vector: max cosine, min-cid tie-break —
-    // a partial-aggregating max_by, not a window (no per-key sort at scale)
-    val cCell = c.crossJoin(cents)
-      .withColumn("ccos", cosine(dot(col("v"), col("cv0")), col("n"), col("cn0")))
-      .groupBy(col("c_id"))
-      .agg(first(col("v")).as("v"), first(col("n")).as("n"),
-        max_by(col("cid"), struct(col("ccos"), (-col("cid")).as("nc"))).as("cell"))
-
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cid").asc)
-    val qCells = q.crossJoin(cents)
-      .withColumn("ccos", cosine(dot(col("v"), col("cv0")), col("n"), col("cn0")))
-      .withColumn("crn", row_number().over(wq))
-      .filter(col("crn") <= nprobe)
-      .select(col("q_id"), col("cid").as("cell"))
-
-    cCell.join(broadcast(qCells), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .join(broadcast(q.select(col("q_id"), col("v").as("qv"), col("n").as("qn"))), Seq("q_id"))
-      .withColumn("cos", cosine(dot(col("qv"), col("v")), col("qn"), col("n")))
-      .select(col("q_id"), col("c_id"), col("cos"))
+  private def trainCentroids(train: DataFrame, centroidPred: String, dim: Int,
+                             refineIters: Int, gridScale: Int,
+                             idCol: String, vecCol: String): DataFrame = {
+    var cents = train.filter(centroidPred)
+      .select(col(idCol).as("cid"), col(vecCol).as("cv0"))
+    for (_ <- 0 until refineIters)
+      cents = refineCentroids(train, cents, dim, gridScale, idCol, vecCol)
+    cents
   }
 
   /** Build and PERSIST an IVF index: Lloyd-refined centroids plus every
@@ -415,6 +414,10 @@ object Similarity {
     * quantization is `floor(x/s + 0.5)` — deterministic and
     * engine-portable, so the quantized index is still exact-oracle
     * checkable (`s14_ivf_q8_indexed`).
+    *
+    * Contract: corpus ids (`idCol`) are unique. Every row is stored as
+    * its own candidate, so a repeated id is returned once per copy; the
+    * build does not spend a job checking it.
     */
   def buildIvfIndex(corpus: DataFrame, centroidPred: String, dim: Int,
                     path: String, refineIters: Int = 1, gridScale: Int = 1024,
@@ -435,10 +438,8 @@ object Similarity {
       if (trainFraction >= 1.0) corpus
       else graft.ops.Sampling.sampleFraction(corpus, col(idCol), trainSalt,
         trainFraction)
-    var cents = train.filter(centroidPred)
-      .select(col(idCol).as("cid"), col(vecCol).as("cv0"))
-    for (_ <- 0 until refineIters)
-      cents = refineCentroids(train, cents, dim, gridScale, idCol, vecCol)
+    val cents = trainCentroids(train, centroidPred, dim, refineIters,
+      gridScale, idCol, vecCol)
     // materialize the refinement ONCE (eager local checkpoint of the tiny
     // centroid relation), write the store from the materialized rows, and
     // hand the same rows to the assignment sweep below — round 13: the
@@ -484,7 +485,7 @@ object Similarity {
     }
     // record the stored form durably BEFORE any data lands: appends
     // dispatch on this manifest, never on data files deletes can empty
-    writeStorageManifest(corpus.sparkSession, path, storage)
+    writeMetaFile(corpus.sparkSession, path, "storage", storage)
     assignIntoIndex(corpus, path, SaveMode.Overwrite, idCol, vecCol, carry,
       storage = storage, centroids = Some(centsCk), pqCodebooks = cbCk)
     releaseCheckpointBlocks(centsCk)
@@ -506,22 +507,13 @@ object Similarity {
   /** The stored candidate-payload forms a persisted index supports. */
   val Storages: Set[String] = Set("float32", "int8", "pq")
 
-  /** Persist the index's stored form as a durable one-line manifest
-    * (`path/_meta/storage`, written whole to a dot-temp then renamed —
-    * the `_gens` publish pattern, object-store friendly). The manifest —
-    * not the data files — is what [[appendToIvfIndex]] dispatches on:
-    * schema inference from `assigned/` breaks the moment every live
-    * generation of a quantized index is EMPTY (all rows tombstoned and
-    * reclaimed, a state the delete lifecycle makes reachable), and a
-    * fallback-to-float32 append would silently corrupt the schema-based
-    * scoring dispatch of a pq/int8 index.
-    */
-  private def writeStorageManifest(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, storage: String): Unit =
-    writeMetaFile(spark, path, "storage", storage)
-
-  /** The stored form recorded at build time — None for a pre-manifest
-    * index (legacy layouts fall back to schema inference).
+  /** The stored form recorded at build time (`path/_meta/storage`) —
+    * None for a pre-manifest index (legacy layouts fall back to schema
+    * inference). The manifest, not the data files, is what appends
+    * dispatch on: schema inference from `assigned/` breaks the moment
+    * every live generation of a quantized index is EMPTY (all rows
+    * tombstoned and reclaimed), and a fallback-to-float32 append would
+    * silently corrupt the scoring dispatch of a pq/int8 index.
     */
   private[sim] def readStorageManifest(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[String] =
@@ -529,6 +521,23 @@ object Similarity {
       require(Storages(s),
         s"$path/_meta/storage holds '$s', not one of ${Storages.mkString("/")}")
       s
+    }
+
+  /** The index's stored form: the build-time manifest, or — for a
+    * pre-manifest legacy layout — inferred from the `assigned/` schema
+    * (float32 when nothing is stored yet).
+    */
+  private def storedForm(spark: org.apache.spark.sql.SparkSession,
+                         path: String): String =
+    readStorageManifest(spark, path).getOrElse {
+      try {
+        val cols = spark.read.parquet(s"$path/assigned").columns
+        if (cols.contains("codes")) "pq"
+        else if (cols.contains("q8")) "int8"
+        else "float32"
+      } catch {
+        case _: org.apache.spark.sql.AnalysisException => "float32"
+      }
     }
 
   /** Whole-file-then-rename publish of a tiny `path/_meta/<name>` record
@@ -570,7 +579,7 @@ object Similarity {
   val ReservedIndexCols: Set[String] = Set(
     "c_id", "v", "n", "cell", "g", "__g", "__pqb", "codes", "rn", "q8",
     "q8_scale", "qn", "cid", "cv0", "cn0", "ccos", "q_id", "cos", "qv",
-    "qa", "qan", "qtab", "num", "crn", "rank")
+    "qa", "qan", "qtab", "num", "crn", "rank", "__ac", "__tc")
 
   private def requireCarryNames(carry: Seq[String]): Unit = {
     val clash = carry.filter(ReservedIndexCols)
@@ -600,6 +609,10 @@ object Similarity {
     * not move the centroids, so after enough drift the cells stop
     * matching corpus density and a rebuild re-refines — rebuild
     * threshold policy stays with the caller.
+    *
+    * Contract: delta ids are unique, and new to the index (or tombstoned
+    * and reclaimed — see [[deleteFromIvfIndex]]). The append does not
+    * check it: an id appended twice is stored, and returned, twice.
     */
   def appendToIvfIndex(delta: DataFrame, path: String,
                        idCol: String = "vec_id", vecCol: String = "embedding",
@@ -620,17 +633,7 @@ object Similarity {
         require(Storages(s),
           s"storage must be one of ${Storages.mkString("/")}, got $s")
         s
-      case None =>
-        readStorageManifest(delta.sparkSession, path).getOrElse {
-          try {
-            val cols = delta.sparkSession.read.parquet(s"$path/assigned").columns
-            if (cols.contains("codes")) "pq"
-            else if (cols.contains("q8")) "int8"
-            else "float32"
-          } catch {
-            case _: org.apache.spark.sql.AnalysisException => "float32"
-          }
-        }
+      case None => storedForm(delta.sparkSession, path)
     }
     assignIntoIndex(delta, path, SaveMode.Append, idCol, vecCol, carry,
       storage = stored, centroids = cachedCentroids)
@@ -676,19 +679,8 @@ object Similarity {
     val spark = vectors.sparkSession
     val cents = spark.read.parquet(s"$path/centroids").cache()
     cents.count() // materialize before the first trigger
-    // resolve the stored form ONCE (manifest; legacy pre-manifest
-    // layouts fall back to schema inference exactly as appendToIvfIndex)
-    val storedForm = readStorageManifest(spark, path).getOrElse {
-      try {
-        val cols = spark.read.parquet(s"$path/assigned").columns
-        if (cols.contains("codes")) "pq"
-        else if (cols.contains("q8")) "int8"
-        else "float32"
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => "float32"
-      }
-    }
-    val cachedCb = if (storedForm == "pq") {
+    val stored = storedForm(spark, path) // resolved ONCE, not per batch
+    val cachedCb = if (stored == "pq") {
       val (raw, pqM, w) = readPqCodebooks(spark, path)
       val c = raw.cache(); c.count()
       Some((c, pqM, w))
@@ -698,7 +690,7 @@ object Similarity {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         assignIntoIndex(batch, path, SaveMode.Append, idCol, vecCol, carry,
-          storage = storedForm, centroids = Some(cents),
+          storage = stored, centroids = Some(cents),
           pqCodebooks = cachedCb)
         compactEvery.foreach { n =>
           if ((batchId + 1) % n == 0) compactIvfIndex(spark, path)
@@ -722,9 +714,41 @@ object Similarity {
     q
   }
 
-  /** The shared assignment sweep: score `vecs` against the index's stored
-    * centroids (broadcast), pick each vector's argmax cell, write into the
-    * cell-partitioned layout under `mode`. With `quantize` the stored
+  /** Cell assignment shared by every IVF path (build, append, in-memory
+    * query): each vector's nearest cell as (c_id, v, n, carry..., cell).
+    * MAP-ONLY — the centroid table (tiny by construction) rides inside the
+    * native [[graft.functions.ArgTopCells]] kernel, so the per-vector
+    * argmax costs no crossJoin row blowup and no groupBy EXCHANGE of the
+    * whole corpus. Ranking semantics are max_by(cid, struct(ccos, -cid))
+    * verbatim (see the kernel's scaladoc; the s4/s6/s8/... oracle rows
+    * replay them in DuckDB). `carry` = metadata columns kept alongside
+    * each vector — what makes FILTERED search answerable from the index
+    * alone.
+    */
+  private def assignCells(vecs: DataFrame,
+                          cents: IndexedSeq[(Long, Array[Float], Double)],
+                          idCol: String, vecCol: String,
+                          carry: Seq[String]): DataFrame = {
+    val base = vecs.select(col(idCol).as("c_id") +: col(vecCol).as("v") +:
+      carry.map(col): _*)
+    val outCols = Seq(col("c_id"), col("v"), col("n")) ++
+      carry.map(col) :+ col("cell")
+    if (cents.isEmpty)
+      // no centroids, no assignable rows — an empty frame, same schema
+      base.withColumn("n", lit(0.0d)).withColumn("cell", lit(0L))
+        .limit(0).select(outCols: _*)
+    else {
+      graft.functions.ArgTopCells.register(vecs.sparkSession, cents, 1)
+      base.withColumn("__ac", graft.functions.ArgTopCells(col("v")))
+        .withColumn("n", col("__ac").getField("n"))
+        .withColumn("cell", element_at(col("__ac").getField("cells"), 1))
+        .select(outCols: _*)
+    }
+  }
+
+  /** The index write: assign `vecs` against the index's stored centroids
+    * ([[assignCells]]) and write into the cell-partitioned layout under
+    * `mode`. With `quantize` the stored
     * payload is the SQ8 form ([[withQuantized]]: `q8` int array +
     * `q8_scale`) plus the integer norm `qn` INSTEAD of the float vector —
     * assignment still scores the float vector (centroids stay float;
@@ -742,35 +766,9 @@ object Similarity {
     // refinement, append sees exactly what the build stored. A caller
     // holding the stream-lifetime cache passes it in so each micro-batch
     // collects from memory instead of re-scanning the parquet store.
-    // Round 14: the assignment is MAP-ONLY — the centroid table (tiny by
-    // construction; it was broadcast whole before) rides inside the
-    // native [[graft.functions.ArgTopCells]] kernel, so the per-vector
-    // argmax costs no crossJoin row blowup and, crucially, no groupBy
-    // EXCHANGE of the whole corpus: the build's only remaining shuffle is
-    // the cell-clustered write below. Ranking semantics are the previous
-    // max_by(cid, struct(ccos, -cid)) verbatim (see the kernel's scaladoc;
-    // the s6/s8/... oracle rows replay them in DuckDB).
     val cents = collectCentEntries(
       centroids.getOrElse(spark.read.parquet(s"$path/centroids")))
-    // `carry` = metadata columns stored alongside each vector — what
-    // makes FILTERED search answerable from the index alone
-    val base = vecs.select(col(idCol).as("c_id") +: col(vecCol).as("v") +:
-      carry.map(col): _*)
-    val outCols = Seq(col("c_id"), col("v"), col("n")) ++
-      carry.map(col) :+ col("cell")
-    val assigned =
-      if (cents.isEmpty)
-        // no centroids, no assignable rows — the empty frame the old
-        // crossJoin shape produced, same schema
-        base.withColumn("n", lit(0.0d)).withColumn("cell", lit(0L))
-          .limit(0).select(outCols: _*)
-      else {
-        graft.functions.ArgTopCells.register(spark, cents, 1)
-        base.withColumn("__ac", graft.functions.ArgTopCells(col("v")))
-          .withColumn("n", col("__ac").getField("n"))
-          .withColumn("cell", element_at(col("__ac").getField("cells"), 1))
-          .select(outCols: _*)
-      }
+    val assigned = assignCells(vecs, cents, idCol, vecCol, carry)
     val stored = storage match {
       case "float32" => assigned
       case "int8" =>
@@ -929,13 +927,14 @@ object Similarity {
       .withColumn("cell", col("cell").cast("long"))
   }
 
-  /** Committed tombstone epoch ids under `path/tombstones`, ascending —
-    * the `_SUCCESS`-marker definition shared by readers, the delete
-    * writer and the epoch pruner (the CurationStream epoch discipline).
+  /** Committed `epoch=<id>` ids under `dir`, ascending — the
+    * `_SUCCESS`-marker definition (the CurationStream epoch discipline)
+    * shared by the tombstone readers, the delete writer, the epoch pruner
+    * and the curation hook that reads CurationStream's own epochs.
     */
-  private def committedTombEpochs(fs: org.apache.hadoop.fs.FileSystem,
-                                  path: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
+  private def committedEpochs(fs: org.apache.hadoop.fs.FileSystem,
+                              dir: String): Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
     if (!fs.exists(p)) return Nil
     fs.listStatus(p).map(_.getPath.getName)
       .filter(_.startsWith("epoch="))
@@ -963,7 +962,7 @@ object Similarity {
   private def readTombstonesSized(spark: org.apache.spark.sql.SparkSession,
                                   path: String): Option[(DataFrame, Long)] = {
     val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(path))
-    val epochs = committedTombEpochs(fs, path)
+    val epochs = committedEpochs(fs, s"$path/tombstones")
     if (epochs.isEmpty) None
     else {
       val dir = s"$path/tombstones/epoch=${epochs.max}"
@@ -987,7 +986,7 @@ object Similarity {
     * broadcast class — above it the query degrades gracefully to a
     * shuffled anti-join and the operator keeps answering while the
     * operator's fix (run [[compactIvfIndex]]) is one call away.
-    * Session conf `graft.index.tombstoneBroadcastMaxBytes` moves the
+    * Session conf `spark.graft.index.tombstoneBroadcastMaxBytes` moves the
     * threshold (and lets the spec pin the fallback plan shape without
     * materializing 64 MiB of ids).
     */
@@ -995,13 +994,13 @@ object Similarity {
 
   private def tombstoneBroadcastMax(
       spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.index.tombstoneBroadcastMaxBytes")
+    spark.conf.getOption("spark.graft.index.tombstoneBroadcastMaxBytes")
       .map(_.toLong).getOrElse(TombstoneBroadcastMaxBytes)
 
   private def pruneTombEpochs(spark: org.apache.spark.sql.SparkSession,
                               path: String, keep: Int): Unit = {
     val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(path))
-    committedTombEpochs(fs, path).dropRight(keep).foreach(id =>
+    committedEpochs(fs, s"$path/tombstones").dropRight(keep).foreach(id =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones/epoch=$id"), true))
   }
 
@@ -1045,7 +1044,7 @@ object Similarity {
     val add = ids.select(col(idCol).as("c_id")).distinct()
     val prev = readTombstones(spark, path)
     val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(path))
-    val cur = committedTombEpochs(fs, path).lastOption
+    val cur = committedEpochs(fs, s"$path/tombstones").lastOption
     // WRITE-AMPLIFICATION HYGIENE: each epoch is self-contained
     // (previous ∪ new), so a high-frequency caller re-submitting
     // already-live ids — the per-epoch curation hook replaying its drop
@@ -1108,13 +1107,8 @@ object Similarity {
   def deleteCurationDropsFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                                       indexPath: String, epochDir: String,
                                       dropIdCol: String = "doc_id"): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(epochDir)
-    val fs = hadoopFs(spark, p)
-    if (!fs.exists(p)) return None
-    val epochs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("epoch="))
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(p, s"$d/_SUCCESS")))
-      .map(_.stripPrefix("epoch=").toLong)
+    val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(epochDir))
+    val epochs = committedEpochs(fs, epochDir)
     if (epochs.isEmpty) return None
     val newest = epochs.max
     val applied = readMetaFile(spark, indexPath, "curation_applied").map(_.toLong)
@@ -1284,12 +1278,79 @@ object Similarity {
     // reader-ordering contract above): the retired state is an empty
     // NEWER epoch — files a lagging reader resolved are never deleted
     tombs.foreach { t =>
-      val next = committedTombEpochs(fs, path).lastOption.getOrElse(-1L) + 1L
+      val next = committedEpochs(fs, s"$path/tombstones").lastOption.getOrElse(-1L) + 1L
       t.limit(0).coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$path/tombstones/epoch=$next")
       pruneTombEpochs(spark, path, keep = 2)
     }
     targets
+  }
+
+  /** The query-side probe shared by every IVF query: each query's top-`p`
+    * cells, ranked MAP-ONLY by the native ArgTopCells kernel against the
+    * collected centroids (ranking semantics: the (ccos DESC, cid ASC)
+    * row_number window, verbatim).
+    *
+    * ONE executed job per probe resolution: the (q_id, cell) rows are
+    * |Q| × p — driver-bounded by the same contract that broadcasts them
+    * into the candidate join — so they are collected once, WITH the query
+    * vector and its norm, and every downstream consumer is served from
+    * local relations: the (q_id, cell) join side, one (q_id, v, n) row per
+    * query, and the distinct probed cells ascending (what the persisted
+    * path's pruned scan is constructed over). Round 13 left the vector
+    * side as a plan, so each broadcast build re-scanned the queries
+    * source.
+    *
+    * Query ids must be unique: each query yields exactly min(p, C) probe
+    * rows, so a duplicate id shows as an over-full group in the rows
+    * already collected and fails here, by name, with no extra job.
+    */
+  private def probeCells(spark: org.apache.spark.sql.SparkSession,
+                         queries: DataFrame,
+                         cents: IndexedSeq[(Long, Array[Float], Double)],
+                         p: Int, idCol: String, vecCol: String)
+      : (DataFrame, DataFrame, Array[Long]) = {
+    import scala.jdk.CollectionConverters._
+    graft.functions.ArgTopCells.register(spark, cents, p)
+    val plan = queries.select(col(idCol).as("q_id"), col(vecCol).as("v"))
+      .withColumn("__tc", graft.functions.ArgTopCells(col("v")))
+      .select(col("q_id"), col("v"),
+        col("__tc").getField("n").as("n"),
+        explode(col("__tc").getField("cells")).as("cell"))
+    val rows = plan.collect()
+    val sch = plan.schema
+    val (qi, ci, vi, ni) = (sch.fieldIndex("q_id"), sch.fieldIndex("cell"),
+      sch.fieldIndex("v"), sch.fieldIndex("n"))
+    val perQuery = scala.collection.mutable.HashMap[Any, Int]()
+    rows.foreach(r => perQuery(r.get(qi)) = perQuery.getOrElse(r.get(qi), 0) + 1)
+    val dup = perQuery.collectFirst { case (q, n) if n > math.min(p, cents.length) => q }
+    require(dup.isEmpty,
+      s"query ids must be unique: $idCol = ${dup.getOrElse("")} appears more than once")
+    val qc = spark.createDataFrame(
+      rows.map(r => org.apache.spark.sql.Row(r.get(qi), r.get(ci))).toList.asJava,
+      org.apache.spark.sql.types.StructType(Seq(sch(qi), sch(ci))))
+    val seen = scala.collection.mutable.HashSet[Any]()
+    val qLoc = spark.createDataFrame(
+      rows.iterator.filter(r => seen.add(r.get(qi)))
+        .map(r => org.apache.spark.sql.Row(r.get(qi), r.get(vi), r.get(ni)))
+        .toList.asJava,
+      org.apache.spark.sql.types.StructType(Seq(sch(qi), sch(vi), sch(ni))))
+    (qc, qLoc, rows.map(_.getLong(ci)).distinct.sorted)
+  }
+
+  /** Float candidate scoring shared by the in-memory path and a float32
+    * index: (c_id, v, n, cell) rows joined to the probe's local relations
+    * on cell, self-matches dropped, cosine by the native dot fold.
+    */
+  private def scoreFloat(assigned: DataFrame, qCells: DataFrame,
+                         qLoc: DataFrame): DataFrame = {
+    val dot = nativeDot(assigned)
+    assigned.join(broadcast(qCells), Seq("cell"))
+      .filter(col("q_id") =!= col("c_id"))
+      .join(broadcast(qLoc.select(col("q_id"), col("v").as("qv"), col("n").as("qn"))),
+        Seq("q_id"))
+      .withColumn("cos", cosine(dot(col("qv"), col("v")), col("qn"), col("n")))
+      .select(col("q_id"), col("c_id"), col("cos"))
   }
 
   /** Above this many distinct probed cells, [[ivfTopKIndexed]] stops
@@ -1341,61 +1402,18 @@ object Similarity {
                      maxPrunedPaths: Int = MaxPrunedIndexPaths,
                      probeWidenTarget: Option[Int] = None): DataFrame = {
     val dot = nativeDot(queries)
-    import scala.jdk.CollectionConverters._
     // the centroid relation is broadcast-class BY CONTRACT (it was shipped
     // whole into every probe sweep), so collect it ONCE into kernel
     // entries — round 14: the indexed query's fixed cost was 10 sub-200 ms
-    // jobs + ~0.9 s of driver gaps per call (OptProbe), dominated by store
-    // re-scans inside broadcast builds and the probe's window exchange
+    // jobs + ~0.9 s of driver gaps per call, dominated by store re-scans
+    // inside broadcast builds and the probe's window exchange
     val centEntries = collectCentEntries(spark.read.parquet(s"$path/centroids"))
     // the probe resolution, parameterized so the filtered path can widen
-    // it: per-query top-p cells plus the eagerly-collected distinct cell
-    // set the pruned scan is constructed over (intersected downstream
-    // with the cells that actually exist on disk — an empty cell has no
-    // directory; reading it would fail, skipping it is semantically
-    // identical)
-    def probeAt(p: Int): (DataFrame, DataFrame, Array[Long]) = {
-      // MAP-ONLY probe (round 14): the top-p cell ranking runs inside the
-      // native ArgTopCells kernel against the collected centroids — the
-      // previous crossJoin + row_number window cost a per-query exchange
-      // and a multi-stage job per probe resolution. One single-stage
-      // collect returns (q_id, cell, v, n); the ranking semantics are the
-      // window's (ccos DESC, cid ASC) verbatim.
-      graft.functions.ArgTopCells.register(spark, centEntries, p)
-      val plan = queries.select(col(idCol).as("q_id"), col(vecCol).as("v"))
-        .withColumn("__tc", graft.functions.ArgTopCells(col("v")))
-        .select(col("q_id"), col("v"),
-          col("__tc").getField("n").as("n"),
-          explode(col("__tc").getField("cells")).as("cell"))
-      // ONE executed job per probe resolution: the (q_id, cell) rows are
-      // |Q| × p — driver-bounded by the same contract that broadcasts
-      // them into the candidate join below — so collect them once, WITH
-      // the query vector and its norm (computed by the same fold the join
-      // side used to recompute), and serve every downstream consumer from
-      // local relations: the distinct probed-cell set, the (q_id, cell)
-      // join side, and the query-vector join side. Round 13 collected
-      // only (q_id, cell) and left the vector side as a plan, so each
-      // branch's broadcast build re-scanned the queries source — one full
-      // extra scan job per broadcast per call.
-      val rows = plan.collect()
-      val sch = plan.schema
-      val (qi, ci, vi, ni) = (sch.fieldIndex("q_id"), sch.fieldIndex("cell"),
-        sch.fieldIndex("v"), sch.fieldIndex("n"))
-      val qc = spark.createDataFrame(
-        rows.map(r => org.apache.spark.sql.Row(r.get(qi), r.get(ci)))
-          .toList.asJava,
-        org.apache.spark.sql.types.StructType(Seq(sch(qi), sch(ci))))
-      // one row per query id (probe rows repeat per probed cell; a caller
-      // passing duplicate query ids gets one representative row — the
-      // previous shape produced interleaved per-duplicate garbage anyway)
-      val seen = scala.collection.mutable.HashSet[Any]()
-      val qLoc = spark.createDataFrame(
-        rows.iterator.filter(r => seen.add(r.get(qi)))
-          .map(r => org.apache.spark.sql.Row(r.get(qi), r.get(vi), r.get(ni)))
-          .toList.asJava,
-        org.apache.spark.sql.types.StructType(Seq(sch(qi), sch(vi), sch(ni))))
-      (qc, qLoc, rows.map(_.getLong(ci)).distinct.sorted)
-    }
+    // it (the probed cells are intersected downstream with the cells that
+    // actually exist on disk — an empty cell has no directory; reading it
+    // would fail, skipping it is semantically identical)
+    def probeAt(p: Int): (DataFrame, DataFrame, Array[Long]) =
+      probeCells(spark, queries, centEntries, p, idCol, vecCol)
     val (qCells0, qLoc0, probed0) = probeAt(nprobe)
     val assignedRoot = s"$path/assigned"
     // SELECTIVITY-AWARE PROBE WIDENING (opt-in): a highly selective
@@ -1525,13 +1543,7 @@ object Similarity {
           .withColumn("cos",
             dotI(col("qa"), col("q8")).cast(DoubleType) / (col("qan") * col("qn")))
           .select(col("q_id"), col("c_id"), col("cos"))
-      } else
-        assigned.join(broadcast(qCells), Seq("cell"))
-          .filter(col("q_id") =!= col("c_id"))
-          .join(broadcast(qLoc.select(col("q_id"), col("v").as("qv"), col("n").as("qn"))),
-            Seq("q_id"))
-          .withColumn("cos", cosine(dot(col("qv"), col("v")), col("qn"), col("n")))
-          .select(col("q_id"), col("c_id"), col("cos"))
+      } else scoreFloat(assigned, qCells, qLoc)
     rankTopK(scored, k)
   }
 
@@ -1579,8 +1591,8 @@ object Similarity {
   /** One Lloyd refinement step: assign every corpus vector to its nearest
     * (max-cosine) current centroid, then replace each nonempty cell's
     * centroid with the componentwise mean of its members. The assignment is
-    * the same broadcast-centroids + map-side `max_by` aggregation as the
-    * query path; the mean is computed as `dim` LONG sum-aggregates in ONE
+    * the map-only [[assignCells]] every index build runs; the mean is
+    * computed as `dim` LONG sum-aggregates in ONE
     * groupBy (map-side partial sums, one shuffle on the cell id) over
     * components scaled by `gridScale` — so the aggregation is
     * order-independent: exact when components are multiples of
@@ -1593,20 +1605,12 @@ object Similarity {
   def refineCentroids(corpus: DataFrame, centroids: DataFrame, dim: Int,
                       gridScale: Int = 1024,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // round 14: map-only assignment via the [[graft.functions.ArgTopCells]]
-    // kernel (same max_by(cid, struct(ccos, -cid)) ranking — see
-    // assignIntoIndex) — the Lloyd step's per-vector argmax no longer pays
-    // a crossJoin + full-corpus groupBy exchange; the one shuffle left is
-    // the (cell) mean aggregate below, with map-side partial sums
-    val cents = collectCentEntries(centroids.select(col("cid"), col("cv0")))
-    if (cents.isEmpty)
-      // no centroids: the empty (cid, cv0) frame the crossJoin produced
+    // the one shuffle is the (cell) mean aggregate below, with map-side
+    // partial sums
+    val cents = collectCentEntries(centroids)
+    if (cents.isEmpty) // no centroids: an empty (cid, cv0) frame
       return centroids.select(col("cid"), col("cv0")).limit(0)
-    graft.functions.ArgTopCells.register(corpus.sparkSession, cents, 1)
-    val assigned = corpus
-      .select(col(vecCol).as("v"))
-      .withColumn("cell", element_at(
-        graft.functions.ArgTopCells(col("v")).getField("cells"), 1))
+    val assigned = assignCells(corpus, cents, idCol, vecCol, Nil)
     val sums = (0 until dim).map(d =>
       sum((element_at(col("v"), d + 1) * gridScale).cast("long")).as(s"s$d"))
     assigned.groupBy(col("cell"))
@@ -1951,33 +1955,5 @@ object Similarity {
       : (String, Double) = {
     val mass = clusterMass(corpus, sampleN, idCol, vecCol)
     (if (mass >= threshold) "ivf" else "lsh", mass)
-  }
-
-  /** IVF-flat with Lloyd-refined centroids: seed cells from `centroidPred`
-    * (a sampling predicate — the init every IVF build starts from), run
-    * `refineIters` refinement sweeps, then query as [[ivfTopKFrom]]. Each
-    * sweep is one corpus pass (broadcast centroids, two shuffles); one
-    * sweep is usually enough to snap sampled seeds onto cluster structure
-    * when the corpus has any — see PlantedClusters for the gate fixture.
-    */
-  def ivfTopKRefined(queries: DataFrame, corpus: DataFrame, k: Int,
-                     centroidPred: String, nprobe: Int, dim: Int,
-                     refineIters: Int = 1, gridScale: Int = 1024,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    rankTopK(ivfRefinedScored(queries, corpus, centroidPred, nprobe, dim,
-      refineIters, gridScale, idCol, vecCol), k)
-
-  /** Scored relation behind [[ivfTopKRefined]] (for recall + candidate-
-    * fraction measurement).
-    */
-  def ivfRefinedScored(queries: DataFrame, corpus: DataFrame,
-                       centroidPred: String, nprobe: Int, dim: Int,
-                       refineIters: Int = 1, gridScale: Int = 1024,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    var cents = corpus.filter(centroidPred)
-      .select(col(idCol).as("cid"), col(vecCol).as("cv0"))
-    for (_ <- 0 until refineIters)
-      cents = refineCentroids(corpus, cents, dim, gridScale, idCol, vecCol)
-    ivfScoredFrom(queries, corpus, cents, nprobe, idCol, vecCol)
   }
 }

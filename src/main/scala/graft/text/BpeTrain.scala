@@ -85,17 +85,16 @@ object BpeTrain {
   // `^ ?[A-Za-z]+$` filter), so Spark's UTF8-binary string ordering equals
   // java.lang.String ordering, pair counts are integer sums, and the merge
   // apply is the same literal all-occurrence `replace`. Under conf
-  // `graft.bpe.localLoopMaxVocab` (default 2M words — tens of MB on the
+  // `spark.graft.bpe.localLoopMaxVocab` (default 2M words — tens of MB on the
   // driver, the broadcast-boundedness class; a 100 TB corpus with a
-  // bigger vocabulary keeps the distributed loop) each learner collects
-  // the vocab once and runs its loop locally: same rounds, same selection
-  // code (factored below and SHARED with the distributed paths, so the
-  // two cannot diverge), bit-identical learned tables — measured ~70 ms
+  // bigger vocabulary keeps the distributed loop) [[roundLoop]] collects
+  // the vocab once and runs its rounds locally: same rounds, same
+  // selection code, bit-identical learned tables — measured ~70 ms
   // of fixed distributed cost per round gone (64-round learn at sf0.1:
   // 4.7 s → phase-one cost).
 
   private def localLoopMaxVocab(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.bpe.localLoopMaxVocab")
+    df.sparkSession.conf.getOption("spark.graft.bpe.localLoopMaxVocab")
       .map(_.toLong).getOrElse(2000000L)
 
   /** The wrapped sym's symbol list — the driver twin of [[adjacentPairs]]'
@@ -153,16 +152,9 @@ object BpeTrain {
       element_at(syms, i).as("a"), element_at(syms, i + 1).as("b")))
   }
 
-  /** Learn `numMerges` rules. Stops early if the vocab runs out of
-    * adjacent pairs. Each round appends one literal `replace` to the sym
-    * projection; the vocab is re-`localCheckpoint`ed every 8 rounds so
-    * the plan stays bounded (the iterative-plan rule, see
-    * Dedup.dupClusters).
-    */
   /** The batched round's exact selection from a fetched argmax-ordered
-    * window — ONE implementation shared by the distributed and local
-    * loops, so the two paths cannot diverge (see [[learnBatched]]'s
-    * scaladoc for why the conflict/bound logic is exact).
+    * window (see [[learnBatched]]'s scaladoc for why the conflict/bound
+    * logic is exact).
     */
   private def selectBatch(rows: IndexedSeq[Merge], fetch: Int,
                           remaining: Int): Vector[Merge] = {
@@ -190,8 +182,8 @@ object BpeTrain {
 
   /** The epoch's relaxed selection (skip — not stop at — conflicts; an
     * accepted rule may neither consume nor produce a symbol another
-    * accepted rule consumes or produces) — shared by both loops, see
-    * [[learnEpoch]]'s scaladoc.
+    * accepted rule consumes or produces) — see [[learnEpoch]]'s
+    * scaladoc.
     */
   private def selectEpoch(rows: IndexedSeq[Merge], want: Int): Vector[Merge] = {
     val used = scala.collection.mutable.Set[String]()
@@ -221,49 +213,83 @@ object BpeTrain {
       Some(rows)
     }
 
-  def learn(docs: DataFrame, numMerges: Int,
-            textCol: String = "text"): Seq[Merge] = {
+  /** The phase-two ROUND LOOP, the one every learner runs. Each round
+    * ranks the top `fetch(remaining)` pairs in the argmax order, accepts
+    * `select(rows, fetch, remaining)` of them, and applies the accepted
+    * merges; it stops at `numMerges` rules or when the vocab runs out of
+    * adjacent pairs. Under the local-loop gate ([[vocabLocal]]) the pair
+    * counts and merges run on the collected vocab; above it the counts
+    * are one aggregation job per round and each merge appends a literal
+    * `replace` to the sym projection, re-`localCheckpoint`ed once 8
+    * merges are pending so the plan stays bounded (the iterative-plan
+    * rule, see Dedup.dupClusters). Both paths share the selection code,
+    * so they cannot diverge (BpeTrainSpec pins them equal).
+    */
+  private def roundLoop(docs: DataFrame, textCol: String, numMerges: Int,
+                        fetch: Int => Int,
+                        select: (IndexedSeq[Merge], Int, Int) => Seq[Merge])
+      : (Seq[Merge], BatchStats) = {
     require(numMerges >= 1, "need at least one merge round")
-    var vocab = wordFreq(docs, textCol)
+    val vocab0 = wordFreq(docs, textCol)
       .withColumn("sym", regexp_replace(col("word"), "(.)", "($1)"))
       .select("freq", "sym")
       .localCheckpoint(true) // phase one ends: corpus never re-read
-    val learned = Seq.newBuilder[Merge]
-    var exhausted = false
-    var i = 0
-    vocabLocal(vocab) match {
-      case Some(rows) =>
-        while (i < numMerges && !exhausted) {
-          val top = topPairsLocal(rows, 1)
-          if (top.isEmpty) exhausted = true
-          else { learned += top.head; applyMergeLocal(rows, top.head) }
-          i += 1
+    val learned = Vector.newBuilder[Merge]
+    var nLearned = 0
+    var rounds = 0
+    def loop(topPairs: Int => IndexedSeq[Merge], apply: Seq[Merge] => Unit): Unit = {
+      var exhausted = false
+      while (nLearned < numMerges && !exhausted) {
+        rounds += 1
+        val f = fetch(numMerges - nLearned)
+        val rows = topPairs(f)
+        if (rows.isEmpty) exhausted = true
+        else {
+          val keep = select(rows, f, numMerges - nLearned)
+          apply(keep)
+          learned ++= keep
+          nLearned += keep.length
         }
-        return learned.result()
-      case None => ()
-    }
-    withRoundConfs(vocab) { while (i < numMerges && !exhausted) {
-      val top = vocab
-        .select(col("freq"), explode(adjacentPairs(col("sym"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1)
-        .collect() // ONE row: the learned rule is driver-side config
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) = (top.head.getAs[String]("a"),
-          top.head.getAs[String]("b"), top.head.getAs[Long]("cnt"))
-        learned += Merge(a, b, cnt)
-        vocab = vocab.withColumn("sym",
-          org.apache.spark.sql.functions.replace(
-            col("sym"), lit(s"($a)($b)"), lit(s"($a$b)")))
-        if (i % 8 == 7) vocab = vocab.localCheckpoint(true)
       }
-      i += 1
-    } }
-    learned.result()
+    }
+    vocabLocal(vocab0) match {
+      case Some(lv) => loop(topPairsLocal(lv, _), _.foreach(applyMergeLocal(lv, _)))
+      case None => withRoundConfs(vocab0) {
+        var vocab = vocab0
+        var pending = 0
+        loop(f => topPairsQuery(vocab, f), { ms =>
+          ms.foreach { m =>
+            vocab = vocab.withColumn("sym", replace(
+              col("sym"), lit(s"(${m.a})(${m.b})"), lit(s"(${m.a}${m.b})")))
+          }
+          pending += ms.length
+          if (pending >= 8) { vocab = vocab.localCheckpoint(true); pending = 0 }
+        })
+      }
+    }
+    (learned.result(), BatchStats(rounds, nLearned))
   }
+
+  /** Top `fetch` pairs of a distributed vocab in the argmax order — one
+    * pair-count aggregation job; only `fetch` rows reach the driver. */
+  private def topPairsQuery(vocab: DataFrame, fetch: Int): IndexedSeq[Merge] =
+    vocab
+      .select(col("freq"), explode(adjacentPairs(col("sym"))).as("p"))
+      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+      .agg(sum(col("freq")).as("cnt"))
+      .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
+      .limit(fetch)
+      .collect()
+      .map(r => Merge(r.getString(0), r.getString(1), r.getLong(2)))
+      .toIndexedSeq
+
+  /** Learn `numMerges` rules, one argmax pair per round (Sennrich's
+    * sequential algorithm). Stops early if the vocab runs out of adjacent
+    * pairs.
+    */
+  def learn(docs: DataFrame, numMerges: Int,
+            textCol: String = "text"): Seq[Merge] =
+    roundLoop(docs, textCol, numMerges, _ => 1, (rows, _, _) => rows.take(1))._1
 
   /** Batched-greedy training: per round, ONE pair-count job selects up to
     * `maxBatch` merge rules instead of one — the production-vocab scale
@@ -313,58 +339,9 @@ object BpeTrain {
 
   def learnBatchedStats(docs: DataFrame, numMerges: Int,
                         textCol: String = "text", maxBatch: Int = 64): (Seq[Merge], BatchStats) = {
-    require(numMerges >= 1, "need at least one merge round")
     require(maxBatch >= 1, "need a positive batch size")
-    var vocab = wordFreq(docs, textCol)
-      .withColumn("sym", regexp_replace(col("word"), "(.)", "($1)"))
-      .select("freq", "sym")
-      .localCheckpoint(true) // phase one ends: corpus never re-read
-    val learned = Seq.newBuilder[Merge]
-    var nLearned = 0
-    var rounds = 0
-    var exhausted = false
-    vocabLocal(vocab) match {
-      case Some(lv) =>
-        while (nLearned < numMerges && !exhausted) {
-          rounds += 1
-          val fetch = maxBatch.min(numMerges - nLearned) + 1 // +1: conflict probe
-          val rows = topPairsLocal(lv, fetch)
-          if (rows.isEmpty) exhausted = true
-          else {
-            val keep = selectBatch(rows, fetch, numMerges - nLearned)
-            keep.foreach { m => learned += m; applyMergeLocal(lv, m) }
-            nLearned += keep.length
-          }
-        }
-        return (learned.result(), BatchStats(rounds, nLearned))
-      case None => ()
-    }
-    withRoundConfs(vocab) { while (nLearned < numMerges && !exhausted) {
-      rounds += 1
-      val fetch = maxBatch.min(numMerges - nLearned) + 1 // +1: conflict probe
-      val rows = vocab
-        .select(col("freq"), explode(adjacentPairs(col("sym"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(fetch)
-        .collect()
-        .map(r => Merge(r.getAs[String]("a"), r.getAs[String]("b"),
-          r.getAs[Long]("cnt")))
-      if (rows.isEmpty) exhausted = true
-      else {
-        val keep = selectBatch(rows.toIndexedSeq, fetch, numMerges - nLearned)
-        for (m <- keep) {
-          learned += m
-          vocab = vocab.withColumn("sym",
-            org.apache.spark.sql.functions.replace(
-              col("sym"), lit(s"(${m.a})(${m.b})"), lit(s"(${m.a}${m.b})")))
-        }
-        nLearned += keep.length
-        vocab = vocab.localCheckpoint(true) // bounded plan per round
-      }
-    } }
-    (learned.result(), BatchStats(rounds, nLearned))
+    // +1: the conflict probe (see selectBatch)
+    roundLoop(docs, textCol, numMerges, rem => maxBatch.min(rem) + 1, selectBatch)
   }
 
   /** Epoch-synchronized RELAXED training — the scale-safe mode for
@@ -407,68 +384,12 @@ object BpeTrain {
 
   def learnEpochStats(docs: DataFrame, numMerges: Int,
                       textCol: String = "text", batch: Int = 64): (Seq[Merge], BatchStats) = {
-    require(numMerges >= 1, "need at least one merge round")
     require(batch >= 1, "need a positive batch size")
-    var vocab = wordFreq(docs, textCol)
-      .withColumn("sym", regexp_replace(col("word"), "(.)", "($1)"))
-      .select("freq", "sym")
-      .localCheckpoint(true) // phase one ends: corpus never re-read
-    val learned = Seq.newBuilder[Merge]
-    var nLearned = 0
-    var rounds = 0
-    var exhausted = false
-    vocabLocal(vocab) match {
-      case Some(lv) =>
-        while (nLearned < numMerges && !exhausted) {
-          rounds += 1
-          val want = batch.min(numMerges - nLearned)
-          val fetch = want * 4 + 8
-          val rows = topPairsLocal(lv, fetch)
-          if (rows.isEmpty) exhausted = true
-          else {
-            val keep = selectEpoch(rows, want)
-            keep.foreach { m => learned += m; applyMergeLocal(lv, m) }
-            nLearned += keep.length
-          }
-        }
-        return (learned.result(), BatchStats(rounds, nLearned))
-      case None => ()
-    }
-    withRoundConfs(vocab) { while (nLearned < numMerges && !exhausted) {
-      rounds += 1
-      val want = batch.min(numMerges - nLearned)
-      // fetch headroom: conflicting pairs are SKIPPED, so the window must
-      // be deeper than the acceptance target (4x + slack covers natural
-      // text, where adjacent top pairs share common characters)
-      val fetch = want * 4 + 8
-      val rows = vocab
-        .select(col("freq"), explode(adjacentPairs(col("sym"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(fetch)
-        .collect()
-        .map(r => Merge(r.getAs[String]("a"), r.getAs[String]("b"),
-          r.getAs[Long]("cnt")))
-      if (rows.isEmpty) exhausted = true
-      else {
-        // conflict guard: see selectEpoch — an accepted rule may neither
-        // consume nor produce a symbol another accepted rule consumes or
-        // produces, so the epoch's replaces commute
-        val keep = selectEpoch(rows.toIndexedSeq, want)
-        for (m <- keep) {
-          learned += m
-          // disjoint symbols ⇒ the epoch's replaces commute; applied as
-          // one chained projection, evaluated in the checkpoint below
-          vocab = vocab.withColumn("sym",
-            org.apache.spark.sql.functions.replace(
-              col("sym"), lit(s"(${m.a})(${m.b})"), lit(s"(${m.a}${m.b})")))
-        }
-        nLearned += keep.length
-        vocab = vocab.localCheckpoint(true) // bounded plan per epoch
-      }
-    } }
-    (learned.result(), BatchStats(rounds, nLearned))
+    // fetch headroom: conflicting pairs are SKIPPED, so the window must be
+    // deeper than the acceptance target (4x + slack covers natural text,
+    // where adjacent top pairs share common characters)
+    roundLoop(docs, textCol, numMerges, rem => batch.min(rem) * 4 + 8,
+      (rows, _, rem) => selectEpoch(rows, batch.min(rem)))
   }
 
   /** The learned table in [[Text.bpeEncode]]'s merges format. */

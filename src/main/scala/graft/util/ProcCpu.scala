@@ -17,8 +17,8 @@ package graft.util
   * (non-Linux): gates never block, rows are never flagged.
   *
   * Used by `graft.Bench` (per-trial contended marking + mid-suite load
-  * gates) and the probe mains (`QueryProbe`, `DetectProbe`) so a drift
-  * adjudication carries its own load evidence.
+  * gates) and the `QueryProbe` main so a drift adjudication carries its
+  * own load evidence.
   */
 final class ProcCpu {
   // Files.readAllBytes, not scala.io.Source: snap() runs per trial and

@@ -699,7 +699,7 @@ class IvfIndexSpec extends SparkSpec {
     // over threshold (forced low) + Spark's own auto-broadcast disabled:
     // the guard must NOT force a broadcast — the join plans shuffled, and
     // at real scale Spark's size-guarded planner makes this exact call
-    withConf("graft.index.tombstoneBroadcastMaxBytes" -> "1",
+    withConf("spark.graft.index.tombstoneBroadcastMaxBytes" -> "1",
              "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val slow = Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe)
       assert(slow.collect().map(_.toSeq).toSet == expected,
@@ -923,5 +923,58 @@ class IvfIndexSpec extends SparkSpec {
     // no max_by anywhere in the plan
     assert(!plan.contains("max_by"),
       "query-time plan must read stored assignments, not recompute them")
+  }
+
+  test("in-memory IVF plans: no crossJoin, no max_by, one Window (the final rank)") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
+    val q = corpus.filter(SimQueries.QueryPred)
+    // (windows, condition-less joins, max_by present)
+    def shape(df: org.apache.spark.sql.DataFrame): (Int, Int, Boolean) = {
+      val p = df.queryExecution.optimizedPlan
+      (p.collect { case w: Window => w }.size,
+        p.collect { case j: Join if j.condition.isEmpty => j }.size,
+        p.toString.contains("max_by"))
+    }
+    // the assignment and the probe run map-only in the ArgTopCells kernel;
+    // the one Window left is rankTopK's per-query top-k, as in the index
+    val topk = Similarity.ivfTopK(q, corpus, SimQueries.K,
+      SimQueries.ClusterCentPred, SimQueries.NProbe)
+    val refined = Similarity.ivfTopKRefined(q, corpus, SimQueries.K,
+      SimQueries.ClusterCentPred, SimQueries.NProbe, SimQueries.Dim)
+    assert(shape(topk) == ((1, 0, false)))
+    assert(shape(refined) == ((1, 0, false)))
+    assert(shape(Similarity.ivfRefinedScored(q, corpus, SimQueries.ClusterCentPred,
+      SimQueries.NProbe, SimQueries.Dim)) == ((0, 0, false)))
+    // an empty centroid set: no cells, no candidates — the typed empty frame
+    val empty = Similarity.ivfTopK(q, corpus, SimQueries.K, "vec_id < 0",
+      SimQueries.NProbe)
+    assert(empty.collect().isEmpty)
+    assert(empty.schema.map(f => (f.name, f.dataType)) ==
+      topk.schema.map(f => (f.name, f.dataType)))
+  }
+
+  test("a carry column named like a kernel scratch column fails the build by name") {
+    val p = java.nio.file.Files.createTempDirectory("ivfreserved").toString
+    for (c <- Seq("__ac", "__tc")) {
+      val e = intercept[IllegalArgumentException](
+        Similarity.buildIvfIndex(corpus.withColumn(c, lit(1)),
+          SimQueries.ClusterCentPred, SimQueries.Dim, p, carry = Seq(c)))
+      assert(e.getMessage.startsWith(s"requirement failed: carry column(s) $c collide"),
+        e.getMessage)
+    }
+  }
+
+  test("duplicate query ids fail the shared probe by name, indexed and in-memory") {
+    val q = corpus.filter(SimQueries.QueryPred)
+    val dupId = q.select("vec_id").head().getLong(0)
+    val dup = q.unionByName(q.filter(col("vec_id") === dupId))
+    def check(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains(s"query ids must be unique: vec_id = $dupId"),
+        e.getMessage)
+    }
+    check(Similarity.ivfTopKIndexed(spark, path, dup, SimQueries.K, SimQueries.NProbe))
+    check(Similarity.ivfTopK(dup, corpus, SimQueries.K,
+      SimQueries.ClusterCentPred, SimQueries.NProbe))
   }
 }

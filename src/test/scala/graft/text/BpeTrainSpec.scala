@@ -165,6 +165,31 @@ class BpeTrainSpec extends SparkSpec {
     assert(one.map(m => (m.a, m.b)) == Seq(("a", "b")))
   }
 
+  test("the distributed round loop equals the driver-local one (all three learners)") {
+    val fixtures = Seq(
+      docsOf("the then there the", "then the anthem", "there and then the"),
+      docsOf("ab cd", "cd ab"),
+      docsOf("a b c", "b c a"),
+      docsOf("ab ab ab"),
+      docsOf("the the the"),
+      docsOf(
+        "the then there the quick brown fox", "then the anthem of the north",
+        "there and then the quick fox ran", "quick brown foxes run north"))
+    def rules(ms: Seq[BpeTrain.Merge]) = ms.map(m => (m.a, m.b, m.cnt))
+    def runAll(docs: org.apache.spark.sql.DataFrame) = {
+      val (b, bs) = BpeTrain.learnBatchedStats(docs, 12, maxBatch = 2)
+      val (e, es) = BpeTrain.learnEpochStats(docs, 24, batch = 8)
+      (rules(BpeTrain.learn(docs, 10)), rules(b), bs, rules(e), es)
+    }
+    val key = "spark.graft.bpe.localLoopMaxVocab"
+    for ((docs, i) <- fixtures.zipWithIndex) {
+      val local = runAll(docs)
+      spark.conf.set(key, "0") // every vocab is over the gate: distributed
+      val dist = try runAll(docs) finally spark.conf.unset(key)
+      assert(dist == local, s"fixture $i")
+    }
+  }
+
   test("the learned table drives the existing encoder") {
     val docs = docsOf("the the the cat", "the cat sat")
     val merges = BpeTrain.asMerges(BpeTrain.learn(docs, 4))
