@@ -172,6 +172,44 @@ object Bench {
     }
   }
 
+  private[graft] def jq(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** Non-timing telemetry rows (counters, load stamps, recall fractions):
+    * they live only in the full dump; the compact line carries seconds.
+    */
+  private val NonTimingRow = java.util.regex.Pattern.compile(
+    "rounds|merges|meanbatch|sweeps|loadavg|ambient|_reran|recall|cand_frac")
+
+  /** The compact last stdout line — the contract shape of the full line:
+    * the full-suite total, the slowest timing rows at 3 decimals greedily
+    * packed into a `budget`-char line (≈87% of suite seconds at the r13
+    * profile, ~65 rows), an `elided` count of the TIMING rows that did not
+    * fit (non-timing rows never compete for the line, so they are not
+    * counted), and a pointer at the verbatim full dump.
+    */
+  private[graft] def compactLine(total: Double, results: Seq[(String, Double)],
+                                 errorsN: Int, sfDir: String,
+                                 budget: Int = 1750): String = {
+    def fmt3(v: Double): String =
+      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+        .bigDecimal.toPlainString
+    val cand = results
+      .filter { case (k, _) => !NonTimingRow.matcher(k).find() }
+      .sortBy { case (_, v) => -v }
+    val sb = new StringBuilder(
+      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":{""")
+    var taken = 0
+    cand.foreach { case (k, v) =>
+      val entry = (if (taken == 0) "" else ",") + jq(k) + ":" + fmt3(v)
+      if (sb.length + entry.length <= budget) { sb.append(entry); taken += 1 }
+    }
+    val errPart = if (errorsN == 0) "" else s""","errors_n":$errorsN"""
+    sb.append(s"""},"elided":${cand.size - taken}$errPart""")
+    sb.append(s""","full":"bench_out.json","sf":"$sfDir"}""")
+    sb.toString
+  }
+
   /** Ambient-foreign-core gate for SUSTAINED latency-distribution legs
     * (the per-poll mean/max rows) — an order tighter than the suite-wide
     * cores/8 launch gate. Round-12 lesson: a 1.48-core ambient inflated
@@ -448,6 +486,19 @@ object Bench {
 
     val queryTimes = SparkEntry.queries.map { case (name, fn) =>
       timed(name) { fn(spark, sfDir).count(); () }
+    } ++ Seq(
+      // the other side of each driver-local size gate: the same oracle
+      // query with its gate at 0, so the distributed path (the one a
+      // 100 TB input takes) stays under measurement
+      "d7_dup_clusters_dist" -> ("d7_dup_clusters", "spark.graft.cc.localSolveMaxPairs"),
+      "t7_bpe_dist" -> ("t7_bpe_train", "spark.graft.bpe.localLoopMaxVocab")
+    ).map { case (row, (query, gate)) =>
+      timed(row) {
+        spark.conf.set(gate, "0")
+        try SparkEntry.queries(query)(spark, sfDir).count()
+        finally spark.conf.unset(gate)
+        ()
+      }
     }
 
     // BPE training at production-leaning vocab scale: the sequential
@@ -1286,7 +1337,6 @@ object Bench {
       recall ++ filteredRecall ++
       clusteredGates ++ annAuto ++ detectTimes ++ sustained ++ detect10x ++
       detect100x ++ sf1Times ++ sf10Times
-    def jq(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val qs = results.map { case (k, v) => jq(k) + ":" + v }.mkString("{", ",", "}")
     val errJson =
       if (errors.isEmpty) ""
@@ -1321,37 +1371,10 @@ object Bench {
     // driver's BENCH capture keeps only a 2,000-char stdout tail, so the
     // line's opening '{' has been cut off EVERY round since r1 and
     // BENCH_r*/PERF_r* carried parsed:null. Emit, as the LAST stdout line,
-    // a compact JSON with the same contract shape — full-suite total, the
-    // slowest timing rows at 3 decimals greedily packed into a 1,750-char
-    // budget (≈87% of suite seconds at the r13 profile, ~65 rows), an
-    // `elided` count, and a pointer at the verbatim full dump above. This
-    // is output FORMATTING only: no timing methodology changed, and every
-    // key keeps its full-precision value in the full line / bench_out.json.
-    val compactLine = {
-      def fmt3(v: Double): String =
-        BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-          .bigDecimal.toPlainString
-      // non-timing telemetry rows (counters, load stamps, recall fractions)
-      // live only in the full dump; the compact line carries seconds
-      val nonTiming = java.util.regex.Pattern.compile(
-        "rounds|merges|meanbatch|sweeps|loadavg|ambient|_reran|recall|cand_frac")
-      val cand = results
-        .filter { case (k, _) => !nonTiming.matcher(k).find() }
-        .sortBy { case (_, v) => -v }
-      val budget = 1750
-      val sb = new StringBuilder(
-        s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":{""")
-      var taken = 0
-      cand.foreach { case (k, v) =>
-        val entry = (if (taken == 0) "" else ",") + jq(k) + ":" + fmt3(v)
-        if (sb.length + entry.length <= budget) { sb.append(entry); taken += 1 }
-      }
-      val errPart = if (errors.isEmpty) "" else s""","errors_n":${errors.size}"""
-      sb.append(s"""},"elided":${results.size - taken}$errPart""")
-      sb.append(s""","full":"bench_out.json","sf":"$sfDir"}""")
-      sb.toString
-    }
-    println(compactLine)
+    // the compact JSON of [[compactLine]]. This is output FORMATTING only:
+    // no timing methodology changed, and every key keeps its
+    // full-precision value in the full line / bench_out.json.
+    println(compactLine(total, results, errors.size, sfDir))
     spark.stop()
   }
 }

@@ -66,14 +66,13 @@ object DotProduct {
 
   val Name = "graft_dot"
 
-  /** Register `graft_dot` on the session (idempotent). Done per session
+  /** Register `graft_dot` on the session (a no-op once registered). Done per session
     * rather than via `spark.sql.extensions` because the driver harness
     * builds plain sessions; an extensions-based deployment would call
     * `injectFunction` with the same builder.
     */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, (exprs: Seq[Expression]) => DotProductExpr(exprs(0), exprs(1)), "built-in")
+    RegisterOnce(spark, Name, (exprs: Seq[Expression]) => DotProductExpr(exprs(0), exprs(1)))
 
   /** Column form; requires `register(spark)` on the owning session. */
   def apply(a: Column, b: Column): Column = call_function(Name, a, b)

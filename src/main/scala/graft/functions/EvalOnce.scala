@@ -53,10 +53,9 @@ object EvalOnce {
 
   val Name = "graft_eval_once"
 
-  /** Register `graft_eval_once` on the session (idempotent). */
+  /** Register `graft_eval_once` on the session (a no-op once registered). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, (exprs: Seq[Expression]) => EvalOnceExpr(exprs.head), "built-in")
+    RegisterOnce(spark, Name, (exprs: Seq[Expression]) => EvalOnceExpr(exprs.head))
 
   /** Column form; requires `register(spark)` on the owning session. */
   def apply(c: Column): Column = call_function(Name, c)

@@ -68,10 +68,9 @@ object IntDotProduct {
 
   val Name = "graft_dot_int"
 
-  /** Register `graft_dot_int` on the session (idempotent). */
+  /** Register `graft_dot_int` on the session (a no-op once registered). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, (exprs: Seq[Expression]) => IntDotProductExpr(exprs(0), exprs(1)), "built-in")
+    RegisterOnce(spark, Name, (exprs: Seq[Expression]) => IntDotProductExpr(exprs(0), exprs(1)))
 
   /** Column form; requires `register(spark)` on the owning session. */
   def apply(a: Column, b: Column): Column = call_function(Name, a, b)

@@ -83,10 +83,9 @@ object L2Sq {
 
   val Name = "graft_l2sq"
 
-  /** Register `graft_l2sq` on the session (idempotent). */
+  /** Register `graft_l2sq` on the session (a no-op once registered). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, (exprs: Seq[Expression]) => L2SqExpr(exprs(0), exprs(1)), "built-in")
+    RegisterOnce(spark, Name, (exprs: Seq[Expression]) => L2SqExpr(exprs(0), exprs(1)))
 
   /** Column form; requires `register(spark)` on the owning session. */
   def apply(a: Column, b: Column): Column = call_function(Name, a, b)

@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
   *    sorted-struct left fold it replaces), with cn2 the [[DotProduct]]
   *    fold of each stored entry against itself, stamped at registration.
   *
-  * `entries(s)` must be sorted ascending by cid (collectPqEntries does).
+  * `entries(s)` must be sorted ascending by cid (Similarity's codebook collect does).
   */
 case class PqEncodeExpr(child: Expression,
                         cids: Array[Array[Int]],

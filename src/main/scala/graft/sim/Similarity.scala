@@ -1,9 +1,10 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType,
+  LongType, StructField, StructType}
 
 /** Embedding similarity: exact cosine, brute-force top-k ANN baseline, and
   * an LSH-bucketed approximate variant (the 100 TB scale path).
@@ -442,32 +443,27 @@ object Similarity {
       gridScale, idCol, vecCol)
     // materialize the refinement ONCE (eager local checkpoint of the tiny
     // centroid relation), write the store from the materialized rows, and
-    // hand the same rows to the assignment sweep below — round 13: the
-    // sweep previously re-READ the just-written parquet (listing + schema
-    // inference + scan job per build), pure fixed cost the build pays at
-    // every scale since the rows are already driver-adjacent and
-    // broadcast-bound either way. Blocks are released after the sweep.
+    // seed the index handle with the same rows — the assignment sweep
+    // below and every later call on this build read the handle, never
+    // the just-written parquet (listing + schema inference + scan job).
     val centsCk = cents.localCheckpoint(true)
     centsCk.write.mode("overwrite").parquet(s"$path/centroids")
+    val centEntries = collectCentEntries(centsCk)
+    releaseCheckpointBlocks(centsCk)
     // PQ codebooks train on the SAME sample as the coarse quantizer and
     // are persisted beside the centroids — appends and queries read the
     // stored codebooks, never retrain (codes stay valid under append).
-    // Same round-13 discipline: train once into a checkpoint, write the
-    // store from it, encode against the identical rows in memory instead
-    // of re-reading + re-deriving (pqM, w) from the files just written.
-    val cbCk: Option[(DataFrame, Int, Int)] =
+    // Same discipline: train once into a checkpoint, write the store from
+    // it, seed the handle from the identical rows.
+    val books: Option[PqBooks] =
       if (storage != "pq") None
       else {
         val cb = trainPqCodebooks(train, dim, pqM, pqK, refineIters, gridScale,
           idCol, vecCol, pqSeedSalt).localCheckpoint(true)
         cb.write.mode("overwrite").parquet(s"$path/pq_codebooks")
-        // the named empty-train failure used to surface via
-        // readPqCodebooks when the encode pass re-read the store; the
-        // build encodes from memory now, so the check moves here
-        if (cb.isEmpty) throw new IllegalStateException(
-          s"$path/pq_codebooks is empty — the quantizer trained on zero " +
-            "rows (empty train corpus?); rebuild over a non-empty corpus")
-        Some((cb, pqM, dim / pqM))
+        val b = pqBooksOf(cb, path)
+        releaseCheckpointBlocks(cb)
+        Some(b)
       }
     // a REBUILD at the same path (the drift-rebuild lifecycle
     // appendToIvfIndex anticipates) must not inherit the previous
@@ -485,11 +481,16 @@ object Similarity {
     }
     // record the stored form durably BEFORE any data lands: appends
     // dispatch on this manifest, never on data files deletes can empty
-    writeMetaFile(corpus.sparkSession, path, "storage", storage)
-    assignIntoIndex(corpus, path, SaveMode.Overwrite, idCol, vecCol, carry,
-      storage = storage, centroids = Some(centsCk), pqCodebooks = cbCk)
-    releaseCheckpointBlocks(centsCk)
-    cbCk.foreach { case (cb, _, _) => releaseCheckpointBlocks(cb) }
+    val spark = corpus.sparkSession
+    writeMetaFile(spark, path, "storage", storage)
+    val h = new IndexHandle(path, centroidStamp(spark, path), centEntries,
+      Some(storage), None, books)
+    val layout = assignIntoIndex(corpus, path, SaveMode.Overwrite, idCol,
+      vecCol, carry, storage, h)
+    // the layout schema every later scan reads with (no footer inference)
+    writeMetaFile(spark, path, "layout", layout.json)
+    h.learnLayout(layout)
+    keepOpen(h)
   }
 
   /** Free the executor blocks behind an eager `localCheckpoint` once its
@@ -523,22 +524,134 @@ object Similarity {
       s
     }
 
-  /** The index's stored form: the build-time manifest, or — for a
-    * pre-manifest legacy layout — inferred from the `assigned/` schema
-    * (float32 when nothing is stored yet).
+  // ---- the index handle: what one build fixes, read once per build ----
+
+  /** A pq index's codebooks: per-sub kernel entries `(cid, cv, cn2)` and
+    * (pqM, w), plus the (sub, cid, cv) rows the ADC lookup-table build
+    * crosses the queries with.
     */
-  private def storedForm(spark: org.apache.spark.sql.SparkSession,
-                         path: String): String =
-    readStorageManifest(spark, path).getOrElse {
-      try {
-        val cols = spark.read.parquet(s"$path/assigned").columns
-        if (cols.contains("codes")) "pq"
-        else if (cols.contains("q8")) "int8"
-        else "float32"
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => "float32"
-      }
+  private final case class PqBooks(
+      entries: IndexedSeq[IndexedSeq[(Int, Array[Float], Double)]],
+      pqM: Int, w: Int) {
+    private val rows: java.util.List[Row] = {
+      import scala.jdk.CollectionConverters._
+      entries.zipWithIndex.flatMap { case (es, sub) =>
+        es.map { case (cid, cv, _) => Row(sub, cid, cv.toSeq) }
+      }.asJava
     }
+    def local(spark: SparkSession): DataFrame =
+      spark.createDataFrame(rows, PqBookSchema)
+  }
+
+  private val PqBookSchema = StructType(Seq(StructField("sub", IntegerType),
+    StructField("cid", IntegerType), StructField("cv", ArrayType(FloatType))))
+
+  /** What one BUILD of a persisted index fixes, held on the driver so a
+    * call pays only for what changes between calls (generations,
+    * tombstones, the probed cells' files): the collected centroid
+    * entries, the stored form, the `assigned/` layout schema (scans read
+    * with it — no footer-inference job) and, for a pq index, the
+    * codebooks. Appends, deletes and compactions never move any of them;
+    * a rebuild writes new centroid files, which is what `stamp` — the
+    * `centroids/` listing at open — detects (see [[openIndex]]).
+    *
+    * Pre-manifest indexes (no `_meta/layout`) get the layout inferred
+    * once, on first need; the stored form falls back to it as before.
+    * Committed tombstone epochs are immutable, so each one's schema is
+    * resolved (or recorded by its writer) once. Holds arrays and schemas
+    * only — never a DataFrame or cached blocks.
+    */
+  private final class IndexHandle(
+      val path: String,
+      val stamp: Seq[(String, Long)],
+      val cents: IndexedSeq[(Long, Array[Float], Double)],
+      manifest: Option[String],
+      @volatile private var layoutSeen: Option[StructType],
+      @volatile private var booksSeen: Option[PqBooks]) {
+
+    val tombSchemas = scala.collection.concurrent.TrieMap[Long, StructType]()
+
+    /** The `assigned/` schema (partition columns `cell`, `g` as long), or
+      * None while nothing has ever been stored.
+      */
+    def layout(spark: SparkSession): Option[StructType] =
+      layoutSeen.orElse {
+        val inferred =
+          try Some(longPartitions(spark.read.parquet(s"$path/assigned").schema))
+          catch { case _: AnalysisException => None }
+        inferred.foreach(learnLayout)
+        inferred
+      }
+
+    def learnLayout(s: StructType): Unit = if (layoutSeen.isEmpty) layoutSeen = Some(s)
+
+    /** The build-time manifest, or — pre-manifest — the form the layout
+      * holds (float32 when nothing is stored yet).
+      */
+    def storage(spark: SparkSession): String =
+      manifest.getOrElse(layout(spark).map(_.fieldNames.toSet).fold("float32") { cols =>
+        if (cols("codes")) "pq" else if (cols("q8")) "int8" else "float32"
+      })
+
+    def books(spark: SparkSession): PqBooks = booksSeen.getOrElse {
+      val b = readPqBooks(spark, path)
+      booksSeen = Some(b)
+      b
+    }
+  }
+
+  /** A layout schema with the partition columns typed as written (long):
+    * cell ids are corpus ids, so an inferred int would not hold them all.
+    */
+  private def longPartitions(s: StructType): StructType =
+    StructType(s.filterNot(f => f.name == "cell" || f.name == "g"))
+      .add("cell", LongType).add("g", LongType)
+
+  /** How many index handles stay open; the least recently used is dropped. */
+  private val MaxOpenIndexes = 16
+
+  private val openIndexes =
+    new java.util.LinkedHashMap[String, IndexHandle](MaxOpenIndexes, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, IndexHandle]): Boolean =
+        size() > MaxOpenIndexes
+    }
+
+  private def keepOpen(h: IndexHandle): Unit =
+    openIndexes.synchronized { openIndexes.put(h.path, h); () }
+
+  /** The `centroids/` data files as (name, length) — a rebuild writes new
+    * part-file names, so a changed listing means a new build.
+    */
+  private def centroidStamp(spark: SparkSession, path: String): Seq[(String, Long)] = {
+    val dir = new org.apache.hadoop.fs.Path(s"$path/centroids")
+    val fs = hadoopFs(spark, dir)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).iterator
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .map(f => f.getPath.getName -> f.getLen).toSeq.sorted
+  }
+
+  /** The handle of the index at `path`: the open one while its centroid
+    * listing still matches (one listing per call), else read from the
+    * store — centroids collected, manifests read.
+    */
+  private def openIndex(spark: SparkSession, path: String): IndexHandle = {
+    val stamp = centroidStamp(spark, path)
+    openIndexes.synchronized(Option(openIndexes.get(path)))
+      .filter(_.stamp == stamp)
+      .getOrElse {
+        val h = new IndexHandle(path, stamp,
+          collectCentEntries(spark.read.parquet(s"$path/centroids")),
+          readStorageManifest(spark, path),
+          readMetaFile(spark, path, "layout")
+            .map(j => DataType.fromJson(j).asInstanceOf[StructType]),
+          None)
+        keepOpen(h)
+        h
+      }
+  }
 
   /** Whole-file-then-rename publish of a tiny `path/_meta/<name>` record
     * (the `_gens` pattern: the file appears atomically or not at all).
@@ -617,15 +730,16 @@ object Similarity {
   def appendToIvfIndex(delta: DataFrame, path: String,
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        carry: Seq[String] = Nil,
-                       storage: Option[String] = None,
-                       cachedCentroids: Option[DataFrame] = None): Unit = {
+                       storage: Option[String] = None): Unit = {
     requireCarryNames(carry)
+    val spark = delta.sparkSession
+    val h = openIndex(spark, path)
     // the stored form follows the EXISTING index (an append can never
     // silently mix storage forms): the build-time manifest is the
     // authority — unlike the data files, it survives a fully-reclaimed
     // index (every live generation emptied by deletes), where schema
     // inference would fall back to float32 and silently corrupt a
-    // quantized index's scoring dispatch. Schema inference remains only
+    // quantized index's scoring dispatch. The layout schema remains only
     // as the pre-manifest legacy path; the explicit override only
     // matters when neither exists yet.
     val stored = storage match {
@@ -633,10 +747,10 @@ object Similarity {
         require(Storages(s),
           s"storage must be one of ${Storages.mkString("/")}, got $s")
         s
-      case None => storedForm(delta.sparkSession, path)
+      case None => h.storage(spark)
     }
-    assignIntoIndex(delta, path, SaveMode.Append, idCol, vecCol, carry,
-      storage = stored, centroids = cachedCentroids)
+    h.learnLayout(assignIntoIndex(delta, path, SaveMode.Append, idCol, vecCol,
+      carry, stored, h))
   }
 
   /** Streaming form of [[appendToIvfIndex]]: every micro-batch of
@@ -647,15 +761,11 @@ object Similarity {
     * checkpoint + the idempotent cell layout (replayed batches re-append —
     * at-least-once, as the alert log's sink contract).
     *
-    * Per-batch floor amortization (round-13): the centroids (and a pq
-    * index's codebooks) are IMMUTABLE for the stream's lifetime —
-    * compaction never moves them, and a rebuild is excluded by the
-    * single-writer contract while the stream runs — so they are cached
-    * ONCE here and every micro-batch broadcasts from memory instead of
-    * re-scanning the stored parquet, and the stored-form manifest is
-    * resolved once instead of per batch. Caches are released when the
-    * query terminates (listener below). What remains of the floor is the
-    * partitioned write itself — and the century pair
+    * Per-batch floor: the centroids, stored form and (pq) codebooks are
+    * fixed for the index build, so every micro-batch is served from the
+    * index handle ([[openIndex]], opened here before the first trigger)
+    * — one `centroids/` listing per batch, no store re-scan. What remains
+    * of the floor is the partitioned write itself — and the century pair
     * (`sf10_s10_stream_*` at 1 vs 4 files/trigger) measured that it is
     * NOT constant: successive appends commit into cell dirs holding
     * progressively more small files, so per-trigger cost grows with
@@ -677,41 +787,17 @@ object Similarity {
       s"compactEvery must be >= 1 batch, got $n"))
     requireCarryNames(carry)
     val spark = vectors.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids").cache()
-    cents.count() // materialize before the first trigger
-    val stored = storedForm(spark, path) // resolved ONCE, not per batch
-    val cachedCb = if (stored == "pq") {
-      val (raw, pqM, w) = readPqCodebooks(spark, path)
-      val c = raw.cache(); c.count()
-      Some((c, pqM, w))
-    } else None
-    val q = vectors.writeStream
+    openIndex(spark, path) // a missing index fails here, not in a trigger
+    vectors.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        assignIntoIndex(batch, path, SaveMode.Append, idCol, vecCol, carry,
-          storage = stored, centroids = Some(cents),
-          pqCodebooks = cachedCb)
+        appendToIvfIndex(batch, path, idCol, vecCol, carry)
         compactEvery.foreach { n =>
           if ((batchId + 1) % n == 0) compactIvfIndex(spark, path)
         }
       }
       .start()
-    val qid = q.id
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == qid) {
-          cents.unpersist()
-          cachedCb.foreach(_._1.unpersist())
-          spark.streams.removeListener(this)
-        }
-    })
-    q
   }
 
   /** Cell assignment shared by every IVF path (build, append, in-memory
@@ -746,29 +832,22 @@ object Similarity {
     }
   }
 
-  /** The index write: assign `vecs` against the index's stored centroids
-    * ([[assignCells]]) and write into the cell-partitioned layout under
-    * `mode`. With `quantize` the stored
+  /** The index write: assign `vecs` against the index's centroids
+    * ([[assignCells]] over the handle's entries — what the build stored)
+    * and write into the cell-partitioned layout under `mode`. With
+    * `storage = "int8"` the stored
     * payload is the SQ8 form ([[withQuantized]]: `q8` int array +
     * `q8_scale`) plus the integer norm `qn` INSTEAD of the float vector —
     * assignment still scores the float vector (centroids stay float;
     * they are the small side), only the per-vector storage shrinks.
+    * Returns the layout schema written.
     */
   private def assignIntoIndex(vecs: DataFrame, path: String, mode: SaveMode,
                               idCol: String, vecCol: String,
-                              carry: Seq[String],
-                              storage: String = "float32",
-                              centroids: Option[DataFrame] = None,
-                              pqCodebooks: Option[(DataFrame, Int, Int)] = None)
-      : Unit = {
+                              carry: Seq[String], storage: String,
+                              h: IndexHandle): StructType = {
     val spark = vecs.sparkSession
-    // read (don't recompute) the centroids: build reuses its just-written
-    // refinement, append sees exactly what the build stored. A caller
-    // holding the stream-lifetime cache passes it in so each micro-batch
-    // collects from memory instead of re-scanning the parquet store.
-    val cents = collectCentEntries(
-      centroids.getOrElse(spark.read.parquet(s"$path/centroids")))
-    val assigned = assignCells(vecs, cents, idCol, vecCol, carry)
+    val assigned = assignCells(vecs, h.cents, idCol, vecCol, carry)
     val stored = storage match {
       case "float32" => assigned
       case "int8" =>
@@ -791,9 +870,8 @@ object Similarity {
         // of that folds into per-row expressions with identical math
         // (same native L2 fold, same (d2, cid) tie-break, same sub-order
         // left fold for rn — parity-pinned by the s15/s16 oracle rows).
-        val cbDf = pqCodebooks.map(_._1).getOrElse(readPqCodebooks(spark, path)._1)
-        val (entries, _, w) = collectPqEntries(cbDf)
-        graft.functions.PqEncode.register(spark, entries, w)
+        val b = h.books(spark)
+        graft.functions.PqEncode.register(spark, b.entries, b.w)
         // one shared `__pqb` struct column: codes and rn both read it, and
         // CollapseProject does not inline a non-cheap alias referenced
         // twice — the kernel runs once per row, not once per consumer
@@ -838,6 +916,7 @@ object Similarity {
       // tasks; hashing by cell keeps file count O(cells) either way.
       .repartition(spark.sessionState.conf.numShufflePartitions, col("cell"))
       .write.mode(mode).partitionBy("cell", "g").parquet(assignedRoot)
+    longPartitions(genStamped.schema)
   }
 
   // ---- generation + tombstone bookkeeping of the persisted layout ------
@@ -921,11 +1000,32 @@ object Similarity {
                       cells: Option[Seq[Long]] = None): DataFrame = {
     val dirs = liveAssignedDirs(spark, path, cells)
     require(dirs.nonEmpty, s"$path/assigned holds no cell directories")
-    spark.read.option("basePath", s"$path/assigned")
-      .parquet(dirs: _*)
+    scanLive(spark, openIndex(spark, path), dirs)
+  }
+
+  /** The scan over live generation `dirs`, read with the handle's layout
+    * schema (no footer-inference job; dirs without data files read as
+    * zero rows) — inferred only while no layout is known, which throws
+    * AnalysisException when the dirs hold no data file. `g` dropped,
+    * `cell` as long.
+    */
+  private def scanLive(spark: SparkSession, h: IndexHandle,
+                       dirs: Seq[String]): DataFrame = {
+    val r = spark.read.option("basePath", s"${h.path}/assigned")
+    h.layout(spark).fold(r)(r.schema).parquet(dirs: _*)
       .drop("g")
       .withColumn("cell", col("cell").cast("long"))
   }
+
+  /** [[scanLive]] when `dirs` hold a data file; None when nothing is
+    * stored under them (no cell dir, or every live generation emptied by
+    * reclaimed deletes) — semantically zero rows.
+    */
+  private def liveRows(spark: SparkSession, h: IndexHandle,
+                       dirs: Seq[String]): Option[DataFrame] =
+    if (dirs.isEmpty) None
+    else try Some(scanLive(spark, h, dirs)).filter(_.inputFiles.nonEmpty)
+    catch { case _: AnalysisException => None }
 
   /** Committed `epoch=<id>` ids under `dir`, ascending — the
     * `_SUCCESS`-marker definition (the CurationStream epoch discipline)
@@ -942,34 +1042,31 @@ object Similarity {
       .map(_.stripPrefix("epoch=").toLong).sorted.toSeq
   }
 
-  /** The live tombstone id set — the newest committed epoch, a
-    * single-column (`c_id`) frame — or None when the index has never had
-    * a delete. Each epoch is SELF-CONTAINED (the full current tombstone
+  /** The live tombstone set: the newest committed epoch's single-column
+    * (`c_id`) frame, its on-disk parquet bytes — the size the query-path
+    * broadcast decision is made on — and its epoch id.
+    */
+  private final case class Tombstones(epoch: Long, ids: DataFrame, bytes: Long)
+
+  /** The live [[Tombstones]], or None when the index has never had a
+    * delete. Each epoch is SELF-CONTAINED (the full current tombstone
     * set, not a delta), so readers resolve exactly one epoch dir and
     * retiring the set is writing an empty newer epoch — never deleting
-    * files a lagging reader may hold.
+    * files a lagging reader may hold. One listing of the tombstone root
+    * and one of the epoch dir (written by [[deleteFromIvfIndex]] as one
+    * coalesced file); a committed epoch is immutable, so its schema is
+    * resolved once per handle and the read runs no inference job.
     */
-  private def readTombstones(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Option[DataFrame] =
-    readTombstonesSized(spark, path).map(_._1)
-
-  /** The live tombstone epoch plus its on-disk parquet bytes — the size
-    * the query-path broadcast decision is made on (one listing of the
-    * epoch dir; no Spark job, and the set was written by
-    * [[deleteFromIvfIndex]] as one coalesced file so the listing is a
-    * handful of statuses).
-    */
-  private def readTombstonesSized(spark: org.apache.spark.sql.SparkSession,
-                                  path: String): Option[(DataFrame, Long)] = {
-    val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(path))
-    val epochs = committedEpochs(fs, s"$path/tombstones")
-    if (epochs.isEmpty) None
-    else {
-      val dir = s"$path/tombstones/epoch=${epochs.max}"
+  private def liveTombstones(spark: SparkSession,
+                             h: IndexHandle): Option[Tombstones] = {
+    val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(h.path))
+    committedEpochs(fs, s"${h.path}/tombstones").lastOption.map { e =>
+      val dir = s"${h.path}/tombstones/epoch=$e"
       val bytes = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
         .filter(_.isFile).filterNot(_.getPath.getName.startsWith("_"))
         .map(_.getLen).sum
-      Some((spark.read.parquet(dir), bytes))
+      val schema = h.tombSchemas.getOrElseUpdate(e, spark.read.parquet(dir).schema)
+      Tombstones(e, spark.read.schema(schema).parquet(dir), bytes)
     }
   }
 
@@ -1042,9 +1139,8 @@ object Similarity {
                          path: String, ids: DataFrame,
                          idCol: String = "vec_id"): Long = {
     val add = ids.select(col(idCol).as("c_id")).distinct()
-    val prev = readTombstones(spark, path)
-    val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(path))
-    val cur = committedEpochs(fs, s"$path/tombstones").lastOption
+    val h = openIndex(spark, path)
+    val live = liveTombstones(spark, h)
     // WRITE-AMPLIFICATION HYGIENE: each epoch is self-contained
     // (previous ∪ new), so a high-frequency caller re-submitting
     // already-live ids — the per-epoch curation hook replaying its drop
@@ -1057,16 +1153,20 @@ object Similarity {
     // [[deleteCurationDropsFromIvfIndex]] for the hook's own delta
     // discipline, which keeps the live set delta-sized between
     // compactions.
-    val isNoOp = cur.isDefined &&
-      prev.fold(false)(p => add.join(p, Seq("c_id"), "left_anti").isEmpty)
-    if (isNoOp) return cur.get
-    val full = prev.fold(add)(p => p.unionByName(add).distinct())
-    val next = cur.getOrElse(-1L) + 1L
-    // one file: the tombstone set is delete-volume sized, not corpus sized
-    full.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/tombstones/epoch=$next")
-    pruneTombEpochs(spark, path, keep = 2)
-    next
+    live.filter(t => add.join(t.ids, Seq("c_id"), "left_anti").isEmpty) match {
+      case Some(t) => t.epoch
+      case None =>
+        // the ids keep their own type (a narrower caller type is widened
+        // by the query's anti-join); the writer records the epoch schema
+        val full = live.fold(add)(t => t.ids.unionByName(add).distinct())
+        val next = live.fold(0L)(_.epoch + 1L)
+        // one file: the tombstone set is delete-volume sized, not corpus sized
+        full.coalesce(1).write.mode(SaveMode.Overwrite)
+          .parquet(s"$path/tombstones/epoch=$next")
+        h.tombSchemas(next) = full.schema
+        pruneTombEpochs(spark, path, keep = 2)
+        next
+    }
   }
 
   /** Wire a curation COMPACTION EPOCH's dropped-id set
@@ -1127,14 +1227,12 @@ object Similarity {
         // retention pruned the applied artifact (or nothing was ever
         // applied): keep only drops still physically present — an id the
         // index's compaction reclaimed cannot need masking again
-        try drops.join(
-            readIvfAssigned(spark, indexPath)
-              .select(col("c_id").as(dropIdCol)).distinct(),
-            Seq(dropIdCol), "left_semi")
-        catch {
-          // a fully-reclaimed index holds no rows — nothing to mask
-          case _: org.apache.spark.sql.AnalysisException => drops.limit(0)
-        }
+        // (a fully-reclaimed index holds no rows — nothing to mask)
+        liveRows(spark, openIndex(spark, indexPath),
+            liveAssignedDirs(spark, indexPath, None))
+          .fold(drops.limit(0))(a => drops.join(
+            a.select(col("c_id").as(dropIdCol)).distinct(),
+            Seq(dropIdCol), "left_semi"))
     }
     val r = deleteFromIvfIndex(spark, indexPath, delta, dropIdCol)
     // watermark AFTER the tombstone state covers `newest` — the crash
@@ -1197,6 +1295,7 @@ object Similarity {
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       maxFilesPerCell: Int = 1): Seq[Long] = {
     require(maxFilesPerCell >= 1, s"maxFilesPerCell >= 1, got $maxFilesPerCell")
+    val h = openIndex(spark, path)
     val assignedRoot = s"$path/assigned"
     val root = new org.apache.hadoop.fs.Path(assignedRoot)
     val fs = hadoopFs(spark, root)
@@ -1220,26 +1319,23 @@ object Similarity {
         maxFilesPerCell)
     // only a NON-EMPTY live tombstone set drives work; the empty epoch a
     // previous retirement wrote is already the retired state
-    val tombs = readTombstones(spark, path).filter(!_.isEmpty)
+    val tombs = liveTombstones(spark, h).map(_.ids).filter(!_.isEmpty)
     val tombTargets: Seq[Long] = tombs.fold(Seq.empty[Long]) { t =>
       // one column-pruned pass over (c_id, cell) of the live layout: the
       // tombstone store holds ids, not cells, so the dead rows' cells are
-      // looked up once here — maintenance-pass cost, never query cost
-      try readIvfAssigned(spark, path).select(col("c_id"), col("cell"))
-        .join(t, Seq("c_id"))
-        .select(col("cell")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      catch {
-        // a fully-reclaimed index (every live generation empty, so no
-        // file to infer a schema from) holds no rows — no cell can hold
-        // a tombstoned row; the retirement below still applies the set
-        case _: org.apache.spark.sql.AnalysisException => Seq.empty[Long]
-      }
+      // looked up once here — maintenance-pass cost, never query cost. A
+      // fully-reclaimed index holds no rows — no cell can hold a
+      // tombstoned row; the retirement below still applies the set
+      liveRows(spark, h, liveAssignedDirs(spark, path, None))
+        .fold(Seq.empty[Long])(_.select(col("c_id"), col("cell"))
+          .join(t, Seq("c_id"))
+          .select(col("cell")).distinct()
+          .collect().map(_.getLong(0)).toSeq)
     }
     val targets = (fileTargets ++ tombTargets).distinct.sorted
     if (targets.nonEmpty) {
       val nextGen = targets.map(c => c -> (gen(c) + 1L)).toMap
-      val live = readIvfAssigned(spark, path, Some(targets))
+      val live = scanLive(spark, h, liveAssignedDirs(spark, path, Some(targets)))
       val cleaned = tombs.fold(live)(t => live.join(t, Seq("c_id"), "left_anti"))
       val genDf = broadcast(
         spark.createDataFrame(nextGen.toSeq).toDF("cell", "__g"))
@@ -1281,6 +1377,7 @@ object Similarity {
       val next = committedEpochs(fs, s"$path/tombstones").lastOption.getOrElse(-1L) + 1L
       t.limit(0).coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$path/tombstones/epoch=$next")
+      h.tombSchemas(next) = t.schema
       pruneTombEpochs(spark, path, keep = 2)
     }
     targets
@@ -1402,18 +1499,15 @@ object Similarity {
                      maxPrunedPaths: Int = MaxPrunedIndexPaths,
                      probeWidenTarget: Option[Int] = None): DataFrame = {
     val dot = nativeDot(queries)
-    // the centroid relation is broadcast-class BY CONTRACT (it was shipped
-    // whole into every probe sweep), so collect it ONCE into kernel
-    // entries — round 14: the indexed query's fixed cost was 10 sub-200 ms
-    // jobs + ~0.9 s of driver gaps per call, dominated by store re-scans
-    // inside broadcast builds and the probe's window exchange
-    val centEntries = collectCentEntries(spark.read.parquet(s"$path/centroids"))
+    // centroids, stored form, layout schema and codebooks come from the
+    // index handle: fixed per build, so a call re-reads none of them
+    val h = openIndex(spark, path)
     // the probe resolution, parameterized so the filtered path can widen
     // it (the probed cells are intersected downstream with the cells that
     // actually exist on disk — an empty cell has no directory; reading it
     // would fail, skipping it is semantically identical)
     def probeAt(p: Int): (DataFrame, DataFrame, Array[Long]) =
-      probeCells(spark, queries, centEntries, p, idCol, vecCol)
+      probeCells(spark, queries, h.cents, p, idCol, vecCol)
     val (qCells0, qLoc0, probed0) = probeAt(nprobe)
     val assignedRoot = s"$path/assigned"
     // SELECTIVITY-AWARE PROBE WIDENING (opt-in): a highly selective
@@ -1429,15 +1523,10 @@ object Similarity {
     val effNprobe = (candidateFilter, probeWidenTarget) match {
       case (Some(f), Some(m)) if probed0.nonEmpty =>
         require(m >= 1, s"probeWidenTarget must be >= 1, got $m")
-        val dirs0 = liveAssignedDirs(spark, path, Some(probed0.toIndexedSeq))
-        val qual: Double =
-          if (dirs0.isEmpty) 0.0
-          else try {
-            spark.read.option("basePath", assignedRoot).parquet(dirs0: _*)
-              .filter(f).count().toDouble
-          } catch { // every probed live generation empty: nothing qualifies
-            case _: org.apache.spark.sql.AnalysisException => 0.0
-          }
+        // (every probed live generation empty: nothing qualifies)
+        val qual: Double = liveRows(spark, h,
+            liveAssignedDirs(spark, path, Some(probed0.toIndexedSeq)))
+          .fold(0.0)(_.filter(f).count().toDouble)
         val cap = cellsOnDisk(
           hadoopFs(spark, new org.apache.hadoop.fs.Path(assignedRoot)),
           assignedRoot).length.max(nprobe)
@@ -1455,7 +1544,7 @@ object Similarity {
     // this order keeps every interleaving consistent (an old tombstone
     // set masks old generations; an empty one proves the clean
     // generations are already visible)
-    val tombsSized = readTombstonesSized(spark, path)
+    val tombs = liveTombstones(spark, h)
     def emptyTopK: DataFrame = rankTopK(
       queries.select(col(idCol).as("q_id"), col(idCol).as("c_id"),
         lit(0.0d).as("cos")).limit(0), k)
@@ -1466,23 +1555,15 @@ object Similarity {
     // recursive listing (which would double-read retained generations)
     val dirs = liveAssignedDirs(spark, path,
       if (prune) Some(probed.toIndexedSeq) else None)
-    if (dirs.isEmpty)
-      // nothing stored under any probed cell: zero candidates, typed
-      // empty — schema derived from the caller's idCol type, so the
-      // empty and populated paths union/join identically (round-11
-      // ADVICE: the old spark.range form hardcoded LongType ids)
-      return emptyTopK
-    val assignedRead =
-      try spark.read.option("basePath", assignedRoot).parquet(dirs: _*)
-      catch {
-        // every selected live generation dir is empty (all rows of the
-        // probed cells tombstoned + reclaimed): no files, no schema —
-        // semantically zero candidates
-        case _: org.apache.spark.sql.AnalysisException => return emptyTopK
-      }
-    val assigned0 = assignedRead
-      .drop("g")
-      .withColumn("cell", col("cell").cast("long")) // partition col inference
+    // nothing stored under any probed cell (no cell dir, or every live
+    // generation emptied by reclaimed deletes): zero candidates, typed
+    // empty — schema derived from the caller's idCol type, so the empty
+    // and populated paths union/join identically (round-11 ADVICE: the
+    // old spark.range form hardcoded LongType ids)
+    val assigned0 = liveRows(spark, h, dirs) match {
+      case Some(rows) => rows
+      case None => return emptyTopK
+    }
     // deleted-but-not-yet-reclaimed rows: anti-join the live tombstone
     // epoch so a delete is effective IMMEDIATELY, before any rewrite.
     // Broadcast only while the set is broadcast-class by MEASURED size
@@ -1491,10 +1572,10 @@ object Similarity {
     // hint would turn a contract violation into a query-time OOM; the
     // plain anti-join keeps the query correct (and merely slower) until
     // the next compaction retires the set
-    val assignedLive = tombsSized.fold(assigned0) { case (t, bytes) =>
-      if (bytes <= tombstoneBroadcastMax(spark))
-        assigned0.join(broadcast(t), Seq("c_id"), "left_anti")
-      else assigned0.join(t, Seq("c_id"), "left_anti")
+    val assignedLive = tombs.fold(assigned0) { t =>
+      if (t.bytes <= tombstoneBroadcastMax(spark))
+        assigned0.join(broadcast(t.ids), Seq("c_id"), "left_anti")
+      else assigned0.join(t.ids, Seq("c_id"), "left_anti")
     }
     // FILTERED search: the predicate lands on the already-cell-pruned
     // scan over `carry` metadata (parquet predicate pushdown composes
@@ -1515,8 +1596,9 @@ object Similarity {
     // builds stop re-scanning the queries source once per branch
     val scored =
       if (assigned0.columns.contains("codes")) {
-        val (cbRaw, pqM, w) = readPqCodebooks(spark, path)
-        val qtab = qLoc.crossJoin(broadcast(cbRaw))
+        val b = h.books(spark)
+        val (pqM, w) = (b.pqM, b.w)
+        val qtab = qLoc.crossJoin(broadcast(b.local(spark)))
           .withColumn("t", dot(slice(col("v"), col("sub") * w + 1, lit(w)), col("cv")))
           .groupBy(col("q_id"))
           .agg(first(col("n")).as("qn"),
@@ -1665,35 +1747,31 @@ object Similarity {
     */
   private val PqKeySpace = 1L << 20
 
-  /** Read a pq index's stored codebooks and derive (pqM, w) from them —
-    * with a NAMED failure when the store is missing or empty (an empty
-    * training corpus, a torn write, or a float/int8 index asked to encode
-    * pq), instead of an opaque NPE off a null aggregate.
+  /** Read a pq index's stored codebooks — with a NAMED failure when the
+    * store is missing or empty (an empty training corpus, a torn write,
+    * or a float/int8 index asked to encode pq), instead of an opaque NPE
+    * off a null aggregate.
     */
-  private def readPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-                              path: String): (DataFrame, Int, Int) = {
-    val cbRaw =
+  private def readPqBooks(spark: SparkSession, path: String): PqBooks =
+    pqBooksOf(
       try spark.read.parquet(s"$path/pq_codebooks")
       catch {
-        case e: org.apache.spark.sql.AnalysisException => throw new IllegalStateException(
+        case e: AnalysisException => throw new IllegalStateException(
           s"$path holds no pq_codebooks — it was not built with storage=\"pq\" " +
             "(or the codebook write was torn); rebuild with buildIvfIndex(storage = \"pq\")", e)
-      }
-    // the codebooks are pqM × pqK tiny rows and every consumer broadcasts
-    // them — collect once into a local relation (round 14: the previous
-    // shape paid one (pqM, w) aggregate job plus a store re-scan inside
-    // each consumer's broadcast build) and derive (pqM, w) from the rows
-    val rows = cbRaw.collect()
+      }, path)
+
+  /** Collect a (sub, cid, cv) codebook relation — the stored one, or the
+    * build's checkpoint — into [[PqBooks]], once per index build.
+    */
+  private def pqBooksOf(cb: DataFrame, path: String): PqBooks = {
+    val rows = cb.select(col("sub"), col("cid"), col("cv")).collect()
     if (rows.isEmpty)
       throw new IllegalStateException(
         s"$path/pq_codebooks is empty — the quantizer trained on zero rows " +
           "(empty train corpus?); rebuild over a non-empty corpus")
-    import scala.jdk.CollectionConverters._
-    val si = cbRaw.schema.fieldIndex("sub")
-    val ci = cbRaw.schema.fieldIndex("cv")
-    val local = spark.createDataFrame(rows.toList.asJava, cbRaw.schema)
-    (local, rows.map(_.getInt(si)).max + 1,
-      rows.map(_.getAs[scala.collection.Seq[Float]](ci).size).max)
+    val (entries, pqM, w) = pqEntries(rows)
+    PqBooks(entries, pqM, w)
   }
 
   /** Driver-side twin of [[graft.functions.DotProductExpr]]'s fold:
@@ -1723,18 +1801,17 @@ object Similarity {
       (r.getLong(0), cv, math.sqrt(dotFoldLocal(cv, cv)))
     }.sortBy(_._1).toIndexedSeq
 
-  /** Collect a (sub, cid, cv) codebook relation into per-sub entry lists
-    * `(cid, cv, cn2)` sorted by cid, plus (pqM, w). The codebooks are
-    * pqM × pqK tiny rows and BROADCAST-bound by construction, so the
-    * collect adds no driver load the broadcast build did not already pay;
-    * what it buys is literal codebook arrays the assignment/encode passes
-    * fold into map-only expressions (no explode, no ×pqK join blowup, no
-    * per-vector shuffle — round 14, guide §1.2 step 1 / §2.4).
+  /** Group collected, non-empty (sub, cid, cv) codebook rows into per-sub
+    * entry lists `(cid, cv, cn2)` sorted by cid, plus (pqM, w). The
+    * codebooks are pqM × pqK tiny rows and BROADCAST-bound by
+    * construction, so the collect adds no driver load the broadcast build
+    * did not already pay; what it buys is literal codebook arrays the
+    * assignment/encode passes fold into map-only expressions (no explode,
+    * no ×pqK join blowup, no per-vector shuffle — round 14, guide §1.2
+    * step 1 / §2.4).
     */
-  private def collectPqEntries(cb: DataFrame)
+  private def pqEntries(rows: Array[Row])
       : (IndexedSeq[IndexedSeq[(Int, Array[Float], Double)]], Int, Int) = {
-    val rows = cb.select(col("sub"), col("cid"), col("cv")).collect()
-    require(rows.nonEmpty, "pq codebook relation is empty")
     val bySub = rows.groupBy(_.getInt(0))
     val pqM = bySub.keySet.max + 1
     require(bySub.keySet == (0 until pqM).toSet,
@@ -1747,7 +1824,6 @@ object Similarity {
     }
     (entries, pqM, entries.iterator.flatten.map(_._2.length).max)
   }
-
 
   /** Exact left-fold squared L2 distance between two float arrays:
     * `(a_k − b_k)²` accumulated in index order as doubles — the same
@@ -1832,7 +1908,7 @@ object Similarity {
     var cb: DataFrame = entriesDf(entries)
     for (_ <- 0 until refineIters) {
       cb = refinePqCodebooks(train, entries, pqM, w, gridScale, vecCol)
-      entries = collectPqEntries(cb)._1
+      entries = pqEntries(cb.collect())._1 // (sub, cid, cv) rows
       cb = entriesDf(entries) // local relation: downstream consumers broadcast it
     }
     cb

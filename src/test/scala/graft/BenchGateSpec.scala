@@ -87,4 +87,28 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.SustainedAmbientGate <= 0.5 + 1e-9)
     assert(Bench.SustainedAmbientGate > 0.0)
   }
+
+  // ---- the compact last line (the driver keeps a 2,000-char stdout tail)
+
+  test("compact line: elided counts only the timing rows that did not fit") {
+    val timing = (1 to 200).map(i => f"q$i%03d_row" -> (1000.0 - i))
+    val nonTiming = Seq("s3_recall" -> 0.95, "t7_bpe_64_batched_rounds" -> 60.0,
+      "sf1_loadavg" -> 1.2, "x_reran" -> 0.0)
+    val line = Bench.compactLine(12.3456, timing ++ nonTiming, 0, "sf")
+    val kept = "\"(q\\d{3}_row)\":".r.findAllMatchIn(line).map(_.group(1)).toSeq
+    assert(line.length <= 1750 + 64, s"${line.length} chars")
+    assert(kept.nonEmpty && kept.size < timing.size)
+    // the slowest rows are the ones kept, in descending order
+    assert(kept == timing.take(kept.size).map(_._1))
+    // the old count (results.size - taken) added the 4 non-timing rows
+    assert(line.contains(s"\"elided\":${timing.size - kept.size},"), line.takeRight(80))
+    assert(nonTiming.forall { case (k, _) => !line.contains(k) })
+  }
+
+  test("compact line: everything fits, so nothing is elided (non-timing rows are not)") {
+    val line = Bench.compactLine(3.0, Seq("a" -> 2.0, "b" -> 1.0, "s4_recall" -> 0.6),
+      errorsN = 2, sfDir = "/d")
+    assert(line == """{"metric":"total","value":3.000,"unit":"sec","queries":""" +
+      """{"a":2.000,"b":1.000},"elided":0,"errors_n":2,"full":"bench_out.json","sf":"/d"}""")
+  }
 }

@@ -977,4 +977,138 @@ class IvfIndexSpec extends SparkSpec {
     check(Similarity.ivfTopK(dup, corpus, SimQueries.K,
       SimQueries.ClusterCentPred, SimQueries.NProbe))
   }
+
+  // ---- the index handle: one read of what a build fixes ------------------
+
+  private def answers(p: String, q: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe)
+      .collect().map(_.toSeq).toSet
+
+  private def copyTree(src: String, dst: String): Unit = {
+    val from = java.nio.file.Paths.get(src)
+    val to = java.nio.file.Paths.get(dst)
+    val files = java.nio.file.Files.walk(from)
+    try files.forEach { f =>
+      val t = to.resolve(from.relativize(f).toString)
+      if (java.nio.file.Files.isDirectory(f)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(f, t)
+    } finally files.close()
+  }
+
+  test("a rebuild at the same path is never served from the previous build's handle") {
+    val p = java.nio.file.Files.createTempDirectory("ivfrebuildform").toString
+    // the same index under a second spelling: the rebuild below refreshes
+    // the handle it writes through, so only the centroid listing can tell
+    // this one that its build is gone
+    val alias = s"file:$p"
+    val q = corpus.filter(SimQueries.QueryPred)
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
+    val asFloat = answers(alias, q)
+    assert(asFloat == answers(path, q))
+    // same path, same JVM: another corpus, another stored form
+    val other = corpus.filter("vec_id % 3 <> 1")
+    def buildPq(at: String): Unit =
+      Similarity.buildIvfIndex(other, SimQueries.ClusterCentPred, SimQueries.Dim, at,
+        storage = "pq", pqM = SimQueries.PqM, pqK = SimQueries.PqK)
+    buildPq(p)
+    val rebuilt = answers(alias, q)
+    // a fresh twin: the same build at a path no handle has seen
+    val twin = java.nio.file.Files.createTempDirectory("ivfrebuildtwin").toString
+    buildPq(twin)
+    assert(rebuilt == answers(twin, q))
+    assert(answers(p, q) == rebuilt)
+    assert(rebuilt != asFloat, "the rebuilt index must answer from its own build")
+    assert(Similarity.readIvfAssigned(spark, alias).columns.contains("codes"))
+  }
+
+  /** Jobs `body` runs, counted by a SparkListener on this thread's job
+    * group. A marker job after the body flushes the listener bus: one
+    * listener receives events in order.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"ivf-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-end" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    jobs.get
+  }
+
+  test("a repeated indexed query re-reads no centroids and infers no schema") {
+    val q = corpus.filter(SimQueries.QueryPred)
+    answers(path, q) // warm
+    // 8 queries over the sf0.001 planted-cluster float32 index: 8 jobs
+    // before the index handle (centroid inference + collect and assigned/
+    // inference on every call), 5 with it (the probe collect, then the
+    // query's own stages). With a live tombstone epoch: 10 -> 6.
+    val jobs = jobsOf(answers(path, q))
+    assert(jobs <= 5, s"a warm indexed query ran $jobs jobs")
+  }
+
+  test("a pre-manifest index (no recorded layout) answers like the manifest one") {
+    val p = java.nio.file.Files.createTempDirectory("ivflayout").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p,
+      storage = "pq", pqM = SimQueries.PqM, pqK = SimQueries.PqK)
+    Similarity.deleteFromIvfIndex(spark, p, corpus.filter(DeleteSpecPred).select("vec_id"))
+    assert(new java.io.File(s"$p/_meta/layout").isFile)
+    val q = corpus.filter(SimQueries.QueryPred)
+    val expected = answers(p, q)
+    // copies at fresh paths get fresh handles: one without the layout
+    // record, one without any manifest (stored form inferred as well)
+    val noLayout = java.nio.file.Files.createTempDirectory("ivfnolayout").toString
+    copyTree(p, noLayout)
+    assert(new java.io.File(s"$noLayout/_meta/layout").delete())
+    val noMeta = java.nio.file.Files.createTempDirectory("ivfnometa").toString
+    copyTree(p, noMeta)
+    assert(new java.io.File(s"$noMeta/_meta/layout").delete() &&
+      new java.io.File(s"$noMeta/_meta/storage").delete())
+    def schemaOf(at: String) =
+      Similarity.readIvfAssigned(spark, at).schema.map(f => (f.name, f.dataType))
+    for (copy <- Seq(noLayout, noMeta)) {
+      assert(answers(copy, q) == expected, copy)
+      assert(schemaOf(copy) == schemaOf(p))
+    }
+    // the pre-manifest copy keeps its inferred form through an append
+    Similarity.appendToIvfIndex(corpus.filter("vec_id < 4")
+      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")), noMeta)
+    assert(schemaOf(noMeta) == schemaOf(p))
+  }
+
+  test("a delete with ids narrower than the index's c_id still masks and reclaims") {
+    val p = java.nio.file.Files.createTempDirectory("ivfintdel").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
+    assert(Similarity.readIvfAssigned(spark, p).schema("c_id").dataType ==
+      org.apache.spark.sql.types.LongType)
+    val q = corpus.filter(SimQueries.QueryPred)
+    val dSet = corpus.filter(DeleteSpecPred).collect().map(_.getAs[Long]("vec_id")).toSet
+    val expected = Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe,
+        candidateFilter = Some(!col("c_id").isInCollection(dSet)))
+      .collect().map(_.toSeq).toSet
+    Similarity.deleteFromIvfIndex(spark, p,
+      corpus.filter(DeleteSpecPred).select(col("vec_id").cast("int").as("vec_id")))
+    assert(answers(p, q) == expected)
+    Similarity.compactIvfIndex(spark, p)
+    assert(!Similarity.readIvfAssigned(spark, p).select("c_id").collect()
+      .map(_.getLong(0)).exists(dSet), "compaction must reclaim the int-typed ids")
+    assert(answers(p, q) == expected)
+  }
 }
