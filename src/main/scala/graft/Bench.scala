@@ -177,9 +177,13 @@ object Bench {
 
   /** Non-timing telemetry rows (counters, load stamps, recall fractions):
     * they live only in the full dump; the compact line carries seconds.
+    * Anchored to the key's suffix: timing rows such as
+    * `s16_ivf_pq_reranked`, `sf10_s16_rerank_query` and `t6_bpe_merges`
+    * carry the same words mid-key or as an oracle query name.
     */
   private val NonTimingRow = java.util.regex.Pattern.compile(
-    "rounds|merges|meanbatch|sweeps|loadavg|ambient|_reran|recall|cand_frac")
+    "_(recall(_[a-z0-9]+)?|cand_frac|rounds|meanbatch|epoch_merges|sweeps|" +
+      "loadavg|ambient|reran)$")
 
   /** The compact last stdout line — the contract shape of the full line:
     * the full-suite total, the slowest timing rows at 3 decimals greedily

@@ -360,18 +360,13 @@ object Dedup {
     // without this a single parquet file serializes the whole projection
     // on ONE task
     val docs = widen(docs0)
-    graft.functions.MinhashSig.register(docs.sparkSession, numPerms)
     val sig = graft.functions.MinhashSig(
-      array_distinct(Text.shingles(Text.tokens(col(textCol)), k)))
+      array_distinct(Text.shingles(Text.tokens(col(textCol)), k)), numPerms)
     // evalOnce: nondeterministic fence for callers whose downstream filter
     // on the signature would otherwise substitute the kernel into a pushed
     // Filter (one extra full kernel pass) — the STREAMING gates, where the
     // batch operators' barrier/sentinel fixes are unavailable
-    docs.withColumn(out,
-      if (evalOnce) {
-        graft.functions.EvalOnce.register(docs.sparkSession)
-        graft.functions.EvalOnce(sig)
-      } else sig)
+    docs.withColumn(out, if (evalOnce) graft.functions.EvalOnce(sig) else sig)
   }
 
 
@@ -572,15 +567,10 @@ object Dedup {
                   evalOnce: Boolean = false): DataFrame = {
     require(bits >= 1 && bits <= 64, "signature is packed into one long")
     val docs = widen(docs0) // see withMinhash — no-op on streaming inputs
-    graft.functions.SimhashSig.register(docs.sparkSession, bits)
     val sig = graft.functions.SimhashSig(
-      array_distinct(Text.tokens(col(textCol))))
+      array_distinct(Text.tokens(col(textCol))), bits)
     // evalOnce: see withMinhash — the streaming gates' anti-double-eval fence
-    docs.withColumn(out,
-      if (evalOnce) {
-        graft.functions.EvalOnce.register(docs.sparkSession)
-        graft.functions.EvalOnce(sig)
-      } else sig)
+    docs.withColumn(out, if (evalOnce) graft.functions.EvalOnce(sig) else sig)
   }
 
   /** SimHash near-dup pairs with Hamming distance <= maxHamming, found via
@@ -774,43 +764,67 @@ object Dedup {
     val p0 = barrier(
       pairs.select(col(iCol).cast("long").as("i"), col(jCol).cast("long").as("j")))
     // LOCAL SOLVE under a size gate (round 14): the pair list is already
-    // materialized, so its row count is one cheap scan — and a
-    // broadcast-class pair set (conf `spark.graft.cc.localSolveMaxPairs`,
-    // default 4M pairs ≈ 64 MB of ids, the same driver-boundedness class
-    // as every broadcast build) solves exactly in milliseconds with a
-    // min-root union-find instead of paying 5+ distributed sweeps of
-    // ~0.5-1 s fixed cost each. This is size-adaptive, not core-count
-    // adaptive: on a 1000-executor cluster a 1M-pair closure is STILL
-    // communication-bound, and above the gate the sweep loop below runs
-    // unchanged (DupClustersSpec pins local == distributed on randomized
-    // graphs). A null id anywhere falls back to the distributed path so
-    // the degenerate-input semantics stay byte-identical.
+    // materialized, so its row count is one cheap scan — and a pair set
+    // under conf `spark.graft.cc.localSolveMaxPairs` (default 4M pairs)
+    // solves exactly in milliseconds with a min-root union-find instead
+    // of paying 5+ distributed sweeps of ~0.5-1 s fixed cost each. This
+    // is size-adaptive, not core-count adaptive: on a 1000-executor
+    // cluster a 1M-pair closure is STILL communication-bound, and above
+    // the gate the sweep loop below runs unchanged (DupClustersSpec pins
+    // local == distributed on randomized graphs). A null id anywhere
+    // falls back to the distributed path so the degenerate-input
+    // semantics stay byte-identical.
+    // Driver heap (measured on a 64-bit JVM with compressed oops): each
+    // partition ships its pairs as two primitive long arrays, 16 B per
+    // pair (32 B while the per-partition arrays are concatenated); the
+    // solve adds a 16 B-per-pair id copy that is sorted and deduplicated
+    // into 8 B per node, and an Int parent array (4 B per node). The
+    // returned local relation dominates: ~130 B per node (a ~45 B tuple
+    // plus a ~88 B UnsafeRow). At the 4M-pair default that is 64 MB of
+    // pairs (128 MB at the collect's peak) and ~0.5 GB of result rows at
+    // one node per pair, ~1 GB at the two-nodes-per-pair worst case.
     val localMaxPairs = pairs.sparkSession.conf
       .getOption("spark.graft.cc.localSolveMaxPairs")
       .map(_.toLong).getOrElse(4000000L)
     if (p0.count() <= localMaxPairs) {
-      val rows = p0.collect()
-      if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        // union-find keeping the SMALLER root as parent: every tree's
-        // root is its component's minimum id, so find(x) at the end IS
-        // the min-label the distributed fixpoint converges to
-        val parent = new java.util.HashMap[Long, Long](rows.length * 2)
-        def find(x: Long): Long = {
+      val parts = p0.rdd.mapPartitions { rows =>
+        val is = Array.newBuilder[Long]; val js = Array.newBuilder[Long]
+        var clean = true
+        rows.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1)) clean = false
+          else { is += r.getLong(0); js += r.getLong(1) }
+        }
+        Iterator(if (clean) Some((is.result(), js.result())) else None)
+      }.collect()
+      if (parts.forall(_.isDefined)) {
+        val is = Array.concat(parts.map(_.get._1): _*)
+        val js = Array.concat(parts.map(_.get._2): _*)
+        val all = is ++ js
+        java.util.Arrays.sort(all)
+        var n = 0
+        all.foreach(id => if (n == 0 || all(n - 1) != id) { all(n) = id; n += 1 })
+        val ids = java.util.Arrays.copyOf(all, n)
+        // union-find over id RANKS keeping the smaller root as parent:
+        // rank order is id order, so every tree's root is its
+        // component's minimum id and find(x) at the end IS the min-label
+        // the distributed fixpoint converges to
+        val parent = Array.range(0, n)
+        def find(x: Int): Int = {
           var r = x
-          while (parent.get(r) != r) r = parent.get(r)
+          while (parent(r) != r) r = parent(r)
           var c = x
-          while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+          while (c != r) { val next = parent(c); parent(c) = r; c = next }
           r
         }
-        rows.foreach { r =>
-          val i = r.getLong(0); val j = r.getLong(1)
-          parent.putIfAbsent(i, i); parent.putIfAbsent(j, j)
-          val ri = find(i); val rj = find(j)
-          if (ri < rj) parent.put(rj, ri)
-          else if (rj < ri) parent.put(ri, rj)
+        var k = 0
+        while (k < is.length) {
+          val ri = find(java.util.Arrays.binarySearch(ids, is(k)))
+          val rj = find(java.util.Arrays.binarySearch(ids, js(k)))
+          if (ri < rj) parent(rj) = ri
+          else if (rj < ri) parent(ri) = rj
+          k += 1
         }
-        import scala.jdk.CollectionConverters._
-        val out = parent.keySet().asScala.toSeq.map(id => (id, find(id)))
+        val out = ids.indices.map(x => (ids(x), ids(find(x))))
         releaseCheckpoint(p0)
         lastSweeps = 0 // telemetry: the closure was solved locally
         val spark = pairs.sparkSession
@@ -1022,11 +1036,10 @@ object Dedup {
     require(planes * tables <= 63, "wide bucket must fit one long")
     val spark = vecs.sparkSession
     import spark.implicits._
-    graft.functions.LshBucket.register(spark, dim, planes * tables)
     val mask = (1L << planes) - 1
     val banded = vecs
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .withColumn("wide", graft.functions.LshBucket(col("v")))
+      .withColumn("wide", graft.functions.LshBucket(col("v"), dim, planes * tables))
       .select(col("id"), col("v"), col("wide"),
         explode(sequence(lit(0), lit(tables - 1))).as("t"))
       .withColumn("bucket", col("t").cast("long") * (mask + 1) +

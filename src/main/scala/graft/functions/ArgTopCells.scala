@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -25,8 +26,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
   * Semantics are bit-identical to the shapes replaced (the s4/s6/s8...
   * oracle rows replay them in DuckDB as
   * `row_number() OVER (ORDER BY dot/(n*cn) DESC, cid ASC) <= p`):
-  *  - n and each cn0 are the [[DotProduct]] left fold (cn0 stamped at
-  *    registration with the same fold, driver-side);
+  *  - n and each cn0 are the [[DotProduct]] left fold (cn0 stamped by
+  *    the centroid collector with the same fold, driver-side);
   *  - ccos = dot / (n * cn0), the `cosine` helper verbatim;
   *  - ranking by (ccos DESC, cid ASC) via `java.lang.Double.compare`
   *    (NaN greatest — Spark's double ordering) with ascending-cid
@@ -48,7 +49,7 @@ case class ArgTopCellsExpr(child: Expression,
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_arg_top_cells expects array<float>, got $t")
+      s"ArgTopCells expects array<float>, got $t")
   }
 
   /** Kernel body, shared by eval and codegen (referenced object call). */
@@ -107,24 +108,10 @@ case class ArgTopCellsExpr(child: Expression,
 
 object ArgTopCells {
 
-  val Name = "graft_arg_top_cells"
-
-  /** Register `graft_arg_top_cells` bound to this centroid table and probe
-    * width (idempotent; re-registering replaces — analysis binds each
-    * consumer plan to the expression instance current at construction).
+  /** `vec`'s top-`p` cells against this centroid table;
     * `cents` = (cid, cv, cn0) sorted ascending by cid.
     */
-  def register(spark: SparkSession,
-               cents: IndexedSeq[(Long, Array[Float], Double)], p: Int): Unit = {
-    val cids = cents.map(_._1).toArray
-    val cvs = cents.map(_._2).toArray
-    val cn0s = cents.map(_._3).toArray
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, (exprs: Seq[Expression]) =>
-        ArgTopCellsExpr(exprs.head, cids, cvs, cn0s, p), "built-in")
-  }
-
-  /** Column form; requires `register(spark, cents, p)` on the session. */
-  def apply(vec: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, vec)
+  def apply(vec: Column, cents: IndexedSeq[(Long, Array[Float], Double)], p: Int): Column =
+    column(ArgTopCellsExpr(expression(vec), cents.map(_._1).toArray,
+      cents.map(_._2).toArray, cents.map(_._3).toArray, p))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for the float-array dot product — the one
@@ -26,7 +26,7 @@ case class DotProductExpr(left: Expression, right: Expression) extends BinaryExp
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
-      s"graft_dot expects two array<float> arguments, got ${left.dataType} / ${right.dataType}")
+      s"DotProduct expects two array<float> arguments, got ${left.dataType} / ${right.dataType}")
   }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -63,17 +63,6 @@ case class DotProductExpr(left: Expression, right: Expression) extends BinaryExp
 }
 
 object DotProduct {
-
-  val Name = "graft_dot"
-
-  /** Register `graft_dot` on the session (a no-op once registered). Done per session
-    * rather than via `spark.sql.extensions` because the driver harness
-    * builds plain sessions; an extensions-based deployment would call
-    * `injectFunction` with the same builder.
-    */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, Name, (exprs: Seq[Expression]) => DotProductExpr(exprs(0), exprs(1)))
-
-  /** Column form; requires `register(spark)` on the owning session. */
-  def apply(a: Column, b: Column): Column = call_function(Name, a, b)
+  def apply(a: Column, b: Column): Column =
+    column(DotProductExpr(expression(a), expression(b)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.DataType
 
 /** Pass-through identity whose ONLY job is `deterministic = false` — the
@@ -50,13 +50,5 @@ case class EvalOnceExpr(child: Expression) extends UnaryExpression {
 }
 
 object EvalOnce {
-
-  val Name = "graft_eval_once"
-
-  /** Register `graft_eval_once` on the session (a no-op once registered). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, Name, (exprs: Seq[Expression]) => EvalOnceExpr(exprs.head))
-
-  /** Column form; requires `register(spark)` on the owning session. */
-  def apply(c: Column): Column = call_function(Name, c)
+  def apply(c: Column): Column = column(EvalOnceExpr(expression(c)))
 }

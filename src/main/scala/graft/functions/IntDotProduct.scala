@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Native Catalyst expression for the INTEGER-array dot product — the
@@ -28,7 +28,7 @@ case class IntDotProductExpr(left: Expression, right: Expression) extends Binary
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) => TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
-      s"graft_dot_int expects two array<int> arguments, got ${left.dataType} / ${right.dataType}")
+      s"IntDotProduct expects two array<int> arguments, got ${left.dataType} / ${right.dataType}")
   }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -65,13 +65,6 @@ case class IntDotProductExpr(left: Expression, right: Expression) extends Binary
 }
 
 object IntDotProduct {
-
-  val Name = "graft_dot_int"
-
-  /** Register `graft_dot_int` on the session (a no-op once registered). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, Name, (exprs: Seq[Expression]) => IntDotProductExpr(exprs(0), exprs(1)))
-
-  /** Column form; requires `register(spark)` on the owning session. */
-  def apply(a: Column, b: Column): Column = call_function(Name, a, b)
+  def apply(a: Column, b: Column): Column =
+    column(IntDotProductExpr(expression(a), expression(b)))
 }

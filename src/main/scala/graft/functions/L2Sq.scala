@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for the float-array squared L2 distance —
@@ -31,7 +31,7 @@ case class L2SqExpr(left: Expression, right: Expression) extends BinaryExpressio
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
-      s"graft_l2sq expects two array<float> arguments, got ${left.dataType} / ${right.dataType}")
+      s"L2Sq expects two array<float> arguments, got ${left.dataType} / ${right.dataType}")
   }
 
   override def nullable: Boolean = true
@@ -80,13 +80,6 @@ case class L2SqExpr(left: Expression, right: Expression) extends BinaryExpressio
 }
 
 object L2Sq {
-
-  val Name = "graft_l2sq"
-
-  /** Register `graft_l2sq` on the session (a no-op once registered). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, Name, (exprs: Seq[Expression]) => L2SqExpr(exprs(0), exprs(1)))
-
-  /** Column form; requires `register(spark)` on the owning session. */
-  def apply(a: Column, b: Column): Column = call_function(Name, a, b)
+  def apply(a: Column, b: Column): Column =
+    column(L2SqExpr(expression(a), expression(b)))
 }

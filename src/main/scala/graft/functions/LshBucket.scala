@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** Native hyperplane-LSH bucket id: `planes` sign bits of dot products
@@ -25,7 +25,7 @@ case class LshBucketExpr(child: Expression, dim: Int, planes: Int)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_lsh_bucket expects array<float>, got $t")
+    case t => TypeCheckResult.TypeCheckFailure(s"LshBucket expects array<float>, got $t")
   }
 
   /** Plane matrix, row-major [plane][dim] — same LCG as the oracle. */
@@ -77,13 +77,6 @@ case class LshBucketExpr(child: Expression, dim: Int, planes: Int)
 }
 
 object LshBucket {
-
-  val Name = "graft_lsh_bucket"
-
-  /** Register with the plane geometry fixed at registration time. */
-  def register(spark: SparkSession, dim: Int, planes: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, (exprs: Seq[Expression]) => LshBucketExpr(exprs.head, dim, planes), "built-in")
-
-  def apply(vec: Column): Column = call_function(Name, vec)
+  def apply(vec: Column, dim: Int, planes: Int): Column =
+    column(LshBucketExpr(expression(vec), dim, planes))
 }

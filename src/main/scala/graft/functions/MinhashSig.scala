@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native MinHash signature: all `numPerms` LCG-permutation minima over a
@@ -31,7 +31,7 @@ case class MinhashSigExpr(child: Expression, numPerms: Int)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash_sig expects array<string>, got $t")
+      s"MinhashSig expects array<string>, got $t")
   }
 
   override def nullSafeEval(input: Any): Any =
@@ -50,8 +50,6 @@ case class MinhashSigExpr(child: Expression, numPerms: Int)
 }
 
 object MinhashSig {
-
-  val Name = "graft_minhash_sig"
   private val P = 2147483647L // 2^31-1, Dedup.P
 
   /** ha/hb permutation tables are a pure function of `numPerms` — built
@@ -101,13 +99,6 @@ object MinhashSig {
     new GenericArrayData(mins)
   }
 
-  /** Register `graft_minhash_sig` at this `numPerms` (idempotent;
-    * re-registering with a different width replaces it, like LshBucket).
-    */
-  def register(spark: SparkSession, numPerms: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, (exprs: Seq[Expression]) => MinhashSigExpr(exprs.head, numPerms), "built-in")
-
-  /** Column form; requires `register(spark, numPerms)` on the session. */
-  def apply(shingles: Column): Column = call_function(Name, shingles)
+  def apply(shingles: Column, numPerms: Int): Column =
+    column(MinhashSigExpr(expression(shingles), numPerms))
 }

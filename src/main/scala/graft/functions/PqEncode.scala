@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -28,7 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
   *    `min_by(cid, struct(d2, cid))` ordering verbatim;
   *  - rn = sqrt of the cn2 sums accumulated in ascending-sub order (the
   *    sorted-struct left fold it replaces), with cn2 the [[DotProduct]]
-  *    fold of each stored entry against itself, stamped at registration.
+  *    fold of each stored entry against itself, stamped by the collector.
   *
   * `entries(s)` must be sorted ascending by cid (Similarity's codebook collect does).
   */
@@ -45,7 +46,7 @@ case class PqEncodeExpr(child: Expression,
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_encode expects array<float>, got $t")
+      s"PqEncode expects array<float>, got $t")
   }
 
   /** Kernel body, shared by eval and codegen (referenced object call). */
@@ -99,26 +100,11 @@ case class PqEncodeExpr(child: Expression,
 
 object PqEncode {
 
-  val Name = "graft_pq_encode"
-
-  /** Register `graft_pq_encode` bound to this codebook (idempotent;
-    * re-registering with a different codebook replaces it — the
-    * SimhashSig width-capture pattern). `entries(s)` sorted by cid.
+  /** `vec`'s codes against this codebook of sub-width `w`;
+    * `entries(s)` = (cid, cv, cn2) sorted ascending by cid.
     */
-  def register(spark: SparkSession,
-               entries: IndexedSeq[IndexedSeq[(Int, Array[Float], Double)]],
-               w: Int): Unit = {
-    val cids = entries.map(_.map(_._1).toArray).toArray
-    val cvs = entries.map(_.map(_._2).toArray).toArray
-    val cn2s = entries.map(_.map(_._3).toArray).toArray
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, (exprs: Seq[Expression]) =>
-        PqEncodeExpr(exprs.head, cids, cvs, cn2s, w), "built-in")
-  }
-
-  /** Column form; requires `register(spark, entries, w)` on the session. */
-  def apply(vec: Column): Column = call_function(Name, vec)
-
-  private def call_function(name: String, c: Column): Column =
-    org.apache.spark.sql.functions.call_function(name, c)
+  def apply(vec: Column, entries: IndexedSeq[IndexedSeq[(Int, Array[Float], Double)]],
+            w: Int): Column =
+    column(PqEncodeExpr(expression(vec), entries.map(_.map(_._1).toArray).toArray,
+      entries.map(_.map(_._2).toArray).toArray, entries.map(_.map(_._3).toArray).toArray, w))
 }

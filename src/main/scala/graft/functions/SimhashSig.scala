@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native 64-bit SimHash signature: the per-token ±1 bit votes and the
@@ -33,7 +33,7 @@ case class SimhashSigExpr(child: Expression, bits: Int)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash_sig expects array<string>, got $t")
+      s"SimhashSig expects array<string>, got $t")
   }
 
   override def nullSafeEval(input: Any): Any = {
@@ -60,7 +60,6 @@ case class SimhashSigExpr(child: Expression, bits: Int)
 
 object SimhashSig {
 
-  val Name = "graft_simhash_sig"
   private val P = 2147483647L // 2^31-1, Dedup.P
 
   // ha/hb LCG tables per bit width — built once per width (cf. MinhashSig)
@@ -116,13 +115,6 @@ object SimhashSig {
     sig
   }
 
-  /** Register `graft_simhash_sig` at this `bits` width (idempotent;
-    * re-registering with a different width replaces it, like MinhashSig).
-    */
-  def register(spark: SparkSession, bits: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, (exprs: Seq[Expression]) => SimhashSigExpr(exprs.head, bits), "built-in")
-
-  /** Column form; requires `register(spark, bits)` on the session. */
-  def apply(tokens: Column): Column = call_function(Name, tokens)
+  def apply(tokens: Column, bits: Int): Column =
+    column(SimhashSigExpr(expression(tokens), bits))
 }

@@ -22,7 +22,7 @@ object Tables {
     * This is the round-6 lesson generalized: the testdata's physical
     * encodings drift between driver generations (events.ts micros↔nanos
     * was the first instance), and every operator with a typed contract —
-    * the native `graft_dot`/LSH expressions require array<float>, typed
+    * the native dot/LSH kernels in `graft.functions` require array<float>, typed
     * Datasets require long ids — dies at analysis when they do. Types are
     * compared by `catalogString` so nullability differences don't force
     * spurious casts.

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.functions.{ArgTopCells, DotProduct, IntDotProduct, LshBucket, PqEncode}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,14 +35,6 @@ object Similarity {
   /** Exact L2 norm of a float-array column. */
   def normExact(a: Column): Column = sqrt(dotExact(a, a))
 
-  /** Native dot product bound to `df`'s session (registers the
-    * expression, idempotent). Bit-identical to `dotExact`.
-    */
-  private def nativeDot(df: DataFrame): (Column, Column) => Column = {
-    graft.functions.DotProduct.register(df.sparkSession)
-    graft.functions.DotProduct(_, _)
-  }
-
   /** Cosine similarity given precomputed norms. */
   def cosine(dot: Column, normA: Column, normB: Column): Column =
     dot / (normA * normB)
@@ -55,13 +48,12 @@ object Similarity {
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val dot = nativeDot(corpus)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
-      .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
+      .withColumn("qn", sqrt(DotProduct(col("qv"), col("qv"))))
     val c = corpus.select(col(idCol).as("c_id"), col(vecCol).as("cv"))
-      .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
+      .withColumn("cn", sqrt(DotProduct(col("cv"), col("cv"))))
     rankTopK(c.join(broadcast(q), col("q_id") =!= col("c_id"))
-      .withColumn("cos", cosine(dot(col("qv"), col("cv")), col("qn"), col("cn")))
+      .withColumn("cos", cosine(DotProduct(col("qv"), col("cv")), col("qn"), col("cn")))
       .select(col("q_id"), col("c_id"), col("cos")), k)
   }
 
@@ -79,13 +71,12 @@ object Similarity {
     // rows — e.g. zero-norm vectors — pass)
     require(threshold > -2.0,
       s"threshold must be > -2.0 (cosine is in [-1, 1]); got $threshold")
-    val dot = nativeDot(vecs)
     val v = vecs.select(col(idCol).as("id"), col(blockCol).as("blk"), col(vecCol).as("v"))
-      .withColumn("n", sqrt(dot(col("v"), col("v"))))
+      .withColumn("n", sqrt(DotProduct(col("v"), col("v"))))
     v.as("a").join(v.as("b"),
         col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
       .withColumn("cos",
-        cosine(dot(col("a.v"), col("b.v")), col("a.n"), col("b.n")))
+        cosine(DotProduct(col("a.v"), col("b.v")), col("a.n"), col("b.n")))
       // threshold over a NON-nullable operand (round 13): `cos >= th`
       // makes the optimizer infer isnotnull(cos), which substitutes the
       // norm alias and lands `isnotnull(sqrt(dotproduct(v,v)))` in a
@@ -220,8 +211,6 @@ object Similarity {
                      carry: Seq[String] = Nil,
                      candidateFilter: Option[Column] = None): DataFrame = {
     require(planes * tables <= 63, "wide bucket must fit one long")
-    val dot = nativeDot(corpus)
-    graft.functions.LshBucket.register(corpus.sparkSession, dim, planes * tables)
     val mask = (1L << planes) - 1
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (hintBroadcast) broadcast(df) else df
@@ -232,8 +221,8 @@ object Similarity {
         struct(lit(t).as("t"), tableBucket(wide, t).as(as))): _*))
 
     val qv = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
-      .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
-      .withColumn("wide", graft.functions.LshBucket(col("qv")))
+      .withColumn("qn", sqrt(DotProduct(col("qv"), col("qv"))))
+      .withColumn("wide", LshBucket(col("qv"), dim, planes * tables))
     // slim probe rows: (q_id, t, bk) only — vectors rejoin after candidates
     val probes = qv
       .select(col("q_id"), banded(col("wide"), "qb").as("tb"))
@@ -247,8 +236,8 @@ object Similarity {
     // filter BEFORE bucketing: excluded vectors never enter the index
     // sweep — and on a stored corpus the predicate reaches the scan
     val c = candidateFilter.fold(cAll)(cAll.filter)
-      .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
-      .withColumn("wide", graft.functions.LshBucket(col("cv")))
+      .withColumn("cn", sqrt(DotProduct(col("cv"), col("cv"))))
+      .withColumn("wide", LshBucket(col("cv"), dim, planes * tables))
       .select(col("c_id"), col("cv"), col("cn"), banded(col("wide"), "bk").as("tb"))
       .select(col("c_id"), col("cv"), col("cn"),
         col("tb.t").as("t"), col("tb.bk").as("bk"))
@@ -256,7 +245,7 @@ object Similarity {
     c.join(maybeBroadcast(probes), Seq("t", "bk"))
       .filter(col("q_id") =!= col("c_id"))
       .join(maybeBroadcast(qv.select(col("q_id"), col("qv"), col("qn"))), Seq("q_id"))
-      .withColumn("cos", cosine(dot(col("qv"), col("cv")), col("qn"), col("cn")))
+      .withColumn("cos", cosine(DotProduct(col("qv"), col("cv")), col("qn"), col("cn")))
       .groupBy(col("q_id"), col("c_id"))
       .agg(max(col("cos")).as("cos")) // a pair can match in several tables
   }
@@ -287,12 +276,10 @@ object Similarity {
                      planes: Int, tables: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(planes * tables <= 63, "wide bucket must fit one long")
-    val dot = nativeDot(vecs)
-    graft.functions.LshBucket.register(vecs.sparkSession, dim, planes * tables)
     val mask = (1L << planes) - 1
     val v = vecs.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n", sqrt(dot(col("v"), col("v"))))
-      .withColumn("wide", graft.functions.LshBucket(col("v")))
+      .withColumn("n", sqrt(DotProduct(col("v"), col("v"))))
+      .withColumn("wide", LshBucket(col("v"), dim, planes * tables))
       .select(col("id"), col("v"), col("n"),
         explode(array((0 until tables).map(t => struct(lit(t).as("t"),
           shiftright(col("wide"), planes * t).bitwiseAND(lit(mask)).as("bk"))): _*)).as("tb"))
@@ -302,7 +289,7 @@ object Similarity {
         col("a.t") === col("b.t") && col("a.bk") === col("b.bk") &&
           col("a.id") < col("b.id"))
       .withColumn("pcos",
-        cosine(dot(col("a.v"), col("b.v")), col("a.n"), col("b.n")))
+        cosine(DotProduct(col("a.v"), col("b.v")), col("a.n"), col("b.n")))
       .groupBy(col("a.id").as("i"), col("b.id").as("j"))
       .agg(max(col("pcos")).as("cos")) // a pair can collide in several tables
       .filter(col("cos") >= threshold)
@@ -434,7 +421,6 @@ object Similarity {
     require(Storages(storage),
       s"storage must be one of ${Storages.mkString("/")}, got $storage")
     requireCarryNames(carry)
-    val dot = nativeDot(corpus)
     val train =
       if (trainFraction >= 1.0) corpus
       else graft.ops.Sampling.sampleFraction(corpus, col(idCol), trainSalt,
@@ -824,8 +810,7 @@ object Similarity {
       base.withColumn("n", lit(0.0d)).withColumn("cell", lit(0L))
         .limit(0).select(outCols: _*)
     else {
-      graft.functions.ArgTopCells.register(vecs.sparkSession, cents, 1)
-      base.withColumn("__ac", graft.functions.ArgTopCells(col("v")))
+      base.withColumn("__ac", ArgTopCells(col("v"), cents, 1))
         .withColumn("n", col("__ac").getField("n"))
         .withColumn("cell", element_at(col("__ac").getField("cells"), 1))
         .select(outCols: _*)
@@ -851,9 +836,8 @@ object Similarity {
     val stored = storage match {
       case "float32" => assigned
       case "int8" =>
-        val dotI = nativeDotInt(assigned)
         withQuantized(assigned, "v", "q8")
-          .withColumn("qn", sqrt(dotI(col("q8"), col("q8")).cast(DoubleType)))
+          .withColumn("qn", sqrt(IntDotProduct(col("q8"), col("q8")).cast(DoubleType)))
           .drop("v", "n")
       case "pq" =>
         // encode against the STORED codebooks (appends reuse the build's
@@ -871,12 +855,11 @@ object Similarity {
         // (same native L2 fold, same (d2, cid) tie-break, same sub-order
         // left fold for rn — parity-pinned by the s15/s16 oracle rows).
         val b = h.books(spark)
-        graft.functions.PqEncode.register(spark, b.entries, b.w)
         // one shared `__pqb` struct column: codes and rn both read it, and
         // CollapseProject does not inline a non-cheap alias referenced
         // twice — the kernel runs once per row, not once per consumer
         assigned
-          .withColumn("__pqb", graft.functions.PqEncode(col("v")))
+          .withColumn("__pqb", PqEncode(col("v"), b.entries, b.w))
           .withColumn("codes", col("__pqb").getField("codes"))
           .withColumn("rn", col("__pqb").getField("rn"))
           .drop("__pqb", "v", "n")
@@ -1062,9 +1045,10 @@ object Similarity {
     val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(h.path))
     committedEpochs(fs, s"${h.path}/tombstones").lastOption.map { e =>
       val dir = s"${h.path}/tombstones/epoch=$e"
+      // Hadoop's hidden-file rule: `_SUCCESS` and the `.crc` sidecars are not data
+      def data(name: String) = !name.startsWith("_") && !name.startsWith(".")
       val bytes = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .filter(_.isFile).filterNot(_.getPath.getName.startsWith("_"))
-        .map(_.getLen).sum
+        .filter(f => f.isFile && data(f.getPath.getName)).map(_.getLen).sum
       val schema = h.tombSchemas.getOrElseUpdate(e, spark.read.parquet(dir).schema)
       Tombstones(e, spark.read.schema(schema).parquet(dir), bytes)
     }
@@ -1408,9 +1392,8 @@ object Similarity {
                          p: Int, idCol: String, vecCol: String)
       : (DataFrame, DataFrame, Array[Long]) = {
     import scala.jdk.CollectionConverters._
-    graft.functions.ArgTopCells.register(spark, cents, p)
     val plan = queries.select(col(idCol).as("q_id"), col(vecCol).as("v"))
-      .withColumn("__tc", graft.functions.ArgTopCells(col("v")))
+      .withColumn("__tc", ArgTopCells(col("v"), cents, p))
       .select(col("q_id"), col("v"),
         col("__tc").getField("n").as("n"),
         explode(col("__tc").getField("cells")).as("cell"))
@@ -1441,12 +1424,11 @@ object Similarity {
     */
   private def scoreFloat(assigned: DataFrame, qCells: DataFrame,
                          qLoc: DataFrame): DataFrame = {
-    val dot = nativeDot(assigned)
     assigned.join(broadcast(qCells), Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
       .join(broadcast(qLoc.select(col("q_id"), col("v").as("qv"), col("n").as("qn"))),
         Seq("q_id"))
-      .withColumn("cos", cosine(dot(col("qv"), col("v")), col("qn"), col("n")))
+      .withColumn("cos", cosine(DotProduct(col("qv"), col("v")), col("qn"), col("n")))
       .select(col("q_id"), col("c_id"), col("cos"))
   }
 
@@ -1498,7 +1480,6 @@ object Similarity {
                      candidateFilter: Option[Column] = None,
                      maxPrunedPaths: Int = MaxPrunedIndexPaths,
                      probeWidenTarget: Option[Int] = None): DataFrame = {
-    val dot = nativeDot(queries)
     // centroids, stored form, layout schema and codebooks come from the
     // index handle: fixed per build, so a call re-reads none of them
     val h = openIndex(spark, path)
@@ -1599,7 +1580,7 @@ object Similarity {
         val b = h.books(spark)
         val (pqM, w) = (b.pqM, b.w)
         val qtab = qLoc.crossJoin(broadcast(b.local(spark)))
-          .withColumn("t", dot(slice(col("v"), col("sub") * w + 1, lit(w)), col("cv")))
+          .withColumn("t", DotProduct(slice(col("v"), col("sub") * w + 1, lit(w)), col("cv")))
           .groupBy(col("q_id"))
           .agg(first(col("n")).as("qn"),
             map_from_entries(collect_list(struct(
@@ -1615,15 +1596,14 @@ object Similarity {
           .withColumn("cos", col("num") / (col("qn") * col("rn")))
           .select(col("q_id"), col("c_id"), col("cos"))
       } else if (assigned0.columns.contains("q8")) {
-        val dotI = nativeDotInt(queries)
         val qq = withQuantized(qLoc.select(col("q_id"), col("v")), "v", "qa")
-          .withColumn("qan", sqrt(dotI(col("qa"), col("qa")).cast(DoubleType)))
+          .withColumn("qan", sqrt(IntDotProduct(col("qa"), col("qa")).cast(DoubleType)))
           .select(col("q_id"), col("qa"), col("qan"))
         assigned.join(broadcast(qCells), Seq("cell"))
           .filter(col("q_id") =!= col("c_id"))
           .join(broadcast(qq), Seq("q_id"))
           .withColumn("cos",
-            dotI(col("qa"), col("q8")).cast(DoubleType) / (col("qan") * col("qn")))
+            IntDotProduct(col("qa"), col("q8")).cast(DoubleType) / (col("qan") * col("qn")))
           .select(col("q_id"), col("c_id"), col("cos"))
       } else scoreFloat(assigned, qCells, qLoc)
     rankTopK(scored, k)
@@ -1658,14 +1638,13 @@ object Similarity {
     val cand = ivfTopKIndexed(spark, path, queries, rerankR, nprobe,
         idCol, vecCol, candidateFilter, maxPrunedPaths, probeWidenTarget)
       .select(col("q_id"), col("c_id"))
-    val dot = nativeDot(corpus)
     val c = corpus.select(col(idCol).as("c_id"), col(vecCol).as("cv"))
-      .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
+      .withColumn("cn", sqrt(DotProduct(col("cv"), col("cv"))))
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
-      .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
+      .withColumn("qn", sqrt(DotProduct(col("qv"), col("qv"))))
     val scored = c.join(broadcast(cand), Seq("c_id"))
       .join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", cosine(dot(col("qv"), col("cv")), col("qn"), col("cn")))
+      .withColumn("cos", cosine(DotProduct(col("qv"), col("cv")), col("qn"), col("cn")))
       .select(col("q_id"), col("c_id"), col("cos"))
     rankTopK(scored, k)
   }
@@ -1725,19 +1704,13 @@ object Similarity {
 
   /** Integer dot product of two int-array columns as a higher-order fold
     * (exact — no FP order sensitivity at all, unlike the float path).
-    * Session-less fallback and the parity twin NativeExprSpec pins the
-    * codegen'd [[graft.functions.IntDotProduct]] against; the query path
-    * uses the native expression.
+    * The parity twin NativeExprSpec pins the codegen'd
+    * [[graft.functions.IntDotProduct]] against; the query path uses the
+    * native expression.
     */
   def dotIntExact(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x.cast("long") * y)), lit(0L),
       (acc, x) => acc + x)
-
-  /** Native integer dot bound to `df`'s session (registers, idempotent). */
-  private def nativeDotInt(df: DataFrame): (Column, Column) => Column = {
-    graft.functions.IntDotProduct.register(df.sparkSession)
-    graft.functions.IntDotProduct(_, _)
-  }
 
   // ---- product quantization (the `pq` stored form) ---------------------
 
@@ -1830,10 +1803,10 @@ object Similarity {
     * cross-engine-deterministic fold discipline as the dot product (the
     * oracle replays it verbatim), used for PQ codebook assignment where
     * subvector MAGNITUDE matters (a per-subspace cosine would quantize
-    * direction only and reconstruct the wrong lengths). Session-less
-    * fallback; the build paths use the codegen'd
-    * [[graft.functions.L2Sq]] native expression (bit-identical —
-    * NativeExprSpec pins it), because training and encoding evaluate
+    * direction only and reconstruct the wrong lengths). The parity twin
+    * of the codegen'd [[graft.functions.L2Sq]] (NativeExprSpec pins it
+    * bit-identical); the PQ encode runs the same fold inside
+    * [[graft.functions.PqEncode]], because training and encoding evaluate
     * |corpus| × pqM × pqK of these folds per sweep.
     */
   def l2sqExact(a: Column, b: Column): Column =
@@ -1841,12 +1814,6 @@ object Similarity {
         (x.cast(DoubleType) - y.cast(DoubleType)) *
           (x.cast(DoubleType) - y.cast(DoubleType))),
       lit(0.0d), (acc, d) => acc + d)
-
-  /** Native squared-L2 bound to `df`'s session (registers, idempotent). */
-  private def nativeL2Sq(df: DataFrame): (Column, Column) => Column = {
-    graft.functions.L2Sq.register(df.sparkSession)
-    graft.functions.L2Sq(_, _)
-  }
 
   /** Train per-subspace PQ codebooks: split `dim` into `pqM` disjoint
     * subspaces of width `dim/pqM`, seed each subspace's codebook from
@@ -1926,9 +1893,8 @@ object Similarity {
                                 entries: IndexedSeq[IndexedSeq[(Int, Array[Float], Double)]],
                                 pqM: Int, w: Int, gridScale: Int,
                                 vecCol: String): DataFrame = {
-    graft.functions.PqEncode.register(train.sparkSession, entries, w)
     val assigned = train
-      .withColumn("__pqc", graft.functions.PqEncode(col(vecCol)))
+      .withColumn("__pqc", PqEncode(col(vecCol), entries, w))
       .select(explode(array((0 until pqM).map(s =>
         struct(lit(s).as("sub"),
           element_at(col("__pqc").getField("codes"), s + 1).as("cid"),
@@ -1955,16 +1921,15 @@ object Similarity {
     */
   def quantizedTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val dot = nativeDotInt(corpus)
     val q = withQuantized(queries.select(col(idCol).as("q_id"), col(vecCol)), vecCol)
       .select(col("q_id"), col("q8").as("qa"))
-      .withColumn("qn", sqrt(dot(col("qa"), col("qa")).cast(DoubleType)))
+      .withColumn("qn", sqrt(IntDotProduct(col("qa"), col("qa")).cast(DoubleType)))
     val c = withQuantized(corpus.select(col(idCol).as("c_id"), col(vecCol)), vecCol)
       .select(col("c_id"), col("q8").as("qb"))
-      .withColumn("cn", sqrt(dot(col("qb"), col("qb")).cast(DoubleType)))
+      .withColumn("cn", sqrt(IntDotProduct(col("qb"), col("qb")).cast(DoubleType)))
     val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
       .withColumn("cos",
-        dot(col("qa"), col("qb")).cast(DoubleType) / (col("qn") * col("cn")))
+        IntDotProduct(col("qa"), col("qb")).cast(DoubleType) / (col("qn") * col("cn")))
       .select(col("q_id"), col("c_id"), col("cos"))
     rankTopK(scored, k)
   }
@@ -1992,13 +1957,12 @@ object Similarity {
     if (total < 2) return 0.0
     val frac = math.min(1.0, sampleN.toDouble / total)
     val cut = (frac * graft.ops.Sampling.Space).toLong
-    val dot = nativeDot(corpus)
     val s = corpus
       .filter(graft.ops.Sampling.hashUnit(col(idCol), "graft-cluster-mass") < cut)
       .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n", sqrt(dot(col("v"), col("v"))))
+      .withColumn("n", sqrt(DotProduct(col("v"), col("v"))))
     s.as("a").join(broadcast(s.as("b")), col("a.id") =!= col("b.id"))
-      .withColumn("cos", cosine(dot(col("a.v"), col("b.v")), col("a.n"), col("b.n")))
+      .withColumn("cos", cosine(DotProduct(col("a.v"), col("b.v")), col("a.n"), col("b.n")))
       .groupBy(col("a.id"))
       .agg(max(col("cos")).as("nn"))
       // decimal-exact mean: a double avg would drift with partition order,

@@ -105,6 +105,17 @@ class BenchGateSpec extends AnyFunSuite {
     assert(nonTiming.forall { case (k, _) => !line.contains(k) })
   }
 
+  test("compact line: non-timing patterns match key suffixes, not words inside timing keys") {
+    val timing = Seq("s16_ivf_pq_reranked" -> 4.27, "sf10_s16_rerank_query" -> 3.5,
+      "t6_bpe_merges" -> 0.1)
+    val nonTiming = Seq("detect_poll_reran" -> 9.0, "s4_recall" -> 8.0,
+      "ann_auto_recall_uniform" -> 7.0, "t7_bpe_512_epoch_merges" -> 90.0)
+    val line = Bench.compactLine(20.0, timing ++ nonTiming, 0, "sf")
+    timing.foreach { case (k, _) => assert(line.contains(s"\"$k\":"), s"$k dropped: $line") }
+    nonTiming.foreach { case (k, _) => assert(!line.contains(k), s"$k kept: $line") }
+    assert(line.contains("\"elided\":0,"), line)
+  }
+
   test("compact line: everything fits, so nothing is elided (non-timing rows are not)") {
     val line = Bench.compactLine(3.0, Seq("a" -> 2.0, "b" -> 1.0, "s4_recall" -> 0.6),
       errorsN = 2, sfDir = "/d")

@@ -19,7 +19,6 @@ class NativeExprSpec extends SparkSpec {
   ).toDF("id", "v")
 
   test("graft_dot is bit-identical to the aggregate/zip_with fold") {
-    DotProduct.register(spark)
     val both = vecs.filter(col("v").isNotNull).as("a")
       .crossJoin(vecs.filter(col("v").isNotNull).as("b"))
       .select(
@@ -41,7 +40,6 @@ class NativeExprSpec extends SparkSpec {
   ).toDF("id", "v")
 
   test("graft_dot_int equals the integer fold (exact longs)") {
-    IntDotProduct.register(spark)
     val both = ivecs.filter(col("v").isNotNull).as("a")
       .crossJoin(ivecs.filter(col("v").isNotNull).as("b"))
       .select(
@@ -53,7 +51,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("graft_l2sq is bit-identical to the aggregate/zip_with fold") {
-    L2Sq.register(spark)
     val both = vecs.filter(col("v").isNotNull).as("a")
       .crossJoin(vecs.filter(col("v").isNotNull).as("b"))
       .select(
@@ -68,14 +65,12 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("graft_l2sq: null input yields null") {
-    L2Sq.register(spark)
     val n = vecs.select(L2Sq(col("v"), col("v")).as("d"))
       .filter(col("d").isNull).count()
     assert(n == 1)
   }
 
   test("graft_l2sq degenerate inputs match the fold: length mismatch and null elements → null") {
-    L2Sq.register(spark)
     // zip_with null-pads the shorter array, so the fold returns null on a
     // length mismatch; a null ELEMENT poisons the fold the same way — the
     // native kernel must agree, not silently fold over min(len)
@@ -102,31 +97,27 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("graft_dot_int: null input yields null") {
-    IntDotProduct.register(spark)
     val n = ivecs.select(IntDotProduct(col("v"), col("v")).as("d"))
       .filter(col("d").isNull).count()
     assert(n == 1)
   }
 
   test("graft_dot: null input yields null") {
-    DotProduct.register(spark)
     val n = vecs.select(DotProduct(col("v"), col("v")).as("d"))
       .filter(col("d").isNull).count()
     assert(n == 1)
   }
 
   test("graft_lsh_bucket matches the unrolled column formulation") {
-    LshBucket.register(spark, dim = 4, planes = 3)
     val both = vecs.filter(col("v").isNotNull)
       .select(
-        LshBucket(col("v")).as("native"),
+        LshBucket(col("v"), 4, 3).as("native"),
         Similarity.lshBucket(col("v"), 4, 3).as("unrolled"))
       .collect()
     both.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
   test("native expressions run inside whole-stage codegen (no fallback)") {
-    DotProduct.register(spark)
     // repartition forces a real exchange + project stage (a bare local
     // relation short-circuits to LocalTableScanExec with no codegen), and
     // the query must RUN first — under AQE the WholeStageCodegen spans
@@ -139,5 +130,34 @@ class NativeExprSpec extends SparkSpec {
     // Project (fallback to interpreted projection)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project [dotproductexpr"), plan)
+  }
+
+  test("one projection holds ArgTopCells columns bound to two different centroid tables") {
+    def table(rows: (Long, Array[Float])*) = rows.map { case (cid, cv) =>
+      (cid, cv, math.sqrt(cv.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))
+    }.toIndexedSeq
+    val tA = table(10L -> Array(1f, 0f, 0f, 0f), 11L -> Array(0f, 1f, 0f, 0f),
+      12L -> Array(-1f, 0f, 0f, 0f))
+    val tB = table(20L -> Array(0f, 0f, 1f, 0f), 21L -> Array(0f, 0f, 0f, 1f),
+      22L -> Array(0f, 0f, -1f, -1f))
+    // the kernel's ranking: cosine descending (NaN greatest), cid ascending
+    def top(v: Array[Float], t: IndexedSeq[(Long, Array[Float], Double)], p: Int) = {
+      val n = math.sqrt(v.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
+      t.map { case (cid, cv, cn) =>
+        cid -> v.indices.foldLeft(0.0)((a, i) => a + v(i).toDouble * cv(i).toDouble) / (n * cn)
+      }.sortWith { case ((_, a), (_, b)) => java.lang.Double.compare(a, b) > 0 }
+        .take(p).map(_._1)
+    }
+    val out = vecs.filter(col("v").isNotNull).repartition(2)
+      .select(col("v"),
+        ArgTopCells(col("v"), tA, 1).getField("cells").as("a"),
+        ArgTopCells(col("v"), tB, 2).getField("cells").as("b"))
+      .collect()
+    assert(out.length == 3)
+    out.foreach { r =>
+      val v = r.getSeq[Float](0).toArray
+      assert(r.getSeq[Long](1) == top(v, tA, 1), s"table A for ${v.toSeq}")
+      assert(r.getSeq[Long](2) == top(v, tB, 2), s"table B for ${v.toSeq}")
+    }
   }
 }

@@ -30,8 +30,8 @@ class TablesDriftSpec extends SparkSpec {
     assert(df.schema("vec_id").dataType == LongType)
     assert(df.schema("embedding").dataType.asInstanceOf[ArrayType].elementType == FloatType)
     // the native codegen path accepts the conformed column
-    graft.functions.DotProduct.register(spark)
-    val dot = df.selectExpr("vec_id", "graft_dot(embedding, embedding) AS d")
+    val dot = df.select(col("vec_id"),
+        graft.functions.DotProduct(col("embedding"), col("embedding")).as("d"))
       .as[(Long, Double)].collect().toMap
     assert(dot(1L) == 0.3125d && dot(2L) == 1.5625d)
   }

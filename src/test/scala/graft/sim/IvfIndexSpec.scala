@@ -711,6 +711,34 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
+  test("the tombstone broadcast gate sizes the epoch's parquet data, not its checksum sidecars") {
+    val p = java.nio.file.Files.createTempDirectory("ivftombcrc").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
+    val e = Similarity.deleteFromIvfIndex(spark, p,
+      corpus.filter(DeleteSpecPred).select("vec_id"))
+    val files = new java.io.File(s"$p/tombstones/epoch=$e").listFiles()
+      .filter(_.isFile).filterNot(_.getName.startsWith("_"))
+    val withCrc = files.map(_.length).sum
+    val dataOnly = files.filterNot(_.getName.startsWith(".")).map(_.length).sum
+    assert(dataOnly > 0 && withCrc > dataOnly + 1,
+      s"precondition: the epoch holds .crc sidecars ($dataOnly data / $withCrc bytes)")
+    val q = corpus.filter(SimQueries.QueryPred)
+    // the checksummed local filesystem hides `.crc` files from listings; a
+    // store that lists them (the raw local filesystem here, or an index
+    // copied with its sidecars) must not count them as tombstone data
+    withConf("spark.graft.index.tombstoneBroadcastMaxBytes" -> ((dataOnly + withCrc) / 2).toString,
+             "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+             "fs.file.impl" -> classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName,
+             "fs.file.impl.disable.cache" -> "true") {
+      val df = Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe)
+      df.count()
+      val lines = df.queryExecution.executedPlan.toString.linesIterator
+        .filter(_.contains("LeftAnti")).toSeq
+      assert(lines.nonEmpty && lines.forall(_.contains("Broadcast")),
+        s"a data size under the threshold must stay broadcast:\n${lines.mkString("\n")}")
+    }
+  }
+
   private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
     val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -1110,5 +1138,65 @@ class IvfIndexSpec extends SparkSpec {
     assert(!Similarity.readIvfAssigned(spark, p).select("c_id").collect()
       .map(_.getLong(0)).exists(dSet), "compaction must reclaim the int-typed ids")
     assert(answers(p, q) == expected)
+  }
+
+  // ---- native kernels are plain columns: no session state per call
+
+  test("index lifecycle, LSH and signature kernels leave the session's function registry untouched") {
+    val registry = spark.sessionState.functionRegistry
+    def snapshot() = registry.listFunction().map(id => id -> registry.lookupFunctionBuilder(id))
+    val before = snapshot()
+    val q = corpus.filter(SimQueries.QueryPred)
+    for (storage <- Seq("float32", "pq")) {
+      val p = java.nio.file.Files.createTempDirectory(s"ivfreg$storage").toString
+      Similarity.buildIvfIndex(corpus.filter("vec_id % 5 <> 3"), SimQueries.ClusterCentPred,
+        SimQueries.Dim, p, storage = storage, pqM = SimQueries.PqM, pqK = SimQueries.PqK)
+      Similarity.appendToIvfIndex(corpus.filter("vec_id % 5 = 3"), p)
+      assert(answers(p, q).nonEmpty)
+      Similarity.deleteFromIvfIndex(spark, p, corpus.filter(DeleteSpecPred).select("vec_id"))
+      Similarity.compactIvfIndex(spark, p)
+      assert(answers(p, q).nonEmpty)
+    }
+    Similarity.lshTopKMulti(q, corpus, SimQueries.K, SimQueries.Dim, SimQueries.Planes,
+      SimQueries.NTables, SimQueries.ProbeR).collect()
+    Similarity.cosinePairsLsh(corpus, 0.9, SimQueries.Dim, SimQueries.Planes,
+      SimQueries.NTables).collect()
+    val docs = graft.io.Tables.documents(spark, dir).limit(40)
+    for (once <- Seq(false, true)) {
+      graft.dedup.Dedup.withMinhash(docs, evalOnce = once).collect()
+      graft.dedup.Dedup.withSimhash(docs, evalOnce = once).collect()
+    }
+    val after = snapshot()
+    assert(after.map(_._1) == before.map(_._1), "the registered names changed")
+    before.zip(after).foreach { case ((id, b0), (_, b1)) =>
+      assert(b0.zip(b1).forall { case (x, y) => x eq y }, s"$id was re-registered")
+    }
+  }
+
+  test("two threads querying two indexes with different centroid tables keep their own tables") {
+    val pA = java.nio.file.Files.createTempDirectory("ivfthreadA").toString
+    val pB = java.nio.file.Files.createTempDirectory("ivfthreadB").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, pA)
+    Similarity.buildIvfIndex(corpus, "vec_id % 53 = 7", SimQueries.Dim, pB)
+    val batches = (0 until 20).map(b => corpus.filter(s"vec_id % 25 = $b"))
+    // one probe: the answer depends on which cells the centroid table ranks first
+    def run(p: String) = batches.map(q =>
+      Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, 1).collect().map(_.toSeq).toSet)
+    val (twinA, twinB) = (run(pA), run(pB))
+    assert(twinA != twinB, "precondition: the two centroid tables answer differently")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val results = Seq(pA, pB).map { p =>
+      val box = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, Seq[Set[Seq[Any]]]]]()
+      val t = new Thread(() => {
+        start.await()
+        box.set(try Right(run(p)) catch { case e: Throwable => Left(e) })
+      })
+      t.start()
+      (t, box)
+    }
+    start.countDown()
+    results.foreach(_._1.join())
+    val Seq(gotA, gotB) = results.map(_._2.get.fold(e => throw e, identity))
+    assert(gotA == twinA && gotB == twinB)
   }
 }
