@@ -1,9 +1,14 @@
 package graft
 
+import graft.dedup.Dedup
 import graft.dipa.Detect
-import graft.fixtures.Fixtures
+import graft.fixtures.{Fixtures, ScaleProbe}
+import graft.queries.SimQueries
+import graft.sim.Similarity
 import graft.streaming.DetectionStream
-import org.apache.spark.sql.SparkSession
+import graft.text.{BpeTrain, Lexical}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, translate}
 
 /** Per-round benchmark: every SparkEntry query at the configured SF, plus
   * the BASELINE.md headline — one 7500-flow poll snapshot through the full
@@ -84,7 +89,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   // Foreign-CPU attribution lives in [[graft.util.ProcCpu]] (shared with
-  // the QueryProbe adjudication main). History of why it is
+  // `graft.Tools probe`). History of why it is
   // /proc-delta based and why reaped children count as own: a first-cut
   // loadavg−ownCpuEMA estimate false-flagged six clean rows (our own
   // I/O-blocked threads count in loadavg but burn no CPU time), and the
@@ -165,8 +170,8 @@ object Bench {
     * sentinel IS one (a recall gate whose measurement crashed must not
     * read as passing).
     */
-  private[graft] def recallViolations(results: Seq[(String, Double)]): Seq[String] = {
-    val m = results.toMap
+  private[graft] def recallViolations(results: Seq[Row]): Seq[String] = {
+    val m = results.map(r => r.key -> r.value).toMap
     RecallFloors.flatMap { case (k, floor) =>
       m.get(k).filter(_ < floor - 1e-9).map(v => f"$k=$v%.4f<$floor%.3f")
     }
@@ -175,37 +180,35 @@ object Bench {
   private[graft] def jq(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
-  /** Non-timing telemetry rows (counters, load stamps, recall fractions):
-    * they live only in the full dump; the compact line carries seconds.
-    * Anchored to the key's suffix: timing rows such as
-    * `s16_ivf_pq_reranked`, `sf10_s16_rerank_query` and `t6_bpe_merges`
-    * carry the same words mid-key or as an oracle query name.
+  /** A bench row. A [[Timing]] is seconds — what `value` totals and the
+    * compact line ranks; a [[Stat]] is everything else (counts, ratios,
+    * recall fractions, flags, load stamps), carried in the full dump only.
     */
-  private val NonTimingRow = java.util.regex.Pattern.compile(
-    "_(recall(_[a-z0-9]+)?|cand_frac|rounds|meanbatch|epoch_merges|sweeps|" +
-      "loadavg|ambient|reran)$")
+  private[graft] sealed trait Row { def key: String; def value: Double }
+  private[graft] final case class Timing(key: String, value: Double) extends Row
+  private[graft] final case class Stat(key: String, value: Double) extends Row
+
+  /** The suite's `value`: the sum of its timing rows. */
+  private[graft] def total(rows: Seq[Row]): Double =
+    rows.collect { case t: Timing => t.value }.sum
 
   /** The compact last stdout line — the contract shape of the full line:
-    * the full-suite total, the slowest timing rows at 3 decimals greedily
+    * the timing total, the slowest timing rows at 3 decimals greedily
     * packed into a `budget`-char line (≈87% of suite seconds at the r13
-    * profile, ~65 rows), an `elided` count of the TIMING rows that did not
-    * fit (non-timing rows never compete for the line, so they are not
-    * counted), and a pointer at the verbatim full dump.
+    * profile, ~65 rows), an `elided` count of the timing rows that did not
+    * fit, and a pointer at the verbatim full dump.
     */
-  private[graft] def compactLine(total: Double, results: Seq[(String, Double)],
-                                 errorsN: Int, sfDir: String,
+  private[graft] def compactLine(results: Seq[Row], errorsN: Int, sfDir: String,
                                  budget: Int = 1750): String = {
     def fmt3(v: Double): String =
       BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
         .bigDecimal.toPlainString
-    val cand = results
-      .filter { case (k, _) => !NonTimingRow.matcher(k).find() }
-      .sortBy { case (_, v) => -v }
+    val cand = results.collect { case t: Timing => t }.sortBy(-_.value)
     val sb = new StringBuilder(
-      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":{""")
+      s"""{"metric":"total","value":${fmt3(total(results))},"unit":"sec","queries":{""")
     var taken = 0
-    cand.foreach { case (k, v) =>
-      val entry = (if (taken == 0) "" else ",") + jq(k) + ":" + fmt3(v)
+    cand.foreach { t =>
+      val entry = (if (taken == 0) "" else ",") + jq(t.key) + ":" + fmt3(t.value)
       if (sb.length + entry.length <= budget) { sb.append(entry); taken += 1 }
     }
     val errPart = if (errorsN == 0) "" else s""","errors_n":$errorsN"""
@@ -213,6 +216,95 @@ object Bench {
     sb.append(s""","full":"bench_out.json","sf":"$sfDir"}""")
     sb.toString
   }
+
+  /** One bench section: the rows of `body`, run only when `enabled`. A
+    * scale tier's `tierData` generates its fixtures first, and the
+    * idle-box gate runs after it, so the timed rows start on an idle box
+    * however long generation took. A throw anywhere records the section
+    * under `name` in `errors` and keeps `onError`'s rows instead.
+    */
+  private[graft] final class Section(val name: String, val enabled: Boolean = true,
+      val tierData: Option[() => Unit] = None, val onError: Seq[Row] = Nil)(
+      body: => Seq[Row]) {
+    def rows(): Seq[Row] = body
+  }
+
+  private[graft] def firstLine(e: Throwable): String = e.toString.takeWhile(_ != '\n').take(200)
+
+  /** Run the enabled `sections` in order and concatenate their rows. */
+  private[graft] def runSections(sections: Seq[Section], awaitIdle: String => Unit,
+      errors: collection.mutable.Map[String, String]): Seq[Row] =
+    sections.filter(_.enabled).flatMap { s =>
+      try { s.tierData.foreach { gen => gen(); awaitIdle(s.name) }; s.rows() }
+      catch { case e: Throwable =>
+        errors += s.name -> firstLine(e)
+        s.onError
+      }
+    }
+
+  /** Recall of `answers` against `truth`: the fraction of truth's
+    * (q_id, c_id) pairs the answers contain.
+    */
+  private def recall(answers: DataFrame, truth: DataFrame): Double = {
+    val t = truth.select("q_id", "c_id")
+    val n = t.count().toDouble
+    answers.select("q_id", "c_id").join(t, Seq("q_id", "c_id"), "left_semi").count() / n
+  }
+
+  /** The other side of each driver-local size gate: the same oracle query
+    * with its gate at 0, so the distributed path (the one a 100 TB input
+    * takes) stays under measurement. Row -> (query, gate conf).
+    */
+  private[graft] val DistRows: Seq[(String, (String, String))] = Seq(
+    "d7_dup_clusters_dist" -> ("d7_dup_clusters", "spark.graft.cc.localSolveMaxPairs"),
+    "t7_bpe_dist" -> ("t7_bpe_train", "spark.graft.bpe.localLoopMaxVocab"))
+
+  /** The sf1 tier's queries, in run order. d7 runs FIRST: its iterative
+    * sweeps are the most load-sensitive row in the probe (r5→r6
+    * judge-idle spread 16.3→31.9 s), so it is measured cold, not under
+    * the tail load of the rest.
+    */
+  private[graft] val Sf1Queries: Seq[String] = Seq(
+    "d7_dup_clusters", "d1_exact_dedup", "d2_jaccard_pairs",
+    "d3_minhash_lsh", "d4_simhash_pairs", "d5_embed_dedup",
+    "d6_minhash_sigs", "d8_chunk_dedup", "s1_ann_topk",
+    "s2_cosine_pairs_blocked", "s3_lsh_topk", "s4_ivf_topk",
+    "s5_lsh_pairs", "s7_q8_topk", "k1_salted_topk", "k3_distinct_users",
+    // temporal/session/sampling: output is linear in the replica
+    // count (z2's global windows are deliberately NOT probed —
+    // 10x density in the same 30-day span multiplies its PAIRS
+    // 100x, an output property, not a plan property)
+    "z1_asof_join", "z3_range_join_keyed", "p1_sessionize",
+    "v1_hash_split",
+    // round-7 curation ops: gram-cardinality (t8/t9) and the
+    // two-phase rank (g4) are linear by design — the probe holds
+    // them to it
+    "t8_repetition", "t9_decontam", "g4_shuffle_order",
+    // retrieval (round 13): h1 = tokenize + postings build + the
+    // query-term-pruned scorer (linear in corpus tokens); h3 adds
+    // the persisted term-bucketed index build + bucket-pruned read
+    "h1_bm25_topk", "h3_bm25_indexed")
+
+  /** The sf10 tier's queries, in run order. d7 runs first and its sweep
+    * count is read IMMEDIATELY — u1 also runs dupClusters, so a read at
+    * the end would report u1's closure sweeps as d7's (it did, once).
+    * Then the remaining prescribed flagships + u1 (the full curation
+    * COMPOSITION — quality → exact → d4 pairs → d7 closure → sample →
+    * pack — is the query a 100 TB deployment actually runs end-to-end)
+    * + the text-hygiene family (t8/t9/d8): the highest-traffic 100 TB
+    * curation ops, previously measured only to sf1 — their second
+    * decade completes the exponent table in PLANS.md. Round-10: + the
+    * temporal/session family (z1/z3/p1) — the join shapes a 100 TB
+    * telemetry workload leans on; their bin/window machinery has its own
+    * density dial, and replicas are KEY-disjoint (user_id offset per
+    * replica) so per-key density is constant and output is exactly 100×
+    * — linear wall time is the pass condition (z2's KEYLESS windows stay
+    * unprobed: same span × 100 density is a quadratic OUTPUT property).
+    */
+  private[graft] val Sf10Queries: Seq[String] = Seq("d7_dup_clusters",
+    "d1_exact_dedup", "d3_minhash_lsh", "s3_lsh_topk", "u1_curation",
+    "t8_repetition", "t9_decontam", "d8_chunk_dedup",
+    "z1_asof_join", "z3_range_join_keyed", "p1_sessionize")
 
   /** Ambient-foreign-core gate for SUSTAINED latency-distribution legs
     * (the per-poll mean/max rows) — an order tighter than the suite-wide
@@ -237,16 +329,17 @@ object Bench {
     */
   private[graft] def rerunOnceIfContaminated(
       gate: Double, ambKey: String,
-      run: () => Seq[(String, Double)],
+      run: () => Seq[Row],
       onRerun: Double => Unit = _ => ())
-      : (Seq[(String, Double)], Boolean, Boolean) = {
+      : (Seq[Row], Boolean, Boolean) = {
+    def amb(rows: Seq[Row]): Double = rows.find(_.key == ambKey).fold(0.0)(_.value)
     val r1 = run()
-    val amb1 = r1.toMap.getOrElse(ambKey, 0.0)
+    val amb1 = amb(r1)
     if (amb1 <= gate) (r1, false, false)
     else {
       onRerun(amb1)
       val r2 = run()
-      (r2, true, r2.toMap.getOrElse(ambKey, 0.0) > gate)
+      (r2, true, amb(r2) > gate)
     }
   }
 
@@ -380,7 +473,7 @@ object Bench {
       * input fixture is deliberately cached outside the timed section.
       */
     def timed(name: String, n: Int = trials, clear: Boolean = true)(
-        body: => Unit): (String, Double) = {
+        body: => Unit): Row = {
       var best = Double.MaxValue
       var firstElapsed = -1.0
       var failed = false
@@ -391,7 +484,7 @@ object Bench {
         val t0 = System.nanoTime()
         try body
         catch { case e: Throwable =>
-          errors += name -> e.toString.takeWhile(_ != '\n').take(200)
+          errors += name -> firstLine(e)
           failed = true
         }
         val dt = (System.nanoTime() - t0) / 1e9
@@ -406,7 +499,7 @@ object Bench {
       // min-of-N already defends against ONE dirty trial; only when every
       // trial ran under foreign load is the recorded min untrustworthy
       if (!cleanTrial) contended += name
-      name -> (if (best == Double.MaxValue) firstElapsed else best)
+      Timing(name, if (best == Double.MaxValue) firstElapsed else best)
     }
 
     // untimed warmup: JVM/codegen/session init otherwise lands on whichever
@@ -426,7 +519,7 @@ object Bench {
     // of a tree rebuild. The pair also runs inside the sf1 tier
     // (`sf1_calib_*`) under that tier's ambient conditions, since sf1
     // rows (d3's r10 drift) are where adjudication has been spent.
-    def calibRows(prefix: String): Seq[(String, Double)] = {
+    def calibRows(prefix: String): Seq[Row] = {
       import org.apache.spark.sql.{functions => F}
       Seq(
         timed(prefix + "calib_cpu") {
@@ -486,184 +579,20 @@ object Bench {
             .parquet(new java.io.File("target/calib_write").getAbsolutePath); ()
         })
     }
-    val calib = calibRows("")
 
-    val queryTimes = SparkEntry.queries.map { case (name, fn) =>
-      timed(name) { fn(spark, sfDir).count(); () }
-    } ++ Seq(
-      // the other side of each driver-local size gate: the same oracle
-      // query with its gate at 0, so the distributed path (the one a
-      // 100 TB input takes) stays under measurement
-      "d7_dup_clusters_dist" -> ("d7_dup_clusters", "spark.graft.cc.localSolveMaxPairs"),
-      "t7_bpe_dist" -> ("t7_bpe_train", "spark.graft.bpe.localLoopMaxVocab")
-    ).map { case (row, (query, gate)) =>
-      timed(row) {
-        spark.conf.set(gate, "0")
-        try SparkEntry.queries(query)(spark, sfDir).count()
-        finally spark.conf.unset(gate)
-        ()
+    def queryRow(prefix: String, dir: String, n: Int)(name: String): Row =
+      timed(prefix + name, n = n) { SparkEntry.queries(name)(spark, dir).count(); () }
+
+    // the epoch-synchronized BPE learner at 512 merges: its time plus the
+    // rounds / merges / merges-per-round it took
+    def epochBpe(key: String, docs: => DataFrame): Seq[Row] = {
+      var s = BpeTrain.BatchStats(0, 0)
+      val t = timed(key, n = 1) {
+        s = BpeTrain.learnEpochStats(docs, 512, batch = 64)._2; ()
       }
+      Seq(t, Stat(s"${key}_rounds", s.rounds.toDouble),
+        Stat(s"${key}_merges", s.merges.toDouble), Stat(s"${key}_meanbatch", s.meanBatch))
     }
-
-    // BPE training at production-leaning vocab scale: the sequential
-    // learner pays one driver round-trip per merge (a 32k-merge tokenizer
-    // = 32k sequential jobs), measured here at 64 merges next to the
-    // batched-greedy variant (identical rules — BpeTrainSpec gates
-    // equality) whose round count is cut by the accepted-batch size.
-    // PLANS.md's known-costs entry derives its cost model from these rows.
-    var bpeStats = graft.text.BpeTrain.BatchStats(0, 0)
-    val bpeTimes = Seq(
-      timed("t7_bpe_64_seq", n = 2) {
-        graft.text.BpeTrain.learn(
-          graft.io.Tables.documents(spark, sfDir), 64); ()
-      },
-      timed("t7_bpe_64_batched", n = 2) {
-        bpeStats = graft.text.BpeTrain.learnBatchedStats(
-          graft.io.Tables.documents(spark, sfDir), 64)._2; ()
-      },
-      // round-count evidence for the batching claim: sequential = 64
-      // driver round-trips by construction; batched = measured rounds and
-      // merges-per-round (the 32k-merge projection scales from these)
-      "t7_bpe_64_seq_rounds" -> 64.0,
-      "t7_bpe_64_batched_rounds" -> bpeStats.rounds.toDouble,
-      "t7_bpe_64_batched_meanbatch" -> bpeStats.meanBatch)
-
-    // the SCALE-SAFE mode at production-leaning merge count: the
-    // epoch-synchronized learner (bounded divergence, see BpeTrain
-    // scaladoc + BpeTrainSpec) recomputes pair counts once per batch of
-    // 64 — rounds must come out ≪ merges (vs learnBatched's measured
-    // meanBatch ≈ 1.1, which is why this mode exists)
-    var epochStats = graft.text.BpeTrain.BatchStats(0, 0)
-    val bpeEpochTimes = Seq(
-      timed("t7_bpe_512_epoch", n = 1) {
-        epochStats = graft.text.BpeTrain.learnEpochStats(
-          graft.io.Tables.documents(spark, sfDir), 512, batch = 64)._2; ()
-      },
-      "t7_bpe_512_epoch_rounds" -> epochStats.rounds.toDouble,
-      "t7_bpe_512_epoch_merges" -> epochStats.merges.toDouble,
-      "t7_bpe_512_epoch_meanbatch" -> epochStats.meanBatch)
-
-    // untimed: ANN recall vs the s1 exact ground truth — the scale gate for
-    // the multi-probe LSH geometry and the Lloyd-refined IVF (target >= 0.9
-    // at the bench sf)
-    val recall = Seq("s3_recall" -> "s3_lsh_topk", "s4_recall" -> "s4_ivf_topk",
-        "s7_recall" -> "s7_q8_topk")
-      .map { case (metric, query) =>
-        try {
-          val s1 = SparkEntry.queries("s1_ann_topk")(spark, sfDir).select("q_id", "c_id")
-          val a = SparkEntry.queries(query)(spark, sfDir).select("q_id", "c_id")
-          val r = a.join(s1, Seq("q_id", "c_id"), "left_semi").count().toDouble / s1.count()
-          spark.catalog.clearCache()
-          metric -> r
-        } catch { case e: Throwable =>
-          errors += metric -> e.toString.takeWhile(_ != '\n').take(200)
-          metric -> -1.0
-        }
-      }
-
-    // untimed: filtered-search recall — s11's filtered LSH vs exact brute
-    // force over the label-filtered corpus (the honest ground truth when
-    // the predicate is active; the unfiltered s1 truth would count
-    // correctly-excluded neighbors as misses)
-    val filteredRecall: Seq[(String, Double)] = try {
-      import graft.queries.SimQueries
-      import graft.sim.Similarity
-      val e = graft.io.Tables.embeddings(spark, sfDir)
-      val truth = Similarity.bruteForceTopK(
-          e.filter(SimQueries.QueryPred), e.filter(SimQueries.FilterPred),
-          SimQueries.K)
-        .select("q_id", "c_id").cache()
-      val nTruth = truth.count().toDouble
-      val hits = SparkEntry.queries("s11_lsh_filtered")(spark, sfDir)
-        .select("q_id", "c_id")
-        .join(truth, Seq("q_id", "c_id"), "left_semi").count()
-      truth.unpersist(); spark.catalog.clearCache()
-      Seq("s11_recall" -> hits / nTruth)
-    } catch { case e: Throwable =>
-      errors += "s11_recall" -> e.toString.takeWhile(_ != '\n').take(200)
-      Nil
-    }
-
-    // untimed: clustered-fixture ANN gates. Recall on the near-uniform
-    // corpus above says more about the fixture than the index (no cell
-    // structure to exploit), so both index paths are ALSO gated on the
-    // PlantedClusters corpus — where we report recall vs the brute-force
-    // ground truth AND the candidate fraction actually examined
-    // (target: recall >= 0.9 at candidate fraction <= 0.2).
-    val clusteredGates: Seq[(String, Double)] = try {
-      import graft.queries.SimQueries
-      import graft.sim.Similarity
-      val e = SimQueries.clustered(spark, sfDir).cache()
-      val q = e.filter(SimQueries.QueryPred)
-      val nQ = q.count()
-      val nPairs = (nQ * (e.count() - 1)).toDouble
-      val truth = Similarity.bruteForceTopK(q, e, SimQueries.K)
-        .select("q_id", "c_id").cache()
-      val nTruth = truth.count().toDouble
-      def gates(tag: String, scored: org.apache.spark.sql.DataFrame): Seq[(String, Double)] = {
-        val sc = scored.cache()
-        val cand = sc.count().toDouble
-        val hits = Similarity.rankTopK(sc, SimQueries.K).select("q_id", "c_id")
-          .join(truth, Seq("q_id", "c_id"), "left_semi").count().toDouble
-        sc.unpersist()
-        Seq(s"${tag}_recall" -> hits / nTruth, s"${tag}_cand_frac" -> cand / nPairs)
-      }
-      val out =
-        gates("s3c", Similarity.lshMultiScored(q, e, SimQueries.Dim,
-          SimQueries.Planes, SimQueries.NTables, SimQueries.ProbeRClustered)) ++
-        gates("s4c", Similarity.ivfRefinedScored(q, e,
-          SimQueries.ClusterCentPred, SimQueries.NProbe, SimQueries.Dim))
-      truth.unpersist(); e.unpersist()
-      spark.catalog.clearCache()
-      out
-    } catch { case e: Throwable =>
-      errors += "clustered_gates" -> e.toString.takeWhile(_ != '\n').take(200)
-      Nil
-    }
-
-    // untimed: the index-selection router, gated on BOTH fixtures — the
-    // sampled cluster-mass probe must route each corpus to the index that
-    // clears 0.9 recall there (LSH on the near-uniform embeddings, refined
-    // IVF on PlantedClusters). This is the engine-behavior answer to the
-    // standing "s4_recall 0.6 if a user points IVF at a structureless
-    // corpus" finding: the router, not the docs, now owns that judgment.
-    val annAuto: Seq[(String, Double)] = try {
-      import graft.queries.SimQueries
-      import graft.sim.Similarity
-      def gate(tag: String, corpus: org.apache.spark.sql.DataFrame): Seq[(String, Double)] = {
-        val c = corpus.cache()
-        val q = c.filter(SimQueries.QueryPred)
-        val truth = Similarity.bruteForceTopK(q, c, SimQueries.K)
-          .select("q_id", "c_id").cache()
-        val nTruth = truth.count().toDouble
-        val (choice, mass, topk) = SimQueries.annAutoTopK(q, c)
-        val hits = topk.select("q_id", "c_id")
-          .join(truth, Seq("q_id", "c_id"), "left_semi").count()
-        truth.unpersist(); c.unpersist()
-        Seq(s"ann_auto_recall_$tag" -> hits / nTruth,
-            s"ann_auto_is_ivf_$tag" -> (if (choice == "ivf") 1.0 else 0.0),
-            s"ann_auto_mass_$tag" -> mass)
-      }
-      val out = gate("uniform", graft.io.Tables.embeddings(spark, sfDir)) ++
-        gate("clustered", graft.queries.SimQueries.clustered(spark, sfDir))
-      spark.catalog.clearCache()
-      out
-    } catch { case e: Throwable =>
-      errors += "ann_auto" -> e.toString.takeWhile(_ != '\n').take(200)
-      Nil
-    }
-
-    // BASELINE.md headline: full detection over a 7500-benign-flow,
-    // 500-bot poll history (fixture generation + caching excluded)
-    val refParams = Fixtures.ScenarioParams(nBenignFlows = 7500, nBots = 500)
-    val sc = Fixtures.scenario(refParams)
-    val flows = sc.flows.toDF().cache()
-    flows.count() // materialize outside the timed section
-    val detectTimes = Seq(
-      timed("detect_7500_batch", clear = false) { Detect.detect(flows).count(); () },
-      timed("detect_7500_stream", clear = false) {
-        DetectionStream.alerts(flows.as[graft.model.FlowStat]).count(); ()
-      })
 
     // sustained micro-batch run: one poll per trigger through the live
     // streaming query; the per-poll mean must stay under the 2 s poll
@@ -671,8 +600,7 @@ object Bench {
     // sustained latency distribution, not a repeatable unit of work, so it
     // stays single-pass (mean/max over polls) rather than min-of-N.
     def sustainedPollsGen(label: String, nPolls: Int,
-                          mkPoll: Int => Seq[graft.model.FlowStat])
-        : Seq[(String, Double)] = {
+                          mkPoll: Int => Seq[graft.model.FlowStat]): Seq[Row] = {
       // warm the streaming plan (state-store init, codegen, shuffle setup) on
       // a throwaway query over the first poll: the thesis's no-backlog
       // condition is "every poll under 2 s", so the timed max must not be the
@@ -709,8 +637,8 @@ object Bench {
       */
     def sustainedLeg(label: String, nPolls: Int,
                      mk: () => (org.apache.spark.sql.streaming.StreamingQuery,
-                                Int => Unit)): Seq[(String, Double)] = {
-      def once(): Seq[(String, Double)] = {
+                                Int => Unit)): Seq[Row] = {
+      def once(): Seq[Row] = {
         awaitIdle(label, SustainedAmbientGate)
         val (q, addPoll) = mk()
         pollLoop(label, nPolls, q, addPoll)
@@ -721,7 +649,7 @@ object Bench {
           f"bench[$label]: sustained run measured foreign load $a%.2f cores " +
             f"> sustained gate $SustainedAmbientGate%.2f — auto-rerunning once"))
       if (dirty) { contended += s"${label}_mean"; contended += s"${label}_max" }
-      rows :+ (s"${label}_reran" -> (if (reran) 1.0 else 0.0))
+      rows :+ Stat(s"${label}_reran", if (reran) 1.0 else 0.0)
     }
 
     /** The timed sustained-poll core: one trigger per poll through a live
@@ -730,7 +658,7 @@ object Bench {
       */
     def pollLoop(label: String, nPolls: Int,
                  q: org.apache.spark.sql.streaming.StreamingQuery,
-                 addPoll: Int => Unit): Seq[(String, Double)] = {
+                 addPoll: Int => Unit): Seq[Row] = {
       val runCpu0 = proc.snap() // foreign-cpu window over the timed polls
       val perPoll = (0 until nPolls).map { i =>
         val t0 = System.nanoTime()
@@ -755,13 +683,12 @@ object Bench {
       providerStamps += label -> spark.conf
         .getOption("spark.sql.streaming.stateStore.providerClass")
         .map(_.split('.').last).getOrElse("HDFSBackedStateStoreProvider")
-      Seq(s"${label}_mean" -> perPoll.sum / perPoll.size,
-          s"${label}_max" -> perPoll.max,
-          s"${label}_loadavg" -> loadavg1m(),
-          s"${label}_ambient" -> amb)
+      Seq(Timing(s"${label}_mean", perPoll.sum / perPoll.size),
+          Timing(s"${label}_max", perPoll.max),
+          Stat(s"${label}_loadavg", loadavg1m()),
+          Stat(s"${label}_ambient", amb))
     }
-    def sustainedPolls(label: String, allFlows: Seq[graft.model.FlowStat])
-        : Seq[(String, Double)] = {
+    def sustainedPolls(label: String, allFlows: Seq[graft.model.FlowStat]): Seq[Row] = {
       val polls = allFlows.groupBy(_.poll_id).toSeq.sortBy(_._1).map(_._2)
       sustainedPollsGen(label, polls.size, polls(_))
     }
@@ -776,19 +703,365 @@ object Bench {
     // prior analysis was wrong.)
     def stateKeys(p: Fixtures.ScenarioParams): Long =
       p.nBenignFlows.toLong + p.nBots
-    DetectionStream.selectStateStore(spark, stateKeys(refParams))
-    // no outer awaitIdle: sustainedLeg gates each run at the TIGHT
-    // sustained gate itself (which subsumes the suite-wide one)
-    val sustained = sustainedPolls("detect_poll", sc.flows)
+    // BASELINE.md headline: full detection over a 7500-benign-flow,
+    // 500-bot poll history (fixture generation + caching excluded)
+    val refParams = Fixtures.ScenarioParams(nBenignFlows = 7500, nBots = 500)
 
-    // detection scale probe (10× flows, 10× bots): a 75 000-benign-flow /
-    // 5 000-bot scenario through the same batch pipeline and the same
-    // sustained streaming run. Poll cost should scale ~linearly in flows —
-    // a superlinear jump here is a plan bug the 100 TB cluster would hit.
-    // Skip with SPARK_GRAFT_DETECT10X=0.
-    val detect10x: Seq[(String, Double)] =
-      if (sys.env.get("SPARK_GRAFT_DETECT10X").contains("0")) Nil
-      else try {
+    val sf1Dir = new java.io.File("target/sf1").getAbsolutePath
+    val sf10Dir = new java.io.File("target/sf10").getAbsolutePath
+
+    // round-11: the persisted-index lifecycle SPLIT the way a 100 TB
+    // deployment actually pays it, replacing the combined
+    // sf10_s8_ivf_indexed row whose ~358 s was "build-dominated" only
+    // in prose — BUILD once (Lloyd refine + assignment sweep +
+    // cell-partitioned write), QUERY repeatedly (centroid broadcast +
+    // cell-pruned read + rank; the per-request cost), APPEND daily
+    // (the delta assigned against STORED centroids — the incremental
+    // path, previously measured only at sf0.1). The append's initial
+    // half-corpus build is setup, not the measured row.
+    def sf10IndexRows(): Seq[Row] = {
+      import SimQueries.{ClusterCentPred, Dim, InitPred, K, NProbe}
+      def target(name: String): String = new java.io.File(s"target/$name").getAbsolutePath
+      def clear(dir: String): Unit = {
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      }
+      val e = SimQueries.clustered(spark, sf10Dir)
+      val q = e.filter(SimQueries.QueryPred)
+      // a query's time, then its recall vs `truth`
+      def queryRecall(qKey: String, rKey: String, truth: => DataFrame)(
+          answers: => DataFrame): Seq[Row] =
+        Seq(timed(qKey, n = 1) { answers.count(); () }, Stat(rKey, recall(answers, truth)))
+      val ivfBase = target("ivfindex_sf10_split")
+      val full = Seq(
+        timed("sf10_s8_build", n = 1) {
+          Similarity.buildIvfIndex(e, ClusterCentPred, Dim, ivfBase)
+        },
+        timed("sf10_s8_query", n = 1) {
+          Similarity.ivfTopKIndexed(spark, ivfBase, q, K, NProbe).count(); ()
+        })
+      lazy val truth = Similarity.bruteForceTopK(q, e, K).select("q_id", "c_id").cache()
+      def assignedBytes(p: String): Long = {
+        def walk(f: java.io.File): Long =
+          if (f.isDirectory) f.listFiles().map(walk).sum
+          else if (f.getName.endsWith(".parquet")) f.length() else 0L
+        walk(new java.io.File(s"$p/assigned"))
+      }
+      // round-11: storage forms at the century tier, all at one SAMPLED
+      // quantizer training — seeds + Lloyd sweep over a deterministic 10%
+      // hash sample (which also right-sizes the seed count: seeds are drawn
+      // by predicate FROM the sample, so ~3k cells instead of ~30k),
+      // assignment still over every vector. The float32 leg vs
+      // sf10_s8_build/query is the measured cost of full-corpus training;
+      // its recall (vs exact brute force) is what the sample gives up.
+      // SQ8 and PQ then share its geometry, so every delta vs the s8s rows
+      // is attributable to the quantized payload alone: bytes ratio (the
+      // ~4× SQ8 / ~16× PQ resident-set claims, measured), query cost
+      // (integer-only / ADC map-lookup candidate scoring), recall give-up.
+      val sampledBase = target("ivfindex_sf10_sampled")
+      def storageLeg(buildKey: String, tag: String, base: String,
+                     storage: String): Seq[Row] = {
+        val build = timed(buildKey, n = 1) {
+          Similarity.buildIvfIndex(e, ClusterCentPred, Dim, base, trainFraction = 0.1,
+            storage = storage, pqM = SimQueries.PqM, pqK = SimQueries.PqK)
+        }
+        val bytes = if (base == sampledBase) Nil else Seq(Stat(s"sf10_${tag}_bytes_ratio",
+          assignedBytes(base).toDouble / assignedBytes(sampledBase)))
+        build +: (queryRecall(s"sf10_${tag}_query", s"sf10_${tag}_recall", truth)(
+          Similarity.ivfTopKIndexed(spark, base, q, K, NProbe)) ++ bytes)
+      }
+      // the refine tier over a quantized index — the quantized scan
+      // generates candidates, the exact pass re-scores only those against
+      // the float corpus. At this fixture's density (34k-member clusters)
+      // PQ's raw ADC recall is the honest cost of 0.18× bytes (codes cannot
+      // resolve ~1e-5 cosine gaps), so its rerank depth is sized to the
+      // probed-candidate count (~4 cells × ~370 rows at the sampled-geometry
+      // cell sizes); SQ8's residual resolution (0.725 raw) means a shallow
+      // refine suffices — depth 32 (the DEPTH dimension of the ladder).
+      def rerankLeg(tag: String, base: String, depth: Int): Seq[Row] =
+        queryRecall(s"sf10_${tag}_rerank_query", s"sf10_${tag}_recall", truth)(
+          Similarity.ivfTopKReranked(spark, base, q, e, K, NProbe, depth))
+      val q8Base = target("ivfindex_sf10_q8")
+      val pqBase = target("ivfindex_sf10_pq")
+      val storageRows = storageLeg("sf10_s8_build_sampled", "s8s", sampledBase, "float32") ++
+        storageLeg("sf10_s14_build", "s14", q8Base, "int8") ++ rerankLeg("s14r", q8Base, 32) ++
+        storageLeg("sf10_s15_build", "s15", pqBase, "pq") ++ rerankLeg("s16", pqBase, 2048)
+      truth.unpersist()
+      val apBase = target("ivfappend_sf10_split")
+      Similarity.buildIvfIndex(e.filter(InitPred), ClusterCentPred, Dim, apBase)
+      val append = timed("sf10_s10_append", n = 1) {
+        Similarity.appendToIvfIndex(e.filter(s"NOT ($InitPred)"), apBase)
+      }
+      // round-11: compaction at the century tier — the append above
+      // left a second file in ~every touched cell, so this measures
+      // the full maintenance rewrite a daily-append deployment
+      // schedules (read + rewrite of every over-threshold cell)
+      val compact = timed("sf10_s10_compact", n = 1) {
+        Similarity.compactIvfIndex(spark, apBase); ()
+      }
+      // round-12 (verdict #1): the DELETE lifecycle at the century
+      // tier. The delete set is one planted cluster's residue — the
+      // locality a real drop has (a dropped near-dup cluster shares
+      // cells) — so the three rows separate the costs a deployment
+      // actually pays: the tombstone WRITE is O(tombstones) (one
+      // small parquet, zero index files touched), the masked QUERY
+      // pays one broadcast anti-join on the pruned read, and RECLAIM
+      // rewrites only the ~1/32 of cells holding tombstoned rows
+      // (sf10_s17_reclaim_cells counts them) — never the corpus.
+      val delIds = e.filter(s"vec_id % ${graft.sim.PlantedClusters.KC} = 7").select("vec_id")
+      val del = timed("sf10_s17_delete", n = 1) {
+        Similarity.deleteFromIvfIndex(spark, apBase, delIds); ()
+      }
+      val delQ = timed("sf10_s17_query", n = 1) {
+        Similarity.ivfTopKIndexed(spark, apBase, q, K, NProbe).count(); ()
+      }
+      var reclaimCells = 0
+      val reclaim = timed("sf10_s17_reclaim", n = 1) {
+        reclaimCells = Similarity.compactIvfIndex(spark, apBase).size; ()
+      }
+      // round-12 (verdict #6): FILTERED search at the century tier —
+      // the carry-predicate path composed with the O(probed) listing
+      // and parquet predicate pushdown at ~3k cells (sampled-train
+      // geometry: the affordable build). Recall is vs exact brute
+      // force over the label-FILTERED corpus (the honest truth when
+      // the predicate is active), with the selectivity stamped.
+      val fBase = target("ivfindex_sf10_filtered")
+      val ef = e.join(graft.io.Tables.embeddings(spark, sf10Dir)
+        .select(col("vec_id"), col("label")), "vec_id")
+      val fq = ef.filter(SimQueries.QueryPred)
+      val buildF = timed("sf10_s9_build", n = 1) {
+        Similarity.buildIvfIndex(ef, ClusterCentPred, Dim, fBase,
+          carry = Seq("label"), trainFraction = 0.1)
+      }
+      lazy val truthF = Similarity.bruteForceTopK(fq, ef.filter(SimQueries.FilterPred), K)
+        .select("q_id", "c_id").cache()
+      def filtered(nprobe: Int, widen: Option[Int] = None): DataFrame =
+        Similarity.ivfTopKIndexed(spark, fBase, fq, K, nprobe,
+          candidateFilter = Some(expr(SimQueries.FilterPred)), probeWidenTarget = widen)
+      val base9 = queryRecall("sf10_s9_query", "sf10_s9_recall", truthF)(filtered(NProbe))
+      val selRow = Stat("sf10_s9_selectivity",
+        ef.filter(SimQueries.FilterPred).count().toDouble / ef.count())
+      // the selective-filter remedy, measured: a highly selective
+      // predicate (0.004 here — replica-disjoint labels) thins
+      // qualifying vectors per probed cell, so recall is bought back
+      // by WIDENING the probe set — the nprobe×4 row quantifies the
+      // recall-vs-cells-read trade a deployment tunes per filter
+      val wide9 = queryRecall("sf10_s9_query_p16", "sf10_s9_recall_p16", truthF)(
+        filtered(NProbe * 4))
+      // round-13 (verdict #3): the widening AUTOMATED — same base
+      // nprobe, probeWidenTarget on; the engine estimates qualifying
+      // density over the base probe set and widens itself. The row
+      // pays the estimate (one filter-pushed count over the base
+      // cells) + the widened read; its recall is GATED at 0.9
+      // (RecallFloors) so the automation can never silently regress
+      // below what the manual remedy bought.
+      val auto9 = queryRecall("sf10_s9_query_auto", "sf10_s9_auto_recall", truthF)(
+        filtered(NProbe, Some(4)))
+      truthF.unpersist()
+      // round-12 (verdict #5): the STREAMING index append at the
+      // century tier — the shape a live embedding pipeline runs. The
+      // odd half arrives as 8 file-source micro-batches against the
+      // even-half index; per-trigger latency from the query's own
+      // progress events. Batch-vs-stream row parity is IvfIndexSpec's
+      // pin; these rows are the sustained per-batch cost the daily
+      // path budgets against. Round-13 (verdict #4): the per-batch
+      // floor is measured at TWO trigger sizes with the centroid cache
+      // in place — the floor's batch-size-independent part (what the
+      // cache didn't remove, i.e. the O(cells) partitioned write) falls
+      // out of the pair: floor ≈ (8 × mean@1 − 2 × mean@4) / 6.
+      val sFeed = target("ivfstream_feed_sf10")
+      clear(sFeed)
+      e.filter(s"NOT ($InitPred)").repartition(8).write.parquet(sFeed)
+      def streamLeg(suffix: String, filesPerTrigger: Int): Seq[Row] = {
+        val base = target(s"ivfappend_sf10_stream$suffix")
+        val ckpt = target(s"ivfstream_ckpt${suffix}_sf10")
+        Seq(base, ckpt).foreach(clear)
+        Similarity.buildIvfIndex(e.filter(InitPred), ClusterCentPred, Dim, base,
+          trainFraction = 0.1)
+        val sq = Similarity.appendToIvfIndexStream(
+          spark.readStream.schema(spark.read.parquet(sFeed).schema)
+            .option("maxFilesPerTrigger", filesPerTrigger.toString)
+            .parquet(sFeed),
+          base, ckpt)
+        try sq.processAllAvailable() finally sq.stop()
+        val perBatch = sq.recentProgress.toSeq
+          .filter(_.numInputRows > 0)
+          .map(_.durationMs.get("triggerExecution").toDouble / 1000.0)
+        if (perBatch.isEmpty)
+          throw new IllegalStateException("no data-carrying micro-batches ran")
+        Seq(Timing(s"sf10_s10_stream${suffix}_mean", perBatch.sum / perBatch.size),
+            Timing(s"sf10_s10_stream${suffix}_max", perBatch.max),
+            Stat(s"sf10_s10_stream${suffix}_batches", perBatch.size.toDouble))
+      }
+      val streamRows = runSections(Seq(
+        new Section("sf10_s10_stream")(streamLeg("", 1)),
+        new Section("sf10_s10_stream4")(streamLeg("4", 4))), awaitIdle(_), errors)
+      full ++ storageRows ++ Seq(append, compact, del, delQ, reclaim,
+        Stat("sf10_s17_reclaim_cells", reclaimCells.toDouble), buildF, base9.head, selRow) ++
+        base9.tail ++ wide9 ++ auto9 ++ streamRows
+    }
+
+    // round-13: lexical retrieval at the century tier. The replica
+    // suffixes (`~r`) are invisible to the letter-run tokenizer, so
+    // sf10 is the DENSE-postings stress: same 31-term vocabulary,
+    // 100× the posting rows per term — a query term's bucket read is
+    // 100× the sf0.1 one, and linear wall time is the pass condition.
+    // Split like the IVF rows: BUILD once (the one-shuffle inverted
+    // index), QUERY repeatedly (bucket-pruned read + scorer).
+    def sf10RetrievalRows(): Seq[Row] = {
+      import graft.queries.RetrievalQueries
+      val pBase = new java.io.File("target/postidx_sf10").getAbsolutePath
+      val d10 = graft.io.Tables.documents(spark, sf10Dir)
+      Seq(
+        timed("sf10_h3_build", n = 1) { Lexical.buildPostingsIndex(d10, pBase) },
+        timed("sf10_h3_query", n = 1) {
+          Lexical.bm25TopKIndexed(spark, pBase,
+            RetrievalQueries.Queries, RetrievalQueries.K).count(); ()
+        })
+    }
+
+    // untimed: ANN recall vs the s1 exact ground truth — the scale gate for
+    // the multi-probe LSH geometry and the Lloyd-refined IVF (target >= 0.9
+    // at the bench sf). A crashed measurement stamps the -1.0 sentinel, a
+    // recall-floor violation rather than an absent row.
+    val recallSections = Seq("s3_recall" -> "s3_lsh_topk", "s4_recall" -> "s4_ivf_topk",
+        "s7_recall" -> "s7_q8_topk").map { case (metric, query) =>
+      new Section(metric, onError = Seq(Stat(metric, -1.0)))({
+        val r = recall(SparkEntry.queries(query)(spark, sfDir),
+          SparkEntry.queries("s1_ann_topk")(spark, sfDir))
+        spark.catalog.clearCache()
+        Seq(Stat(metric, r))
+      })
+    }
+
+    val sections: Seq[Section] = Seq(
+      new Section("calib")(calibRows("")),
+      new Section("queries")(
+        SparkEntry.queries.toSeq.map { case (name, fn) =>
+          timed(name) { fn(spark, sfDir).count(); () }
+        } ++ DistRows.map { case (row, (query, gate)) =>
+          timed(row) {
+            spark.conf.set(gate, "0")
+            try SparkEntry.queries(query)(spark, sfDir).count()
+            finally spark.conf.unset(gate)
+            ()
+          }
+        }),
+      // BPE training at production-leaning vocab scale: the sequential
+      // learner pays one driver round-trip per merge (a 32k-merge tokenizer
+      // = 32k sequential jobs), measured here at 64 merges next to the
+      // batched-greedy variant (identical rules — BpeTrainSpec gates
+      // equality) whose round count is cut by the accepted-batch size.
+      // PLANS.md's known-costs entry derives its cost model from these rows.
+      // The epoch-synchronized learner (bounded divergence, see BpeTrain
+      // scaladoc + BpeTrainSpec) is the SCALE-SAFE mode at
+      // production-leaning merge count: it recomputes pair counts once per
+      // batch of 64 — rounds must come out ≪ merges (vs learnBatched's
+      // measured meanBatch ≈ 1.1, which is why this mode exists)
+      new Section("bpe")({
+        var stats = BpeTrain.BatchStats(0, 0)
+        Seq(
+          timed("t7_bpe_64_seq", n = 2) {
+            BpeTrain.learn(graft.io.Tables.documents(spark, sfDir), 64); ()
+          },
+          timed("t7_bpe_64_batched", n = 2) {
+            stats = BpeTrain.learnBatchedStats(
+              graft.io.Tables.documents(spark, sfDir), 64)._2; ()
+          },
+          // round-count evidence for the batching claim: sequential = 64
+          // driver round-trips by construction; batched = measured rounds and
+          // merges-per-round (the 32k-merge projection scales from these)
+          Stat("t7_bpe_64_seq_rounds", 64.0),
+          Stat("t7_bpe_64_batched_rounds", stats.rounds.toDouble),
+          Stat("t7_bpe_64_batched_meanbatch", stats.meanBatch)) ++
+          epochBpe("t7_bpe_512_epoch", graft.io.Tables.documents(spark, sfDir))
+      })) ++ recallSections ++ Seq(
+      // untimed: filtered-search recall — s11's filtered LSH vs exact brute
+      // force over the label-filtered corpus (the honest ground truth when
+      // the predicate is active; the unfiltered s1 truth would count
+      // correctly-excluded neighbors as misses)
+      new Section("s11_recall")({
+        val e = graft.io.Tables.embeddings(spark, sfDir)
+        val truth = Similarity.bruteForceTopK(e.filter(SimQueries.QueryPred),
+            e.filter(SimQueries.FilterPred), SimQueries.K)
+          .select("q_id", "c_id").cache()
+        val r = recall(SparkEntry.queries("s11_lsh_filtered")(spark, sfDir), truth)
+        truth.unpersist(); spark.catalog.clearCache()
+        Seq(Stat("s11_recall", r))
+      }),
+      // untimed: clustered-fixture ANN gates. Recall on the near-uniform
+      // corpus above says more about the fixture than the index (no cell
+      // structure to exploit), so both index paths are ALSO gated on the
+      // PlantedClusters corpus — where we report recall vs the brute-force
+      // ground truth AND the candidate fraction actually examined
+      // (target: recall >= 0.9 at candidate fraction <= 0.2).
+      new Section("clustered_gates")({
+        val e = SimQueries.clustered(spark, sfDir).cache()
+        val q = e.filter(SimQueries.QueryPred)
+        val nPairs = (q.count() * (e.count() - 1)).toDouble
+        val truth = Similarity.bruteForceTopK(q, e, SimQueries.K)
+          .select("q_id", "c_id").cache()
+        def gates(tag: String, scored: DataFrame): Seq[Row] = {
+          val sc = scored.cache()
+          val cand = sc.count().toDouble
+          val r = recall(Similarity.rankTopK(sc, SimQueries.K), truth)
+          sc.unpersist()
+          Seq(Stat(s"${tag}_recall", r), Stat(s"${tag}_cand_frac", cand / nPairs))
+        }
+        val out =
+          gates("s3c", Similarity.lshMultiScored(q, e, SimQueries.Dim,
+            SimQueries.Planes, SimQueries.NTables, SimQueries.ProbeRClustered)) ++
+          gates("s4c", Similarity.ivfRefinedScored(q, e,
+            SimQueries.ClusterCentPred, SimQueries.NProbe, SimQueries.Dim))
+        truth.unpersist(); e.unpersist()
+        spark.catalog.clearCache()
+        out
+      }),
+      // untimed: the index-selection router, gated on BOTH fixtures — the
+      // sampled cluster-mass probe must route each corpus to the index that
+      // clears 0.9 recall there (LSH on the near-uniform embeddings, refined
+      // IVF on PlantedClusters). This is the engine-behavior answer to the
+      // standing "s4_recall 0.6 if a user points IVF at a structureless
+      // corpus" finding: the router, not the docs, now owns that judgment.
+      new Section("ann_auto")({
+        def gate(tag: String, corpus: DataFrame): Seq[Row] = {
+          val c = corpus.cache()
+          val q = c.filter(SimQueries.QueryPred)
+          val truth = Similarity.bruteForceTopK(q, c, SimQueries.K)
+            .select("q_id", "c_id").cache()
+          val (choice, mass, topk) = SimQueries.annAutoTopK(q, c)
+          val r = recall(topk, truth)
+          truth.unpersist(); c.unpersist()
+          Seq(Stat(s"ann_auto_recall_$tag", r),
+              Stat(s"ann_auto_is_ivf_$tag", if (choice == "ivf") 1.0 else 0.0),
+              Stat(s"ann_auto_mass_$tag", mass))
+        }
+        val out = gate("uniform", graft.io.Tables.embeddings(spark, sfDir)) ++
+          gate("clustered", SimQueries.clustered(spark, sfDir))
+        spark.catalog.clearCache()
+        out
+      }),
+      new Section("detect_7500")({
+        val sc = Fixtures.scenario(refParams)
+        val flows = sc.flows.toDF().cache()
+        flows.count() // materialize outside the timed section
+        val batch = Seq(
+          timed("detect_7500_batch", clear = false) { Detect.detect(flows).count(); () },
+          timed("detect_7500_stream", clear = false) {
+            DetectionStream.alerts(flows.as[graft.model.FlowStat]).count(); ()
+          })
+        DetectionStream.selectStateStore(spark, stateKeys(refParams))
+        // no section gate: sustainedLeg gates each run at the TIGHT
+        // sustained gate itself (which subsumes the suite-wide one)
+        batch ++ sustainedPolls("detect_poll", sc.flows)
+      }),
+      // detection scale probe (10× flows, 10× bots): a 75 000-benign-flow /
+      // 5 000-bot scenario through the same batch pipeline and the same
+      // sustained streaming run. Poll cost should scale ~linearly in flows —
+      // a superlinear jump here is a plan bug the 100 TB cluster would hit.
+      // Skip with SPARK_GRAFT_DETECT10X=0.
+      new Section("detect_75k",
+          enabled = !sys.env.get("SPARK_GRAFT_DETECT10X").contains("0"))({
         val params10 = Fixtures.ScenarioParams(nBenignFlows = 75000, nBots = 5000)
         val sc10 = Fixtures.scenario(params10)
         val flows10 = sc10.flows.toDF().cache()
@@ -811,37 +1084,32 @@ object Bench {
         DetectionStream.selectStateStore(spark, stateKeys(refParams)) // restore default
         flows10.unpersist()
         batch +: (polls10 ++ polls10r)
-      } catch { case e: Throwable =>
-        errors += "detect_75k" -> e.toString.takeWhile(_ != '\n').take(200)
-        Nil
-      }
-
-    // detection CENTURY tier (round 11): 750 k flows / 50 k bots as TEN
-    // replica-disjoint DOMAINS of the 75 k scenario — the reference's own
-    // sharding axis (each domain runs an independent controller loop,
-    // `DIPA_Controller.py:308-352`), which is exactly how a
-    // 1000-executor deployment carries 100× the flows: per-domain density
-    // stays at the measured 75 k tier (the sequential per-key path's own
-    // row) while domains parallelize across the state store, the
-    // z1/z3/p1 replica-disjoint recipe applied to keyed state. Disjoint
-    // seeds give each domain its own bot list and benign matrix, so no
-    // cross-domain structure exists to exploit. The per-poll wall-time
-    // exponent vs the 75 k tier is the deliverable (flat-to-mild = the
-    // keyed sharding works; superlinear = a shared bottleneck a real
-    // cluster would hit) — NOT the 2 s trigger budget, which at 100× the
-    // reference's collapse point is reported, not promised. Rows
-    // materialize ON EXECUTORS from tiny (domain, poll) markers — feeding
-    // 850 k-row polls through MemoryStream ships the whole poll inside
-    // every task binary (~157 MiB broadcast per stage, measured; it OOM'd
-    // the pinned 8 g heap), and a driver that renders every ingested row
-    // is exactly the non-distributed shape this engine exists to avoid.
-    // The timed poll therefore includes the parallel fixture expansion
-    // (~ms per domain — the streaming analog of collector decode); the
-    // exchange + keyed-state path is identical to the 75 k tier's. Skip
-    // with SPARK_GRAFT_DETECT100X=0.
-    val detect100x: Seq[(String, Double)] =
-      if (sys.env.get("SPARK_GRAFT_DETECT100X").contains("0")) Nil
-      else try {
+      }),
+      // detection CENTURY tier (round 11): 750 k flows / 50 k bots as TEN
+      // replica-disjoint DOMAINS of the 75 k scenario — the reference's own
+      // sharding axis (each domain runs an independent controller loop,
+      // `DIPA_Controller.py:308-352`), which is exactly how a
+      // 1000-executor deployment carries 100× the flows: per-domain density
+      // stays at the measured 75 k tier (the sequential per-key path's own
+      // row) while domains parallelize across the state store, the
+      // z1/z3/p1 replica-disjoint recipe applied to keyed state. Disjoint
+      // seeds give each domain its own bot list and benign matrix, so no
+      // cross-domain structure exists to exploit. The per-poll wall-time
+      // exponent vs the 75 k tier is the deliverable (flat-to-mild = the
+      // keyed sharding works; superlinear = a shared bottleneck a real
+      // cluster would hit) — NOT the 2 s trigger budget, which at 100× the
+      // reference's collapse point is reported, not promised. Rows
+      // materialize ON EXECUTORS from tiny (domain, poll) markers — feeding
+      // 850 k-row polls through MemoryStream ships the whole poll inside
+      // every task binary (~157 MiB broadcast per stage, measured; it OOM'd
+      // the pinned 8 g heap), and a driver that renders every ingested row
+      // is exactly the non-distributed shape this engine exists to avoid.
+      // The timed poll therefore includes the parallel fixture expansion
+      // (~ms per domain — the streaming analog of collector decode); the
+      // exchange + keyed-state path is identical to the 75 k tier's. Skip
+      // with SPARK_GRAFT_DETECT100X=0.
+      new Section("detect_750k",
+          enabled = !sys.env.get("SPARK_GRAFT_DETECT100X").contains("0"))({
         val params750 = (0 until 10).map { d =>
           Fixtures.ScenarioParams(nBenignFlows = 75000,
             nBots = 5000, domain = s"vm$d", seed = 42L + d)
@@ -871,481 +1139,64 @@ object Bench {
         })
         DetectionStream.selectStateStore(spark, stateKeys(refParams))
         rows
-      } catch { case e: Throwable =>
-        errors += "detect_750k" -> e.toString.takeWhile(_ != '\n').take(200)
-        Nil
-      }
-
-    // sf1 scale-cliff probe: the dedup/sim suite at 10x the bench SF
-    // (generated on first run into target/sf1 — replica-disjoint vocab so
-    // output grows linearly; see ScaleProbe). A query whose sf1 time blows
-    // past ~15x its sf0.1 time has a scale bug the 100x cluster would hit.
-    // Min-of-2: BENCH_r03 and _r04 both proved single-trial probe rows lie
-    // under ambient load (4x inflation vs idle) — the ratio gate is only as
-    // honest as its worst trial, and one extra trial bounds that.
-    val sf1Times: Seq[(String, Double)] =
-      if (sys.env.get("SPARK_GRAFT_SF1").contains("0")) Nil
-      else try {
-        val sf1Dir = new java.io.File("target/sf1").getAbsolutePath
-        graft.fixtures.ScaleProbe.ensure(spark, sfDir, sf1Dir)
-        awaitIdle("sf1-tier")
+      }),
+      // sf1 scale-cliff probe: the dedup/sim suite at 10x the bench SF
+      // (generated on first run into target/sf1 — replica-disjoint vocab so
+      // output grows linearly; see ScaleProbe). A query whose sf1 time blows
+      // past ~15x its sf0.1 time has a scale bug the 100x cluster would hit.
+      // Min-of-2: BENCH_r03 and _r04 both proved single-trial probe rows lie
+      // under ambient load (4x inflation vs idle) — the ratio gate is only as
+      // honest as its worst trial, and one extra trial bounds that.
+      new Section("sf1_probe", enabled = !sys.env.get("SPARK_GRAFT_SF1").contains("0"),
+          tierData = Some(() => ScaleProbe.ensure(spark, sfDir, sf1Dir)))(
         // the calibration pair re-runs under THIS tier's conditions: sf1
         // rows are where drift adjudication has actually been spent (d3
         // r10, t9 r8), and the fixed-work reference must share their
         // environment to divide against
-        calibRows("sf1_") ++
-        // d7 runs FIRST: its iterative sweeps are the most load-sensitive
-        // row in the probe (r5→r6 judge-idle spread 16.3→31.9 s), so it
-        // must be measured cold, not under the tail load of the rest
-        Seq("d7_dup_clusters", "d1_exact_dedup", "d2_jaccard_pairs",
-            "d3_minhash_lsh", "d4_simhash_pairs", "d5_embed_dedup",
-            "d6_minhash_sigs", "d8_chunk_dedup", "s1_ann_topk",
-            "s2_cosine_pairs_blocked", "s3_lsh_topk", "s4_ivf_topk",
-            "s5_lsh_pairs", "s7_q8_topk", "k1_salted_topk", "k3_distinct_users",
-            // temporal/session/sampling: output is linear in the replica
-            // count (z2's global windows are deliberately NOT probed —
-            // 10x density in the same 30-day span multiplies its PAIRS
-            // 100x, an output property, not a plan property)
-            "z1_asof_join", "z3_range_join_keyed", "p1_sessionize",
-            "v1_hash_split",
-            // round-7 curation ops: gram-cardinality (t8/t9) and the
-            // two-phase rank (g4) are linear by design — the probe holds
-            // them to it
-            "t8_repetition", "t9_decontam", "g4_shuffle_order",
-            // retrieval (round 13): h1 = tokenize + postings build + the
-            // query-term-pruned scorer (linear in corpus tokens); h3 adds
-            // the persisted term-bucketed index build + bucket-pruned read
-            "h1_bm25_topk", "h3_bm25_indexed").map { name =>
-          timed("sf1_" + name, n = 2) {
-            SparkEntry.queries(name)(spark, sf1Dir).count(); ()
-          }
-        } ++ Seq(
+        calibRows("sf1_") ++ Sf1Queries.map(queryRow("sf1_", sf1Dir, 2)) ++ Seq(
           // d7 telemetry: wall = sweeps × per-sweep barrier cost, so the
           // sweep count must ride next to the time for regressions to be
           // attributable (round-7 ask)
-          "sf1_d7_sweeps" -> graft.dedup.Dedup.lastSweeps.toDouble,
-          "sf1_loadavg" -> loadavg1m(),
-          "sf1_ambient" -> ambient())
-      } catch { case e: Throwable =>
-        errors += "sf1_probe" -> e.toString.takeWhile(_ != '\n').take(200)
-        Nil
-      }
+          Stat("sf1_d7_sweeps", Dedup.lastSweeps.toDouble),
+          Stat("sf1_loadavg", loadavg1m()),
+          Stat("sf1_ambient", ambient()))),
+      // sf10 CENTURY probe: the dedup/ANN flagship paths at 100x the bench
+      // SF — a second decade of scale evidence, so the 100 TB claim rests on
+      // two measured decades instead of one extrapolated one. OFF by default
+      // (generation + 5 min-of-1 rows add ~10 min); enable with
+      // SPARK_GRAFT_SF10=1. Min-of-1 is deliberate: at this size a single
+      // trial is the honest trade, and the loadavg row flags contention.
+      new Section("sf10_probe", enabled = sys.env.get("SPARK_GRAFT_SF10").contains("1"),
+          tierData = Some(() => ScaleProbe.ensure(spark, sfDir, sf10Dir, replicas = 100)))({
+        val sf10Row = queryRow("sf10_", sf10Dir, 1) _
+        val d7 = Seq(sf10Row(Sf10Queries.head),
+          Stat("sf10_d7_sweeps", Dedup.lastSweeps.toDouble))
+        val rows = Sf10Queries.tail.map(sf10Row)
+        val u1sweeps = Stat("sf10_u1_sweeps", Dedup.lastSweeps.toDouble)
+        d7 ++ rows ++ sf10IndexRows() ++ sf10RetrievalRows() ++ Seq(u1sweeps) ++
+          // epoch BPE past fixture pair-exhaustion: the sf0.1 corpus runs
+          // dry at ~90 merges, so the "32k merges ≈ 32k/b rounds" claim
+          // rested on one measured decade. The sf10 replica suffixes (`~r`)
+          // are INVISIBLE to BPE's letter-run pre-tokenizer (wordFreq keeps
+          // `[A-Za-z]+` only — training on sf10 directly reproduced the
+          // sf0.1 stats bit-for-bit), so project them into the letter
+          // domain: translate `~`/digits → letters, making each replica a
+          // genuinely disjoint WORD vocabulary with ~100× the pair
+          // inventory. meanBatch AT DEPTH is the number that either backs
+          // or breaks the extrapolation.
+          epochBpe("sf10_t7_bpe_512_epoch", graft.io.Tables.documents(spark, sf10Dir)
+            .select(translate(col("text"), "~0123456789", "qabcdefghij").as("text"))) ++
+          Seq(Stat("sf10_loadavg", loadavg1m()), Stat("sf10_ambient", ambient()))
+      }))
 
-    // sf10 CENTURY probe: the dedup/ANN flagship paths at 100x the bench
-    // SF — a second decade of scale evidence, so the 100 TB claim rests on
-    // two measured decades instead of one extrapolated one. OFF by default
-    // (generation + 5 min-of-1 rows add ~10 min); enable with
-    // SPARK_GRAFT_SF10=1. Min-of-1 is deliberate: at this size a single
-    // trial is the honest trade, and the loadavg row flags contention.
-    val sf10Times: Seq[(String, Double)] =
-      if (!sys.env.get("SPARK_GRAFT_SF10").contains("1")) Nil
-      else try {
-        val sf10Dir = new java.io.File("target/sf10").getAbsolutePath
-        graft.fixtures.ScaleProbe.ensure(spark, sfDir, sf10Dir,
-          replicas = 100)
-        awaitIdle("sf10-tier")
-        // d7 first and its sweep count captured IMMEDIATELY — u1 below
-        // also runs dupClusters, so a read-at-the-end would report u1's
-        // closure sweeps as d7's (it did, once)
-        val d7row = timed("sf10_d7_dup_clusters", n = 1) {
-          SparkEntry.queries("d7_dup_clusters")(spark, sf10Dir).count(); ()
-        }
-        val d7sweeps = "sf10_d7_sweeps" -> graft.dedup.Dedup.lastSweeps.toDouble
-        // the 4 remaining prescribed flagships + u1 (the full curation
-        // COMPOSITION — quality → exact → d4 pairs → d7 closure → sample →
-        // pack — is the query a 100 TB deployment actually runs end-to-end)
-        // + the text-hygiene family (t8/t9/d8): the highest-traffic 100 TB
-        // curation ops, previously measured only to sf1 — their second
-        // decade completes the exponent table in PLANS.md
-        // round-10: + the temporal/session family (z1/z3/p1) — the join
-        // shapes a 100 TB telemetry workload leans on; their bin/window
-        // machinery has its own density dial, and replicas are
-        // KEY-disjoint (user_id offset per replica) so per-key density
-        // is constant and output is exactly 100× — linear wall time is
-        // the pass condition (z2's KEYLESS windows stay unprobed: same
-        // span × 100 density is a quadratic OUTPUT property)
-        val rows = Seq("d1_exact_dedup", "d3_minhash_lsh",
-            "s3_lsh_topk", "u1_curation",
-            "t8_repetition", "t9_decontam", "d8_chunk_dedup",
-            "z1_asof_join", "z3_range_join_keyed", "p1_sessionize").map { name =>
-          timed("sf10_" + name, n = 1) {
-            SparkEntry.queries(name)(spark, sf10Dir).count(); ()
-          }
-        }
-        val u1sweeps = "sf10_u1_sweeps" -> graft.dedup.Dedup.lastSweeps.toDouble
-        // round-11: the persisted-index lifecycle SPLIT the way a 100 TB
-        // deployment actually pays it, replacing the combined
-        // sf10_s8_ivf_indexed row whose ~358 s was "build-dominated" only
-        // in prose — BUILD once (Lloyd refine + assignment sweep +
-        // cell-partitioned write), QUERY repeatedly (centroid broadcast +
-        // cell-pruned read + rank; the per-request cost), APPEND daily
-        // (the delta assigned against STORED centroids — the incremental
-        // path, previously measured only at sf0.1). The append's initial
-        // half-corpus build is setup, not the measured row.
-        val ivfRows = {
-          import graft.queries.SimQueries
-          import graft.sim.Similarity
-          val e = SimQueries.clustered(spark, sf10Dir)
-          val ivfBase = new java.io.File("target/ivfindex_sf10_split").getAbsolutePath
-          val build = timed("sf10_s8_build", n = 1) {
-            Similarity.buildIvfIndex(e, SimQueries.ClusterCentPred,
-              SimQueries.Dim, ivfBase)
-          }
-          val query = timed("sf10_s8_query", n = 1) {
-            Similarity.ivfTopKIndexed(spark, ivfBase,
-              e.filter(SimQueries.QueryPred), SimQueries.K,
-              SimQueries.NProbe).count(); ()
-          }
-          // round-11: SAMPLED quantizer training at the century tier —
-          // seeds + Lloyd sweep over a deterministic 10% hash sample
-          // (which also right-sizes the seed count: seeds are drawn by
-          // predicate FROM the sample, so ~3k cells instead of ~30k),
-          // assignment still over every vector. The row pair vs
-          // sf10_s8_build/query is the measured cost of full-corpus
-          // training; the recall row (vs exact brute force) is what the
-          // sample gives up.
-          val sampledBase = new java.io.File("target/ivfindex_sf10_sampled").getAbsolutePath
-          val buildS = timed("sf10_s8_build_sampled", n = 1) {
-            Similarity.buildIvfIndex(e, SimQueries.ClusterCentPred,
-              SimQueries.Dim, sampledBase, trainFraction = 0.1)
-          }
-          val queryS = timed("sf10_s8s_query", n = 1) {
-            Similarity.ivfTopKIndexed(spark, sampledBase,
-              e.filter(SimQueries.QueryPred), SimQueries.K,
-              SimQueries.NProbe).count(); ()
-          }
-          val truthS = Similarity.bruteForceTopK(
-              e.filter(SimQueries.QueryPred), e, SimQueries.K)
-            .select("q_id", "c_id").cache()
-          val nTruthS = truthS.count().toDouble
-          def recallVsTruth(p: String): Double =
-            Similarity.ivfTopKIndexed(spark, p,
-                e.filter(SimQueries.QueryPred), SimQueries.K, SimQueries.NProbe)
-              .select("q_id", "c_id")
-              .join(truthS, Seq("q_id", "c_id"), "left_semi").count() / nTruthS
-          val recallS = "sf10_s8s_recall" -> recallVsTruth(sampledBase)
-          // round-11: SQ8 STORAGE at the century tier, built at the SAME
-          // sampled-train geometry as sampledBase so every delta vs the
-          // s8s rows is attributable to the quantized payload alone —
-          // bytes ratio (the ~4× resident-set claim, measured), query
-          // cost (integer-only candidate scoring), recall give-up.
-          val q8Base = new java.io.File("target/ivfindex_sf10_q8").getAbsolutePath
-          val buildQ = timed("sf10_s14_build", n = 1) {
-            Similarity.buildIvfIndex(e, SimQueries.ClusterCentPred,
-              SimQueries.Dim, q8Base, trainFraction = 0.1, storage = "int8")
-          }
-          val queryQ = timed("sf10_s14_query", n = 1) {
-            Similarity.ivfTopKIndexed(spark, q8Base,
-              e.filter(SimQueries.QueryPred), SimQueries.K,
-              SimQueries.NProbe).count(); ()
-          }
-          val recallQ = "sf10_s14_recall" -> recallVsTruth(q8Base)
-          def assignedBytes(p: String): Long = {
-            def walk(f: java.io.File): Long =
-              if (f.isDirectory) f.listFiles().map(walk).sum
-              else if (f.getName.endsWith(".parquet")) f.length() else 0L
-            walk(new java.io.File(s"$p/assigned"))
-          }
-          val bytesQ = "sf10_s14_bytes_ratio" ->
-            assignedBytes(q8Base).toDouble / assignedBytes(sampledBase)
-          // round-11: PQ STORAGE at the century tier, same sampled-train
-          // geometry again — codes + reconstruction norm instead of the
-          // vector (the smallest stored form; ADC map-lookup scoring).
-          // The bytes row quantifies the ~16× payload claim against the
-          // float layout; the recall row is what 8×32 codebooks give up
-          // vs exact brute force at 1.1 M vectors.
-          val pqBase = new java.io.File("target/ivfindex_sf10_pq").getAbsolutePath
-          val buildP = timed("sf10_s15_build", n = 1) {
-            Similarity.buildIvfIndex(e, SimQueries.ClusterCentPred,
-              SimQueries.Dim, pqBase, trainFraction = 0.1, storage = "pq",
-              pqM = SimQueries.PqM, pqK = SimQueries.PqK)
-          }
-          val queryP = timed("sf10_s15_query", n = 1) {
-            Similarity.ivfTopKIndexed(spark, pqBase,
-              e.filter(SimQueries.QueryPred), SimQueries.K,
-              SimQueries.NProbe).count(); ()
-          }
-          val recallP = "sf10_s15_recall" -> recallVsTruth(pqBase)
-          val bytesP = "sf10_s15_bytes_ratio" ->
-            assignedBytes(pqBase).toDouble / assignedBytes(sampledBase)
-          // round-11: the refine tier over the PQ index — the quantized
-          // scan generates candidates, the exact pass re-scores only
-          // those against the float corpus. At this fixture's density
-          // (34k-member clusters) the raw ADC recall above is the honest
-          // cost of 0.18× bytes (codes cannot resolve ~1e-5 cosine gaps);
-          // the rerank depth is sized to the probed-candidate count
-          // (~4 cells × ~370 rows at the sampled-geometry cell sizes).
-          val rerankR = 2048
-          val queryR = timed("sf10_s16_rerank_query", n = 1) {
-            Similarity.ivfTopKReranked(spark, pqBase,
-              e.filter(SimQueries.QueryPred), e, SimQueries.K,
-              SimQueries.NProbe, rerankR).count(); ()
-          }
-          val recallR = "sf10_s16_recall" ->
-            (Similarity.ivfTopKReranked(spark, pqBase,
-                e.filter(SimQueries.QueryPred), e, SimQueries.K,
-                SimQueries.NProbe, rerankR)
-              .select("q_id", "c_id")
-              .join(truthS, Seq("q_id", "c_id"), "left_semi").count() / nTruthS)
-          // the DEPTH dimension of the ladder: SQ8's residual resolution
-          // (0.725 raw) means a shallow refine suffices — depth 32 vs the
-          // PQ index's 2048 (whose codes are candidate-blind here). Same
-          // refine code over the int8 index via the stored-form dispatch.
-          val rerankR8 = 32
-          val queryR8 = timed("sf10_s14r_rerank_query", n = 1) {
-            Similarity.ivfTopKReranked(spark, q8Base,
-              e.filter(SimQueries.QueryPred), e, SimQueries.K,
-              SimQueries.NProbe, rerankR8).count(); ()
-          }
-          val recallR8 = "sf10_s14r_recall" ->
-            (Similarity.ivfTopKReranked(spark, q8Base,
-                e.filter(SimQueries.QueryPred), e, SimQueries.K,
-                SimQueries.NProbe, rerankR8)
-              .select("q_id", "c_id")
-              .join(truthS, Seq("q_id", "c_id"), "left_semi").count() / nTruthS)
-          truthS.unpersist()
-          val apBase = new java.io.File("target/ivfappend_sf10_split").getAbsolutePath
-          Similarity.buildIvfIndex(e.filter(SimQueries.InitPred),
-            SimQueries.ClusterCentPred, SimQueries.Dim, apBase)
-          val append = timed("sf10_s10_append", n = 1) {
-            Similarity.appendToIvfIndex(
-              e.filter(s"NOT (${SimQueries.InitPred})"), apBase)
-          }
-          // round-11: compaction at the century tier — the append above
-          // left a second file in ~every touched cell, so this measures
-          // the full maintenance rewrite a daily-append deployment
-          // schedules (read + rewrite of every over-threshold cell)
-          val compact = timed("sf10_s10_compact", n = 1) {
-            Similarity.compactIvfIndex(spark, apBase); ()
-          }
-          // round-12 (verdict #1): the DELETE lifecycle at the century
-          // tier. The delete set is one planted cluster's residue — the
-          // locality a real drop has (a dropped near-dup cluster shares
-          // cells) — so the three rows separate the costs a deployment
-          // actually pays: the tombstone WRITE is O(tombstones) (one
-          // small parquet, zero index files touched), the masked QUERY
-          // pays one broadcast anti-join on the pruned read, and RECLAIM
-          // rewrites only the ~1/32 of cells holding tombstoned rows
-          // (sf10_s17_reclaim_cells counts them) — never the corpus.
-          val delIds = e.filter(
-            s"vec_id % ${graft.sim.PlantedClusters.KC} = 7").select("vec_id")
-          val del = timed("sf10_s17_delete", n = 1) {
-            Similarity.deleteFromIvfIndex(spark, apBase, delIds); ()
-          }
-          val delQ = timed("sf10_s17_query", n = 1) {
-            Similarity.ivfTopKIndexed(spark, apBase,
-              e.filter(SimQueries.QueryPred), SimQueries.K,
-              SimQueries.NProbe).count(); ()
-          }
-          var reclaimCells = 0
-          val reclaim = timed("sf10_s17_reclaim", n = 1) {
-            reclaimCells = Similarity.compactIvfIndex(spark, apBase).size; ()
-          }
-          val reclaimRow = "sf10_s17_reclaim_cells" -> reclaimCells.toDouble
-          // round-12 (verdict #6): FILTERED search at the century tier —
-          // the carry-predicate path composed with the O(probed) listing
-          // and parquet predicate pushdown at ~3k cells (sampled-train
-          // geometry: the affordable build). Recall is vs exact brute
-          // force over the label-FILTERED corpus (the honest truth when
-          // the predicate is active), with the selectivity stamped.
-          val fBase = new java.io.File("target/ivfindex_sf10_filtered").getAbsolutePath
-          val lab10 = graft.io.Tables.embeddings(spark, sf10Dir)
-            .select(org.apache.spark.sql.functions.col("vec_id"),
-              org.apache.spark.sql.functions.col("label"))
-          val ef = e.join(lab10, "vec_id")
-          val filterCol = org.apache.spark.sql.functions.expr(SimQueries.FilterPred)
-          val buildF = timed("sf10_s9_build", n = 1) {
-            Similarity.buildIvfIndex(ef, SimQueries.ClusterCentPred,
-              SimQueries.Dim, fBase, carry = Seq("label"), trainFraction = 0.1)
-          }
-          val queryF = timed("sf10_s9_query", n = 1) {
-            Similarity.ivfTopKIndexed(spark, fBase,
-              ef.filter(SimQueries.QueryPred), SimQueries.K, SimQueries.NProbe,
-              candidateFilter = Some(filterCol)).count(); ()
-          }
-          val selRow = "sf10_s9_selectivity" ->
-            ef.filter(SimQueries.FilterPred).count().toDouble / ef.count()
-          val truthF = Similarity.bruteForceTopK(
-              ef.filter(SimQueries.QueryPred), ef.filter(SimQueries.FilterPred),
-              SimQueries.K)
-            .select("q_id", "c_id").cache()
-          val nTruthF = truthF.count().toDouble
-          val recallF = "sf10_s9_recall" ->
-            (Similarity.ivfTopKIndexed(spark, fBase,
-                ef.filter(SimQueries.QueryPred), SimQueries.K, SimQueries.NProbe,
-                candidateFilter = Some(filterCol))
-              .select("q_id", "c_id")
-              .join(truthF, Seq("q_id", "c_id"), "left_semi").count() / nTruthF)
-          // the selective-filter remedy, measured: a highly selective
-          // predicate (0.004 here — replica-disjoint labels) thins
-          // qualifying vectors per probed cell, so recall is bought back
-          // by WIDENING the probe set — the nprobe×4 row quantifies the
-          // recall-vs-cells-read trade a deployment tunes per filter
-          val queryFWide = timed("sf10_s9_query_p16", n = 1) {
-            Similarity.ivfTopKIndexed(spark, fBase,
-              ef.filter(SimQueries.QueryPred), SimQueries.K,
-              SimQueries.NProbe * 4, candidateFilter = Some(filterCol))
-              .count(); ()
-          }
-          val recallFWide = "sf10_s9_recall_p16" ->
-            (Similarity.ivfTopKIndexed(spark, fBase,
-                ef.filter(SimQueries.QueryPred), SimQueries.K,
-                SimQueries.NProbe * 4, candidateFilter = Some(filterCol))
-              .select("q_id", "c_id")
-              .join(truthF, Seq("q_id", "c_id"), "left_semi").count() / nTruthF)
-          // round-13 (verdict #3): the widening AUTOMATED — same base
-          // nprobe, probeWidenTarget on; the engine estimates qualifying
-          // density over the base probe set and widens itself. The row
-          // pays the estimate (one filter-pushed count over the base
-          // cells) + the widened read; its recall is GATED at 0.9
-          // (RecallFloors) so the automation can never silently regress
-          // below what the manual remedy bought.
-          val queryAuto = timed("sf10_s9_query_auto", n = 1) {
-            Similarity.ivfTopKIndexed(spark, fBase,
-              ef.filter(SimQueries.QueryPred), SimQueries.K, SimQueries.NProbe,
-              candidateFilter = Some(filterCol),
-              probeWidenTarget = Some(4)).count(); ()
-          }
-          val recallAuto = "sf10_s9_auto_recall" ->
-            (Similarity.ivfTopKIndexed(spark, fBase,
-                ef.filter(SimQueries.QueryPred), SimQueries.K, SimQueries.NProbe,
-                candidateFilter = Some(filterCol), probeWidenTarget = Some(4))
-              .select("q_id", "c_id")
-              .join(truthF, Seq("q_id", "c_id"), "left_semi").count() / nTruthF)
-          truthF.unpersist()
-          // round-12 (verdict #5): the STREAMING index append at the
-          // century tier — the shape a live embedding pipeline runs. The
-          // odd half arrives as 8 file-source micro-batches against the
-          // even-half index (maxFilesPerTrigger=1); per-trigger latency
-          // from the query's own progress events. Batch-vs-stream row
-          // parity is IvfIndexSpec's pin; these rows are the sustained
-          // per-batch cost the daily path budgets against.
-          val sBase = new java.io.File("target/ivfappend_sf10_stream").getAbsolutePath
-          val sFeed = new java.io.File("target/ivfstream_feed_sf10").getAbsolutePath
-          val sCkpt = new java.io.File("target/ivfstream_ckpt_sf10").getAbsolutePath
-          Seq(sBase, sFeed, sCkpt).foreach { d =>
-            val p = new org.apache.hadoop.fs.Path(d)
-            p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-          }
-          Similarity.buildIvfIndex(e.filter(SimQueries.InitPred),
-            SimQueries.ClusterCentPred, SimQueries.Dim, sBase,
-            trainFraction = 0.1)
-          e.filter(s"NOT (${SimQueries.InitPred})").repartition(8)
-            .write.parquet(sFeed)
-          // round-13 (verdict #4): the per-batch floor is measured at TWO
-          // trigger sizes with the centroid cache in place — the floor's
-          // batch-size-independent part (what the cache didn't remove,
-          // i.e. the O(cells) partitioned write) falls out of the pair:
-          // floor ≈ (8 × mean@1 − 2 × mean@4) / 6.
-          def streamLeg(suffix: String, filesPerTrigger: Int,
-                        base: String, ckpt: String): Seq[(String, Double)] = {
-            val feedSchema = spark.read.parquet(sFeed).schema
-            val sq = Similarity.appendToIvfIndexStream(
-              spark.readStream.schema(feedSchema)
-                .option("maxFilesPerTrigger", filesPerTrigger.toString)
-                .parquet(sFeed),
-              base, ckpt)
-            try sq.processAllAvailable() finally sq.stop()
-            val perBatch = sq.recentProgress.toSeq
-              .filter(_.numInputRows > 0)
-              .map(_.durationMs.get("triggerExecution").toDouble / 1000.0)
-            if (perBatch.isEmpty)
-              throw new IllegalStateException("no data-carrying micro-batches ran")
-            Seq(s"sf10_s10_stream${suffix}_mean" -> perBatch.sum / perBatch.size,
-                s"sf10_s10_stream${suffix}_max" -> perBatch.max,
-                s"sf10_s10_stream${suffix}_batches" -> perBatch.size.toDouble)
-          }
-          val streamRows: Seq[(String, Double)] = try {
-            streamLeg("", 1, sBase, sCkpt)
-          } catch { case ex: Throwable =>
-            errors += "sf10_s10_stream" -> ex.toString.takeWhile(_ != '\n').take(200)
-            Nil
-          }
-          val streamRows4: Seq[(String, Double)] = try {
-            val sBase4 = new java.io.File("target/ivfappend_sf10_stream4").getAbsolutePath
-            val sCkpt4 = new java.io.File("target/ivfstream_ckpt4_sf10").getAbsolutePath
-            Seq(sBase4, sCkpt4).foreach { d =>
-              val pth = new org.apache.hadoop.fs.Path(d)
-              pth.getFileSystem(spark.sessionState.newHadoopConf()).delete(pth, true)
-            }
-            Similarity.buildIvfIndex(e.filter(SimQueries.InitPred),
-              SimQueries.ClusterCentPred, SimQueries.Dim, sBase4,
-              trainFraction = 0.1)
-            streamLeg("4", 4, sBase4, sCkpt4)
-          } catch { case ex: Throwable =>
-            errors += "sf10_s10_stream4" -> ex.toString.takeWhile(_ != '\n').take(200)
-            Nil
-          }
-          Seq(build, query, buildS, queryS, recallS,
-            buildQ, queryQ, recallQ, bytesQ, queryR8, recallR8,
-            buildP, queryP, recallP, bytesP, queryR, recallR,
-            append, compact, del, delQ, reclaim, reclaimRow,
-            buildF, queryF, selRow, recallF, queryFWide, recallFWide,
-            queryAuto, recallAuto) ++ streamRows ++ streamRows4
-        }
-        // epoch BPE past fixture pair-exhaustion: the sf0.1 corpus runs
-        // dry at ~90 merges, so the "32k merges ≈ 32k/b rounds" claim
-        // rested on one measured decade. The sf10 replica suffixes (`~r`)
-        // are INVISIBLE to BPE's letter-run pre-tokenizer (wordFreq keeps
-        // `[A-Za-z]+` only — training on sf10 directly reproduced the
-        // sf0.1 stats bit-for-bit), so project them into the letter
-        // domain: translate `~`/digits → letters, making each replica a
-        // genuinely disjoint WORD vocabulary with ~100× the pair
-        // inventory. meanBatch AT DEPTH is the number that either backs
-        // or breaks the extrapolation.
-        // round-13: lexical retrieval at the century tier. The replica
-        // suffixes (`~r`) are invisible to the letter-run tokenizer, so
-        // sf10 is the DENSE-postings stress: same 31-term vocabulary,
-        // 100× the posting rows per term — a query term's bucket read is
-        // 100× the sf0.1 one, and linear wall time is the pass condition.
-        // Split like the IVF rows: BUILD once (the one-shuffle inverted
-        // index), QUERY repeatedly (bucket-pruned read + scorer).
-        val retrievalRows: Seq[(String, Double)] = {
-          import graft.text.Lexical
-          import graft.queries.RetrievalQueries
-          val pBase = new java.io.File("target/postidx_sf10").getAbsolutePath
-          val d10 = graft.io.Tables.documents(spark, sf10Dir)
-          val hBuild = timed("sf10_h3_build", n = 1) {
-            Lexical.buildPostingsIndex(d10, pBase)
-          }
-          val hQuery = timed("sf10_h3_query", n = 1) {
-            Lexical.bm25TopKIndexed(spark, pBase,
-              RetrievalQueries.Queries, RetrievalQueries.K).count(); ()
-          }
-          Seq(hBuild, hQuery)
-        }
-        var epoch512 = graft.text.BpeTrain.BatchStats(0, 0)
-        val bpe512 = timed("sf10_t7_bpe_512_epoch", n = 1) {
-          import org.apache.spark.sql.functions.{col => c, translate}
-          epoch512 = graft.text.BpeTrain.learnEpochStats(
-            graft.io.Tables.documents(spark, sf10Dir)
-              .select(translate(c("text"), "~0123456789", "qabcdefghij")
-                .as("text")),
-            512, batch = 64)._2; ()
-        }
-        d7row +: d7sweeps +: (rows ++ ivfRows ++ retrievalRows ++ Seq(u1sweeps, bpe512,
-          "sf10_t7_bpe_512_epoch_rounds" -> epoch512.rounds.toDouble,
-          "sf10_t7_bpe_512_epoch_merges" -> epoch512.merges.toDouble,
-          "sf10_t7_bpe_512_epoch_meanbatch" -> epoch512.meanBatch,
-          "sf10_loadavg" -> loadavg1m(),
-          "sf10_ambient" -> ambient()))
-      } catch { case e: Throwable =>
-        errors += "sf10_probe" -> e.toString.takeWhile(_ != '\n').take(200)
-        Nil
-      }
-
+    val results = runSections(sections, awaitIdle(_), errors)
     val loadAfter = loadavg1m()
     val wallSec = (System.nanoTime() - wallStart) / 1e9
 
-    val results = calib ++ queryTimes.toSeq ++ bpeTimes ++ bpeEpochTimes ++
-      recall ++ filteredRecall ++
-      clusteredGates ++ annAuto ++ detectTimes ++ sustained ++ detect10x ++
-      detect100x ++ sf1Times ++ sf10Times
-    val qs = results.map { case (k, v) => jq(k) + ":" + v }.mkString("{", ",", "}")
+    val qs = results.map(r => jq(r.key) + ":" + r.value).mkString("{", ",", "}")
     val errJson =
       if (errors.isEmpty) ""
       else errors.map { case (k, v) => jq(k) + ":" + jq(v) }.mkString(",\"errors\":{", ",", "}")
-    val total = results.map(_._2).sum
     val contendedJson = contended.map(jq).mkString("[", ",", "]")
     val recallViolJson = recallViolations(results).map(jq).mkString("[", ",", "]")
     val providersJson = providerStamps
@@ -1361,7 +1212,7 @@ object Bench {
       s""""state_store_providers":$providersJson,"contended":$contendedJson,""" +
       s""""recall_violations":$recallViolJson,""" +
       s""""ambient_after":${ambient()},"wall_sec":$wallSec"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$errJson$sentinel,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${total(results)},"unit":"sec","queries":$qs$errJson$sentinel,"sf":"$sfDir"}"""
     println(line)
     // standalone artifact: the driver's BENCH_r{N}.json truncates stdout to
     // a 2000-char tail, losing the head of the per-query series — persist
@@ -1378,7 +1229,7 @@ object Bench {
     // the compact JSON of [[compactLine]]. This is output FORMATTING only:
     // no timing methodology changed, and every key keeps its
     // full-precision value in the full line / bench_out.json.
-    println(compactLine(total, results, errors.size, sfDir))
+    println(compactLine(results, errors.size, sfDir))
     spark.stop()
   }
 }

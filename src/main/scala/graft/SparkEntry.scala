@@ -43,6 +43,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     groups.iterator.flatMap(_._1).toMap
 
+  /** The named queries in the order given, or every query sorted by name
+    * when `names` is empty. An unknown name fails naming it and the known
+    * ones, before any work starts.
+    */
+  def resolve(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}; " +
+      s"known: ${all.keys.toSeq.sorted.mkString(", ")}")
+    (if (names.isEmpty) all.keys.toSeq.sorted else names).map(n => n -> all(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

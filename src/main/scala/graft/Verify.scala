@@ -30,8 +30,17 @@ object Verify {
       "this JDK and refresh JpegFixtures.ChanSums + AuthorJdk.")
   }
 
+  /** Named queries restrict the dump (and both json files) to those, for
+    * iterating on a few oracle rows:
+    * {{{
+    * tools/run.sh graft.Verify <sfDir> <outDir> [names...]
+    * tools/parity.py <sfDir> <outDir> [names...]
+    * }}}
+    */
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [names...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val selected = SparkEntry.resolve(args.toSeq.drop(2))
     jdkPreflight(System.getProperty("java.runtime.version"))
       .foreach(System.err.println)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -48,7 +57,7 @@ object Verify {
     // reader bug and the driver saw only silently-absent output dirs.
     // Every failure lands in failures.json next to the results.
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -69,7 +78,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.exists(_._1 == k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failJson = failures
@@ -77,7 +86,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/failures.json"), failJson)
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} of " +
-        s"${SparkEntry.queries.size} queries FAILED — see failures.json")
+        s"${selected.size} queries FAILED — see failures.json")
     spark.stop()
   }
 }

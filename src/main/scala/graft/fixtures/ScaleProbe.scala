@@ -35,25 +35,6 @@ object ScaleProbe {
   val Replicas = 10
   val IdStride = 10000000L
 
-  /** Standalone generation (Bench generates lazily; this lets QueryProbe
-    * sessions reuse the same dir): `tools/run.sh graft.fixtures.ScaleProbe
-    * [srcDir] [outDir] [replicas]`. Events are generated at every tier
-    * since round 10 (the century probe set gained z1/z3/p1) — at 100×
-    * they are 10 M rows / ~200 MB, the cheapest table in the dir.
-    */
-  def main(args: Array[String]): Unit = {
-    val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out = if (args.length > 1) args(1)
-              else new java.io.File("target/sf1").getAbsolutePath
-    val n = if (args.length > 2) args(2).toInt else Replicas
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "scale-probe-gen")
-    spark.sparkContext.setLogLevel("WARN")
-    ensure(spark, src, out, n)
-    println(s"probe data at $out (src $src, x$n)")
-    spark.stop()
-  }
-
   /** Generate into `outDir` unless already generated from this `srcDir`
     * at this replica count. (The events check upgrades probe dirs
     * generated before events were part of the probe; the legacy marker

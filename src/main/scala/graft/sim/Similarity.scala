@@ -1078,11 +1078,24 @@ object Similarity {
     spark.conf.getOption("spark.graft.index.tombstoneBroadcastMaxBytes")
       .map(_.toLong).getOrElse(TombstoneBroadcastMaxBytes)
 
+  /** Drop the tombstone epochs a full compaction cycle has outlived: keep
+    * every epoch at or above the one that was newest when the PREVIOUS
+    * compaction ended (`_meta/tomb_floor`), then record this compaction's
+    * newest. A reader that resolved its plan after the previous compaction
+    * keeps its epoch through this one however many deletes ran in between
+    * — the window the generation prune gives its files. Deletes never prune.
+    */
   private def pruneTombEpochs(spark: org.apache.spark.sql.SparkSession,
-                              path: String, keep: Int): Unit = {
-    val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(path))
-    committedEpochs(fs, s"$path/tombstones").dropRight(keep).foreach(id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones/epoch=$id"), true))
+                              fs: org.apache.hadoop.fs.FileSystem,
+                              path: String): Unit = {
+    val epochs = committedEpochs(fs, s"$path/tombstones")
+    if (epochs.nonEmpty) {
+      val floor = readMetaFile(spark, path, "tomb_floor").map(_.toLong)
+      floor.foreach(f => epochs.filter(_ < f).foreach(id =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones/epoch=$id"), true)))
+      if (!floor.contains(epochs.last))
+        writeMetaFile(spark, path, "tomb_floor", epochs.last.toString)
+    }
   }
 
   /** DELETE vectors from a persisted index — the way OUT of the store
@@ -1093,7 +1106,7 @@ object Similarity {
     * live epoch on the cell-pruned read, so deleted vectors stop being
     * retrievable IMMEDIATELY, and the next [[compactIvfIndex]] physically
     * reclaims them (rewrites exactly the cells holding tombstoned rows,
-    * then retires the applied set as an empty newer epoch, keep = 2).
+    * then retires the applied set as an empty newer epoch).
     *
     * This is the dedup-consistency path a 100 TB deployment hits daily:
     * curation drop verdicts arrive AFTER embedding/indexing, and a corpus
@@ -1148,7 +1161,6 @@ object Similarity {
         full.coalesce(1).write.mode(SaveMode.Overwrite)
           .parquet(s"$path/tombstones/epoch=$next")
         h.tombSchemas(next) = full.schema
-        pruneTombEpochs(spark, path, keep = 2)
         next
     }
   }
@@ -1266,7 +1278,7 @@ object Similarity {
     * Tombstone application order (the reader contract's other half):
     * readers resolve tombstones BEFORE the generation summary, and this
     * writer publishes the summary BEFORE retiring the applied tombstone
-    * set (as an empty newer epoch, keep = 2) — so every interleaving
+    * set (as an empty newer epoch) — so every interleaving
     * reads consistently: an old tombstone set masks old generations, and
     * an empty one is only visible once the clean generations are too.
     *
@@ -1362,8 +1374,8 @@ object Similarity {
       t.limit(0).coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$path/tombstones/epoch=$next")
       h.tombSchemas(next) = t.schema
-      pruneTombEpochs(spark, path, keep = 2)
     }
+    pruneTombEpochs(spark, fs, path)
     targets
   }
 

@@ -17,7 +17,7 @@ package graft.util
   * (non-Linux): gates never block, rows are never flagged.
   *
   * Used by `graft.Bench` (per-trial contended marking + mid-suite load
-  * gates) and the `QueryProbe` main so a drift adjudication carries its
+  * gates) and `graft.Tools probe` so a drift adjudication carries its
   * own load evidence.
   */
 final class ProcCpu {

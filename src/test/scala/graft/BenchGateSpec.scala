@@ -1,5 +1,6 @@
 package graft
 
+import graft.Bench.{Row, Stat, Timing}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The recall-floor gate (round-11 verdict #4): a silent recall regression
@@ -8,33 +9,37 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchGateSpec extends AnyFunSuite {
 
+  private def stats(kv: (String, Double)*): Seq[Row] = kv.map { case (k, v) => Stat(k, v) }
+  private def timings(kv: (String, Double)*): Seq[Row] = kv.map { case (k, v) => Timing(k, v) }
+  private def value(rows: Seq[Row], key: String): Double = rows.find(_.key == key).get.value
+
   test("a recall regression under its floor surfaces as a violation") {
     // the deliberately-broken case: s16's gated 1.0 silently became 0.6
-    val broken = Seq("sf10_s16_recall" -> 0.6, "s3_recall" -> 0.95)
+    val broken = stats("sf10_s16_recall" -> 0.6, "s3_recall" -> 0.95)
     val v = Bench.recallViolations(broken)
     assert(v.size == 1 && v.head.startsWith("sf10_s16_recall=0.6000<"),
       s"violation must name the row, the reading and the floor: $v")
   }
 
   test("a crashed recall measurement (-1 sentinel) is a violation, not a pass") {
-    val v = Bench.recallViolations(Seq("s7_recall" -> -1.0))
+    val v = Bench.recallViolations(stats("s7_recall" -> -1.0))
     assert(v.exists(_.startsWith("s7_recall=")))
   }
 
   test("clean ladder and disabled tiers produce no violations") {
     // every gated row at/above its floor; the sf10 rows ABSENT (tier off)
-    val clean = Seq("s3_recall" -> 0.95, "s7_recall" -> 1.0,
+    val clean = stats("s3_recall" -> 0.95, "s7_recall" -> 1.0,
       "s11_recall" -> 1.0, "s3c_recall" -> 1.0, "s4c_recall" -> 1.0,
       "ann_auto_recall_uniform" -> 0.95, "ann_auto_recall_clustered" -> 1.0)
     assert(Bench.recallViolations(clean).isEmpty)
     // equality gates tolerate FP formatting of a true 1.0
-    assert(Bench.recallViolations(Seq("s4c_recall" -> 0.9999999999)).isEmpty)
+    assert(Bench.recallViolations(stats("s4c_recall" -> 0.9999999999)).isEmpty)
   }
 
   test("the documented resolution trades stay ungated") {
     // s4 on the structureless corpus (honest ceiling 0.6) and the raw
     // quantized rows (the refine tier's reason to exist) must not gate
-    val trades = Seq("s4_recall" -> 0.6, "sf10_s14_recall" -> 0.7,
+    val trades = stats("s4_recall" -> 0.6, "sf10_s14_recall" -> 0.7,
       "sf10_s15_recall" -> 0.03)
     assert(Bench.recallViolations(trades).isEmpty)
   }
@@ -44,8 +49,8 @@ class BenchGateSpec extends AnyFunSuite {
   // ambient that sailed under the 4.0-core suite gate with `contended`
   // empty. The policy is driven here with synthetic ambient readings.
 
-  private def leg(amb: Double, mean: Double) =
-    Seq("x_mean" -> mean, "x_max" -> mean * 2, "x_ambient" -> amb)
+  private def leg(amb: Double, mean: Double): Seq[Row] =
+    timings("x_mean" -> mean, "x_max" -> mean * 2) ++ stats("x_ambient" -> amb)
 
   test("a clean sustained run is kept as-is: no rerun, no flag") {
     var runs = 0
@@ -53,7 +58,7 @@ class BenchGateSpec extends AnyFunSuite {
       Bench.SustainedAmbientGate, "x_ambient",
       () => { runs += 1; leg(amb = 0.1, mean = 0.9) })
     assert(runs == 1 && !reran && !dirty)
-    assert(rows.toMap.apply("x_mean") == 0.9)
+    assert(value(rows, "x_mean") == 0.9)
   }
 
   test("the r12 contamination shape (1.48 ambient cores) triggers exactly one rerun") {
@@ -69,7 +74,7 @@ class BenchGateSpec extends AnyFunSuite {
       onRerun = rerunSeen = _)
     assert(runs == 2 && reran && !dirty)
     assert(rerunSeen == 1.48, "the rerun hook must see the dirty reading")
-    assert(rows.toMap.apply("x_mean") == 0.88, "the SECOND (clean) run is what gets stamped")
+    assert(value(rows, "x_mean") == 0.88, "the SECOND (clean) run is what gets stamped")
   }
 
   test("a box contended across both passes keeps the flag (never a third run)") {
@@ -79,7 +84,7 @@ class BenchGateSpec extends AnyFunSuite {
       () => { runs += 1; leg(amb = 2.0, mean = 3.0) })
     assert(runs == 2 && reran && dirty,
       "still-contaminated after one rerun must surface as contended")
-    assert(rows.toMap.apply("x_ambient") == 2.0)
+    assert(value(rows, "x_ambient") == 2.0)
   }
 
   test("the sustained gate is an order tighter than the suite-wide cores/8 gate") {
@@ -91,35 +96,73 @@ class BenchGateSpec extends AnyFunSuite {
   // ---- the compact last line (the driver keeps a 2,000-char stdout tail)
 
   test("compact line: elided counts only the timing rows that did not fit") {
-    val timing = (1 to 200).map(i => f"q$i%03d_row" -> (1000.0 - i))
-    val nonTiming = Seq("s3_recall" -> 0.95, "t7_bpe_64_batched_rounds" -> 60.0,
+    val timing = timings((1 to 200).map(i => f"q$i%03d_row" -> (1000.0 - i)): _*)
+    val nonTiming = stats("s3_recall" -> 0.95, "t7_bpe_64_batched_rounds" -> 60.0,
       "sf1_loadavg" -> 1.2, "x_reran" -> 0.0)
-    val line = Bench.compactLine(12.3456, timing ++ nonTiming, 0, "sf")
+    val line = Bench.compactLine(timing ++ nonTiming, 0, "sf")
     val kept = "\"(q\\d{3}_row)\":".r.findAllMatchIn(line).map(_.group(1)).toSeq
     assert(line.length <= 1750 + 64, s"${line.length} chars")
     assert(kept.nonEmpty && kept.size < timing.size)
     // the slowest rows are the ones kept, in descending order
-    assert(kept == timing.take(kept.size).map(_._1))
+    assert(kept == timing.take(kept.size).map(_.key))
     // the old count (results.size - taken) added the 4 non-timing rows
     assert(line.contains(s"\"elided\":${timing.size - kept.size},"), line.takeRight(80))
-    assert(nonTiming.forall { case (k, _) => !line.contains(k) })
+    assert(nonTiming.forall(r => !line.contains(r.key)))
   }
 
   test("compact line: non-timing patterns match key suffixes, not words inside timing keys") {
-    val timing = Seq("s16_ivf_pq_reranked" -> 4.27, "sf10_s16_rerank_query" -> 3.5,
+    // the row's type decides, never a word inside its key
+    val timing = timings("s16_ivf_pq_reranked" -> 4.27, "sf10_s16_rerank_query" -> 3.5,
       "t6_bpe_merges" -> 0.1)
-    val nonTiming = Seq("detect_poll_reran" -> 9.0, "s4_recall" -> 8.0,
+    val nonTiming = stats("detect_poll_reran" -> 9.0, "s4_recall" -> 8.0,
       "ann_auto_recall_uniform" -> 7.0, "t7_bpe_512_epoch_merges" -> 90.0)
-    val line = Bench.compactLine(20.0, timing ++ nonTiming, 0, "sf")
-    timing.foreach { case (k, _) => assert(line.contains(s"\"$k\":"), s"$k dropped: $line") }
-    nonTiming.foreach { case (k, _) => assert(!line.contains(k), s"$k kept: $line") }
+    val line = Bench.compactLine(timing ++ nonTiming, 0, "sf")
+    timing.foreach(r => assert(line.contains(s"\"${r.key}\":"), s"${r.key} dropped: $line"))
+    nonTiming.foreach(r => assert(!line.contains(r.key), s"${r.key} kept: $line"))
     assert(line.contains("\"elided\":0,"), line)
   }
 
   test("compact line: everything fits, so nothing is elided (non-timing rows are not)") {
-    val line = Bench.compactLine(3.0, Seq("a" -> 2.0, "b" -> 1.0, "s4_recall" -> 0.6),
+    val line = Bench.compactLine(timings("a" -> 2.0, "b" -> 1.0) ++ stats("s4_recall" -> 0.6),
       errorsN = 2, sfDir = "/d")
     assert(line == """{"metric":"total","value":3.000,"unit":"sec","queries":""" +
       """{"a":2.000,"b":1.000},"elided":0,"errors_n":2,"full":"bench_out.json","sf":"/d"}""")
+  }
+
+  test("value and the compact line count timing rows only, whatever the stat's key") {
+    // every stat row the old key-suffix pattern let onto the line as seconds
+    val leaked = stats("ann_auto_is_ivf_uniform" -> 1.0, "ann_auto_is_ivf_clustered" -> 1.0,
+      "ann_auto_mass_uniform" -> 0.31, "ann_auto_mass_clustered" -> 0.87,
+      "sf10_s14_bytes_ratio" -> 0.27, "sf10_s15_bytes_ratio" -> 0.18,
+      "sf10_s9_selectivity" -> 0.004, "sf10_s17_reclaim_cells" -> 31.0,
+      "sf10_s10_stream_batches" -> 8.0, "sf10_s10_stream4_batches" -> 2.0)
+    val timing = timings("sf10_s10_stream_mean" -> 1.5, "sf10_s10_stream4_max" -> 2.0,
+      "q1_agg" -> 0.5)
+    val rows = leaked ++ timing
+    assert(Bench.total(rows) == 4.0)
+    val line = Bench.compactLine(rows, 0, "sf")
+    assert(line.startsWith("""{"metric":"total","value":4.000,"unit":"sec","""), line)
+    leaked.foreach(r => assert(!line.contains(r.key), s"${r.key} kept: $line"))
+    timing.foreach(r => assert(line.contains(s"\"${r.key}\":"), s"${r.key} dropped: $line"))
+    assert(line.contains("\"elided\":0,"), line)
+  }
+
+  test("sections: in order, disabled ones never run, a throw records the name and keeps the sentinel") {
+    val log = scala.collection.mutable.Buffer[String]()
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    val rows = Bench.runSections(Seq(
+      new Bench.Section("a")({ log += "a"; timings("a_row" -> 1.0) }),
+      new Bench.Section("off", enabled = false)({ log += "off"; timings("off_row" -> 1.0) }),
+      new Bench.Section("s7_recall", onError = stats("s7_recall" -> -1.0))({
+        log += "s7"; throw new IllegalStateException("boom\nsecond line")
+      }),
+      new Bench.Section("tier", tierData = Some(() => log += "data"))({
+        log += "tier"; stats("tier_row" -> 2.0)
+      })), tag => log += s"gate:$tag", errors)
+    assert(log == Seq("a", "s7", "data", "gate:tier", "tier"),
+      "tier data is generated before the idle gate, the gate runs before the rows")
+    assert(rows.map(_.key) == Seq("a_row", "s7_recall", "tier_row"))
+    assert(value(rows, "s7_recall") == -1.0)
+    assert(errors.toSeq == Seq("s7_recall" -> "java.lang.IllegalStateException: boom"))
   }
 }

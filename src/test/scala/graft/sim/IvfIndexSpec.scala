@@ -769,6 +769,32 @@ class IvfIndexSpec extends SparkSpec {
     assert(e3 == e1 + 1 && epochs().contains(e3))
   }
 
+  test("a lagging reader keeps its tombstone epoch through one compaction, however many deletes ran") {
+    val p = java.nio.file.Files.createTempDirectory("ivflagtomb").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
+    def epochs(): Set[Long] = new java.io.File(s"$p/tombstones").listFiles()
+      .map(_.getName).filter(_.startsWith("epoch="))
+      .map(_.stripPrefix("epoch=").toLong).toSet
+    val q = corpus.filter(SimQueries.QueryPred)
+    def query() = Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe)
+    // Delete, ResolveLagging, Delete, Compact: the reader's plan holds epoch 0
+    Similarity.deleteFromIvfIndex(spark, p, corpus.filter("vec_id % 7 = 1").select("vec_id"))
+    val lagging = query()
+    lagging.inputFiles // resolve the file lists now
+    val expected = query().collect().map(_.toSeq).toSet
+    Similarity.deleteFromIvfIndex(spark, p, corpus.filter("vec_id % 7 = 2").select("vec_id"))
+    assert(epochs() == Set(0L, 1L), "a delete must not prune the epoch a reader holds")
+    Similarity.compactIvfIndex(spark, p)
+    assert(lagging.collect().map(_.toSeq).toSet == expected,
+      "one compaction must not delete the epoch a reader resolved before it")
+    val compacted = query().collect().map(_.toSeq).toSet
+    // a second compaction drops what the first left behind, and only that:
+    // the empty epoch the first one retired to stays live
+    Similarity.compactIvfIndex(spark, p)
+    assert(epochs() == Set(2L))
+    assert(query().collect().map(_.toSeq).toSet == compacted)
+  }
+
   test("curation hook applies only the drop DELTA: retired drops are never re-tombstoned") {
     val p = java.nio.file.Files.createTempDirectory("ivfcuradelta").toString
     Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)

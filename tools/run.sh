@@ -1,7 +1,10 @@
 #!/bin/bash
 # Run a graft main class directly against the compiled classes + Spark jars
 # (much faster iteration than `sbt runMain`). Usage:
-#   tools/run.sh graft.Verify /root/testdata/sf0.001 /tmp/verify_out
+#   tools/run.sh graft.Verify <sfDir> <outDir> [names...]
+#   tools/run.sh graft.Bench                  (SPARK_GRAFT_SF_DIR etc.)
+#   tools/run.sh graft.Smoke
+#   tools/run.sh graft.Tools plan-dump|plan-audit|probe|scale-data [args...]
 set -e
 CLS="$1"; shift
 OPENS=""
