@@ -40,6 +40,12 @@ object GraftSession {
     // Deterministic timestamp semantics against the DuckDB oracle: NTZ
     // wall-clocks must read as UTC instants whoever built the session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    // Streaming checkpoints (offsets, commits, source logs, state-store
+    // deltas) go through FileContext on a conf that SessionState copies
+    // from these session confs, on the driver and in state-store tasks:
+    // bind the `file:` scheme to the local filesystem that writes the same
+    // files without forking chmod/readlink (see ForkFreeLocalFs).
+    spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
     spark
   }
 

@@ -6,6 +6,9 @@
 #   tools/run.sh graft.Smoke
 #   tools/run.sh graft.Tools plan-dump|plan-audit|probe|scale-data [args...]
 set -e
+# this checkout's classes, wherever it is cloned (an A/B from a second tree
+# runs its own code)
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 CLS="$1"; shift
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
@@ -19,5 +22,5 @@ exec java $OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLS" "$@"
