@@ -29,7 +29,9 @@ object GraftSession {
 
   /** Runtime confs the engine needs regardless of who built the session
     * (the driver harness builds its own `SparkSession` for `SparkEntry`).
-    * All of these are dynamic SQL confs, safe to set post-construction.
+    * All of these are safe to set post-construction: dynamic SQL confs and
+    * the `file:` binding on the SparkContext's Hadoop conf. A second call
+    * changes nothing.
     */
   def tune(spark: SparkSession): SparkSession = {
     // events.parquet has shipped as both TIMESTAMP(NANOS) and
@@ -40,12 +42,17 @@ object GraftSession {
     // Deterministic timestamp semantics against the DuckDB oracle: NTZ
     // wall-clocks must read as UTC instants whoever built the session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // Streaming checkpoints (offsets, commits, source logs, state-store
-    // deltas) go through FileContext on a conf that SessionState copies
-    // from these session confs, on the driver and in state-store tasks:
-    // bind the `file:` scheme to the local filesystem that writes the same
-    // files without forking chmod/readlink (see ForkFreeLocalFs).
+    // Bind the `file:` scheme of both Hadoop APIs to the local filesystem
+    // that writes the same files without forking chmod/readlink (see
+    // ForkFreeLocalFs). Streaming checkpoints (offsets, commits, source
+    // logs, state-store deltas) go through FileContext on a conf that
+    // SessionState copies from these session confs, on the driver and in
+    // state-store tasks. Parquet and text writes go through the FileSystem
+    // API, whose `file:` instance is cached per JVM: bind sets it on the
+    // SparkContext's conf, which newHadoopConf and every task conf copy,
+    // and evicts the stock instance cached before this call.
     spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
+    graft.io.ForkFreeLocalFileSystem.bind(spark.sparkContext.hadoopConfiguration)
     spark
   }
 

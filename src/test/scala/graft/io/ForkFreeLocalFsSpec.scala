@@ -3,19 +3,22 @@ package graft.io
 import java.io.{FileNotFoundException, RandomAccessFile}
 import java.net.URI
 import java.nio.file.{Files, Paths}
+import java.security.PrivilegedExceptionAction
 import java.util.EnumSet
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsException, FileContext, FileStatus, Options, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsException, FileContext, FileStatus, FileSystem, LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.security.UserGroupInformation
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[ForkFreeLocalFs]] against Hadoop's own local filesystem: every case
-  * runs the same calls on stock `RawLocalFileSystem` / `LocalFs` and on
-  * the fork-free pair under one conf (one umask), and compares what lands
-  * on disk and what the API answers.
+/** [[ForkFreeLocalFs]] and [[ForkFreeLocalFileSystem]] against Hadoop's own
+  * local filesystems: every case runs the same calls on stock
+  * `RawLocalFileSystem` / `LocalFs` / `LocalFileSystem` and on the fork-free
+  * ones under one conf (one umask), and compares what lands on disk and
+  * what the API answers.
   */
 class ForkFreeLocalFsSpec extends AnyFunSuite {
 
@@ -33,6 +36,25 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
   }
   private def stockFc = fileContext(StockFs)
   private def forkFreeFc = fileContext(classOf[ForkFreeLocalFs].getName)
+
+  /** A FileSystem-API `file:` instance of `impl`, outside the JVM's cache. */
+  private def fileSystem(impl: String): FileSystem = {
+    val c = new Configuration(conf)
+    c.set("fs.file.impl", impl)
+    FileSystem.newInstance(new URI("file:///"), c)
+  }
+
+  /** `body` on a stock `LocalFileSystem` and on the fork-free one, each in
+    * its own fresh directory.
+    */
+  private def onBoth(body: (FileSystem, Path) => Unit): (Path, Path) = {
+    val (s, f) = dirs()
+    for ((impl, base) <- Seq(classOf[LocalFileSystem] -> s, classOf[ForkFreeLocalFileSystem] -> f)) {
+      val fs = fileSystem(impl.getName)
+      try body(fs, base) finally fs.close()
+    }
+    (s, f)
+  }
 
   private def rawFs(fs: RawLocalFileSystem): RawLocalFileSystem = {
     fs.initialize(new URI("file:///"), conf)
@@ -155,5 +177,102 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
       Files.list(Paths.get(base.toUri)).iterator().asScala.map(_.getFileName.toString).toSet
     assert(listing(f) == listing(s))
     assert(listing(f) == Set("1", ".1.crc"))
+  }
+
+  test("FileSystem API: mode bits after create and nested mkdirs match Hadoop's") {
+    val (s, f) = onBoth { (fs, base) =>
+      fs.create(new Path(base, "part")).close()
+      fs.create(new Path(base, "p/q/part")).close() // makes its parents
+      fs.create(new Path(base, "file-600"), new FsPermission("600"), false,
+        4096, 1.toShort, 1L << 25, null).close()
+      assert(fs.mkdirs(new Path(base, "a/b/c")))
+      assert(fs.mkdirs(new Path(base, "d/e/f"), new FsPermission("750")))
+    }
+    val names = Seq("part", ".part.crc", "p", "p/q", "p/q/part", "p/q/.part.crc", "file-600",
+      ".file-600.crc", "a", "a/b", "a/b/c", "d", "d/e", "d/e/f")
+    for (n <- names)
+      assert(mode(new Path(f, n)) == mode(new Path(s, n)), n)
+    assert(mode(new Path(f, "part")) == "0640") // 666 under umask 027
+    assert(mode(new Path(f, "file-600")) == "0600")
+  }
+
+  test("FileSystem API: .crc sidecars are written, hidden from listStatus and verified") {
+    val data = Array.tabulate[Byte](3000)(i => (i * 17).toByte)
+    val (s, f) = onBoth { (fs, base) =>
+      val p = new Path(base, "part")
+      val out = fs.create(p)
+      try out.write(data) finally out.close()
+      assert(Files.exists(Paths.get(new Path(base, ".part.crc").toUri)))
+      assert(fs.listStatus(base).map(_.getPath.getName).toSeq == Seq("part"))
+      val in = fs.open(p)
+      val back = try in.readAllBytes() finally in.close()
+      assert(back.sameElements(data))
+      val raf = new RandomAccessFile(Paths.get(p.toUri).toFile, "rw")
+      try { raf.seek(1500); raf.write(data(1500) ^ 0x5a) } finally raf.close()
+      val bad = fs.open(p)
+      try intercept[ChecksumException](bad.readAllBytes()) finally bad.close()
+    }
+    for (n <- Seq("part", ".part.crc"))
+      assert(Files.readAllBytes(Paths.get(new Path(f, n).toUri))
+        .sameElements(Files.readAllBytes(Paths.get(new Path(s, n).toUri))), n)
+  }
+
+  test("FileSystem API: a rename onto an existing file answers as Hadoop's") {
+    // File.renameTo replaces a file on POSIX, so Hadoop's LocalFileSystem
+    // answers true here (HDFS answers false); the sidecar moves with it
+    val answers = Seq.newBuilder[Boolean]
+    val (s, f) = onBoth { (fs, base) =>
+      val (tmp, dst) = (new Path(base, ".1.tmp"), new Path(base, "1"))
+      for ((p, b) <- Seq(dst -> 1, tmp -> 2)) {
+        val out = fs.create(p)
+        try out.write(b) finally out.close()
+      }
+      answers += fs.rename(tmp, dst)
+      val in = fs.open(dst) // verified against the moved sidecar
+      try assert(in.readAllBytes().toSeq == Seq[Byte](2)) finally in.close()
+    }
+    assert(answers.result() == Seq(true, true))
+    def listing(base: Path) =
+      Files.list(Paths.get(base.toUri)).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(listing(f) == listing(s))
+    assert(listing(f) == Set("1", ".1.crc"))
+  }
+
+  test("FileSystem.getLocal still casts to LocalFileSystem") {
+    val c = new Configuration(conf)
+    c.set("fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+    c.set("fs.file.impl.disable.cache", "true") // a fresh instance, not the JVM's
+    val local: LocalFileSystem = FileSystem.getLocal(c)
+    try {
+      assert(local.isInstanceOf[ForkFreeLocalFileSystem])
+      assert(local.getRaw.isInstanceOf[ForkFreeRawLocalFileSystem])
+    } finally local.close()
+  }
+
+  test("bind evicts a cached stock instance only when closing it deletes nothing") {
+    // a user of its own, so the JVM's cached `file:` instance is not touched
+    val ugi = UserGroupInformation.createRemoteUser("graft-bind")
+    val root = Files.createTempDirectory("graft-bind")
+    val doomed = new Path(Files.createFile(root.resolve("doomed")).toUri)
+    def asUser[T](body: => T): T = ugi.doAs(new PrivilegedExceptionAction[T] { def run(): T = body })
+    try asUser {
+      val c = new Configuration(conf)
+      c.set("fs.file.impl", classOf[LocalFileSystem].getName)
+      val stock = FileSystem.get(new URI("file:///"), c)
+      assert(stock.getClass == classOf[LocalFileSystem])
+      stock.deleteOnExit(doomed)
+      ForkFreeLocalFileSystem.bind(c)
+      // closing would delete `doomed`: the stock instance stays bound
+      assert(c.get("fs.file.impl") == classOf[ForkFreeLocalFileSystem].getName)
+      assert(FileSystem.get(new URI("file:///"), c) eq stock)
+      assert(Files.exists(Paths.get(doomed.toUri)))
+      stock.cancelDeleteOnExit(doomed)
+      ForkFreeLocalFileSystem.bind(c)
+      val bound = FileSystem.get(new URI("file:///"), c)
+      assert(bound.isInstanceOf[ForkFreeLocalFileSystem])
+      assert(Files.exists(Paths.get(doomed.toUri)))
+      ForkFreeLocalFileSystem.bind(c) // again: nothing changes
+      assert(FileSystem.get(new URI("file:///"), c) eq bound)
+    } finally FileSystem.closeAllForUGI(ugi)
   }
 }

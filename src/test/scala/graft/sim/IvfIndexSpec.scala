@@ -739,15 +739,6 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
-  private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("re-deleting already-live ids skips the epoch write and returns the covering epoch") {
     val p = java.nio.file.Files.createTempDirectory("ivfnoopdel").toString
     Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
