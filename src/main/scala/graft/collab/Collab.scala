@@ -47,6 +47,9 @@ object Collab {
     def publish(flows: Dataset[FlowStat]): DataFrame =
       encodeAlerts(DetectionStream.alerts(flows.filter(col("domain") === domain), cfg))
 
+    /** Collects `topology` (a batch frame) once per call, when the frame
+      * is built ([[graft.dipa.Detect.mitigations]]).
+      */
     def mitigate(foreignWire: DataFrame, topology: DataFrame): DataFrame =
       DetectionStream.mitigations(consume(foreignWire, domain), topology)
   }
@@ -55,7 +58,9 @@ object Collab {
     * detects on its own flows and publishes; every other domain consumes
     * the union of foreign topics and installs mitigations pre-emptively
     * (`DIPA_Controller.py:357-421`). Returns the mitigation frame per
-    * destination domain.
+    * destination domain. Building them collects `topology` once per
+    * destination domain (N small driver jobs, before any query starts);
+    * a topology change takes a new `exchange`.
     */
   def exchange(flows: Dataset[FlowStat], domains: Seq[String],
                topology: DataFrame,

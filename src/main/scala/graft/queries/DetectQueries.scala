@@ -49,7 +49,8 @@ object DetectQueries {
 
   /** C6 — the mitigation dispatch table over synthesized decoded alerts
     * (every label arm exercised: BOT, CNC, BLOCK, numeric pct, unknown)
-    * joined against a synthesized host-topology dimension (J1).
+    * looked up in a synthesized host-topology dimension (J1; its `port`
+    * is a bigint, which the lookup keeps).
     */
   def c6Dispatch(s: SparkSession, dir: String): DataFrame = {
     val e = ev(s, dir)

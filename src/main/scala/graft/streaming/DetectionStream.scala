@@ -179,8 +179,11 @@ object DetectionStream {
   /** §3.2 mitigation pipeline over a stream of decoded alerts:
     * effectively-once dispatch under at-least-once delivery via
     * `dropDuplicates` keyed state (the Pulsar-ack analog, SURVEY.md §7.5.2),
-    * then the C6 dispatch + J1 topology broadcast join. Works on a
-    * streaming or batch DataFrame of (domain, ip, label).
+    * then the C6 dispatch + J1 attachment lookup ([[Detect.mitigations]]).
+    * Works on a streaming or batch DataFrame of (domain, ip, label);
+    * `topology` is a batch frame, collected once when this frame is built,
+    * so a running query keeps the topology it started with (a topology
+    * change takes a new query) and a streaming topology fails by name.
     *
     * Suppression here is FOREVER (state never expires) — right for tests
     * and bounded replays, unbounded state on an unbounded alert stream.
@@ -202,7 +205,8 @@ object DetectionStream {
     * after the TTL must re-install its rule. Default `ttl` matches the
     * reference's 100 s; `eventTimeCol` lets transports that stamp arrival
     * time use it (tests pin eviction deterministically through it) —
-    * otherwise rows are stamped with the batch's processing time.
+    * otherwise rows are stamped with the batch's processing time. The
+    * topology is collected when this frame is built, as in [[mitigations]].
     */
   def mitigationsWithTtl(alerts: DataFrame, topology: DataFrame,
                          ttl: String = "100 seconds",

@@ -4,8 +4,14 @@ import java.sql.Timestamp
 
 import graft.SparkSpec
 import graft.model.{FlowStat, TopologyEntry}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** Golden-scenario test of the flagship detection pipeline (SURVEY.md §3.1,
   * `DIPA_Controller.py:452-501 + 323-352`): a seeded Mirai-shaped poll
@@ -13,7 +19,7 @@ import org.apache.spark.sql.functions._
   * hosts — must elect the right CNC, score the bots >= 0.6, and leave the
   * benign hosts unflagged.
   */
-class DetectSpec extends SparkSpec {
+class DetectSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def ts(s: Long) = new Timestamp(1700000000000L + s * 1000)
@@ -124,6 +130,92 @@ class DetectSpec extends SparkSpec {
       ("DROP_TELNET", Some("10.0.0.4"), Some("s1")),
       ("LOCKDOWN", Some("10.0.0.4"), Some("s1")),
       ("BLOCK_PORT", None, None)))
+  }
+
+  /** The J1 dispatch as a broadcast left join: the form [[Detect.mitigations]]
+    * replaced, kept here as the reference its map lookup must equal.
+    */
+  private def joinReference(alerts: DataFrame, topology: DataFrame): DataFrame = {
+    val a = alerts.withColumn("is_pct", col("label").rlike("^[0-9.]+$"))
+    val t = broadcast(topology.filter(col("is_host"))
+      .select(col("attached"), col("switch_name"), col("port")))
+    a.join(t, a("ip") === t("attached"), "left")
+      .select(
+        when(col("label") === "BOT", "RATE_LIMIT")
+          .when(col("label") === "CNC", "DROP_TELNET")
+          .when(col("label") === "BLOCK", "BLOCK_PORT")
+          .when(col("is_pct"), "LOCKDOWN")
+          .otherwise("UNKNOWN").as("action"),
+        when(col("label") === "BLOCK", null).otherwise(col("ip")).as("target_ip"),
+        col("switch_name"), col("port"),
+        when(col("label") === "CNC", 100).otherwise(10).as("priority"),
+        lit(60).as("idle_timeout_s"), lit(100).as("hard_timeout_s"))
+  }
+
+  private lazy val edgeTopo: DataFrame = spark.createDataFrame(
+    spark.sparkContext.parallelize(Seq(
+      Row("s1", 1L, 1, "10.0.0.1", true),
+      Row("s2", 2L, 7, "10.0.0.1", true),  // .1 attached at a second port
+      Row("s3", 3L, 9, "10.0.0.1", false), // non-host row naming .1
+      Row("s1", 1L, 2, "10.0.0.2", true),
+      Row("s1", 1L, 6, null, true),        // null attached: never matches
+      Row("s4", 4L, 3, "10.0.0.3", null),  // null is_host: not a host
+      Row("s1", 1L, 5, "s2", false))),
+    StructType(Seq(
+      StructField("switch_name", StringType), StructField("dpid", LongType),
+      StructField("port", IntegerType), StructField("attached", StringType),
+      StructField("is_host", BooleanType))))
+
+  private lazy val edgeAlerts: DataFrame = Seq[(String, String)](
+    ("10.0.0.1", "BOT"), ("10.0.0.1", "BOT"), ("10.0.0.2", "CNC"),
+    ("10.0.0.1", "62.5"), ("23", "BLOCK"), ("10.0.0.2", "noise"),
+    ("10.0.0.9", "BOT"), ("10.0.0.3", "BOT"), ("s2", "CNC"), (null, "BOT"),
+    (null, "BLOCK")
+  ).toDF("ip", "label")
+
+  test("mitigations equal the broadcast left join: rows (as a multiset) and schema") {
+    val bigintPort = edgeTopo.withColumn("port", (col("port") + 40L).cast(LongType))
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], edgeTopo.schema)
+    for (t <- Seq(edgeTopo, bigintPort, empty)) {
+      val got = Detect.mitigations(edgeAlerts, t)
+      val want = joinReference(edgeAlerts, t)
+      assert(got.schema == want.schema,
+        s"\n${got.schema.treeString}\nvs join\n${want.schema.treeString}")
+      val multiset = (df: DataFrame) => df.collect().map(_.toString).sorted.toSeq
+      assert(multiset(got) == multiset(want))
+    }
+    // the fixture reaches every arm
+    val m = Detect.mitigations(edgeAlerts, edgeTopo).collect()
+    assert(m.count(r => r.getAs[String]("target_ip") == "10.0.0.1" &&
+      r.getAs[String]("action") == "RATE_LIMIT") == 4) // 2 alerts x 2 ports
+    assert(m.count(r => r.getAs[String]("switch_name") == null) == 6)
+    assert(m.map(_.getAs[String]("action")).toSet ==
+      Set("RATE_LIMIT", "DROP_TELNET", "LOCKDOWN", "BLOCK_PORT", "UNKNOWN"))
+  }
+
+  test("mitigations plan holds no broadcast exchange or broadcast join") {
+    def broadcasts(df: DataFrame) = {
+      df.collect()
+      collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: BroadcastExchangeExec => e
+        case j: BroadcastHashJoinExec => j
+        case j: BroadcastNestedLoopJoinExec => j
+      }
+    }
+    val df = Detect.mitigations(edgeAlerts, edgeTopo)
+    assert(broadcasts(df).isEmpty, s"expected no broadcast:\n${df.queryExecution.executedPlan}")
+    // the probe sees the join's broadcast when there is one
+    assert(broadcasts(joinReference(edgeAlerts, edgeTopo)).nonEmpty)
+  }
+
+  test("mitigations contracts: a streaming topology and a non-string ip fail by name") {
+    val streamTopo = MemoryStream[(String, Long, Int, String, Boolean)](spark).toDF()
+      .toDF("switch_name", "dpid", "port", "attached", "is_host")
+    val e1 = intercept[IllegalArgumentException](Detect.mitigations(edgeAlerts, streamTopo))
+    assert(e1.getMessage.contains("topology must be a batch frame"), e1.getMessage)
+    val intIps = Seq((1, "BOT")).toDF("ip", "label")
+    val e2 = intercept[IllegalArgumentException](Detect.mitigations(intIps, edgeTopo))
+    assert(e2.getMessage.contains("`ip` must be a string, got IntegerType"), e2.getMessage)
   }
 
   test("quirk-parity mode: last-write-only traf_dict keeps one dst per source") {

@@ -6,7 +6,11 @@ import graft.SparkSpec
 import graft.dipa.Detect
 import graft.model.FlowStat
 import graft.streaming.DetectionStream._
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.OutputMode
 
 import scala.collection.mutable
@@ -124,6 +128,36 @@ class DetectionStreamSpec extends SparkSpec {
     assert(byAction("RATE_LIMIT").getAs[String]("switch_name") == "s1")
     assert(byAction("DROP_TELNET").getAs[Int]("priority") == 100)
     assert(byAction.contains("LOCKDOWN"))
+  }
+
+  test("a running mitigationsWithTtl stream plans no broadcast exchange or join") {
+    import spark.implicits._
+    val topo = Seq(("s1", 1L, 1, "10.0.0.1", true))
+      .toDF("switch_name", "dpid", "port", "attached", "is_host")
+    val in = MemoryStream[(String, String, String)](spark)
+    val rows = mutable.ArrayBuffer[Row]()
+    val q = DetectionStream.mitigationsWithTtl(in.toDS().toDF("domain", "ip", "label"), topo)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
+        rows.synchronized(rows ++= b.collect())
+        ()
+      }.start()
+    try {
+      in.addData(("d0", "10.0.0.1", "BOT"), ("d0", "10.0.0.9", "CNC"))
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      val broadcasts = plan.collect {
+        case e: BroadcastExchangeExec => e
+        case j: BroadcastHashJoinExec => j
+        case j: BroadcastNestedLoopJoinExec => j
+      }
+      assert(broadcasts.isEmpty, s"expected no broadcast:\n$plan")
+      assert(plan.collect { case g: GenerateExec => g }.nonEmpty, s"no lookup in:\n$plan")
+      assert(rows.synchronized(rows.map(r =>
+        (r.getAs[String]("action"), r.getAs[String]("switch_name"))).toSet) ==
+        Set(("RATE_LIMIT", "s1"), ("DROP_TELNET", null)))
+    } finally q.stop()
   }
 
   test("mitigationsWithTtl: bounded suppression, rule re-install after expiry") {

@@ -11,24 +11,9 @@
 # nearest frame of any package when no fs frame called it, or the Shell frame
 # itself at the bottom of a thread that Shell started).
 set -euo pipefail
-target="${1:?usage: tools/forkscan.sh <pid>|bench [n]}"
+. "$(dirname "$0")/jvm.sh"
+target="$(jvm_pid "${1:?usage: tools/forkscan.sh <pid>|bench [n]}")"
 n="${2:-60}"
-
-if [ "$target" = bench ]; then
-  # a java process whose argument list holds the main class itself: the
-  # calling shell's command line only mentions it inside one argument
-  pids=()
-  for p in $(pgrep -x java || true); do
-    if tr '\0' '\n' < "/proc/$p/cmdline" 2>/dev/null | grep -qx 'perfbench.Main'; then
-      pids+=("$p")
-    fi
-  done
-  if [ "${#pids[@]}" -ne 1 ]; then
-    echo "forkscan: expected one perfbench.Main JVM, found ${#pids[@]}" >&2
-    exit 1
-  fi
-  target="${pids[0]}"
-fi
 
 dir="$(mktemp -d)"
 trap 'rm -rf "$dir"' EXIT
