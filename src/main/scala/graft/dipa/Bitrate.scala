@@ -38,19 +38,17 @@ object Bitrate {
     * (`Controller1.py:476-503`): every (switch, in_port) sending above the
     * per-flow threshold toward a victim, resolved through the topology
     * dimension to the attached host (its IP — `IPMaps`/`MACMaps` zip), with
-    * inter-switch links excluded (`is_host`).
+    * inter-switch links excluded (`is_host`) — [[Detect.atHostPorts]].
     */
   def attackers(rates: DataFrame, victimFrame: DataFrame, topology: DataFrame,
                 attackerThresholdKbps: Double): DataFrame =
-    rates
-      .join(victimFrame.select(col("domain"), col("ipv4_dst")), Seq("domain", "ipv4_dst"), "left_semi")
-      .filter(col("kbps") > attackerThresholdKbps)
-      .join(broadcast(topology.filter(col("is_host"))
-          .select(col("dpid"), col("port"), col("switch_name"), col("attached"))),
-        Seq("dpid"))
-      .where(col("in_port") === col("port"))
-      .select(col("domain"), col("switch_name"), col("port"),
-        col("attached").as("attacker_ip"), col("ipv4_dst").as("victim_ip"), col("kbps"))
+    Detect.atHostPorts(rates
+        .join(victimFrame.select(col("domain"), col("ipv4_dst")), Seq("domain", "ipv4_dst"), "left_semi")
+        .filter(col("kbps") > attackerThresholdKbps),
+      topology, "attackers")
+      .select(col("domain"), col("__host.switch_name").as("switch_name"),
+        col("__host.port").as("port"), col("__host.attached").as("attacker_ip"),
+        col("ipv4_dst").as("victim_ip"), col("kbps"))
 
   /** J7 — pushback victims: attacked destinations with no locally-attached
     * attacker — the flood enters from another domain

@@ -1,14 +1,14 @@
 package graft.dipa
 
 import graft.ops.{Rankings, Windows}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumns.column
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{ArrayType, MapType, StringType}
 
 /** The flagship detection pipeline (SURVEY.md §3.1), re-expressed as pure
   * DataFrame transforms over `FlowStat`-shaped frames.
@@ -37,12 +37,6 @@ object Detect {
     */
   def dataFlows(flows: DataFrame): DataFrame =
     flows.filter(col("priority") === 10)
-
-  /** W3/J9 — per-flow packet/byte deltas vs the previous poll. */
-  def withDeltas(flows: DataFrame): DataFrame = {
-    val d = Windows.delta(flows, flowKey, Seq("poll_id"), "packet_count", "pkt_delta")
-    Windows.delta(d, flowKey, Seq("poll_id"), "byte_count", "byte_delta")
-  }
 
   /** O6 — Kbit/s bitrate from byte deltas (`Controller1.py:516-518`). */
   def kbps(byteDelta: Column, intervalS: Column): Column =
@@ -191,7 +185,8 @@ object Detect {
     require(ipType == StringType, s"mitigations: alert column `ip` must be a string, got $ipType")
     alerts
       .select(col("ip"), col("label"),
-        explode_outer(element_at(attachments(topology), col("ip"))).as("__att"))
+        explode_outer(hostLookup(topology, Seq("attached"), Seq("switch_name", "port"),
+          alerts, Seq("ip"), "mitigations")).as("__att"))
       .select(
         when(col("label") === "BOT", "RATE_LIMIT")
           .when(col("label") === "CNC", "DROP_TELNET")
@@ -204,44 +199,73 @@ object Detect {
         lit(60).as("idle_timeout_s"), lit(100).as("hard_timeout_s"))
   }
 
-  /** The topology's host rows as a map literal `attached -> array of
-    * (switch_name, port)`, collected now; rows with a null `attached` are
-    * dropped (they never match an ip).
+  /** The topology lookup J1, J4 and J5 share: `element_at` of the
+    * `probe` frame's `on` columns in a map literal from each `is_host`
+    * row's `keys` (one column as itself, several as a struct) to the
+    * array of its `values` structs, collected now. Under `explode` it
+    * gives the rows of an inner join of `probe` with the host rows on
+    * `on = keys`, under `explode_outer` those of a left join — with no
+    * exchange and no hashed relation in the plan (see [[mitigations]]).
+    * Each key pair is compared in its tightest common type, as the
+    * join's coercion would; a pair without one, or a streaming
+    * topology, fails by name. Host rows with a null key never match
+    * (nor would they in the join), so they are dropped.
     */
-  private def attachments(topology: DataFrame): Column = {
+  private[dipa] def hostLookup(topology: DataFrame, keys: Seq[String], values: Seq[String],
+                               probe: DataFrame, on: Seq[String], caller: String): Column = {
     require(!topology.isStreaming,
-      "mitigations: the topology must be a batch frame (it is collected when the " +
+      s"$caller: the topology must be a batch frame (it is collected when the " +
         "frame is built), got a streaming one")
-    val hosts = topology.filter(col("is_host") && col("attached").isNotNull)
-      .select(col("attached"), col("switch_name"), col("port"))
-    val keyType = hosts.schema("attached").dataType
-    require(keyType == StringType,
-      s"mitigations: topology column `attached` must be a string, got $keyType")
-    val elementType = StructType(hosts.schema.fields.tail)
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(elementType)
-    val byIp = hosts.collect().groupBy(_.getString(0)).toSeq
+    val types = keys.zip(on).map { case (k, o) =>
+      val (kt, ot) = (topology.schema(k).dataType, probe.schema(o).dataType)
+      TypeCoercion.findTightestCommonType(kt, ot).getOrElse(throw new IllegalArgumentException(
+        s"$caller: `$o` ($ot) and topology column `$k` ($kt) have no common type"))
+    }
+    def key(cols: Seq[String]): Column = {
+      val typed = cols.zip(types).map { case (c, t) => col(c).cast(t) }
+      if (typed.size == 1) typed.head
+      else struct(typed.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
+    }
+    val hosts = topology.filter(keys.map(col(_).isNotNull).foldLeft(col("is_host"))(_ && _))
+      .select(key(keys), struct(values.map(col): _*))
+    val Seq(keyType, elementType) = hosts.schema.fields.toSeq.map(_.dataType)
+    val (toKey, toValue) = (CatalystTypeConverters.createToCatalystConverter(keyType),
+      CatalystTypeConverters.createToCatalystConverter(elementType))
+    val byKey = hosts.collect().groupBy(_.get(0)).toSeq
     val table = new ArrayBasedMapData(
-      new GenericArrayData(byIp.map { case (ip, _) => UTF8String.fromString(ip) }),
-      new GenericArrayData(byIp.map { case (_, rs) =>
-        new GenericArrayData(rs.map(r => toCatalyst(Row(r.get(1), r.get(2))))) }))
-    column(Literal(table,
-      MapType(StringType, ArrayType(elementType, containsNull = false), valueContainsNull = false)))
+      new GenericArrayData(byKey.map { case (k, _) => toKey(k) }),
+      new GenericArrayData(byKey.map { case (_, rs) =>
+        new GenericArrayData(rs.map(r => toValue(r.get(1)))) }))
+    element_at(column(Literal(table,
+      MapType(keyType, ArrayType(elementType, containsNull = false), valueContainsNull = false))),
+      key(on))
   }
+
+  /** J4/J5's resolution step: each `hot` row once per topology host at
+    * its `(dpid, in_port)`, the host's `(switch_name, port, attached)` in
+    * struct column `__host` — the rows of an inner join on `(dpid,
+    * in_port) = (dpid, port)` with the `is_host` rows, through
+    * [[hostLookup]] instead of a broadcast join.
+    */
+  private[dipa] def atHostPorts(hot: DataFrame, topology: DataFrame, caller: String): DataFrame =
+    hot.withColumn("__host", explode(hostLookup(topology, Seq("dpid", "port"),
+      Seq("switch_name", "port", "attached"), hot, Seq("dpid", "in_port"), caller)))
 
   /** J4/J5 — attacker attribution (`Controller1.py:476-503`): every
     * (switch, port) whose flow rate toward a victim exceeds the threshold,
     * excluding inter-switch links, resolved to host MAC/IP via the topology
-    * dimension. `rates`: (domain, dpid, in_port, eth_dst, rate).
+    * dimension ([[atHostPorts]]). `rates`: (domain, dpid, in_port, eth_dst,
+    * rate).
     */
   def attributeAttackers(rates: DataFrame, victims: DataFrame,
                          topology: DataFrame, threshold: Double): DataFrame =
-    rates
-      .join(victims, Seq("domain", "eth_dst"), "left_semi")
-      .filter(col("rate") > threshold)
-      .join(broadcast(topology.filter(col("is_host"))),
-        rates("dpid") === topology("dpid") && rates("in_port") === topology("port"))
-      .select(col("domain"), col("switch_name"), col("port"),
-              col("attached").as("attacker"), col("eth_dst"), col("rate"))
+    atHostPorts(rates
+        .join(victims, Seq("domain", "eth_dst"), "left_semi")
+        .filter(col("rate") > threshold),
+      topology, "attributeAttackers")
+      .select(col("domain"), col("__host.switch_name").as("switch_name"),
+        col("__host.port").as("port"), col("__host.attached").as("attacker"),
+        col("eth_dst"), col("rate"))
 
   /** J7 — pushback detection (`Controller1.py:395-413`): victims with no
     * locally-attributed attacker — the attack originates in another domain.

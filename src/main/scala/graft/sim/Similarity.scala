@@ -1,6 +1,8 @@
 package graft.sim
 
 import graft.functions.{ArgTopCells, DotProduct, IntDotProduct, LshBucket, PqEncode}
+import graft.streaming.CurationStream.committedEpochs
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,9 +33,6 @@ object Similarity {
       zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
       lit(0.0),
       (acc, x) => acc + x)
-
-  /** Exact L2 norm of a float-array column. */
-  def normExact(a: Column): Column = sqrt(dotExact(a, a))
 
   /** Cosine similarity given precomputed norms. */
   def cosine(dot: Column, normA: Column, normB: Column): Column =
@@ -328,10 +327,10 @@ object Similarity {
     */
   def ivfTopKRefined(queries: DataFrame, corpus: DataFrame, k: Int,
                      centroidPred: String, nprobe: Int, dim: Int,
-                     refineIters: Int = 1, gridScale: Int = 1024,
+                     refineIters: Int = 1,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     rankTopK(ivfRefinedScored(queries, corpus, centroidPred, nprobe, dim,
-      refineIters, gridScale, idCol, vecCol), k)
+      refineIters, idCol, vecCol), k)
 
   /** The scored candidate relation behind [[ivfTopK]] and
     * [[ivfTopKRefined]] — one (q_id, c_id, cos) row per (query, corpus
@@ -342,10 +341,10 @@ object Similarity {
     */
   def ivfRefinedScored(queries: DataFrame, corpus: DataFrame,
                        centroidPred: String, nprobe: Int, dim: Int,
-                       refineIters: Int = 1, gridScale: Int = 1024,
+                       refineIters: Int = 1,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cents = collectCentEntries(trainCentroids(corpus, centroidPred, dim,
-      refineIters, gridScale, idCol, vecCol))
+      refineIters, idCol, vecCol))
     val (qCells, qLoc, _) = probeCells(queries.sparkSession, queries, cents,
       nprobe, idCol, vecCol)
     scoreFloat(assignCells(corpus, cents, idCol, vecCol, Nil), qCells, qLoc)
@@ -357,12 +356,12 @@ object Similarity {
     * Returns the (cid, cv0) relation, unmaterialized.
     */
   private def trainCentroids(train: DataFrame, centroidPred: String, dim: Int,
-                             refineIters: Int, gridScale: Int,
+                             refineIters: Int,
                              idCol: String, vecCol: String): DataFrame = {
     var cents = train.filter(centroidPred)
       .select(col(idCol).as("cid"), col(vecCol).as("cv0"))
     for (_ <- 0 until refineIters)
-      cents = refineCentroids(train, cents, dim, gridScale, idCol, vecCol)
+      cents = refineCentroids(train, cents, dim, idCol, vecCol)
     cents
   }
 
@@ -398,7 +397,7 @@ object Similarity {
     * floats, but what lands in the cell files is the `q8` int array +
     * `q8_scale` + integer norm — ~4× less index resident set at 100 TB,
     * and candidate scoring at query time becomes integer-only
-    * ([[ivfTopKIndexed]] dispatches on the stored schema). The
+    * ([[ivfTopKIndexed]] dispatches on the manifest). The
     * quantization is `floor(x/s + 0.5)` — deterministic and
     * engine-portable, so the quantized index is still exact-oracle
     * checkable (`s14_ivf_q8_indexed`).
@@ -408,25 +407,24 @@ object Similarity {
     * build does not spend a job checking it.
     */
   def buildIvfIndex(corpus: DataFrame, centroidPred: String, dim: Int,
-                    path: String, refineIters: Int = 1, gridScale: Int = 1024,
+                    path: String,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     carry: Seq[String] = Nil,
                     trainFraction: Double = 1.0,
-                    trainSalt: String = "ivf-train",
                     storage: String = "float32",
-                    pqM: Int = 8, pqK: Int = 16,
-                    pqSeedSalt: String = "pq-seed"): Unit = {
+                    pqM: Int = 8, pqK: Int = 16): Unit = {
     require(trainFraction > 0 && trainFraction <= 1,
       s"trainFraction must be in (0, 1], got $trainFraction")
     require(Storages(storage),
       s"storage must be one of ${Storages.mkString("/")}, got $storage")
     requireCarryNames(carry)
+    val spark = corpus.sparkSession
     val train =
       if (trainFraction >= 1.0) corpus
-      else graft.ops.Sampling.sampleFraction(corpus, col(idCol), trainSalt,
+      else graft.ops.Sampling.sampleFraction(corpus, col(idCol), TrainSalt,
         trainFraction)
-    val cents = trainCentroids(train, centroidPred, dim, refineIters,
-      gridScale, idCol, vecCol)
+    val cents = trainCentroids(train, centroidPred, dim, BuildRefineIters,
+      idCol, vecCol)
     // materialize the refinement ONCE (eager local checkpoint of the tiny
     // centroid relation), write the store from the materialized rows, and
     // seed the index handle with the same rows — the assignment sweep
@@ -435,7 +433,7 @@ object Similarity {
     val centsCk = cents.localCheckpoint(true)
     centsCk.write.mode("overwrite").parquet(s"$path/centroids")
     val centEntries = collectCentEntries(centsCk)
-    releaseCheckpointBlocks(centsCk)
+    graft.dedup.Dedup.releaseCheckpoint(centsCk)
     // PQ codebooks train on the SAME sample as the coarse quantizer and
     // are persisted beside the centroids — appends and queries read the
     // stored codebooks, never retrain (codes stay valid under append).
@@ -444,73 +442,104 @@ object Similarity {
     val books: Option[PqBooks] =
       if (storage != "pq") None
       else {
-        val cb = trainPqCodebooks(train, dim, pqM, pqK, refineIters, gridScale,
-          idCol, vecCol, pqSeedSalt).localCheckpoint(true)
+        val cb = trainPqCodebooks(train, dim, pqM, pqK, BuildRefineIters,
+          idCol, vecCol).localCheckpoint(true)
         cb.write.mode("overwrite").parquet(s"$path/pq_codebooks")
         val b = pqBooksOf(cb, path)
-        releaseCheckpointBlocks(cb)
+        graft.dedup.Dedup.releaseCheckpoint(cb)
         Some(b)
       }
     // a REBUILD at the same path (the drift-rebuild lifecycle
     // appendToIvfIndex anticipates) must not inherit the previous
     // index's tombstones: `tombstones/` lives beside `assigned/`, so the
-    // Overwrite above clears the rows but would leave a live non-empty
+    // Overwrite below clears the rows but would leave a live non-empty
     // epoch silently masking ids legitimately present in the NEW corpus
     // until some compaction retired it. A rebuild starts life
     // delete-free, like a fresh build.
-    locally {
-      val fs = hadoopFs(corpus.sparkSession, new org.apache.hadoop.fs.Path(path))
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      // the applied-curation watermark is per-INDEX-LIFE too: the new
-      // corpus has had nothing applied to it yet
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_meta"), true)
-    }
-    // record the stored form durably BEFORE any data lands: appends
-    // dispatch on this manifest, never on data files deletes can empty
-    val spark = corpus.sparkSession
-    writeMetaFile(spark, path, "storage", storage)
+    val fs = hadoopFs(spark, new Path(path))
+    fs.delete(new Path(s"$path/tombstones"), true)
+    // the applied-curation watermark is per-INDEX-LIFE too: the new
+    // corpus has had nothing applied to it yet
+    fs.delete(new Path(s"$path/_meta"), true)
+    // and a previous pq build's codebooks are not this build's
+    if (books.isEmpty)
+      fs.delete(new Path(s"$path/pq_codebooks"), true)
+    val rows = indexRows(corpus, centEntries, storage, books.get, Map.empty,
+      idCol, vecCol, carry)
+    // the manifest lands BEFORE any assignment: every later append,
+    // query and scan reads the stored form and layout from it
+    val manifest = IndexManifest(storage, longPartitions(rows.schema))
+    publishFile(fs, metaFile(path, "manifest"), manifest.json)
     val h = new IndexHandle(path, centroidStamp(spark, path), centEntries,
-      Some(storage), None, books)
-    val layout = assignIntoIndex(corpus, path, SaveMode.Overwrite, idCol,
-      vecCol, carry, storage, h)
-    // the layout schema every later scan reads with (no footer inference)
-    writeMetaFile(spark, path, "layout", layout.json)
-    h.learnLayout(layout)
+      manifest, books)
+    writeIndexRows(rows, path, SaveMode.Overwrite)
     keepOpen(h)
   }
 
-  /** Free the executor blocks behind an eager `localCheckpoint` once its
-    * consumer has run — `Dataset.unpersist` is a CacheManager no-op on
-    * checkpoint blocks (they belong to the backing RDD), and a build loop
-    * should not wait for the ContextCleaner's weak-reference sweep.
+  /** Refine sweeps a persisted build runs: its coarse quantizer's and,
+    * for `storage = "pq"`, its codebooks' (the s8-s17 oracle rows replay
+    * one).
     */
-  private def releaseCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
+  val BuildRefineIters: Int = 1
+
+  /** The hash salt of the `trainFraction` sample — the md5 cut the
+    * `s12_ivf_sampled` oracle row replays.
+    */
+  val TrainSalt: String = "ivf-train"
+
+  /** The hash salt of the pq codebook seed ranks ([[trainPqCodebooks]]),
+    * replayed by the `s15`/`s16` oracle rows.
+    */
+  val PqSeedSalt: String = "pq-seed"
 
   /** The stored candidate-payload forms a persisted index supports. */
   val Storages: Set[String] = Set("float32", "int8", "pq")
 
-  /** The stored form recorded at build time (`path/_meta/storage`) —
-    * None for a pre-manifest index (legacy layouts fall back to schema
-    * inference). The manifest, not the data files, is what appends
-    * dispatch on: schema inference from `assigned/` breaks the moment
-    * every live generation of a quantized index is EMPTY (all rows
-    * tombstoned and reclaimed), and a fallback-to-float32 append would
-    * silently corrupt the scoring dispatch of a pq/int8 index.
-    */
-  private[sim] def readStorageManifest(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[String] =
-    readMetaFile(spark, path, "storage").map { s =>
-      require(Storages(s),
-        s"$path/_meta/storage holds '$s', not one of ${Storages.mkString("/")}")
-      s
-    }
+  // ---- the manifest and the handle: what one build fixes ----------------
 
-  // ---- the index handle: what one build fixes, read once per build ----
+  /** The one record of an index's stored form, `path/_meta/manifest`:
+    * the candidate payload (`storage`, one of [[Storages]]) and the
+    * `assigned/` layout schema (partition columns `cell` and `g` as
+    * long). [[buildIvfIndex]] writes it before any assignment lands,
+    * with the layout of the write's own plan; the [[IndexHandle]] reads
+    * it once. Appends encode and queries score by `storage`, scans read
+    * with `layout` — nothing infers either from the data files, which
+    * deletes can empty and which an append of the wrong form could
+    * otherwise corrupt.
+    */
+  private[sim] final case class IndexManifest(storage: String, layout: StructType) {
+    def json: String = {
+      import org.json4s._
+      import org.json4s.jackson.JsonMethods.{compact, parse, render}
+      compact(render(JObject("storage" -> JString(storage),
+        "layout" -> parse(layout.json))))
+    }
+  }
+
+  /** The manifest of the index at `path` — failing by name when there is
+    * none: the directory is not a [[buildIvfIndex]] index, or it was
+    * built before manifests were recorded.
+    */
+  private def readManifest(spark: SparkSession, path: String): IndexManifest = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact, parse, render}
+    val p = metaFile(path, "manifest")
+    val text = readFile(hadoopFs(spark, p), p).getOrElse(throw new IllegalStateException(
+      s"$path has no index manifest ($p): it is not a buildIvfIndex index, or it " +
+        "was built before manifests were recorded — rebuild it with buildIvfIndex"))
+    val j = parse(text)
+    (j \ "storage", j \ "layout") match {
+      case (JString(s), layout: JObject) if Storages(s) =>
+        IndexManifest(s, DataType.fromJson(compact(render(layout))).asInstanceOf[StructType])
+      case _ => throw new IllegalStateException(
+        s"$p is not an index manifest (storage one of ${Storages.mkString("/")} " +
+          s"plus a layout schema): $text")
+    }
+  }
+
+  /** The stored form recorded at build time. */
+  private[sim] def readStorageManifest(spark: SparkSession, path: String): String =
+    readManifest(spark, path).storage
 
   /** A pq index's codebooks: per-sub kernel entries `(cid, cv, cn2)` and
     * (pqM, w), plus the (sub, cid, cv) rows the ADC lookup-table build
@@ -535,14 +564,11 @@ object Similarity {
   /** What one BUILD of a persisted index fixes, held on the driver so a
     * call pays only for what changes between calls (generations,
     * tombstones, the probed cells' files): the collected centroid
-    * entries, the stored form, the `assigned/` layout schema (scans read
-    * with it — no footer-inference job) and, for a pq index, the
-    * codebooks. Appends, deletes and compactions never move any of them;
-    * a rebuild writes new centroid files, which is what `stamp` — the
-    * `centroids/` listing at open — detects (see [[openIndex]]).
+    * entries, the [[IndexManifest]] and, for a pq index, the codebooks.
+    * Appends, deletes and compactions never move any of them; a rebuild
+    * writes new centroid files, which is what `stamp` — the `centroids/`
+    * listing at open — detects (see [[openIndex]]).
     *
-    * Pre-manifest indexes (no `_meta/layout`) get the layout inferred
-    * once, on first need; the stored form falls back to it as before.
     * Committed tombstone epochs are immutable, so each one's schema is
     * resolved (or recorded by its writer) once. Holds arrays and schemas
     * only — never a DataFrame or cached blocks.
@@ -551,33 +577,10 @@ object Similarity {
       val path: String,
       val stamp: Seq[(String, Long)],
       val cents: IndexedSeq[(Long, Array[Float], Double)],
-      manifest: Option[String],
-      @volatile private var layoutSeen: Option[StructType],
+      val manifest: IndexManifest,
       @volatile private var booksSeen: Option[PqBooks]) {
 
     val tombSchemas = scala.collection.concurrent.TrieMap[Long, StructType]()
-
-    /** The `assigned/` schema (partition columns `cell`, `g` as long), or
-      * None while nothing has ever been stored.
-      */
-    def layout(spark: SparkSession): Option[StructType] =
-      layoutSeen.orElse {
-        val inferred =
-          try Some(longPartitions(spark.read.parquet(s"$path/assigned").schema))
-          catch { case _: AnalysisException => None }
-        inferred.foreach(learnLayout)
-        inferred
-      }
-
-    def learnLayout(s: StructType): Unit = if (layoutSeen.isEmpty) layoutSeen = Some(s)
-
-    /** The build-time manifest, or — pre-manifest — the form the layout
-      * holds (float32 when nothing is stored yet).
-      */
-    def storage(spark: SparkSession): String =
-      manifest.getOrElse(layout(spark).map(_.fieldNames.toSet).fold("float32") { cols =>
-        if (cols("codes")) "pq" else if (cols("q8")) "int8" else "float32"
-      })
 
     def books(spark: SparkSession): PqBooks = booksSeen.getOrElse {
       val b = readPqBooks(spark, path)
@@ -586,8 +589,8 @@ object Similarity {
     }
   }
 
-  /** A layout schema with the partition columns typed as written (long):
-    * cell ids are corpus ids, so an inferred int would not hold them all.
+  /** A layout schema with the partition columns last, typed as written
+    * (long): cell ids are corpus ids, so an int would not hold them all.
     */
   private def longPartitions(s: StructType): StructType =
     StructType(s.filterNot(f => f.name == "cell" || f.name == "g"))
@@ -610,70 +613,71 @@ object Similarity {
     * part-file names, so a changed listing means a new build.
     */
   private def centroidStamp(spark: SparkSession, path: String): Seq[(String, Long)] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    val fs = hadoopFs(spark, dir)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).iterator
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-      .map(f => f.getPath.getName -> f.getLen).toSeq.sorted
+    val dir = new Path(s"$path/centroids")
+    dataFiles(hadoopFs(spark, dir), dir)
+      .map(f => f.getPath.getName -> f.getLen).sorted
   }
 
   /** The handle of the index at `path`: the open one while its centroid
     * listing still matches (one listing per call), else read from the
-    * store — centroids collected, manifests read.
+    * store — manifest read, centroids collected.
     */
   private def openIndex(spark: SparkSession, path: String): IndexHandle = {
     val stamp = centroidStamp(spark, path)
     openIndexes.synchronized(Option(openIndexes.get(path)))
       .filter(_.stamp == stamp)
       .getOrElse {
+        val manifest = readManifest(spark, path)
         val h = new IndexHandle(path, stamp,
-          collectCentEntries(spark.read.parquet(s"$path/centroids")),
-          readStorageManifest(spark, path),
-          readMetaFile(spark, path, "layout")
-            .map(j => DataType.fromJson(j).asInstanceOf[StructType]),
-          None)
+          collectCentEntries(spark.read.parquet(s"$path/centroids")), manifest, None)
         keepOpen(h)
         h
       }
   }
 
-  /** Whole-file-then-rename publish of a tiny `path/_meta/<name>` record
-    * (the `_gens` pattern: the file appears atomically or not at all).
+  // ---- small whole files: the manifest, watermarks, `_gens` summaries ---
+
+  private def metaFile(path: String, name: String): Path =
+    new Path(s"$path/_meta/$name")
+
+  /** Publish `content` as the file `dst`, whole: written to a dot-temp
+    * beside it and renamed in (replacing a previous version), so a reader
+    * sees the complete file or none.
     */
-  private def writeMetaFile(spark: org.apache.spark.sql.SparkSession,
-                            path: String, name: String, content: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    val fs = hadoopFs(spark, dir)
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
+  private def publishFile(fs: FileSystem, dst: Path, content: String): Unit = {
+    fs.mkdirs(dst.getParent)
+    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
     val out = fs.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, name)
     fs.delete(dst, false)
     fs.rename(tmp, dst)
   }
 
-  private def readMetaFile(spark: org.apache.spark.sql.SparkSession,
-                           path: String, name: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_meta/$name")
-    val fs = hadoopFs(spark, p)
-    if (!fs.exists(p)) None
-    else {
+  /** A [[publishFile]]d file's content, None when it does not exist. */
+  private def readFile(fs: FileSystem, p: Path): Option[String] =
+    try {
       val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      Some(s)
+      Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close())
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** The data files directly under `dir`, none when it is missing —
+    * Hadoop's hidden-file rule: `_SUCCESS` and the `.crc` sidecars are
+    * not data.
+    */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
-  }
+    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** Column names the cell-partitioned layout reserves for its own payload,
     * partitioning and query plumbing. `carry` metadata may not collide with
-    * them: the stored-form dispatch is by schema (a float32 index with a
-    * carry column named `codes` would silently take the PQ scoring branch
-    * at query time), and the query join aliases would shadow a carry named
-    * `q_id`/`cos` — so the collision fails at BUILD time, by name.
+    * them: the encode would overwrite a carry named like a payload column
+    * (`codes` on a pq index, `q8` on an int8 one), and the query join
+    * aliases would shadow a carry named `q_id`/`cos` — so the collision
+    * fails at BUILD time, by name.
     */
   val ReservedIndexCols: Set[String] = Set(
     "c_id", "v", "n", "cell", "g", "__g", "__pqb", "codes", "rn", "q8",
@@ -715,28 +719,16 @@ object Similarity {
     */
   def appendToIvfIndex(delta: DataFrame, path: String,
                        idCol: String = "vec_id", vecCol: String = "embedding",
-                       carry: Seq[String] = Nil,
-                       storage: Option[String] = None): Unit = {
+                       carry: Seq[String] = Nil): Unit = {
     requireCarryNames(carry)
     val spark = delta.sparkSession
     val h = openIndex(spark, path)
-    // the stored form follows the EXISTING index (an append can never
-    // silently mix storage forms): the build-time manifest is the
-    // authority — unlike the data files, it survives a fully-reclaimed
-    // index (every live generation emptied by deletes), where schema
-    // inference would fall back to float32 and silently corrupt a
-    // quantized index's scoring dispatch. The layout schema remains only
-    // as the pre-manifest legacy path; the explicit override only
-    // matters when neither exists yet.
-    val stored = storage match {
-      case Some(s) =>
-        require(Storages(s),
-          s"storage must be one of ${Storages.mkString("/")}, got $s")
-        s
-      case None => h.storage(spark)
-    }
-    h.learnLayout(assignIntoIndex(delta, path, SaveMode.Append, idCol, vecCol,
-      carry, stored, h))
+    // the stored form is the manifest's, so an append never mixes forms;
+    // new rows land in their cell's LIVE generation (compaction bumps it)
+    val assignedRoot = s"$path/assigned"
+    val (_, gens) = readGenSummary(hadoopFs(spark, new Path(assignedRoot)), assignedRoot)
+    writeIndexRows(indexRows(delta, h.cents, h.manifest.storage, h.books(spark),
+      gens, idCol, vecCol, carry), path, SaveMode.Append)
   }
 
   /** Streaming form of [[appendToIvfIndex]]: every micro-batch of
@@ -817,22 +809,25 @@ object Similarity {
     }
   }
 
-  /** The index write: assign `vecs` against the index's centroids
-    * ([[assignCells]] over the handle's entries — what the build stored)
-    * and write into the cell-partitioned layout under `mode`. With
-    * `storage = "int8"` the stored
-    * payload is the SQ8 form ([[withQuantized]]: `q8` int array +
-    * `q8_scale`) plus the integer norm `qn` INSTEAD of the float vector —
-    * assignment still scores the float vector (centroids stay float;
-    * they are the small side), only the per-vector storage shrinks.
-    * Returns the layout schema written.
+  /** The rows an index write stores: `vecs` assigned against `cents`
+    * ([[assignCells]] — what the build stored), encoded in `storage` and
+    * stamped with each cell's live generation `g` from `gens` (0 for a
+    * cell absent from it). Unexecuted: [[buildIvfIndex]] takes the
+    * manifest's layout from this plan's schema before writing it. With
+    * `storage = "int8"` the stored payload is the SQ8 form
+    * ([[withQuantized]]: `q8` int array + `q8_scale`) plus the integer
+    * norm `qn` INSTEAD of the float vector — assignment still scores the
+    * float vector (centroids stay float; they are the small side), only
+    * the per-vector storage shrinks. `books` is read for pq only.
     */
-  private def assignIntoIndex(vecs: DataFrame, path: String, mode: SaveMode,
-                              idCol: String, vecCol: String,
-                              carry: Seq[String], storage: String,
-                              h: IndexHandle): StructType = {
+  private def indexRows(vecs: DataFrame,
+                        cents: IndexedSeq[(Long, Array[Float], Double)],
+                        storage: String, books: => PqBooks,
+                        gens: Map[Long, Long],
+                        idCol: String, vecCol: String,
+                        carry: Seq[String]): DataFrame = {
     val spark = vecs.sparkSession
-    val assigned = assignCells(vecs, h.cents, idCol, vecCol, carry)
+    val assigned = assignCells(vecs, cents, idCol, vecCol, carry)
     val stored = storage match {
       case "float32" => assigned
       case "int8" =>
@@ -854,7 +849,7 @@ object Similarity {
         // of that folds into per-row expressions with identical math
         // (same native L2 fold, same (d2, cid) tie-break, same sub-order
         // left fold for rn — parity-pinned by the s15/s16 oracle rows).
-        val b = h.books(spark)
+        val b = books
         // one shared `__pqb` struct column: codes and rn both read it, and
         // CollapseProject does not inline a non-cheap alias referenced
         // twice — the kernel runs once per row, not once per consumer
@@ -864,26 +859,18 @@ object Similarity {
           .withColumn("rn", col("__pqb").getField("rn"))
           .drop("__pqb", "v", "n")
     }
-    // stamp each row's GENERATION: new rows always land in their cell's
-    // LIVE generation dir (compaction bumps it — see [[compactIvfIndex]]);
-    // a build starts every cell at g=0, an append resolves the current
-    // summary so appended files join the generation readers resolve
-    val assignedRoot = s"$path/assigned"
-    val genStamped = mode match {
-      case SaveMode.Overwrite => stored.withColumn("g", lit(0L))
-      case _ =>
-        val (_, gens) = readGenSummary(
-          hadoopFs(spark, new org.apache.hadoop.fs.Path(assignedRoot)),
-          assignedRoot)
-        if (gens.isEmpty) stored.withColumn("g", lit(0L))
-        else {
-          val genDf = broadcast(
-            spark.createDataFrame(gens.toSeq).toDF("cell", "__g"))
-          stored.join(genDf, Seq("cell"), "left")
-            .withColumn("g", coalesce(col("__g"), lit(0L))).drop("__g")
-        }
+    if (gens.isEmpty) stored.withColumn("g", lit(0L))
+    else {
+      val genDf = broadcast(
+        spark.createDataFrame(gens.toSeq).toDF("cell", "__g"))
+      stored.join(genDf, Seq("cell"), "left")
+        .withColumn("g", coalesce(col("__g"), lit(0L))).drop("__g")
     }
-    genStamped
+  }
+
+  /** Write [[indexRows]] into the cell-partitioned layout under `mode`. */
+  private def writeIndexRows(rows: DataFrame, path: String, mode: SaveMode): Unit =
+    rows
       // cluster by cell BEFORE the partitioned write: the groupBy output
       // is hashed on c_id, so without this every write task holds rows of
       // ~every cell and opens one parquet writer per cell — file count
@@ -897,57 +884,42 @@ object Similarity {
       // (1.55 s of a 1.67 s write at sf0.1, 0.56 s cpu). With the count
       // pinned the cells spread across min(cells, shuffle width) writer
       // tasks; hashing by cell keeps file count O(cells) either way.
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("cell"))
-      .write.mode(mode).partitionBy("cell", "g").parquet(assignedRoot)
-    longPartitions(genStamped.schema)
-  }
+      .repartition(rows.sparkSession.sessionState.conf.numShufflePartitions, col("cell"))
+      .write.mode(mode).partitionBy("cell", "g").parquet(s"$path/assigned")
 
   // ---- generation + tombstone bookkeeping of the persisted layout ------
 
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-                       p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
+  private def hadoopFs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Newest committed generation summary under `assigned/_gens`:
     * (version, cell → live generation). Cells absent from the map — never
     * compacted — live at generation 0, so a fresh index needs no summary
-    * at all. Summary files are written whole to a dot-temp and RENAMED in,
-    * so the newest listed version is always complete; the `_` prefix keeps
-    * the dir invisible to Spark's partition discovery.
+    * at all. Each version `v<n>` is a [[publishFile]], so the newest
+    * listed version is always complete; the `_` prefix keeps the dir
+    * invisible to Spark's partition discovery.
     */
-  private def readGenSummary(fs: org.apache.hadoop.fs.FileSystem,
-                             assignedRoot: String): (Long, Map[Long, Long]) = {
-    val gens = new org.apache.hadoop.fs.Path(s"$assignedRoot/_gens")
+  private def readGenSummary(fs: FileSystem, assignedRoot: String): (Long, Map[Long, Long]) = {
+    val gens = new Path(s"$assignedRoot/_gens")
     if (!fs.exists(gens)) return (0L, Map.empty)
     val vers = fs.listStatus(gens).map(_.getPath.getName)
       .filter(_.matches("v\\d+")).map(_.stripPrefix("v").toLong)
     if (vers.isEmpty) return (0L, Map.empty)
     val ver = vers.max
-    val in = fs.open(new org.apache.hadoop.fs.Path(gens, s"v$ver"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    val txt = readFile(fs, new Path(gens, s"v$ver")).getOrElse("")
     (ver, txt.split("\n").iterator.filter(_.nonEmpty).map { l =>
       val Array(c, g) = l.split(" "); c.toLong -> g.toLong
     }.toMap)
   }
 
-  private def writeGenSummary(fs: org.apache.hadoop.fs.FileSystem,
-                              assignedRoot: String, ver: Long,
-                              m: Map[Long, Long]): Unit = {
-    val gens = new org.apache.hadoop.fs.Path(s"$assignedRoot/_gens")
-    fs.mkdirs(gens)
-    val tmp = new org.apache.hadoop.fs.Path(gens, s".v$ver.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(m.toSeq.sorted.map { case (c, g) => s"$c $g" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(gens, s"v$ver"))
-  }
+  private def writeGenSummary(fs: FileSystem, assignedRoot: String, ver: Long,
+                              m: Map[Long, Long]): Unit =
+    publishFile(fs, new Path(s"$assignedRoot/_gens/v$ver"),
+      m.toSeq.sorted.map { case (c, g) => s"$c $g" }.mkString("\n"))
 
   /** The cell ids present on disk (one root listing). */
-  private def cellsOnDisk(fs: org.apache.hadoop.fs.FileSystem,
-                          assignedRoot: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(assignedRoot)
+  private def cellsOnDisk(fs: FileSystem, assignedRoot: String): Seq[Long] = {
+    val root = new Path(assignedRoot)
     if (!fs.exists(root)) return Nil
     fs.listStatus(root).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
@@ -957,11 +929,11 @@ object Similarity {
   /** The LIVE generation directories for `cells` (every on-disk cell when
     * None), as explicit paths the scan is constructed over.
     */
-  private def liveAssignedDirs(spark: org.apache.spark.sql.SparkSession,
+  private def liveAssignedDirs(spark: SparkSession,
                                path: String,
                                cells: Option[Seq[Long]]): Seq[String] = {
     val assignedRoot = s"$path/assigned"
-    val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(assignedRoot))
+    val fs = hadoopFs(spark, new Path(assignedRoot))
     val onDisk = cellsOnDisk(fs, assignedRoot)
     val (_, gens) = readGenSummary(fs, assignedRoot)
     val sel = cells.fold(onDisk)(cs => cs.filter(onDisk.toSet))
@@ -979,26 +951,21 @@ object Similarity {
     * is the physical row set; query paths anti-join the live tombstone
     * epoch on top.
     */
-  def readIvfAssigned(spark: org.apache.spark.sql.SparkSession, path: String,
+  def readIvfAssigned(spark: SparkSession, path: String,
                       cells: Option[Seq[Long]] = None): DataFrame = {
     val dirs = liveAssignedDirs(spark, path, cells)
     require(dirs.nonEmpty, s"$path/assigned holds no cell directories")
     scanLive(spark, openIndex(spark, path), dirs)
   }
 
-  /** The scan over live generation `dirs`, read with the handle's layout
-    * schema (no footer-inference job; dirs without data files read as
-    * zero rows) — inferred only while no layout is known, which throws
-    * AnalysisException when the dirs hold no data file. `g` dropped,
-    * `cell` as long.
+  /** The scan over live generation `dirs`, read with the manifest's
+    * layout schema (no footer-inference job; dirs without data files
+    * read as zero rows), `g` dropped.
     */
-  private def scanLive(spark: SparkSession, h: IndexHandle,
-                       dirs: Seq[String]): DataFrame = {
-    val r = spark.read.option("basePath", s"${h.path}/assigned")
-    h.layout(spark).fold(r)(r.schema).parquet(dirs: _*)
+  private def scanLive(spark: SparkSession, h: IndexHandle, dirs: Seq[String]): DataFrame =
+    spark.read.option("basePath", s"${h.path}/assigned")
+      .schema(h.manifest.layout).parquet(dirs: _*)
       .drop("g")
-      .withColumn("cell", col("cell").cast("long"))
-  }
 
   /** [[scanLive]] when `dirs` hold a data file; None when nothing is
     * stored under them (no cell dir, or every live generation emptied by
@@ -1007,23 +974,7 @@ object Similarity {
   private def liveRows(spark: SparkSession, h: IndexHandle,
                        dirs: Seq[String]): Option[DataFrame] =
     if (dirs.isEmpty) None
-    else try Some(scanLive(spark, h, dirs)).filter(_.inputFiles.nonEmpty)
-    catch { case _: AnalysisException => None }
-
-  /** Committed `epoch=<id>` ids under `dir`, ascending — the
-    * `_SUCCESS`-marker definition (the CurationStream epoch discipline)
-    * shared by the tombstone readers, the delete writer, the epoch pruner
-    * and the curation hook that reads CurationStream's own epochs.
-    */
-  private def committedEpochs(fs: org.apache.hadoop.fs.FileSystem,
-                              dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("epoch="))
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(p, s"$d/_SUCCESS")))
-      .map(_.stripPrefix("epoch=").toLong).sorted.toSeq
-  }
+    else Some(scanLive(spark, h, dirs)).filter(_.inputFiles.nonEmpty)
 
   /** The live tombstone set: the newest committed epoch's single-column
     * (`c_id`) frame, its on-disk parquet bytes — the size the query-path
@@ -1040,15 +991,11 @@ object Similarity {
     * coalesced file); a committed epoch is immutable, so its schema is
     * resolved once per handle and the read runs no inference job.
     */
-  private def liveTombstones(spark: SparkSession,
-                             h: IndexHandle): Option[Tombstones] = {
-    val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(h.path))
-    committedEpochs(fs, s"${h.path}/tombstones").lastOption.map { e =>
+  private def liveTombstones(spark: SparkSession, h: IndexHandle): Option[Tombstones] = {
+    val fs = hadoopFs(spark, new Path(h.path))
+    committedEpochs(fs, new Path(s"${h.path}/tombstones")).lastOption.map { e =>
       val dir = s"${h.path}/tombstones/epoch=$e"
-      // Hadoop's hidden-file rule: `_SUCCESS` and the `.crc` sidecars are not data
-      def data(name: String) = !name.startsWith("_") && !name.startsWith(".")
-      val bytes = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .filter(f => f.isFile && data(f.getPath.getName)).map(_.getLen).sum
+      val bytes = dataFiles(fs, new Path(dir)).map(_.getLen).sum
       val schema = h.tombSchemas.getOrElseUpdate(e, spark.read.parquet(dir).schema)
       Tombstones(e, spark.read.schema(schema).parquet(dir), bytes)
     }
@@ -1073,8 +1020,7 @@ object Similarity {
     */
   val TombstoneBroadcastMaxBytes: Long = 64L << 20
 
-  private def tombstoneBroadcastMax(
-      spark: org.apache.spark.sql.SparkSession): Long =
+  private def tombstoneBroadcastMax(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.index.tombstoneBroadcastMaxBytes")
       .map(_.toLong).getOrElse(TombstoneBroadcastMaxBytes)
 
@@ -1085,16 +1031,14 @@ object Similarity {
     * keeps its epoch through this one however many deletes ran in between
     * — the window the generation prune gives its files. Deletes never prune.
     */
-  private def pruneTombEpochs(spark: org.apache.spark.sql.SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
-                              path: String): Unit = {
-    val epochs = committedEpochs(fs, s"$path/tombstones")
+  private def pruneTombEpochs(fs: FileSystem, path: String): Unit = {
+    val epochs = committedEpochs(fs, new Path(s"$path/tombstones"))
     if (epochs.nonEmpty) {
-      val floor = readMetaFile(spark, path, "tomb_floor").map(_.toLong)
+      val floor = readFile(fs, metaFile(path, "tomb_floor")).map(_.toLong)
       floor.foreach(f => epochs.filter(_ < f).foreach(id =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones/epoch=$id"), true)))
+        fs.delete(new Path(s"$path/tombstones/epoch=$id"), true)))
       if (!floor.contains(epochs.last))
-        writeMetaFile(spark, path, "tomb_floor", epochs.last.toString)
+        publishFile(fs, metaFile(path, "tomb_floor"), epochs.last.toString)
     }
   }
 
@@ -1132,7 +1076,7 @@ object Similarity {
     * id space — the same id-reuse discipline every tombstone-based store
     * asks for.
     */
-  def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
+  def deleteFromIvfIndex(spark: SparkSession,
                          path: String, ids: DataFrame,
                          idCol: String = "vec_id"): Long = {
     val add = ids.select(col(idCol).as("c_id")).distinct()
@@ -1200,19 +1144,20 @@ object Similarity {
     * dropped documents must version its id space or re-drop through a
     * new curation epoch — the same discipline the delete API documents.
     */
-  def deleteCurationDropsFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
+  def deleteCurationDropsFromIvfIndex(spark: SparkSession,
                                       indexPath: String, epochDir: String,
                                       dropIdCol: String = "doc_id"): Option[Long] = {
-    val fs = hadoopFs(spark, new org.apache.hadoop.fs.Path(epochDir))
-    val epochs = committedEpochs(fs, epochDir)
+    val fs = hadoopFs(spark, new Path(epochDir))
+    val epochs = committedEpochs(fs, new Path(epochDir))
     if (epochs.isEmpty) return None
     val newest = epochs.max
-    val applied = readMetaFile(spark, indexPath, "curation_applied").map(_.toLong)
+    val indexFs = hadoopFs(spark, new Path(indexPath))
+    val applied = readFile(indexFs, metaFile(indexPath, "curation_applied")).map(_.toLong)
     if (applied.exists(_ >= newest)) return None
     val drops = spark.read.parquet(s"$epochDir/epoch=$newest")
       .select(col(dropIdCol)).distinct()
     val priorDir = applied.map(a => s"$epochDir/epoch=$a")
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/_SUCCESS")))
+      .filter(d => fs.exists(new Path(s"$d/_SUCCESS")))
     val delta = priorDir match {
       case Some(d) =>
         // cheap path: cumulative epochs make "new since last applied" a
@@ -1233,9 +1178,14 @@ object Similarity {
     val r = deleteFromIvfIndex(spark, indexPath, delta, dropIdCol)
     // watermark AFTER the tombstone state covers `newest` — the crash
     // window replays idempotently (see scaladoc)
-    writeMetaFile(spark, indexPath, "curation_applied", newest.toString)
+    publishFile(indexFs, metaFile(indexPath, "curation_applied"), newest.toString)
     Some(r)
   }
+
+  /** A cell holding more data files than this in its live generation is
+    * rewritten by [[compactIvfIndex]] (to one file).
+    */
+  val MaxFilesPerCell: Int = 1
 
   /** Compact the small files a persisted index accumulates under
     * [[appendToIvfIndex]]/[[appendToIvfIndexStream]] and physically
@@ -1245,7 +1195,7 @@ object Similarity {
     * daily-append deployment drifts toward many tiny files per cell — and
     * at 100 TB the per-file open/footer cost starts to rival the row scan
     * itself. Rewrites ONLY (a) the cells holding more than
-    * `maxFilesPerCell` data files and (b) the cells holding tombstoned
+    * [[MaxFilesPerCell]] data files and (b) the cells holding tombstoned
     * rows, one output file per rewritten cell; untouched cells' files are
     * never read or replaced. Returns the rewritten cell ids.
     *
@@ -1288,14 +1238,12 @@ object Similarity {
     * twin, `s17_ivf_deleted` pins the delete lifecycle at both read
     * points).
     */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                      maxFilesPerCell: Int = 1): Seq[Long] = {
-    require(maxFilesPerCell >= 1, s"maxFilesPerCell >= 1, got $maxFilesPerCell")
+  def compactIvfIndex(spark: SparkSession, path: String): Seq[Long] = {
     val h = openIndex(spark, path)
     val assignedRoot = s"$path/assigned"
-    val root = new org.apache.hadoop.fs.Path(assignedRoot)
+    val root = new Path(assignedRoot)
     val fs = hadoopFs(spark, root)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/assigned_compacting")
+    val staging = new Path(s"$path/assigned_compacting")
     // staging only ever holds copies (live generations are never moved),
     // so a crashed run's leftover is garbage by construction
     fs.delete(staging, true)
@@ -1304,15 +1252,9 @@ object Similarity {
     def gen(c: Long): Long = gens.getOrElse(c, 0L)
     val onDisk = cellsOnDisk(fs, assignedRoot)
     if (onDisk.isEmpty) return Nil
-    def dataFiles(p: org.apache.hadoop.fs.Path): Int =
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    val fileTargets = onDisk.filter(c =>
-      dataFiles(new org.apache.hadoop.fs.Path(s"$assignedRoot/cell=$c/g=${gen(c)}")) >
-        maxFilesPerCell)
+    val fileTargets = onDisk.filter(c => dataFiles(fs,
+      new Path(s"$assignedRoot/cell=$c/g=${gen(c)}")).length >
+        MaxFilesPerCell)
     // only a NON-EMPTY live tombstone set drives work; the empty epoch a
     // previous retirement wrote is already the retired state
     val tombs = liveTombstones(spark, h).map(_.ids).filter(!_.isEmpty)
@@ -1344,8 +1286,8 @@ object Similarity {
         .parquet(staging.toString)
       targets.foreach { c =>
         val n = nextGen(c)
-        val src = new org.apache.hadoop.fs.Path(s"$staging/cell=$c/g=$n")
-        val dst = new org.apache.hadoop.fs.Path(s"$assignedRoot/cell=$c/g=$n")
+        val src = new Path(s"$staging/cell=$c/g=$n")
+        val dst = new Path(s"$assignedRoot/cell=$c/g=$n")
         // dst can pre-exist only from a crashed run that never published
         // its summary — no reader can hold it, replacing it is safe
         fs.delete(dst, true)
@@ -1358,7 +1300,7 @@ object Similarity {
       // lagging readers; anything at or below K-1 has now survived a full
       // compaction cycle unreferenced
       targets.foreach { c =>
-        val cd = new org.apache.hadoop.fs.Path(s"$assignedRoot/cell=$c")
+        val cd = new Path(s"$assignedRoot/cell=$c")
         fs.listStatus(cd).map(_.getPath)
           .filter(_.getName.startsWith("g="))
           .filter(_.getName.stripPrefix("g=").toLong <= nextGen(c) - 2)
@@ -1370,12 +1312,13 @@ object Similarity {
     // reader-ordering contract above): the retired state is an empty
     // NEWER epoch — files a lagging reader resolved are never deleted
     tombs.foreach { t =>
-      val next = committedEpochs(fs, s"$path/tombstones").lastOption.getOrElse(-1L) + 1L
+      val next = committedEpochs(fs, new Path(s"$path/tombstones"))
+        .lastOption.getOrElse(-1L) + 1L
       t.limit(0).coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$path/tombstones/epoch=$next")
       h.tombSchemas(next) = t.schema
     }
-    pruneTombEpochs(spark, fs, path)
+    pruneTombEpochs(fs, path)
     targets
   }
 
@@ -1398,7 +1341,7 @@ object Similarity {
     * rows, so a duplicate id shows as an over-full group in the rows
     * already collected and fails here, by name, with no extra job.
     */
-  private def probeCells(spark: org.apache.spark.sql.SparkSession,
+  private def probeCells(spark: SparkSession,
                          queries: DataFrame,
                          cents: IndexedSeq[(Long, Array[Float], Double)],
                          p: Int, idCol: String, vecCol: String)
@@ -1486,7 +1429,7 @@ object Similarity {
     * note) — the automatic form of the measured nprobe×4 remedy for
     * high-selectivity filters.
     */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfTopKIndexed(spark: SparkSession, path: String,
                      queries: DataFrame, k: Int, nprobe: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      candidateFilter: Option[Column] = None,
@@ -1521,7 +1464,7 @@ object Similarity {
             liveAssignedDirs(spark, path, Some(probed0.toIndexedSeq)))
           .fold(0.0)(_.filter(f).count().toDouble)
         val cap = cellsOnDisk(
-          hadoopFs(spark, new org.apache.hadoop.fs.Path(assignedRoot)),
+          hadoopFs(spark, new Path(assignedRoot)),
           assignedRoot).length.max(nprobe)
         if (qual <= 0) cap // only a full sweep can honor the filter
         else {
@@ -1575,7 +1518,7 @@ object Similarity {
     // with the partition pruning) — candidates are filtered BEFORE
     // scoring, so top-k is over the qualifying vectors only
     val assigned = candidateFilter.fold(assignedLive)(assignedLive.filter)
-    // dispatch on the STORED schema: an `int8` index holds q8 + integer
+    // dispatch on the manifest's stored form: an `int8` index holds q8 + integer
     // norms instead of float vectors (s7 integer-only scoring, queries
     // quantized on the fly, per-vector scales cancel); a `pq` index holds
     // codes + reconstruction norms and scores by ADC — per-query lookup
@@ -1587,8 +1530,8 @@ object Similarity {
     // (qLoc), never from the distributed queries plan — the expressions
     // are unchanged, so values are bit-identical, but the broadcast
     // builds stop re-scanning the queries source once per branch
-    val scored =
-      if (assigned0.columns.contains("codes")) {
+    val scored = h.manifest.storage match {
+      case "pq" =>
         val b = h.books(spark)
         val (pqM, w) = (b.pqM, b.w)
         val qtab = qLoc.crossJoin(broadcast(b.local(spark)))
@@ -1607,7 +1550,7 @@ object Similarity {
             lit(0.0d), (a, x) => a + x))
           .withColumn("cos", col("num") / (col("qn") * col("rn")))
           .select(col("q_id"), col("c_id"), col("cos"))
-      } else if (assigned0.columns.contains("q8")) {
+      case "int8" =>
         val qq = withQuantized(qLoc.select(col("q_id"), col("v")), "v", "qa")
           .withColumn("qan", sqrt(IntDotProduct(col("qa"), col("qa")).cast(DoubleType)))
           .select(col("q_id"), col("qa"), col("qan"))
@@ -1617,7 +1560,8 @@ object Similarity {
           .withColumn("cos",
             IntDotProduct(col("qa"), col("q8")).cast(DoubleType) / (col("qan") * col("qn")))
           .select(col("q_id"), col("c_id"), col("cos"))
-      } else scoreFloat(assigned, qCells, qLoc)
+      case _ => scoreFloat(assigned, qCells, qLoc)
+    }
     rankTopK(scored, k)
   }
 
@@ -1639,7 +1583,7 @@ object Similarity {
     * the id-join prunes row groups instead of reading every vector —
     * same contract as any id-addressed fetch.
     */
-  def ivfTopKReranked(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfTopKReranked(spark: SparkSession, path: String,
                       queries: DataFrame, corpus: DataFrame, k: Int,
                       nprobe: Int, rerankR: Int = 64,
                       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -1661,22 +1605,28 @@ object Similarity {
     rankTopK(scored, k)
   }
 
+  /** The grid the Lloyd means' LONG sums scale components by
+    * ([[refineCentroids]], the pq codebook refine): exact on
+    * [[PlantedClusters]] vectors, whose components are multiples of
+    * 1/1024 — the scale the oracle rows replay.
+    */
+  val GridScale: Int = 1024
+
   /** One Lloyd refinement step: assign every corpus vector to its nearest
     * (max-cosine) current centroid, then replace each nonempty cell's
     * centroid with the componentwise mean of its members. The assignment is
     * the map-only [[assignCells]] every index build runs; the mean is
     * computed as `dim` LONG sum-aggregates in ONE
     * groupBy (map-side partial sums, one shuffle on the cell id) over
-    * components scaled by `gridScale` — so the aggregation is
+    * components scaled by [[GridScale]] — so the aggregation is
     * order-independent: exact when components are multiples of
-    * 1/gridScale (the [[PlantedClusters]] fixture — which is what makes
+    * 1/GridScale (the [[PlantedClusters]] fixture — which is what makes
     * the refined index oracle-checkable in DuckDB), and a deterministic
     * grid-quantized mean otherwise (for a coarse quantizer, determinism
     * across 1000-executor reruns is worth more than the last float ulp).
     * Cells that attract no vectors disappear — standard k-means behavior.
     */
   def refineCentroids(corpus: DataFrame, centroids: DataFrame, dim: Int,
-                      gridScale: Int = 1024,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // the one shuffle is the (cell) mean aggregate below, with map-side
     // partial sums
@@ -1685,12 +1635,12 @@ object Similarity {
       return centroids.select(col("cid"), col("cv0")).limit(0)
     val assigned = assignCells(corpus, cents, idCol, vecCol, Nil)
     val sums = (0 until dim).map(d =>
-      sum((element_at(col("v"), d + 1) * gridScale).cast("long")).as(s"s$d"))
+      sum((element_at(col("v"), d + 1) * GridScale).cast("long")).as(s"s$d"))
     assigned.groupBy(col("cell"))
       .agg(count(lit(1)).as("cnt"), sums: _*)
       .select(col("cell").as("cid"),
         array((0 until dim).map(d =>
-          (col(s"s$d").cast(DoubleType) / (col("cnt") * lit(gridScale.toDouble)))
+          (col(s"s$d").cast(DoubleType) / (col("cnt") * lit(GridScale.toDouble)))
             .cast("float")): _*).as("cv0"))
   }
 
@@ -1733,17 +1683,17 @@ object Similarity {
   private val PqKeySpace = 1L << 20
 
   /** Read a pq index's stored codebooks — with a NAMED failure when the
-    * store is missing or empty (an empty training corpus, a torn write,
-    * or a float/int8 index asked to encode pq), instead of an opaque NPE
-    * off a null aggregate.
+    * store is missing or empty (an empty training corpus, a torn write or
+    * a deleted store), instead of an opaque NPE off a null aggregate.
     */
   private def readPqBooks(spark: SparkSession, path: String): PqBooks =
     pqBooksOf(
       try spark.read.parquet(s"$path/pq_codebooks")
       catch {
         case e: AnalysisException => throw new IllegalStateException(
-          s"$path holds no pq_codebooks — it was not built with storage=\"pq\" " +
-            "(or the codebook write was torn); rebuild with buildIvfIndex(storage = \"pq\")", e)
+          s"$path holds no pq_codebooks, though its manifest records storage pq — " +
+            "the codebook write was torn or the store deleted; rebuild with " +
+            "buildIvfIndex(storage = \"pq\")", e)
       }, path)
 
   /** Collect a (sub, cid, cv) codebook relation — the stored one, or the
@@ -1845,15 +1795,14 @@ object Similarity {
     * applies to it exactly as to the coarse quantizer.
     */
   def trainPqCodebooks(train: DataFrame, dim: Int, pqM: Int = 8, pqK: Int = 16,
-                       refineIters: Int = 1, gridScale: Int = 1024,
-                       idCol: String = "vec_id", vecCol: String = "embedding",
-                       seedSalt: String = "pq-seed"): DataFrame = {
+                       refineIters: Int = 1,
+                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(pqM >= 1 && dim % pqM == 0,
       s"dim $dim must split into pqM $pqM equal subspaces")
     require(pqK >= 1 && pqK < PqKeySpace,
       s"pqK must be in [1, $PqKeySpace), got $pqK")
     val w = dim / pqM
-    val h = graft.ops.Sampling.hashUnit(col("pid"), seedSalt)
+    val h = graft.ops.Sampling.hashUnit(col("pid"), PqSeedSalt)
     // seed pick: collect the pqK seed VECTORS in (hh, id) order — one
     // TakeOrdered job over pqK × dim floats, driver-trivial — and slice
     // them into per-sub entries locally; cid = seed rank, exactly the
@@ -1886,7 +1835,7 @@ object Similarity {
     }
     var cb: DataFrame = entriesDf(entries)
     for (_ <- 0 until refineIters) {
-      cb = refinePqCodebooks(train, entries, pqM, w, gridScale, vecCol)
+      cb = refinePqCodebooks(train, entries, pqM, w, vecCol)
       entries = pqEntries(cb.collect())._1 // (sub, cid, cv) rows
       cb = entriesDf(entries) // local relation: downstream consumers broadcast it
     }
@@ -1903,7 +1852,7 @@ object Similarity {
     */
   private def refinePqCodebooks(train: DataFrame,
                                 entries: IndexedSeq[IndexedSeq[(Int, Array[Float], Double)]],
-                                pqM: Int, w: Int, gridScale: Int,
+                                pqM: Int, w: Int,
                                 vecCol: String): DataFrame = {
     val assigned = train
       .withColumn("__pqc", PqEncode(col(vecCol), entries, w))
@@ -1913,12 +1862,12 @@ object Similarity {
           slice(col(vecCol), s * w + 1, w).as("sv"))): _*)).as("sx"))
       .select(col("sx.sub").as("sub"), col("sx.cid").as("cid"), col("sx.sv").as("sv"))
     val sums = (0 until w).map(j =>
-      sum((element_at(col("sv"), j + 1) * gridScale).cast("long")).as(s"s$j"))
+      sum((element_at(col("sv"), j + 1) * GridScale).cast("long")).as(s"s$j"))
     assigned.groupBy(col("sub"), col("cid"))
       .agg(count(lit(1)).as("cnt"), sums: _*)
       .select(col("sub"), col("cid"),
         array((0 until w).map(j =>
-          (col(s"s$j").cast(DoubleType) / (col("cnt") * lit(gridScale.toDouble)))
+          (col(s"s$j").cast(DoubleType) / (col("cnt") * lit(GridScale.toDouble)))
             .cast("float")): _*).as("cv"))
   }
 

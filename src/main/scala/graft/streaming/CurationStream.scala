@@ -228,7 +228,6 @@ object CurationStream {
     val kept = spark.read.parquet(stage1Dir).drop("batch")
     val p = new org.apache.hadoop.fs.Path(epochDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return kept
     // newest COMMITTED epoch only: a compaction crash mid-write leaves a
     // torn `epoch=<id>` dir with no _SUCCESS marker, and composing
     // against a partial drop set would silently resurrect duplicates
@@ -240,14 +239,16 @@ object CurationStream {
     kept.join(drops, Seq("doc_id"), "left_anti")
   }
 
-  /** The committed-epoch definition BOTH the reader ([[compactedView]])
-    * and the pruner ([[pruneEpochs]]) rely on — one place, so they can
-    * never disagree about what "committed" means: an `epoch=<id>` dir
-    * whose parquet job finished (`_SUCCESS` present), ascending.
+  /** The committed-epoch definition the reader ([[compactedView]]), the
+    * pruner ([[pruneEpochs]]) and the ANN index's tombstone epochs all
+    * rely on — one place, so they can never disagree about what
+    * "committed" means: an `epoch=<id>` dir under `p` whose parquet job
+    * finished (`_SUCCESS` present), ascending; none when `p` is missing.
     */
-  private def committedEpochs(fs: org.apache.hadoop.fs.FileSystem,
-                              p: org.apache.hadoop.fs.Path): Seq[Long] =
-    fs.listStatus(p).map(_.getPath.getName)
+  private[graft] def committedEpochs(fs: org.apache.hadoop.fs.FileSystem,
+                                     p: org.apache.hadoop.fs.Path): Seq[Long] =
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).map(_.getPath.getName)
       .filter(_.startsWith("epoch="))
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(p, s"$d/_SUCCESS")))
       .map(_.stripPrefix("epoch=").toLong).sorted.toSeq
@@ -291,7 +292,6 @@ object CurationStream {
     require(keep >= 1, "must retain at least the newest committed epoch")
     val p = new org.apache.hadoop.fs.Path(epochDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Nil
     val prune = committedEpochs(fs, p).dropRight(keep)
     prune.foreach(id =>
       fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$id"), true))

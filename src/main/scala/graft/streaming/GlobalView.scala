@@ -80,16 +80,29 @@ object GlobalView {
   /** `threaded_consumer.py:89-100`: update the per-domain deque, then emit
     * mean/stddev of the per-domain deque means across domains — only once
     * >= 2 domains report ("collaborative mode").
+    *
+    * The moments are exact, as in the batch A7 query
+    * (`EventAnalytics.a7AnomalyStats`, the `a7_anomaly_stats` oracle row):
+    * each rate is cast to [[graft.util.Exact.Money]], each deque mean is
+    * held as the exact decimal `L / k × Σ` with `L` the lcm of
+    * 1..`windowLen` (60 for the reference's deque(5)), the cross-domain
+    * sums of those and of their squares are exact, and only they are
+    * rounded to double. So the stream's last emission per key equals the
+    * batch query over the same rows, bit for bit (GlobalViewSpec pins it).
     */
   def anomalyStep(windowLen: Int = 5)(
       st: AnomalyState, o: AnomalyObs): (AnomalyState, Seq[AnomalyStats]) = {
     val w = (st.windows.getOrElse(o.domain, Nil) :+ o.rate).takeRight(windowLen)
     val windows = st.windows + (o.domain -> w)
     val out = if (windows.size >= 2) {
-      val means = windows.values.map(s => s.sum / s.size).toSeq
-      val m = means.sum / means.size
-      val variance = means.map(x => (x - m) * (x - m)).sum / means.size
-      Seq(AnomalyStats(o.src, o.dst_port, o.seq, windows.size, m, math.sqrt(variance)))
+      val l = (1 to windowLen).foldLeft(1)((a, b) => a / BigInt(a).gcd(b).toInt * b)
+      val ms = windows.values.map(r =>
+        r.map(BigDecimal(_).setScale(graft.util.Exact.Money.scale,
+          BigDecimal.RoundingMode.HALF_UP)).sum * (l / r.size))
+      val n = ms.size
+      val (s, s2) = (ms.sum.toDouble, ms.map(m => m * m).sum.toDouble)
+      Seq(AnomalyStats(o.src, o.dst_port, o.seq, n, s / n / l,
+        math.sqrt(math.max(s2 / n - (s / n) * (s / n), 0.0)) / l))
     } else Nil
     (AnomalyState(windows), out)
   }

@@ -47,20 +47,4 @@ object Sources {
     import spark.implicits._
     dirSource[PacketEvent](spark, dir)
   }
-
-  /** S5 — wire-string alert topic as a text-file directory (the transport
-    * the collab tests exercise; a broker connector drops in here).
-    */
-  def alertWire(spark: SparkSession, dir: String): Dataset[String] = {
-    import spark.implicits._
-    spark.readStream.text(dir).as[String]
-  }
-
-  /** S5 with the log contract — the file-backed commit log with explicit
-    * offsets (`graft.collab.AlertLog`): (offset, value) rows, atomic
-    * segment publish, checkpointed consumption position. The closest
-    * no-broker analog of the reference's Pulsar subscription.
-    */
-  def alertLog(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.collab.AlertLog.stream(spark, dir)
 }

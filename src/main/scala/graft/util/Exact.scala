@@ -43,23 +43,7 @@ object Exact {
   def davg(c: Column, dt: DecimalType = Money): Column =
     sum(c.cast(dt)).cast(DoubleType) / count(c)
 
-  /** Exact windowed sum. */
-  def dsumOver(c: Column, w: WindowSpec, dt: DecimalType = Money): Column =
-    sum(c.cast(dt)).over(w).cast(DoubleType)
-
   /** Exact windowed mean. */
   def davgOver(c: Column, w: WindowSpec, dt: DecimalType = Money): Column =
     sum(c.cast(dt)).over(w).cast(DoubleType) / count(c).over(w)
-
-  /** Population standard deviation computed from exact decimal moments:
-    * sqrt(E[x^2] - E[x]^2). The squares are per-row double products (same
-    * IEEE result on every engine) cast to decimal and summed exactly, so the
-    * result is engine- and order-independent, unlike builtin `stddev_pop`.
-    */
-  def dstddevPop(c: Column, dt: DecimalType = Fine): Column = {
-    val n = count(c).cast(DoubleType)
-    val s = sum(c.cast(dt)).cast(DoubleType)
-    val s2 = sum((c * c).cast(dt)).cast(DoubleType)
-    sqrt(greatest(s2 / n - (s / n) * (s / n), lit(0.0)))
-  }
 }

@@ -193,15 +193,17 @@ class DetectSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Set("RATE_LIMIT", "DROP_TELNET", "LOCKDOWN", "BLOCK_PORT", "UNKNOWN"))
   }
 
-  test("mitigations plan holds no broadcast exchange or broadcast join") {
-    def broadcasts(df: DataFrame) = {
-      df.collect()
-      collectWithSubqueries(df.queryExecution.executedPlan) {
-        case e: BroadcastExchangeExec => e
-        case j: BroadcastHashJoinExec => j
-        case j: BroadcastNestedLoopJoinExec => j
-      }
+  /** The broadcast exchanges and joins of `df`'s executed plan, after running it. */
+  private def broadcasts(df: DataFrame) = {
+    df.collect()
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case e: BroadcastExchangeExec => e
+      case j: BroadcastHashJoinExec => j
+      case j: BroadcastNestedLoopJoinExec => j
     }
+  }
+
+  test("mitigations plan holds no broadcast exchange or broadcast join") {
     val df = Detect.mitigations(edgeAlerts, edgeTopo)
     assert(broadcasts(df).isEmpty, s"expected no broadcast:\n${df.queryExecution.executedPlan}")
     // the probe sees the join's broadcast when there is one
@@ -216,6 +218,108 @@ class DetectSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val intIps = Seq((1, "BOT")).toDF("ip", "label")
     val e2 = intercept[IllegalArgumentException](Detect.mitigations(intIps, edgeTopo))
     assert(e2.getMessage.contains("`ip` must be a string, got IntegerType"), e2.getMessage)
+  }
+
+  /** J4 and J5 as the broadcast joins [[Detect.attributeAttackers]] and
+    * [[Bitrate.attackers]] replaced, kept here as the references their
+    * topology lookups must equal.
+    */
+  private def attributeJoinReference(rates: DataFrame, victims: DataFrame,
+                                     topology: DataFrame, threshold: Double): DataFrame =
+    rates
+      .join(victims, Seq("domain", "eth_dst"), "left_semi")
+      .filter(col("rate") > threshold)
+      .join(broadcast(topology.filter(col("is_host"))),
+        rates("dpid") === topology("dpid") && rates("in_port") === topology("port"))
+      .select(col("domain"), col("switch_name"), col("port"),
+        col("attached").as("attacker"), col("eth_dst"), col("rate"))
+
+  private def attackersJoinReference(rates: DataFrame, victims: DataFrame,
+                                     topology: DataFrame, threshold: Double): DataFrame =
+    rates
+      .join(victims.select(col("domain"), col("ipv4_dst")), Seq("domain", "ipv4_dst"), "left_semi")
+      .filter(col("kbps") > threshold)
+      .join(broadcast(topology.filter(col("is_host"))
+          .select(col("dpid"), col("port"), col("switch_name"), col("attached"))),
+        Seq("dpid"))
+      .where(col("in_port") === col("port"))
+      .select(col("domain"), col("switch_name"), col("port"),
+        col("attached").as("attacker_ip"), col("ipv4_dst").as("victim_ip"), col("kbps"))
+
+  private lazy val portTopo: DataFrame = spark.createDataFrame(
+    spark.sparkContext.parallelize(Seq(
+      Row("s1", 1L, 1, "10.0.0.1", true),
+      Row("s1", 1L, 1, "10.0.0.11", true), // a second host behind port 1
+      Row("s2", 2L, 7, "10.0.0.2", true),
+      Row("s1", 1L, 5, "s2", false),       // inter-switch link
+      Row("s3", null, 2, "10.0.0.3", true), // null dpid: never matches
+      Row("s3", 3L, null, "10.0.0.4", true), // null port: never matches
+      Row("s4", 4L, 3, "10.0.0.5", null),  // null is_host: not a host
+      Row("s5", 5L, 4, null, true))),      // host row with a null ip
+    StructType(Seq(
+      StructField("switch_name", StringType), StructField("dpid", LongType),
+      StructField("port", IntegerType), StructField("attached", StringType),
+      StructField("is_host", BooleanType))))
+
+  /** (domain, dpid, in_port, victim, rate) rows reaching every case of
+    * [[portTopo]], plus unmatched, null, below-threshold and non-victim ones.
+    */
+  private lazy val portRates: DataFrame = Seq[(String, java.lang.Long, Integer, String, Double)](
+    ("d1", 1L, 1, "v1", 80.0), ("d1", 1L, 1, "v1", 85.0), ("d2", 2L, 7, "v1", 90.0),
+    ("d1", 1L, 5, "v1", 95.0), ("d1", null, 2, "v1", 70.0), ("d1", 3L, null, "v1", 70.0),
+    ("d1", 4L, 3, "v2", 70.0), ("d1", 5L, 4, "v2", 70.0), ("d1", 9L, 9, "v1", 99.0),
+    ("d1", 1L, 1, "v1", 3.0), ("d1", 1L, 1, "vx", 99.0), ("d2", 2L, 7, "v2", 60.0)
+  ).toDF("domain", "dpid", "in_port", "victim", "rate")
+
+  private lazy val portVictims: DataFrame =
+    Seq(("d1", "v1"), ("d1", "v2"), ("d2", "v1"), ("d2", "v2")).toDF("domain", "victim")
+
+  /** Both J4/J5 forms over `topology`, each with its broadcast-join reference. */
+  private def attributions(rates: DataFrame, topology: DataFrame)
+      : Seq[(String, DataFrame, DataFrame)] = {
+    val j4 = rates.withColumnRenamed("victim", "eth_dst")
+    val j4v = portVictims.withColumnRenamed("victim", "eth_dst")
+    val j5 = rates.withColumnRenamed("victim", "ipv4_dst").withColumnRenamed("rate", "kbps")
+    val j5v = portVictims.withColumnRenamed("victim", "ipv4_dst")
+    Seq(
+      ("attributeAttackers", Detect.attributeAttackers(j4, j4v, topology, 10.0),
+        attributeJoinReference(j4, j4v, topology, 10.0)),
+      ("attackers", Bitrate.attackers(j5, j5v, topology, 10.0),
+        attackersJoinReference(j5, j5v, topology, 10.0)))
+  }
+
+  test("attacker attribution (J4/J5) equals the broadcast join: rows (as a multiset) and schema") {
+    val bigintPort = portTopo.withColumn("port", col("port").cast(LongType))
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], portTopo.schema)
+    val intDpid = portRates.withColumn("dpid", col("dpid").cast(IntegerType))
+    val cases = Seq(portRates -> portTopo, portRates -> bigintPort, portRates -> empty,
+      intDpid -> portTopo)
+    for ((rates, topology) <- cases; (name, got, want) <- attributions(rates, topology)) {
+      assert(got.schema == want.schema,
+        s"$name\n${got.schema.treeString}\nvs join\n${want.schema.treeString}")
+      val multiset = (df: DataFrame) => df.collect().map(_.toString).sorted.toSeq
+      assert(multiset(got) == multiset(want), name)
+    }
+    // the fixture reaches the two-hosts-one-port case: 2 rates x 2 hosts
+    val a = Detect.attributeAttackers(portRates.withColumnRenamed("victim", "eth_dst"),
+      portVictims.withColumnRenamed("victim", "eth_dst"), portTopo, 10.0).collect()
+    assert(a.count(_.getAs[String]("switch_name") == "s1") == 4)
+    // a host row with a null ip still resolves its port, as in the join
+    assert(a.map(_.getAs[String]("attacker")).toSet ==
+      Set("10.0.0.1", "10.0.0.11", "10.0.0.2", null))
+  }
+
+  test("attacker attribution (J4/J5) plan holds no broadcast exchange or broadcast join") {
+    // automatic broadcasts off: the victims semi-join would otherwise
+    // broadcast its tiny side, which is not the topology's join
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      for ((name, got, want) <- attributions(portRates, portTopo)) {
+        assert(broadcasts(got).isEmpty,
+          s"$name: expected no broadcast:\n${got.queryExecution.executedPlan}")
+        // the probe sees the join's broadcast when there is one
+        assert(broadcasts(want).nonEmpty, name)
+      }
+    }
   }
 
   test("quirk-parity mode: last-write-only traf_dict keeps one dst per source") {

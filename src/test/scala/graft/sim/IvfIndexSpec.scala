@@ -91,6 +91,7 @@ class IvfIndexSpec extends SparkSpec {
     // candidates) instead of failing on nonexistent paths
     val p2 = java.nio.file.Files.createTempDirectory("ivfempty").toString
     spark.read.parquet(s"$path/centroids").write.parquet(s"$p2/centroids")
+    copyTree(s"$path/_meta", s"$p2/_meta")
     assert(new java.io.File(s"$p2/assigned").mkdirs())
     val q = corpus.filter(SimQueries.QueryPred)
     val out = Similarity.ivfTopKIndexed(spark, p2, q, SimQueries.K, SimQueries.NProbe)
@@ -126,6 +127,7 @@ class IvfIndexSpec extends SparkSpec {
     // corpus — append into an index that has centroids but no assignments
     val pB = java.nio.file.Files.createTempDirectory("ivfappB").toString
     spark.read.parquet(s"$pA/centroids").write.parquet(s"$pB/centroids")
+    copyTree(s"$pA/_meta", s"$pB/_meta")
     Similarity.appendToIvfIndex(corpus, pB)
     assert(assignedRows(pA) == assignedRows(pB),
       "append must be row-for-row a full assignment sweep at fixed centroids")
@@ -186,6 +188,7 @@ class IvfIndexSpec extends SparkSpec {
           .select(col("vec_id").as("cid"), col("embedding").as("cv0")),
         SimQueries.Dim)
       .write.parquet(s"$pRef/centroids")
+    copyTree(s"$p/_meta", s"$pRef/_meta")
     Similarity.appendToIvfIndex(corpus, pRef)
     assert(assignedRows(p) == assignedRows(pRef),
       "sampled build must equal explicit sample-refine + assign-all")
@@ -343,6 +346,7 @@ class IvfIndexSpec extends SparkSpec {
     // resolve (round-11 ADVICE: the spark.range early return was long-typed)
     val p2 = java.nio.file.Files.createTempDirectory("ivfemptystr").toString
     spark.read.parquet(s"$path/centroids").write.parquet(s"$p2/centroids")
+    copyTree(s"$path/_meta", s"$p2/_meta")
     assert(new java.io.File(s"$p2/assigned").mkdirs())
     val qs = corpus.filter(SimQueries.QueryPred)
       .select(concat(lit("id-"), col("vec_id")).as("vec_id"), col("embedding"))
@@ -546,10 +550,18 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("pq edge cases fail by NAME: missing codebooks, empty-train codebooks") {
-    // a float index asked to score as pq (or a torn codebook write): the
-    // error names the store and the fix, not an AnalysisException path
+    // a pq index whose codebook store is gone (a torn write, a deleted
+    // store): the error names the store and the fix, not an
+    // AnalysisException path. The copy gets a fresh handle, which reads
+    // the codebooks on first need.
+    val pP = java.nio.file.Files.createTempDirectory("ivfpqcb").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred,
+      SimQueries.Dim, pP, storage = "pq", pqM = SimQueries.PqM, pqK = SimQueries.PqK)
+    val noCb = java.nio.file.Files.createTempDirectory("ivfpqnocb").toString
+    copyTree(pP, noCb)
+    deleteTree(s"$noCb/pq_codebooks")
     val eNoCb = intercept[IllegalStateException] {
-      Similarity.appendToIvfIndex(corpus.limit(1), path, storage = Some("pq"))
+      Similarity.appendToIvfIndex(corpus.limit(1), noCb)
     }
     assert(eNoCb.getMessage.contains("pq_codebooks"))
     // an empty training corpus writes an empty codebook store: the build
@@ -614,6 +626,7 @@ class IvfIndexSpec extends SparkSpec {
     // the streamed index equals the batch build+append of the same rows
     val pRef = java.nio.file.Files.createTempDirectory("ivfappstreamref").toString
     spark.read.parquet(s"$p/centroids").write.parquet(s"$pRef/centroids")
+    copyTree(s"$p/_meta", s"$pRef/_meta")
     Similarity.appendToIvfIndex(corpus, pRef)
     assert(assignedRows(p) == assignedRows(pRef),
       "streamed appends must produce the batch index row-for-row")
@@ -911,6 +924,7 @@ class IvfIndexSpec extends SparkSpec {
     // rows and answers survived the interleaved compactions
     val pRef = java.nio.file.Files.createTempDirectory("ivfstreamcompref").toString
     spark.read.parquet(s"$p/centroids").write.parquet(s"$pRef/centroids")
+    copyTree(s"$p/_meta", s"$pRef/_meta")
     Similarity.appendToIvfIndex(corpus, pRef)
     assert(assignedRows(p) == assignedRows(pRef),
       "inline compaction must preserve the streamed index row-for-row")
@@ -1109,33 +1123,64 @@ class IvfIndexSpec extends SparkSpec {
     assert(jobs <= 5, s"a warm indexed query ran $jobs jobs")
   }
 
-  test("a pre-manifest index (no recorded layout) answers like the manifest one") {
-    val p = java.nio.file.Files.createTempDirectory("ivflayout").toString
+  private def deleteTree(dir: String): Unit = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(f => java.nio.file.Files.delete(f))
+    finally files.close()
+  }
+
+  test("an index without a manifest fails by name on query and on append") {
+    val p = java.nio.file.Files.createTempDirectory("ivfmanifested").toString
     Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p,
       storage = "pq", pqM = SimQueries.PqM, pqK = SimQueries.PqK)
-    Similarity.deleteFromIvfIndex(spark, p, corpus.filter(DeleteSpecPred).select("vec_id"))
-    assert(new java.io.File(s"$p/_meta/layout").isFile)
     val q = corpus.filter(SimQueries.QueryPred)
     val expected = answers(p, q)
-    // copies at fresh paths get fresh handles: one without the layout
-    // record, one without any manifest (stored form inferred as well)
-    val noLayout = java.nio.file.Files.createTempDirectory("ivfnolayout").toString
-    copyTree(p, noLayout)
-    assert(new java.io.File(s"$noLayout/_meta/layout").delete())
-    val noMeta = java.nio.file.Files.createTempDirectory("ivfnometa").toString
-    copyTree(p, noMeta)
-    assert(new java.io.File(s"$noMeta/_meta/layout").delete() &&
-      new java.io.File(s"$noMeta/_meta/storage").delete())
+    // a copy at a fresh path gets a fresh handle, which must read the manifest
+    val bare = java.nio.file.Files.createTempDirectory("ivfnomanifest").toString
+    copyTree(p, bare)
+    deleteTree(s"$bare/_meta")
+    val fails = Seq[(String, () => Unit)](
+      "query" -> (() => answers(bare, q)),
+      "append" -> (() => Similarity.appendToIvfIndex(corpus.limit(1), bare)))
+    for ((op, run) <- fails) {
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains("no index manifest") && e.getMessage.contains("rebuild it"),
+        s"$op: ${e.getMessage}")
+    }
+    assert(!new java.io.File(s"$bare/_meta").exists(), "a failed call wrote a manifest")
+    assert(answers(p, q) == expected)
+  }
+
+  test("a rebuild at the same path with another storage answers like a fresh build") {
+    val q = corpus.filter(SimQueries.QueryPred)
+    val added = corpus.filter("vec_id < 4")
+      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
+    def build(at: String, storage: String): Unit =
+      Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, at,
+        storage = storage, pqM = SimQueries.PqM, pqK = SimQueries.PqK)
     def schemaOf(at: String) =
       Similarity.readIvfAssigned(spark, at).schema.map(f => (f.name, f.dataType))
-    for (copy <- Seq(noLayout, noMeta)) {
-      assert(answers(copy, q) == expected, copy)
-      assert(schemaOf(copy) == schemaOf(p))
+    val p = java.nio.file.Files.createTempDirectory("ivfrestore").toString
+    build(p, "float32")
+    Similarity.deleteFromIvfIndex(spark, p, corpus.filter(DeleteSpecPred).select("vec_id"))
+    // every change of stored form, one after another at one path
+    for (storage <- Seq("pq", "float32", "int8", "pq")) {
+      build(p, storage)
+      val fresh = java.nio.file.Files.createTempDirectory(s"ivffresh$storage").toString
+      build(fresh, storage)
+      assert(Similarity.readStorageManifest(spark, p) == storage)
+      assert(schemaOf(p) == schemaOf(fresh), storage)
+      assert(answers(p, q) == answers(fresh, q), storage)
+      // a second spelling of the path opens its handle from the store
+      assert(answers(s"file:$p", q) == answers(fresh, q), storage)
+      // and an append encodes in the rebuilt form
+      Similarity.appendToIvfIndex(added, p)
+      Similarity.appendToIvfIndex(added, fresh)
+      assert(schemaOf(p) == schemaOf(fresh), storage)
+      assert(answers(p, q) == answers(fresh, q), storage)
+      assert(new java.io.File(s"$p/pq_codebooks").exists() == (storage == "pq"), storage)
     }
-    // the pre-manifest copy keeps its inferred form through an append
-    Similarity.appendToIvfIndex(corpus.filter("vec_id < 4")
-      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")), noMeta)
-    assert(schemaOf(noMeta) == schemaOf(p))
   }
 
   test("a delete with ids narrower than the index's c_id still masks and reclaims") {

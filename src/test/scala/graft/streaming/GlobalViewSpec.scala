@@ -66,6 +66,44 @@ class GlobalViewSpec extends SparkSpec {
     assert(s.windows("vm0") == Seq(30.0, 30.0, 30.0, 30.0, 30.0))
   }
 
+  test("streaming A7: anomalyStats over micro-batches equals the batch a7_anomaly_stats query") {
+    // events-shaped rows: user_id is the domain, event_type the (src) key;
+    // pairs share a ts so event_id breaks the tie, values are in cents as
+    // in the events table, and one type is seen by a single user (never
+    // emitted)
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 90).map { i =>
+      val (user, typ) =
+        if (i % 10 == 9) (9L, "solo") else (rnd.nextInt(4).toLong, s"t${rnd.nextInt(3)}")
+      (new Timestamp(1700000000000L + (i / 2) * 1000L), 1000L - i, user, typ,
+        rnd.nextInt(100000) / 100.0)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("a7events").toString
+    rows.toDF("ts", "event_id", "user_id", "event_type", "value")
+      .write.parquet(s"$dir/events.parquet")
+    val batch = graft.queries.EventAnalytics.a7AnomalyStats(spark, dir).collect()
+      .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n_users"),
+        r.getAs[Double]("mean_rate"), r.getAs[Double]("std_rate"))).toSet
+    // the stream sees the rows in (ts, event_id) order, as the query ranks them
+    val obs = rows.sortBy(r => (r._1.getTime, r._2)).zipWithIndex.map {
+      case ((_, _, user, typ, value), seq) => AnomalyObs(user.toString, typ, 0, seq, value)
+    }
+    val in = MemoryStream[AnomalyObs](spark)
+    val q = anomalyStats(in.toDS()).writeStream
+      .format("memory").queryName("gv_a7").outputMode(OutputMode.Update()).start()
+    try {
+      obs.grouped(30).foreach { part =>
+        in.addData(part: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val last = spark.table("gv_a7").as[AnomalyStats].collect()
+      .groupBy(_.src).values.map(_.maxBy(_.seq))
+      .map(s => (s.src, s.n_domains.toLong, s.mean_rate, s.std_rate)).toSet
+    assert(batch.size == 3 && !batch.exists(_._1 == "solo"), batch)
+    assert(last == batch)
+  }
+
   test("streaming: barrier fires across micro-batches") {
     val in = MemoryStream[TimingObs](spark)
     val q = timingMerge(in.toDS(), nDomains = 2).writeStream
