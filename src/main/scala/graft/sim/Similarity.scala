@@ -456,24 +456,25 @@ object Similarity {
     // epoch silently masking ids legitimately present in the NEW corpus
     // until some compaction retired it. A rebuild starts life
     // delete-free, like a fresh build.
-    val fs = hadoopFs(spark, new Path(path))
+    val fs = hadoopFs(spark, path)
     fs.delete(new Path(s"$path/tombstones"), true)
-    // the applied-curation watermark is per-INDEX-LIFE too: the new
-    // corpus has had nothing applied to it yet
+    // the previous index's states go too (its generations, tombstones and
+    // curation watermark): the new corpus has had nothing applied to it
     fs.delete(new Path(s"$path/_meta"), true)
     // and a previous pq build's codebooks are not this build's
     if (books.isEmpty)
       fs.delete(new Path(s"$path/pq_codebooks"), true)
     val rows = indexRows(corpus, centEntries, storage, books.get, Map.empty,
       idCol, vecCol, carry)
-    // the manifest lands BEFORE any assignment: every later append,
-    // query and scan reads the stored form and layout from it
-    val manifest = IndexManifest(storage, longPartitions(rows.schema))
-    publishFile(fs, metaFile(path, "manifest"), manifest.json)
-    val h = new IndexHandle(path, centroidStamp(spark, path), centEntries,
-      manifest, books)
+    // the manifest's layout is the write's own plan; version 0 commits
+    // once every assignment has landed
+    val st = IndexState(0L, java.util.UUID.randomUUID().toString,
+      IndexManifest(storage, longPartitions(rows.schema)),
+      gens = Map.empty, tombs = None, nextEpoch = 0L, tombFloor = 0L,
+      curationApplied = None)
     writeIndexRows(rows, path, SaveMode.Overwrite)
-    keepOpen(h)
+    commit(fs, path, st)
+    keepOpen(new IndexHandle(path, st.build, centEntries, books))
   }
 
   /** Refine sweeps a persisted build runs: its coarse quantizer's and,
@@ -495,51 +496,135 @@ object Similarity {
   /** The stored candidate-payload forms a persisted index supports. */
   val Storages: Set[String] = Set("float32", "int8", "pq")
 
-  // ---- the manifest and the handle: what one build fixes ----------------
+  // ---- the index state: the one commit point of a persisted index ------
 
-  /** The one record of an index's stored form, `path/_meta/manifest`:
-    * the candidate payload (`storage`, one of [[Storages]]) and the
-    * `assigned/` layout schema (partition columns `cell` and `g` as
-    * long). [[buildIvfIndex]] writes it before any assignment lands,
-    * with the layout of the write's own plan; the [[IndexHandle]] reads
-    * it once. Appends encode and queries score by `storage`, scans read
-    * with `layout` — nothing infers either from the data files, which
-    * deletes can empty and which an append of the wrong form could
-    * otherwise corrupt.
+  /** The stored form of an index: the candidate payload (`storage`, one
+    * of [[Storages]]) and the `assigned/` layout schema (partition columns
+    * `cell` and `g` as long), fixed by [[buildIvfIndex]] from the layout
+    * of the write's own plan and recorded in every [[IndexState]].
+    * Appends encode and queries score by `storage`, scans read with
+    * `layout` — nothing infers either from the data files, which deletes
+    * can empty and which an append of the wrong form could otherwise
+    * corrupt.
     */
-  private[sim] final case class IndexManifest(storage: String, layout: StructType) {
+  private[graft] final case class IndexManifest(storage: String, layout: StructType)
+
+  /** A tombstone epoch as its writer recorded it: the epoch id, its
+    * parquet data bytes (what the query path's broadcast decision is made
+    * on) and the type of its `c_id` column, so the read infers nothing.
+    */
+  private[graft] final case class TombEpoch(epoch: Long, bytes: Long, idType: DataType)
+
+  /** One version of an index's state, the file `path/_meta/v<version>`:
+    *  - `build`: an id per [[buildIvfIndex]] call, by which an open
+    *    [[IndexHandle]] knows that a rebuild replaced its centroids;
+    *  - `manifest`: the stored form;
+    *  - `gens`: each compacted cell's live generation (`cell=N/g=K`); a
+    *    cell absent from it lives at generation 0;
+    *  - `tombs`: the live tombstone epoch, None when no id is tombstoned;
+    *  - `nextEpoch`: the id the next delete writes its epoch under;
+    *  - `tombFloor`: [[compactIvfIndex]] drops the tombstone epochs below it;
+    *  - `curationApplied`: the newest curation epoch
+    *    [[deleteCurationDropsFromIvfIndex]] applied.
+    * A writer commits by publishing the next version ([[commit]]), a
+    * reader opens the newest ([[readState]]). A version is written once
+    * and never changed, so one read is one consistent view of the index.
+    */
+  private[graft] final case class IndexState(
+      version: Long, build: String, manifest: IndexManifest,
+      gens: Map[Long, Long], tombs: Option[TombEpoch], nextEpoch: Long,
+      tombFloor: Long, curationApplied: Option[Long]) {
     def json: String = {
       import org.json4s._
       import org.json4s.jackson.JsonMethods.{compact, parse, render}
-      compact(render(JObject("storage" -> JString(storage),
-        "layout" -> parse(layout.json))))
+      compact(render(JObject(List(
+        "build" -> JString(build),
+        "storage" -> JString(manifest.storage),
+        "layout" -> parse(manifest.layout.json),
+        "gens" -> JArray(gens.toList.sorted.map { case (c, g) => JArray(List(JInt(c), JInt(g))) }),
+        "nextEpoch" -> JInt(nextEpoch),
+        "tombFloor" -> JInt(tombFloor)) ++
+        tombs.map(t => "tombs" -> JObject("epoch" -> JInt(t.epoch),
+          "bytes" -> JInt(t.bytes), "idType" -> parse(t.idType.json))) ++
+        curationApplied.map(w => "curationApplied" -> JInt(w)))))
     }
   }
 
-  /** The manifest of the index at `path` — failing by name when there is
-    * none: the directory is not a [[buildIvfIndex]] index, or it was
-    * built before manifests were recorded.
+  /** How many state versions `_meta` keeps: the newest and the one before. */
+  private val StateVersionsKept = 2
+
+  private val StateVersion = "v(\\d+)".r
+
+  /** The newest state of the index at `path`: one listing of `_meta` and
+    * one read of its newest version. A version pruned between the two
+    * (two commits ran in between) is gone because newer ones exist, so
+    * the read lists again. Fails by name when there is no state: the
+    * directory is not a [[buildIvfIndex]] index, or an older layout wrote
+    * it (a `_meta/manifest` file and no state versions).
     */
-  private def readManifest(spark: SparkSession, path: String): IndexManifest = {
+  private def readState(fs: FileSystem, path: String): IndexState = {
+    val meta = new Path(s"$path/_meta")
+    val newest =
+      try fs.listStatus(meta).iterator.map(_.getPath.getName)
+        .collect { case StateVersion(v) => v.toLong }.maxOption
+      catch { case _: java.io.FileNotFoundException => None }
+    val v = newest.getOrElse(throw new IllegalStateException(
+      s"$path has no index manifest (no state version under $meta): it is not a " +
+        "buildIvfIndex index, or an older layout wrote it (a _meta/manifest file " +
+        "and no state versions) — rebuild it with buildIvfIndex"))
+    readFile(fs, new Path(meta, s"v$v")).fold(readState(fs, path))(parseState(path, v, _))
+  }
+
+  private def parseState(path: String, version: Long, text: String): IndexState = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods.{compact, parse, render}
-    val p = metaFile(path, "manifest")
-    val text = readFile(hadoopFs(spark, p), p).getOrElse(throw new IllegalStateException(
-      s"$path has no index manifest ($p): it is not a buildIvfIndex index, or it " +
-        "was built before manifests were recorded — rebuild it with buildIvfIndex"))
+    def bad = new IllegalStateException(s"$path/_meta/v$version is not an index state " +
+      s"(storage one of ${Storages.mkString("/")}, a layout schema, generations): $text")
     val j = parse(text)
-    (j \ "storage", j \ "layout") match {
-      case (JString(s), layout: JObject) if Storages(s) =>
-        IndexManifest(s, DataType.fromJson(compact(render(layout))).asInstanceOf[StructType])
-      case _ => throw new IllegalStateException(
-        s"$p is not an index manifest (storage one of ${Storages.mkString("/")} " +
-          s"plus a layout schema): $text")
+    def num(v: JValue): Long = v match { case JInt(n) => n.toLong; case _ => throw bad }
+    def dataType(v: JValue): DataType = DataType.fromJson(compact(render(v)))
+    def opt(field: String): Option[JValue] = Some(j \ field).filter(_ != JNothing)
+    val (build, storage, layout) = (j \ "build", j \ "storage", dataType(j \ "layout")) match {
+      case (JString(b), JString(s), l: StructType) if Storages(s) => (b, s, l)
+      case _ => throw bad
     }
+    val gens = j \ "gens" match {
+      case JArray(cells) => cells.map {
+        case JArray(List(c, g)) => num(c) -> num(g)
+        case _ => throw bad
+      }.toMap
+      case _ => throw bad
+    }
+    IndexState(version, build, IndexManifest(storage, layout), gens,
+      opt("tombs").map(t => TombEpoch(num(t \ "epoch"), num(t \ "bytes"), dataType(t \ "idType"))),
+      num(j \ "nextEpoch"), num(j \ "tombFloor"), opt("curationApplied").map(num))
   }
+
+  /** Commit `st` as `_meta/v<st.version>`: written whole to a dot-temp,
+    * then renamed to that new name, so a reader sees the complete version
+    * or none and no existing file is replaced. Then drops the versions
+    * older than the newest [[StateVersionsKept]]: a reader holds the
+    * files a state names, never the state file itself.
+    */
+  private def commit(fs: FileSystem, path: String, st: IndexState): Unit = {
+    val meta = new Path(s"$path/_meta")
+    val tmp = new Path(meta, s".v${st.version}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(st.json.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, new Path(meta, s"v${st.version}")))
+      throw new java.io.IOException(s"could not commit $meta/v${st.version}")
+    fs.listStatus(meta).iterator.map(_.getPath.getName)
+      .collect { case StateVersion(v) if v.toLong <= st.version - StateVersionsKept => v }
+      .foreach(v => fs.delete(new Path(meta, s"v$v"), false))
+  }
+
+  /** The newest state of the index at `path`. */
+  private[graft] def indexState(spark: SparkSession, path: String): IndexState =
+    readState(hadoopFs(spark, path), path)
 
   /** The stored form recorded at build time. */
   private[sim] def readStorageManifest(spark: SparkSession, path: String): String =
-    readManifest(spark, path).storage
+    indexState(spark, path).manifest.storage
 
   /** A pq index's codebooks: per-sub kernel entries `(cid, cv, cn2)` and
     * (pqM, w), plus the (sub, cid, cv) rows the ADC lookup-table build
@@ -562,25 +647,18 @@ object Similarity {
     StructField("cid", IntegerType), StructField("cv", ArrayType(FloatType))))
 
   /** What one BUILD of a persisted index fixes, held on the driver so a
-    * call pays only for what changes between calls (generations,
-    * tombstones, the probed cells' files): the collected centroid
-    * entries, the [[IndexManifest]] and, for a pq index, the codebooks.
-    * Appends, deletes and compactions never move any of them; a rebuild
-    * writes new centroid files, which is what `stamp` — the `centroids/`
-    * listing at open — detects (see [[openIndex]]).
-    *
-    * Committed tombstone epochs are immutable, so each one's schema is
-    * resolved (or recorded by its writer) once. Holds arrays and schemas
-    * only — never a DataFrame or cached blocks.
+    * call pays only for what changes between calls (the state, the
+    * probed cells' files): the collected centroid entries and, for a pq
+    * index, the codebooks. Appends, deletes and compactions never move
+    * them; a rebuild records a new `build` id in its state, which is how
+    * [[openIndex]] tells. Holds arrays only — never a DataFrame or
+    * cached blocks.
     */
   private final class IndexHandle(
       val path: String,
-      val stamp: Seq[(String, Long)],
+      val build: String,
       val cents: IndexedSeq[(Long, Array[Float], Double)],
-      val manifest: IndexManifest,
       @volatile private var booksSeen: Option[PqBooks]) {
-
-    val tombSchemas = scala.collection.concurrent.TrieMap[Long, StructType]()
 
     def books(spark: SparkSession): PqBooks = booksSeen.getOrElse {
       val b = readPqBooks(spark, path)
@@ -609,51 +687,23 @@ object Similarity {
   private def keepOpen(h: IndexHandle): Unit =
     openIndexes.synchronized { openIndexes.put(h.path, h); () }
 
-  /** The `centroids/` data files as (name, length) — a rebuild writes new
-    * part-file names, so a changed listing means a new build.
+  /** The handle of the index at `path` in state `st`: the open one while
+    * its build id matches, else read from the store (centroids collected).
     */
-  private def centroidStamp(spark: SparkSession, path: String): Seq[(String, Long)] = {
-    val dir = new Path(s"$path/centroids")
-    dataFiles(hadoopFs(spark, dir), dir)
-      .map(f => f.getPath.getName -> f.getLen).sorted
-  }
-
-  /** The handle of the index at `path`: the open one while its centroid
-    * listing still matches (one listing per call), else read from the
-    * store — manifest read, centroids collected.
-    */
-  private def openIndex(spark: SparkSession, path: String): IndexHandle = {
-    val stamp = centroidStamp(spark, path)
+  private def openIndex(spark: SparkSession, path: String, st: IndexState): IndexHandle =
     openIndexes.synchronized(Option(openIndexes.get(path)))
-      .filter(_.stamp == stamp)
+      .filter(_.build == st.build)
       .getOrElse {
-        val manifest = readManifest(spark, path)
-        val h = new IndexHandle(path, stamp,
-          collectCentEntries(spark.read.parquet(s"$path/centroids")), manifest, None)
+        val h = new IndexHandle(path, st.build,
+          collectCentEntries(spark.read.parquet(s"$path/centroids")), None)
         keepOpen(h)
         h
       }
-  }
 
-  // ---- small whole files: the manifest, watermarks, `_gens` summaries ---
+  private def hadoopFs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def metaFile(path: String, name: String): Path =
-    new Path(s"$path/_meta/$name")
-
-  /** Publish `content` as the file `dst`, whole: written to a dot-temp
-    * beside it and renamed in (replacing a previous version), so a reader
-    * sees the complete file or none.
-    */
-  private def publishFile(fs: FileSystem, dst: Path, content: String): Unit = {
-    fs.mkdirs(dst.getParent)
-    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    fs.delete(dst, false)
-    fs.rename(tmp, dst)
-  }
-
-  /** A [[publishFile]]d file's content, None when it does not exist. */
+  /** A file's whole content, None when it does not exist. */
   private def readFile(fs: FileSystem, p: Path): Option[String] =
     try {
       val in = fs.open(p)
@@ -722,13 +772,12 @@ object Similarity {
                        carry: Seq[String] = Nil): Unit = {
     requireCarryNames(carry)
     val spark = delta.sparkSession
-    val h = openIndex(spark, path)
+    val st = indexState(spark, path)
+    val h = openIndex(spark, path, st)
     // the stored form is the manifest's, so an append never mixes forms;
     // new rows land in their cell's LIVE generation (compaction bumps it)
-    val assignedRoot = s"$path/assigned"
-    val (_, gens) = readGenSummary(hadoopFs(spark, new Path(assignedRoot)), assignedRoot)
-    writeIndexRows(indexRows(delta, h.cents, h.manifest.storage, h.books(spark),
-      gens, idCol, vecCol, carry), path, SaveMode.Append)
+    writeIndexRows(indexRows(delta, h.cents, st.manifest.storage, h.books(spark),
+      st.gens, idCol, vecCol, carry), path, SaveMode.Append)
   }
 
   /** Streaming form of [[appendToIvfIndex]]: every micro-batch of
@@ -742,7 +791,7 @@ object Similarity {
     * Per-batch floor: the centroids, stored form and (pq) codebooks are
     * fixed for the index build, so every micro-batch is served from the
     * index handle ([[openIndex]], opened here before the first trigger)
-    * — one `centroids/` listing per batch, no store re-scan. What remains
+    * — one state read per batch, no store re-scan. What remains
     * of the floor is the partitioned write itself — and the century pair
     * (`sf10_s10_stream_*` at 1 vs 4 files/trigger) measured that it is
     * NOT constant: successive appends commit into cell dirs holding
@@ -765,7 +814,7 @@ object Similarity {
       s"compactEvery must be >= 1 batch, got $n"))
     requireCarryNames(carry)
     val spark = vectors.sparkSession
-    openIndex(spark, path) // a missing index fails here, not in a trigger
+    openIndex(spark, path, indexState(spark, path)) // a missing index fails here, not in a trigger
     vectors.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -887,62 +936,29 @@ object Similarity {
       .repartition(rows.sparkSession.sessionState.conf.numShufflePartitions, col("cell"))
       .write.mode(mode).partitionBy("cell", "g").parquet(s"$path/assigned")
 
-  // ---- generation + tombstone bookkeeping of the persisted layout ------
+  // ---- generations and tombstones of the persisted layout ----------------
 
-  private def hadoopFs(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Newest committed generation summary under `assigned/_gens`:
-    * (version, cell → live generation). Cells absent from the map — never
-    * compacted — live at generation 0, so a fresh index needs no summary
-    * at all. Each version `v<n>` is a [[publishFile]], so the newest
-    * listed version is always complete; the `_` prefix keeps the dir
-    * invisible to Spark's partition discovery.
+  /** The cell ids present on disk, one listing of `assigned/`: an append
+    * creates cell directories without a commit, so no state lists them.
     */
-  private def readGenSummary(fs: FileSystem, assignedRoot: String): (Long, Map[Long, Long]) = {
-    val gens = new Path(s"$assignedRoot/_gens")
-    if (!fs.exists(gens)) return (0L, Map.empty)
-    val vers = fs.listStatus(gens).map(_.getPath.getName)
-      .filter(_.matches("v\\d+")).map(_.stripPrefix("v").toLong)
-    if (vers.isEmpty) return (0L, Map.empty)
-    val ver = vers.max
-    val txt = readFile(fs, new Path(gens, s"v$ver")).getOrElse("")
-    (ver, txt.split("\n").iterator.filter(_.nonEmpty).map { l =>
-      val Array(c, g) = l.split(" "); c.toLong -> g.toLong
-    }.toMap)
-  }
-
-  private def writeGenSummary(fs: FileSystem, assignedRoot: String, ver: Long,
-                              m: Map[Long, Long]): Unit =
-    publishFile(fs, new Path(s"$assignedRoot/_gens/v$ver"),
-      m.toSeq.sorted.map { case (c, g) => s"$c $g" }.mkString("\n"))
-
-  /** The cell ids present on disk (one root listing). */
-  private def cellsOnDisk(fs: FileSystem, assignedRoot: String): Seq[Long] = {
-    val root = new Path(assignedRoot)
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).iterator
+  private def cellsOnDisk(fs: FileSystem, path: String): Seq[Long] =
+    try fs.listStatus(new Path(s"$path/assigned")).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
       .map(_.getPath.getName.stripPrefix("cell=").toLong).toSeq.sorted
-  }
+    catch { case _: java.io.FileNotFoundException => Nil }
 
-  /** The LIVE generation directories for `cells` (every on-disk cell when
-    * None), as explicit paths the scan is constructed over.
+  /** The LIVE generation directories in state `st` of `cells` (every
+    * on-disk cell when None; a cell not on disk has none), as explicit
+    * paths the scan is constructed over.
     */
-  private def liveAssignedDirs(spark: SparkSession,
-                               path: String,
-                               cells: Option[Seq[Long]]): Seq[String] = {
-    val assignedRoot = s"$path/assigned"
-    val fs = hadoopFs(spark, new Path(assignedRoot))
-    val onDisk = cellsOnDisk(fs, assignedRoot)
-    val (_, gens) = readGenSummary(fs, assignedRoot)
-    val sel = cells.fold(onDisk)(cs => cs.filter(onDisk.toSet))
-    sel.map(c => s"$assignedRoot/cell=$c/g=${gens.getOrElse(c, 0L)}")
-  }
+  private def liveDirs(path: String, st: IndexState, onDisk: Seq[Long],
+                       cells: Option[Seq[Long]]): Seq[String] =
+    cells.fold(onDisk)(_.filter(onDisk.toSet))
+      .map(c => s"$path/assigned/cell=$c/g=${st.gens.getOrElse(c, 0L)}")
 
   /** The LIVE rows of a persisted index — the one read path every consumer
     * (query, compaction, parity checks) must use: resolves each cell's
-    * live generation from the newest summary and constructs the scan over
+    * live generation from the newest state and constructs the scan over
     * exactly those generation directories. A raw recursive read of
     * `path/assigned` is WRONG once any compaction has run: superseded
     * generations are retained one compaction cycle for lagging readers
@@ -953,53 +969,39 @@ object Similarity {
     */
   def readIvfAssigned(spark: SparkSession, path: String,
                       cells: Option[Seq[Long]] = None): DataFrame = {
-    val dirs = liveAssignedDirs(spark, path, cells)
+    val fs = hadoopFs(spark, path)
+    val st = readState(fs, path)
+    val dirs = liveDirs(path, st, cellsOnDisk(fs, path), cells)
     require(dirs.nonEmpty, s"$path/assigned holds no cell directories")
-    scanLive(spark, openIndex(spark, path), dirs)
+    scanLive(spark, path, st, dirs)
   }
 
   /** The scan over live generation `dirs`, read with the manifest's
     * layout schema (no footer-inference job; dirs without data files
     * read as zero rows), `g` dropped.
     */
-  private def scanLive(spark: SparkSession, h: IndexHandle, dirs: Seq[String]): DataFrame =
-    spark.read.option("basePath", s"${h.path}/assigned")
-      .schema(h.manifest.layout).parquet(dirs: _*)
+  private def scanLive(spark: SparkSession, path: String, st: IndexState,
+                       dirs: Seq[String]): DataFrame =
+    spark.read.option("basePath", s"$path/assigned")
+      .schema(st.manifest.layout).parquet(dirs: _*)
       .drop("g")
 
   /** [[scanLive]] when `dirs` hold a data file; None when nothing is
     * stored under them (no cell dir, or every live generation emptied by
     * reclaimed deletes) — semantically zero rows.
     */
-  private def liveRows(spark: SparkSession, h: IndexHandle,
+  private def liveRows(spark: SparkSession, path: String, st: IndexState,
                        dirs: Seq[String]): Option[DataFrame] =
     if (dirs.isEmpty) None
-    else Some(scanLive(spark, h, dirs)).filter(_.inputFiles.nonEmpty)
+    else Some(scanLive(spark, path, st, dirs)).filter(_.inputFiles.nonEmpty)
 
-  /** The live tombstone set: the newest committed epoch's single-column
-    * (`c_id`) frame, its on-disk parquet bytes — the size the query-path
-    * broadcast decision is made on — and its epoch id.
+  /** The ids of tombstone epoch `t`, one `c_id` column of the type its
+    * writer recorded. Each epoch is SELF-CONTAINED (the full tombstone
+    * set, not a delta), so a reader reads exactly the one its state names.
     */
-  private final case class Tombstones(epoch: Long, ids: DataFrame, bytes: Long)
-
-  /** The live [[Tombstones]], or None when the index has never had a
-    * delete. Each epoch is SELF-CONTAINED (the full current tombstone
-    * set, not a delta), so readers resolve exactly one epoch dir and
-    * retiring the set is writing an empty newer epoch — never deleting
-    * files a lagging reader may hold. One listing of the tombstone root
-    * and one of the epoch dir (written by [[deleteFromIvfIndex]] as one
-    * coalesced file); a committed epoch is immutable, so its schema is
-    * resolved once per handle and the read runs no inference job.
-    */
-  private def liveTombstones(spark: SparkSession, h: IndexHandle): Option[Tombstones] = {
-    val fs = hadoopFs(spark, new Path(h.path))
-    committedEpochs(fs, new Path(s"${h.path}/tombstones")).lastOption.map { e =>
-      val dir = s"${h.path}/tombstones/epoch=$e"
-      val bytes = dataFiles(fs, new Path(dir)).map(_.getLen).sum
-      val schema = h.tombSchemas.getOrElseUpdate(e, spark.read.parquet(dir).schema)
-      Tombstones(e, spark.read.schema(schema).parquet(dir), bytes)
-    }
-  }
+  private def tombIds(spark: SparkSession, path: String, t: TombEpoch): DataFrame =
+    spark.read.schema(StructType(Seq(StructField("c_id", t.idType))))
+      .parquet(s"$path/tombstones/epoch=${t.epoch}")
 
   /** Above this many on-disk bytes, the live tombstone set stops being
     * broadcast into the query path's anti-join and joins plain
@@ -1024,33 +1026,18 @@ object Similarity {
     spark.conf.getOption("spark.graft.index.tombstoneBroadcastMaxBytes")
       .map(_.toLong).getOrElse(TombstoneBroadcastMaxBytes)
 
-  /** Drop the tombstone epochs a full compaction cycle has outlived: keep
-    * every epoch at or above the one that was newest when the PREVIOUS
-    * compaction ended (`_meta/tomb_floor`), then record this compaction's
-    * newest. A reader that resolved its plan after the previous compaction
-    * keeps its epoch through this one however many deletes ran in between
-    * — the window the generation prune gives its files. Deletes never prune.
-    */
-  private def pruneTombEpochs(fs: FileSystem, path: String): Unit = {
-    val epochs = committedEpochs(fs, new Path(s"$path/tombstones"))
-    if (epochs.nonEmpty) {
-      val floor = readFile(fs, metaFile(path, "tomb_floor")).map(_.toLong)
-      floor.foreach(f => epochs.filter(_ < f).foreach(id =>
-        fs.delete(new Path(s"$path/tombstones/epoch=$id"), true)))
-      if (!floor.contains(epochs.last))
-        publishFile(fs, metaFile(path, "tomb_floor"), epochs.last.toString)
-    }
-  }
-
   /** DELETE vectors from a persisted index — the way OUT of the store
     * that [[buildIvfIndex]]/[[appendToIvfIndex]] are the way into. Writes
     * a new TOMBSTONE EPOCH (the previous live set plus `ids`, one tiny
     * self-contained parquet — O(live tombstones), the index files are
-    * untouched): [[ivfTopKIndexed]]/[[ivfTopKReranked]] anti-join the
-    * live epoch on the cell-pruned read, so deleted vectors stop being
+    * untouched) and then commits it as the live epoch of a new state
+    * version: [[ivfTopKIndexed]]/[[ivfTopKReranked]] anti-join the live
+    * epoch on the cell-pruned read, so deleted vectors stop being
     * retrievable IMMEDIATELY, and the next [[compactIvfIndex]] physically
-    * reclaims them (rewrites exactly the cells holding tombstoned rows,
-    * then retires the applied set as an empty newer epoch).
+    * reclaims them (rewrites exactly the cells holding tombstoned rows
+    * and commits the index with no live epoch). An epoch written but
+    * never committed (a crash between the two) is invisible to readers;
+    * the next delete takes its id and overwrites it.
     *
     * This is the dedup-consistency path a 100 TB deployment hits daily:
     * curation drop verdicts arrive AFTER embedding/indexing, and a corpus
@@ -1069,8 +1056,8 @@ object Similarity {
     * Semantics note (pinned by IvfLifecycleProps): a tombstone masks the
     * ID, not a row version. Appending a row under an id whose tombstone
     * is LIVE leaves the new row masked — and reclaimed at the next
-    * compaction; after the compaction retires the applied set, the id is
-    * insertable again (a delete is not a forever-ban). A pipeline that
+    * compaction; after that compaction the id is insertable again (a
+    * delete is not a forever-ban). A pipeline that
     * re-embeds dropped-then-revised documents must therefore append the
     * revision AFTER the compaction that applies the drop, or version its
     * id space — the same id-reuse discipline every tombstone-based store
@@ -1079,9 +1066,23 @@ object Similarity {
   def deleteFromIvfIndex(spark: SparkSession,
                          path: String, ids: DataFrame,
                          idCol: String = "vec_id"): Long = {
+    val fs = hadoopFs(spark, path)
+    val st = readState(fs, path)
+    val (epoch, next) = tombstone(spark, fs, path, st, ids, idCol)
+    if (next != st) commit(fs, path, next)
+    epoch
+  }
+
+  /** Tombstone `ids` on top of state `st`: the epoch covering them and
+    * the state that makes it live — `st` itself when the live epoch
+    * already covers every id, else the next version with a new epoch
+    * written under `st.nextEpoch`.
+    */
+  private def tombstone(spark: SparkSession, fs: FileSystem, path: String,
+                        st: IndexState, ids: DataFrame,
+                        idCol: String): (Long, IndexState) = {
     val add = ids.select(col(idCol).as("c_id")).distinct()
-    val h = openIndex(spark, path)
-    val live = liveTombstones(spark, h)
+    val live = st.tombs.map(t => t -> tombIds(spark, path, t))
     // WRITE-AMPLIFICATION HYGIENE: each epoch is self-contained
     // (previous ∪ new), so a high-frequency caller re-submitting
     // already-live ids — the per-epoch curation hook replaying its drop
@@ -1089,23 +1090,25 @@ object Similarity {
     // When `ids ∖ live = ∅` the live epoch already IS the requested
     // state: skip the write and return its id. Cadence contract for
     // frequent deleters: self-contained epochs cost O(live set) per
-    // WRITE, so compaction (which retires the applied set) should run at
+    // WRITE, so compaction (which empties the live set) should run at
     // least once per O(tens) of delete calls — see
     // [[deleteCurationDropsFromIvfIndex]] for the hook's own delta
     // discipline, which keeps the live set delta-sized between
     // compactions.
-    live.filter(t => add.join(t.ids, Seq("c_id"), "left_anti").isEmpty) match {
-      case Some(t) => t.epoch
+    live.filter { case (_, l) => add.join(l, Seq("c_id"), "left_anti").isEmpty } match {
+      case Some((t, _)) => (t.epoch, st)
       case None =>
         // the ids keep their own type (a narrower caller type is widened
-        // by the query's anti-join); the writer records the epoch schema
-        val full = live.fold(add)(t => t.ids.unionByName(add).distinct())
-        val next = live.fold(0L)(_.epoch + 1L)
+        // by the query's anti-join); the state records it
+        val full = live.fold(add)(_._2.unionByName(add).distinct())
+        val e = st.nextEpoch
+        val dir = s"$path/tombstones/epoch=$e"
         // one file: the tombstone set is delete-volume sized, not corpus sized
-        full.coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(s"$path/tombstones/epoch=$next")
-        h.tombSchemas(next) = full.schema
-        next
+        full.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
+        val bytes = dataFiles(fs, new Path(dir)).map(_.getLen).sum
+        (e, st.copy(version = st.version + 1,
+          tombs = Some(TombEpoch(e, bytes, full.schema("c_id").dataType)),
+          nextEpoch = e + 1))
     }
   }
 
@@ -1122,20 +1125,20 @@ object Similarity {
     * index's live tombstone epoch must stay bounded by deletes since the
     * index's last compaction (it is anti-joined, preferably broadcast,
     * into every query). Naively tombstoning each epoch's full set would
-    * re-add ids the index's compaction already reclaimed and retired, so
-    * the live set would grow to O(all drops ever) and never converge.
+    * re-add ids the index's compaction already reclaimed, so the live set
+    * would grow to O(all drops ever) and never converge.
     * Instead this call (a) skips entirely when the newest curation epoch
-    * id is at or below the `_meta/curation_applied` watermark the
-    * previous application recorded (the per-trigger replay fast path —
-    * no scan at all); (b) otherwise applies only the NEW drops: the set
+    * id is at or below the curation watermark the index state records
+    * (the per-trigger replay fast path — no scan at all); (b) otherwise
+    * applies only the NEW drops: the set
     * difference against the last-applied epoch's artifact when it is
     * still on disk (drop-set-sized, no index scan), falling back — when
     * retention pruned that artifact — to the ids still PHYSICALLY
     * present in the index (one column-pruned id scan; reclaimed drops
     * are absent by definition). Either way the live tombstone set stays
-    * delta-sized between index compactions. Crash between the tombstone
-    * write and the watermark publish replays as (b) whose residual is
-    * already live — [[deleteFromIvfIndex]]'s no-op skip absorbs it.
+    * delta-sized between index compactions. The tombstones and the
+    * watermark commit as one state version, so no state records a
+    * watermark past drops it does not tombstone.
     *
     * Id discipline (the composition's half of [[deleteFromIvfIndex]]'s
     * id-reuse note): a drop is applied ONCE — re-appending a dropped
@@ -1147,16 +1150,16 @@ object Similarity {
   def deleteCurationDropsFromIvfIndex(spark: SparkSession,
                                       indexPath: String, epochDir: String,
                                       dropIdCol: String = "doc_id"): Option[Long] = {
-    val fs = hadoopFs(spark, new Path(epochDir))
+    val fs = hadoopFs(spark, epochDir)
     val epochs = committedEpochs(fs, new Path(epochDir))
     if (epochs.isEmpty) return None
     val newest = epochs.max
-    val indexFs = hadoopFs(spark, new Path(indexPath))
-    val applied = readFile(indexFs, metaFile(indexPath, "curation_applied")).map(_.toLong)
-    if (applied.exists(_ >= newest)) return None
+    val indexFs = hadoopFs(spark, indexPath)
+    val st = readState(indexFs, indexPath)
+    if (st.curationApplied.exists(_ >= newest)) return None
     val drops = spark.read.parquet(s"$epochDir/epoch=$newest")
       .select(col(dropIdCol)).distinct()
-    val priorDir = applied.map(a => s"$epochDir/epoch=$a")
+    val priorDir = st.curationApplied.map(a => s"$epochDir/epoch=$a")
       .filter(d => fs.exists(new Path(s"$d/_SUCCESS")))
     val delta = priorDir match {
       case Some(d) =>
@@ -1169,17 +1172,16 @@ object Similarity {
         // applied): keep only drops still physically present — an id the
         // index's compaction reclaimed cannot need masking again
         // (a fully-reclaimed index holds no rows — nothing to mask)
-        liveRows(spark, openIndex(spark, indexPath),
-            liveAssignedDirs(spark, indexPath, None))
+        liveRows(spark, indexPath, st,
+            liveDirs(indexPath, st, cellsOnDisk(indexFs, indexPath), None))
           .fold(drops.limit(0))(a => drops.join(
             a.select(col("c_id").as(dropIdCol)).distinct(),
             Seq(dropIdCol), "left_semi"))
     }
-    val r = deleteFromIvfIndex(spark, indexPath, delta, dropIdCol)
-    // watermark AFTER the tombstone state covers `newest` — the crash
-    // window replays idempotently (see scaladoc)
-    publishFile(indexFs, metaFile(indexPath, "curation_applied"), newest.toString)
-    Some(r)
+    val (epoch, next) = tombstone(spark, indexFs, indexPath, st, delta, dropIdCol)
+    commit(indexFs, indexPath,
+      next.copy(version = st.version + 1, curationApplied = Some(newest)))
+    Some(epoch)
   }
 
   /** A cell holding more data files than this in its live generation is
@@ -1204,33 +1206,28 @@ object Similarity {
     * `CurationStream.pruneEpochs` retired its race, by generations
     * instead of in-place swaps. Each cell's files live under a
     * generation subdir (`cell=N/g=K`); readers resolve the live
-    * generation from the newest `_gens` summary. Compaction writes the
+    * generation from the newest state version. Compaction writes the
     * rewritten cells to staging, renames each in as the NEW generation
-    * `g=K+1` (live files are never moved or deleted by the swap),
-    * publishes the summary, and only then prunes generations superseded
-    * TWICE (keep = 2) — so a reader that resolved its plan any time
-    * after the previous compaction keeps every file it holds through
-    * one full compaction cycle (IvfIndexSpec pins it with an
-    * interleaved reader). Crash safety follows from the same shape: the
-    * staging dir only ever holds COPIES, so a crashed run's leftovers
-    * are garbage (deleted on the next entry), and a renamed-but-never-
-    * published `g=K+1` dir is invisible to readers and replaced on
-    * re-run. The COMMIT POINT is the summary publish, not the dir
-    * renames — readers never resolve a generation the summary does not
-    * advertise — so the design carries to object stores where rename is
-    * copy-not-atomic: the renames just have to COMPLETE before the
-    * summary lands, and the summary file itself appears atomically
-    * (written whole, then renamed/PUT). WRITERS still serialize: one
-    * build/append/delete/compact at a time (the standard single-writer
-    * table-format contract); appends land in the live generation the
-    * summary advertises.
-    *
-    * Tombstone application order (the reader contract's other half):
-    * readers resolve tombstones BEFORE the generation summary, and this
-    * writer publishes the summary BEFORE retiring the applied tombstone
-    * set (as an empty newer epoch) — so every interleaving
-    * reads consistently: an old tombstone set masks old generations, and
-    * an empty one is only visible once the clean generations are too.
+    * `g=K+1` (live files are never moved or deleted by the swap), then
+    * commits ONE state version holding the new generations and no live
+    * tombstone epoch (every tombstoned row is reclaimed by then), and
+    * only then prunes generations superseded TWICE (keep = 2) and the
+    * tombstone epochs below the floor the previous compaction recorded —
+    * so a reader that resolved its plan any time after the previous
+    * compaction keeps every file it holds, generations and epoch alike,
+    * through one full compaction cycle however many deletes ran in
+    * between (IvfIndexSpec pins it with interleaved readers). Crash
+    * safety follows from the same shape: the staging dir only ever holds
+    * COPIES, so a crashed run's leftovers are garbage (deleted on the
+    * next entry), and a renamed-but-never-committed `g=K+1` dir is
+    * invisible to readers and replaced on re-run. The commit is the
+    * state version, not the dir renames, so the design carries to object
+    * stores where rename is copy-not-atomic: the renames just have to
+    * COMPLETE before the version lands, and the version file itself
+    * appears atomically (written whole, then renamed/PUT). WRITERS still
+    * serialize: one build/append/delete/compact at a time (the standard
+    * single-writer table-format contract); appends land in the live
+    * generation the state names.
     *
     * Pure layout maintenance plus deletes: the surviving row set, schema
     * and query answers are unchanged (IvfIndexSpec pins parity;
@@ -1239,41 +1236,35 @@ object Similarity {
     * points).
     */
   def compactIvfIndex(spark: SparkSession, path: String): Seq[Long] = {
-    val h = openIndex(spark, path)
+    val fs = hadoopFs(spark, path)
+    val st = readState(fs, path)
     val assignedRoot = s"$path/assigned"
-    val root = new Path(assignedRoot)
-    val fs = hadoopFs(spark, root)
     val staging = new Path(s"$path/assigned_compacting")
     // staging only ever holds copies (live generations are never moved),
     // so a crashed run's leftover is garbage by construction
     fs.delete(staging, true)
-    if (!fs.exists(root)) return Nil
-    val (ver, gens) = readGenSummary(fs, assignedRoot)
-    def gen(c: Long): Long = gens.getOrElse(c, 0L)
-    val onDisk = cellsOnDisk(fs, assignedRoot)
-    if (onDisk.isEmpty) return Nil
+    def gen(c: Long): Long = st.gens.getOrElse(c, 0L)
+    val onDisk = cellsOnDisk(fs, path)
     val fileTargets = onDisk.filter(c => dataFiles(fs,
       new Path(s"$assignedRoot/cell=$c/g=${gen(c)}")).length >
         MaxFilesPerCell)
-    // only a NON-EMPTY live tombstone set drives work; the empty epoch a
-    // previous retirement wrote is already the retired state
-    val tombs = liveTombstones(spark, h).map(_.ids).filter(!_.isEmpty)
+    val tombs = st.tombs.map(tombIds(spark, path, _))
     val tombTargets: Seq[Long] = tombs.fold(Seq.empty[Long]) { t =>
       // one column-pruned pass over (c_id, cell) of the live layout: the
       // tombstone store holds ids, not cells, so the dead rows' cells are
       // looked up once here — maintenance-pass cost, never query cost. A
       // fully-reclaimed index holds no rows — no cell can hold a
-      // tombstoned row; the retirement below still applies the set
-      liveRows(spark, h, liveAssignedDirs(spark, path, None))
+      // tombstoned row
+      liveRows(spark, path, st, liveDirs(path, st, onDisk, None))
         .fold(Seq.empty[Long])(_.select(col("c_id"), col("cell"))
           .join(t, Seq("c_id"))
           .select(col("cell")).distinct()
           .collect().map(_.getLong(0)).toSeq)
     }
     val targets = (fileTargets ++ tombTargets).distinct.sorted
+    val nextGen = targets.map(c => c -> (gen(c) + 1L)).toMap
     if (targets.nonEmpty) {
-      val nextGen = targets.map(c => c -> (gen(c) + 1L)).toMap
-      val live = scanLive(spark, h, liveAssignedDirs(spark, path, Some(targets)))
+      val live = scanLive(spark, path, st, liveDirs(path, st, onDisk, Some(targets)))
       val cleaned = tombs.fold(live)(t => live.join(t, Seq("c_id"), "left_anti"))
       val genDf = broadcast(
         spark.createDataFrame(nextGen.toSeq).toDF("cell", "__g"))
@@ -1288,37 +1279,37 @@ object Similarity {
         val n = nextGen(c)
         val src = new Path(s"$staging/cell=$c/g=$n")
         val dst = new Path(s"$assignedRoot/cell=$c/g=$n")
-        // dst can pre-exist only from a crashed run that never published
-        // its summary — no reader can hold it, replacing it is safe
+        // dst can pre-exist only from a crashed run that never committed
+        // its state — no reader can hold it, replacing it is safe
         fs.delete(dst, true)
         if (fs.exists(src)) fs.rename(src, dst)
         // every surviving row tombstoned: the new live generation is EMPTY
         else fs.mkdirs(dst)
       }
-      writeGenSummary(fs, assignedRoot, ver + 1, gens ++ nextGen)
-      // prune generations superseded twice (keep = 2): g=K stays for
-      // lagging readers; anything at or below K-1 has now survived a full
-      // compaction cycle unreferenced
-      targets.foreach { c =>
-        val cd = new Path(s"$assignedRoot/cell=$c")
-        fs.listStatus(cd).map(_.getPath)
-          .filter(_.getName.startsWith("g="))
-          .filter(_.getName.stripPrefix("g=").toLong <= nextGen(c) - 2)
-          .foreach(fs.delete(_, true))
-      }
-      fs.delete(staging, true)
     }
-    // retire the applied tombstone set AFTER the summary is visible (the
-    // reader-ordering contract above): the retired state is an empty
-    // NEWER epoch — files a lagging reader resolved are never deleted
-    tombs.foreach { t =>
-      val next = committedEpochs(fs, new Path(s"$path/tombstones"))
-        .lastOption.getOrElse(-1L) + 1L
-      t.limit(0).coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/tombstones/epoch=$next")
-      h.tombSchemas(next) = t.schema
+    // the floor is the next epoch id: the next compaction drops every
+    // epoch that exists now
+    val next = st.copy(version = st.version + 1, gens = st.gens ++ nextGen,
+      tombs = None, tombFloor = st.nextEpoch)
+    if (next != st.copy(version = next.version)) commit(fs, path, next)
+    // prune generations superseded twice (keep = 2): g=K stays for
+    // lagging readers; anything at or below K-1 has now survived a full
+    // compaction cycle unreferenced
+    targets.foreach { c =>
+      fs.listStatus(new Path(s"$assignedRoot/cell=$c")).map(_.getPath)
+        .filter(_.getName.startsWith("g="))
+        .filter(_.getName.stripPrefix("g=").toLong <= nextGen(c) - 2)
+        .foreach(fs.delete(_, true))
     }
-    pruneTombEpochs(fs, path)
+    fs.delete(staging, true)
+    // and the tombstone epochs below the previous compaction's floor:
+    // none is live, and a reader resolved after that compaction holds a
+    // newer one. Deletes never prune.
+    try fs.listStatus(new Path(s"$path/tombstones")).map(_.getPath)
+      .filter(_.getName.startsWith("epoch="))
+      .filter(_.getName.stripPrefix("epoch=").toLong < st.tombFloor)
+      .foreach(fs.delete(_, true))
+    catch { case _: java.io.FileNotFoundException => () }
     targets
   }
 
@@ -1415,12 +1406,14 @@ object Similarity {
     * probing more than `maxPrunedPaths` distinct cells fall back to
     * reading every live cell directory instead.
     *
-    * The scan reads each probed cell's LIVE GENERATION (newest `_gens`
-    * summary — see [[compactIvfIndex]] for the reader-safe swap
-    * contract) and anti-joins the live TOMBSTONE epoch
-    * ([[deleteFromIvfIndex]]), so concurrent compaction never breaks a
-    * resolved plan and deleted vectors are unretrievable before any
-    * physical rewrite.
+    * One state read (the newest `_meta/v<n>`) gives the call its whole
+    * view of the index: the scan reads each probed cell's LIVE GENERATION
+    * (see [[compactIvfIndex]] for the reader-safe swap contract) and
+    * anti-joins the live TOMBSTONE epoch ([[deleteFromIvfIndex]]) of
+    * that same version, so concurrent compaction never breaks a resolved
+    * plan and deleted vectors are unretrievable before any physical
+    * rewrite. Beyond the scan itself the call lists `_meta` and
+    * `assigned/` once each and reads one state file.
     *
     * `probeWidenTarget = Some(m)` turns on selectivity-aware probe
     * widening for FILTERED search: the qualifying density is estimated
@@ -1435,9 +1428,12 @@ object Similarity {
                      candidateFilter: Option[Column] = None,
                      maxPrunedPaths: Int = MaxPrunedIndexPaths,
                      probeWidenTarget: Option[Int] = None): DataFrame = {
-    // centroids, stored form, layout schema and codebooks come from the
-    // index handle: fixed per build, so a call re-reads none of them
-    val h = openIndex(spark, path)
+    // centroids and codebooks come from the index handle: fixed per
+    // build, so a call re-reads none of them
+    val fs = hadoopFs(spark, path)
+    val st = readState(fs, path)
+    val h = openIndex(spark, path, st)
+    val onDisk = cellsOnDisk(fs, path)
     // the probe resolution, parameterized so the filtered path can widen
     // it (the probed cells are intersected downstream with the cells that
     // actually exist on disk — an empty cell has no directory; reading it
@@ -1445,7 +1441,6 @@ object Similarity {
     def probeAt(p: Int): (DataFrame, DataFrame, Array[Long]) =
       probeCells(spark, queries, h.cents, p, idCol, vecCol)
     val (qCells0, qLoc0, probed0) = probeAt(nprobe)
-    val assignedRoot = s"$path/assigned"
     // SELECTIVITY-AWARE PROBE WIDENING (opt-in): a highly selective
     // candidateFilter thins qualifying vectors per probed cell — at
     // 0.004 selectivity the century tier measured recall 0.75 at the
@@ -1460,12 +1455,10 @@ object Similarity {
       case (Some(f), Some(m)) if probed0.nonEmpty =>
         require(m >= 1, s"probeWidenTarget must be >= 1, got $m")
         // (every probed live generation empty: nothing qualifies)
-        val qual: Double = liveRows(spark, h,
-            liveAssignedDirs(spark, path, Some(probed0.toIndexedSeq)))
+        val qual: Double = liveRows(spark, path, st,
+            liveDirs(path, st, onDisk, Some(probed0.toIndexedSeq)))
           .fold(0.0)(_.filter(f).count().toDouble)
-        val cap = cellsOnDisk(
-          hadoopFs(spark, new Path(assignedRoot)),
-          assignedRoot).length.max(nprobe)
+        val cap = onDisk.length.max(nprobe)
         if (qual <= 0) cap // only a full sweep can honor the filter
         else {
           val perCellQual = qual / probed0.length
@@ -1475,28 +1468,22 @@ object Similarity {
     }
     val (qCells, qLoc, probed) =
       if (effNprobe > nprobe) probeAt(effNprobe) else (qCells0, qLoc0, probed0)
-    // tombstones BEFORE the generation summary — compactIvfIndex publishes
-    // the rewritten generations first and retires tombstones second, so
-    // this order keeps every interleaving consistent (an old tombstone
-    // set masks old generations; an empty one proves the clean
-    // generations are already visible)
-    val tombs = liveTombstones(spark, h)
     def emptyTopK: DataFrame = rankTopK(
       queries.select(col(idCol).as("q_id"), col(idCol).as("c_id"),
         lit(0.0d).as("cos")).limit(0), k)
     val prune = probed.nonEmpty && probed.length <= maxPrunedPaths
     // live GENERATION dirs only: superseded generations stay on disk one
     // compaction cycle for lagging readers, so the scan must be
-    // constructed over exactly the summary's live dirs, never a
+    // constructed over exactly the state's live dirs, never a
     // recursive listing (which would double-read retained generations)
-    val dirs = liveAssignedDirs(spark, path,
+    val dirs = liveDirs(path, st, onDisk,
       if (prune) Some(probed.toIndexedSeq) else None)
     // nothing stored under any probed cell (no cell dir, or every live
     // generation emptied by reclaimed deletes): zero candidates, typed
     // empty — schema derived from the caller's idCol type, so the empty
     // and populated paths union/join identically (round-11 ADVICE: the
     // old spark.range form hardcoded LongType ids)
-    val assigned0 = liveRows(spark, h, dirs) match {
+    val assigned0 = liveRows(spark, path, st, dirs) match {
       case Some(rows) => rows
       case None => return emptyTopK
     }
@@ -1508,10 +1495,11 @@ object Similarity {
     // hint would turn a contract violation into a query-time OOM; the
     // plain anti-join keeps the query correct (and merely slower) until
     // the next compaction retires the set
-    val assignedLive = tombs.fold(assigned0) { t =>
+    val assignedLive = st.tombs.fold(assigned0) { t =>
+      val ids = tombIds(spark, path, t)
       if (t.bytes <= tombstoneBroadcastMax(spark))
-        assigned0.join(broadcast(t.ids), Seq("c_id"), "left_anti")
-      else assigned0.join(t.ids, Seq("c_id"), "left_anti")
+        assigned0.join(broadcast(ids), Seq("c_id"), "left_anti")
+      else assigned0.join(ids, Seq("c_id"), "left_anti")
     }
     // FILTERED search: the predicate lands on the already-cell-pruned
     // scan over `carry` metadata (parquet predicate pushdown composes
@@ -1530,7 +1518,7 @@ object Similarity {
     // (qLoc), never from the distributed queries plan — the expressions
     // are unchanged, so values are bit-identical, but the broadcast
     // builds stop re-scanning the queries source once per branch
-    val scored = h.manifest.storage match {
+    val scored = st.manifest.storage match {
       case "pq" =>
         val b = h.books(spark)
         val (pqM, w) = (b.pqM, b.w)

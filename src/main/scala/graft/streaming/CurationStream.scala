@@ -240,10 +240,11 @@ object CurationStream {
   }
 
   /** The committed-epoch definition the reader ([[compactedView]]), the
-    * pruner ([[pruneEpochs]]) and the ANN index's tombstone epochs all
-    * rely on — one place, so they can never disagree about what
-    * "committed" means: an `epoch=<id>` dir under `p` whose parquet job
-    * finished (`_SUCCESS` present), ascending; none when `p` is missing.
+    * pruner ([[pruneEpochs]]) and the ANN index's curation hook
+    * ([[graft.sim.Similarity.deleteCurationDropsFromIvfIndex]]) all rely
+    * on — one place, so they can never disagree about what "committed"
+    * means: an `epoch=<id>` dir under `p` whose parquet job finished
+    * (`_SUCCESS` present), ascending; none when `p` is missing.
     */
   private[graft] def committedEpochs(fs: org.apache.hadoop.fs.FileSystem,
                                      p: org.apache.hadoop.fs.Path): Seq[Long] =
@@ -344,8 +345,9 @@ object CurationStream {
     * — so a document the closure drops stops being RETRIEVABLE from the
     * vector index within the same compaction interval that dropped it
     * from the corpus, with no external scheduler. Idempotent under epoch
-    * replay (the index records a `curation_applied` watermark, and an
-    * already-applied epoch is a pure no-op), and DELTA-disciplined:
+    * replay (the index state records a curation watermark with the
+    * tombstones it covers, and an already-applied epoch is a pure
+    * no-op), and DELTA-disciplined:
     * although each curation epoch artifact is cumulative, only the drops
     * new since the last applied epoch are tombstoned — so the index's
     * live tombstone set stays bounded by deletes since ITS last

@@ -360,6 +360,13 @@ class IvfIndexSpec extends SparkSpec {
 
   private val DeleteSpecPred = "vec_id % 9 = 4"
 
+  /** The live tombstone ids of the index at `p`: the epoch its newest
+    * state names, None when that state holds no tombstone epoch.
+    */
+  private def liveTombIds(p: String): Option[Set[Long]] =
+    Similarity.indexState(spark, p).tombs.map(t =>
+      spark.read.parquet(s"$p/tombstones/epoch=${t.epoch}").collect().map(_.getLong(0)).toSet)
+
   test("delete: tombstones mask immediately, compaction reclaims, answers pinned throughout") {
     val init = corpus.filter(SimQueries.InitPred)
     val rest = corpus.filter(s"NOT (${SimQueries.InitPred})")
@@ -409,12 +416,9 @@ class IvfIndexSpec extends SparkSpec {
     // answers identical at both read points (tombstoned == reclaimed)
     assert(Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe)
       .collect().map(_.toSeq).toSet == preReclaim)
-    // the applied tombstone set is retired: a fresh epoch exists and is empty
-    val tombEpochs = new java.io.File(s"$p/tombstones").listFiles()
-      .map(_.getName).filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toLong)
-    assert(spark.read.parquet(
-      s"$p/tombstones/epoch=${tombEpochs.max}").count() == 0,
-      "applied tombstones must retire as an empty newest epoch")
+    // the applied tombstone set is retired: the live state holds no epoch
+    assert(liveTombIds(p).isEmpty,
+      "applied tombstones must retire: the live state holds no tombstone epoch")
     // and a further compaction has nothing left to do
     assert(Similarity.compactIvfIndex(spark, p).isEmpty)
   }
@@ -758,6 +762,7 @@ class IvfIndexSpec extends SparkSpec {
     def epochs(): Set[Long] = new java.io.File(s"$p/tombstones").listFiles()
       .map(_.getName).filter(_.startsWith("epoch="))
       .map(_.stripPrefix("epoch=").toLong).toSet
+    def live(): Option[Long] = Similarity.indexState(spark, p).tombs.map(_.epoch)
     val e1 = Similarity.deleteFromIvfIndex(spark, p,
       corpus.filter("vec_id % 7 = 1").select("vec_id"))
     val before = epochs()
@@ -765,12 +770,12 @@ class IvfIndexSpec extends SparkSpec {
     // (the per-epoch curation hook is exactly this high-frequency caller)
     val e2 = Similarity.deleteFromIvfIndex(spark, p,
       corpus.filter("vec_id % 14 = 1").select("vec_id"))
-    assert(e2 == e1 && epochs() == before,
+    assert(e2 == e1 && epochs() == before && live().contains(e1),
       "an already-covered delete must be a no-op, not a full-set rewrite")
     // any genuinely new id still writes
     val e3 = Similarity.deleteFromIvfIndex(spark, p,
       corpus.filter("vec_id % 7 = 2").select("vec_id"))
-    assert(e3 == e1 + 1 && epochs().contains(e3))
+    assert(e3 == e1 + 1 && epochs().contains(e3) && live().contains(e3))
   }
 
   test("a lagging reader keeps its tombstone epoch through one compaction, however many deletes ran") {
@@ -792,10 +797,10 @@ class IvfIndexSpec extends SparkSpec {
     assert(lagging.collect().map(_.toSeq).toSet == expected,
       "one compaction must not delete the epoch a reader resolved before it")
     val compacted = query().collect().map(_.toSeq).toSet
-    // a second compaction drops what the first left behind, and only that:
-    // the empty epoch the first one retired to stays live
+    // a second compaction drops what the first left behind, and the live
+    // state still holds no tombstone epoch
     Similarity.compactIvfIndex(spark, p)
-    assert(epochs() == Set(2L))
+    assert(epochs().isEmpty && liveTombIds(p).isEmpty)
     assert(query().collect().map(_.toSeq).toSet == compacted)
   }
 
@@ -807,19 +812,13 @@ class IvfIndexSpec extends SparkSpec {
       corpus.filter(pred).select(col("vec_id").as("doc_id"))
     def ids(pred: String): Set[Long] =
       drops(pred).collect().map(_.getLong(0)).toSet
-    def liveTombs(): Set[Long] = {
-      val t = new java.io.File(s"$p/tombstones").listFiles()
-        .map(_.getName).filter(_.startsWith("epoch="))
-        .map(_.stripPrefix("epoch=").toLong).max
-      spark.read.parquet(s"$p/tombstones/epoch=$t")
-        .collect().map(_.getLong(0)).toSet
-    }
+    def liveTombs(): Set[Long] = liveTombIds(p).getOrElse(Set.empty)
     // epoch 0: first drop wave applied, then physically reclaimed+retired
     drops("vec_id % 11 = 5").write.parquet(s"$epochDir/epoch=0")
     assert(Similarity.deleteCurationDropsFromIvfIndex(spark, p, epochDir).isDefined)
     assert(liveTombs() == ids("vec_id % 11 = 5"))
     Similarity.compactIvfIndex(spark, p)
-    assert(liveTombs().isEmpty, "compaction retires the applied set")
+    assert(liveTombIds(p).isEmpty, "compaction retires the applied set")
     // epoch 1 is CUMULATIVE (old ∪ new): only the new drops may land — the
     // round-12 bug re-tombstoned the full history every epoch, growing the
     // live set to O(all drops ever) and breaking its broadcast contract
@@ -1140,15 +1139,26 @@ class IvfIndexSpec extends SparkSpec {
     val bare = java.nio.file.Files.createTempDirectory("ivfnomanifest").toString
     copyTree(p, bare)
     deleteTree(s"$bare/_meta")
-    val fails = Seq[(String, () => Unit)](
-      "query" -> (() => answers(bare, q)),
-      "append" -> (() => Similarity.appendToIvfIndex(corpus.limit(1), bare)))
-    for ((op, run) <- fails) {
-      val e = intercept[IllegalStateException](run())
-      assert(e.getMessage.contains("no index manifest") && e.getMessage.contains("rebuild it"),
-        s"$op: ${e.getMessage}")
+    // the older layout: one `_meta/manifest` file and no state versions
+    val older = java.nio.file.Files.createTempDirectory("ivfoldmanifest").toString
+    copyTree(bare, older)
+    val m = Similarity.indexState(spark, p).manifest
+    assert(new java.io.File(s"$older/_meta").mkdir())
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$older/_meta/manifest"),
+      s"""{"storage":"${m.storage}","layout":${m.layout.json}}""".getBytes("UTF-8"))
+    for (dir <- Seq(bare, older)) {
+      val fails = Seq[(String, () => Unit)](
+        "query" -> (() => answers(dir, q)),
+        "append" -> (() => Similarity.appendToIvfIndex(corpus.limit(1), dir)))
+      for ((op, run) <- fails) {
+        val e = intercept[IllegalStateException](run())
+        assert(e.getMessage.contains("no index manifest") && e.getMessage.contains("rebuild it"),
+          s"$dir $op: ${e.getMessage}")
+      }
     }
     assert(!new java.io.File(s"$bare/_meta").exists(), "a failed call wrote a manifest")
+    assert(new java.io.File(s"$older/_meta").list().toSeq == Seq("manifest"),
+      "a failed call wrote a state")
     assert(answers(p, q) == expected)
   }
 
@@ -1261,4 +1271,198 @@ class IvfIndexSpec extends SparkSpec {
     val Seq(gotA, gotB) = results.map(_._2.get.fold(e => throw e, identity))
     assert(gotA == twinA && gotB == twinB)
   }
+
+  // ---- the index state: one versioned record, one read per call ---------
+
+  /** The state versions in `p/_meta`, ascending. */
+  private def stateVersions(p: String): Seq[Long] =
+    new java.io.File(s"$p/_meta").list().toSeq
+      .filter(_.matches("v\\d+")).map(_.stripPrefix("v").toLong).sorted
+
+  /** Drops state version `v` of the index at `p` and its checksum sidecar. */
+  private def dropState(p: String, v: Long): Unit =
+    Seq(s"v$v", s".v$v.crc").foreach(n =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$p/_meta/$n")))
+
+  test("state versions stay bounded: 12 compactions keep at most two, answers unchanged") {
+    val p = java.nio.file.Files.createTempDirectory("ivfbounded").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
+    val q = corpus.filter(SimQueries.QueryPred)
+    val dSet = corpus.filter(DeleteSpecPred).collect().map(_.getAs[Long]("vec_id")).toSet
+    val expected = Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe,
+        candidateFilter = Some(!col("c_id").isInCollection(dSet)))
+      .collect().map(_.toSeq).toSet
+    for (i <- 0 until 12) {
+      Similarity.deleteFromIvfIndex(spark, p,
+        corpus.filter(s"$DeleteSpecPred AND vec_id % 12 = $i").select("vec_id"))
+      Similarity.compactIvfIndex(spark, p)
+      assert(stateVersions(p).size <= 2, s"round $i: ${stateVersions(p)}")
+    }
+    // each delete and each compaction committed one version
+    assert(stateVersions(p).last == 24 && Similarity.indexState(spark, p).version == 24)
+    assert(answers(p, q) == expected)
+    // tombstone epochs and generations stay bounded too
+    assert(new java.io.File(s"$p/tombstones").list().count(_.startsWith("epoch=")) <= 2)
+    new java.io.File(s"$p/assigned").listFiles().filter(_.getName.startsWith("cell="))
+      .foreach(c => assert(c.list().count(_.startsWith("g=")) <= 2, c.getName))
+  }
+
+  test("an epoch written but never committed is invisible, and the next delete takes its id") {
+    val p = java.nio.file.Files.createTempDirectory("ivfuncommitted").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
+    val q = corpus.filter(SimQueries.QueryPred)
+    val (x, y, z) = ("vec_id % 7 = 1", "vec_id % 7 = 2", "vec_id % 7 = 3")
+    def ids(preds: String*): Set[Long] =
+      corpus.filter(preds.mkString(" OR ")).collect().map(_.getAs[Long]("vec_id")).toSet
+    def without(preds: String*): Set[Seq[Any]] =
+      Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe,
+          candidateFilter = Some(!col("c_id").isInCollection(ids(preds: _*))))
+        .collect().map(_.toSeq).toSet
+    val (expX, expXY, expXZ) = (without(x), without(x, y), without(x, z))
+    assert(expX != expXY, "precondition: the second delete changes the answers")
+    def delete(pred: String): Long =
+      Similarity.deleteFromIvfIndex(spark, p, corpus.filter(pred).select("vec_id"))
+    assert(delete(x) == 0L && delete(y) == 1L)
+    // the second delete crashed after its epoch write, before its commit
+    dropState(p, Similarity.indexState(spark, p).version)
+    assert(new java.io.File(s"$p/tombstones/epoch=1").isDirectory)
+    assert(answers(p, q) == expX, "an uncommitted epoch must not mask its ids")
+    // the next delete takes the uncommitted epoch's id and brings no id back
+    assert(delete(z) == 1L)
+    assert(answers(p, q) == expXZ)
+    assert(liveTombIds(p).contains(ids(x, z)))
+  }
+
+  test("no state version records a curation watermark past drops it does not tombstone") {
+    val p = java.nio.file.Files.createTempDirectory("ivfcurawm").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
+    val epochDir = java.nio.file.Files.createTempDirectory("curawm").toString
+    val drops = Seq("vec_id % 11 = 5", "vec_id % 11 = 5 OR vec_id % 11 = 6")
+    for ((pred, e) <- drops.zipWithIndex) {
+      corpus.filter(pred).select(col("vec_id").as("doc_id")).write.parquet(s"$epochDir/epoch=$e")
+      assert(Similarity.deleteCurationDropsFromIvfIndex(spark, p, epochDir).isDefined)
+    }
+    // every kept version, read as the newest: the index a crash right
+    // after that version's commit leaves
+    val versions = stateVersions(p)
+    val marks = versions.map { v =>
+      val c = java.nio.file.Files.createTempDirectory("ivfcurawmv").toString
+      copyTree(p, c)
+      stateVersions(c).filter(_ > v).foreach(dropState(c, _))
+      val st = Similarity.indexState(spark, c)
+      assert(st.version == v)
+      val tombs = liveTombIds(c).getOrElse(Set.empty)
+      st.curationApplied.foreach(w => (0L to w).foreach { e =>
+        val want = corpus.filter(drops(e.toInt)).collect().map(_.getAs[Long]("vec_id")).toSet
+        assert(want.subsetOf(tombs), s"v$v: watermark $w, epoch $e not tombstoned")
+      })
+      st.curationApplied
+    }
+    assert(marks == Seq(Some(0L), Some(1L)), s"versions $versions marks $marks")
+  }
+
+  test("after build, append, delete and compact an index holds only its stores, cells, epochs and states") {
+    import scala.jdk.CollectionConverters._
+    for (storage <- Seq("float32", "pq")) {
+      val p = java.nio.file.Files.createTempDirectory(s"ivflayout$storage").toString
+      Similarity.buildIvfIndex(corpus.filter(SimQueries.InitPred), SimQueries.ClusterCentPred,
+        SimQueries.Dim, p, storage = storage, pqM = SimQueries.PqM, pqK = SimQueries.PqK)
+      Similarity.appendToIvfIndex(corpus.filter(s"NOT (${SimQueries.InitPred})"), p)
+      Similarity.deleteFromIvfIndex(spark, p, corpus.filter(DeleteSpecPred).select("vec_id"))
+      Similarity.compactIvfIndex(spark, p)
+      Similarity.deleteFromIvfIndex(spark, p, corpus.filter("vec_id = 11").select("vec_id"))
+      val allowed = Seq("centroids(/[^/]+)?", "assigned(/cell=\\d+(/g=\\d+(/[^/]+)?)?)?",
+        "tombstones(/epoch=\\d+(/[^/]+)?)?", "_meta(/v\\d+)?") ++
+        (if (storage == "pq") Seq("pq_codebooks(/[^/]+)?") else Nil)
+      val root = java.nio.file.Paths.get(p)
+      val walk = java.nio.file.Files.walk(root)
+      val stray = try walk.iterator().asScala.drop(1).map(root.relativize(_).toString)
+          // Hadoop's job markers and checksum sidecars
+          .filterNot { r => val n = r.split('/').last; n == "_SUCCESS" || n.startsWith(".") }
+          .filterNot(r => allowed.exists(r.matches)).toList
+        finally walk.close()
+      assert(stray.isEmpty, s"$storage: $stray")
+      assert(new java.io.File(s"$p/pq_codebooks").exists() == (storage == "pq"), storage)
+    }
+  }
+
+  /** The filesystem calls `body` makes on local paths, as (kind, path). */
+  private def recorded(body: => Unit): Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    RecordingLocalFs.calls.clear()
+    withConf("fs.file.impl" -> classOf[RecordingLocalFs].getName,
+             "fs.file.impl.disable.cache" -> "true")(body)
+    RecordingLocalFs.calls.asScala.toList
+  }
+
+  test("a query and an append read the state once and list no centroids, tombstones or summaries") {
+    val p = java.nio.file.Files.createTempDirectory("ivfmetacalls").toString
+    Similarity.buildIvfIndex(corpus.filter(SimQueries.InitPred), SimQueries.ClusterCentPred,
+      SimQueries.Dim, p)
+    // two epochs on disk, the newer live
+    Similarity.deleteFromIvfIndex(spark, p, corpus.filter("vec_id % 7 = 1").select("vec_id"))
+    Similarity.deleteFromIvfIndex(spark, p, corpus.filter("vec_id % 7 = 2").select("vec_id"))
+    val q = corpus.filter(SimQueries.QueryPred)
+    val expected = answers(p, q) // opens the handle
+    def check(op: String, calls: Seq[(String, String)], stateLists: Int): Unit = {
+      def n(kind: String, at: String => Boolean) = calls.count(c => c._1 == kind && at(c._2))
+      val msg = s"$op: ${calls.mkString("\n")}"
+      assert(n("list", _ == s"$p/_meta") == stateLists, msg)
+      assert(n("open", _.startsWith(s"$p/_meta/")) == stateLists, msg)
+      assert(!calls.exists(_._2.startsWith(s"$p/centroids")), msg)
+      assert(n("list", _ == s"$p/tombstones") == 0, msg)
+      assert(!calls.exists(c => c._2.contains("_gens") ||
+        c._2.startsWith(s"$p/tombstones") && c._2.endsWith("/_SUCCESS")), msg)
+    }
+    var got = Set.empty[Seq[Any]]
+    val query = recorded { got = answers(p, q) }
+    assert(got == expected)
+    check("query", query, 1)
+    assert(query.count(_ == ("list" -> s"$p/assigned")) == 1, query.mkString("\n"))
+    check("append", recorded(Similarity.appendToIvfIndex(
+      corpus.filter(s"NOT (${SimQueries.InitPred}) AND vec_id % 7 = 4"), p)), 1)
+    // a version pruned between a reader's listing and its open (two
+    // commits ran in between): the reader lists again and opens the newer
+    val warm = answers(p, q)
+    RecordingLocalFs.beforeOpen.set { f =>
+      val v = f.getName.stripPrefix("v").toLong
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$p/_meta/v$v"),
+        java.nio.file.Paths.get(s"$p/_meta/v${v + 2}"))
+      dropState(p, v)
+    }
+    val relisted = recorded { got = answers(p, q) }
+    assert(got == warm)
+    check("re-listed query", relisted, 2)
+    assert(RecordingLocalFs.beforeOpen.get == null)
+  }
+}
+
+/** The local filesystem, recording the listings, status probes and opens
+  * it serves as (kind, path), and running `beforeOpen` once, before the
+  * first open of a file under a `_meta` directory.
+  */
+class RecordingLocalFs extends graft.io.ForkFreeLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path}
+  import RecordingLocalFs._
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    calls.add("list" -> f.toUri.getPath)
+    super.listStatus(f)
+  }
+
+  override def getFileStatus(f: Path): FileStatus = {
+    calls.add("status" -> f.toUri.getPath)
+    super.getFileStatus(f)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    calls.add("open" -> f.toUri.getPath)
+    if (f.getParent.getName == "_meta") Option(beforeOpen.getAndSet(null)).foreach(_(f))
+    super.open(f, bufferSize)
+  }
+}
+
+object RecordingLocalFs {
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+  val beforeOpen = new java.util.concurrent.atomic.AtomicReference[org.apache.hadoop.fs.Path => Unit]()
 }

@@ -334,13 +334,10 @@ class CurationStreamSpec extends SparkSpec {
       assert(Similarity.readIvfAssigned(spark, idx)
         .select("c_id").as[Long].collect().toSet == Set(1L),
         "the inline cadence must physically reclaim the dropped rows")
-      // and the applied set is retired: the live tombstone epoch is empty,
-      // so the query-path anti-join stays broadcast-class by construction
-      val tombEpochs = new java.io.File(s"$idx/tombstones").listFiles()
-        .map(_.getName).filter(_.startsWith("epoch="))
-        .map(_.stripPrefix("epoch=").toLong)
-      assert(spark.read.parquet(s"$idx/tombstones/epoch=${tombEpochs.max}")
-        .count() == 0, "the hook must retire the sets it applied")
+      // and the applied set is retired: the live state holds no tombstone
+      // epoch, so the query-path anti-join stays broadcast-class by construction
+      assert(Similarity.indexState(spark, idx).tombs.isEmpty,
+        "the hook must retire the sets it applied")
       // answers agree with the mask-only path: only the keeper remains
       val got = Similarity.ivfTopKIndexed(spark, idx,
           Seq(999L).toDF("doc_id").select(col("doc_id"),
