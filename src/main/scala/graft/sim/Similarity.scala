@@ -553,8 +553,6 @@ object Similarity {
   /** How many state versions `_meta` keeps: the newest and the one before. */
   private val StateVersionsKept = 2
 
-  private val StateVersion = "v(\\d+)".r
-
   /** The newest state of the index at `path`: one listing of `_meta` and
     * one read of its newest version. A version pruned between the two
     * (two commits ran in between) is gone because newer ones exist, so
@@ -564,11 +562,7 @@ object Similarity {
     */
   private def readState(fs: FileSystem, path: String): IndexState = {
     val meta = new Path(s"$path/_meta")
-    val newest =
-      try fs.listStatus(meta).iterator.map(_.getPath.getName)
-        .collect { case StateVersion(v) => v.toLong }.maxOption
-      catch { case _: java.io.FileNotFoundException => None }
-    val v = newest.getOrElse(throw new IllegalStateException(
+    val v = numbered(fs, meta, "v").lastOption.getOrElse(throw new IllegalStateException(
       s"$path has no index manifest (no state version under $meta): it is not a " +
         "buildIvfIndex index, or an older layout wrote it (a _meta/manifest file " +
         "and no state versions) — rebuild it with buildIvfIndex"))
@@ -600,21 +594,29 @@ object Similarity {
       num(j \ "nextEpoch"), num(j \ "tombFloor"), opt("curationApplied").map(num))
   }
 
-  /** Commit `st` as `_meta/v<st.version>`: written whole to a dot-temp,
-    * then renamed to that new name, so a reader sees the complete version
-    * or none and no existing file is replaced. Then drops the versions
-    * older than the newest [[StateVersionsKept]]: a reader holds the
-    * files a state names, never the state file itself.
+  /** Commit `st` as `_meta/v<st.version>`: written whole to a temp file
+    * of its own, then renamed to that new name, so a reader sees the
+    * complete version or none. An existing version is never replaced: a
+    * second writer from the same state fails by name instead of undoing
+    * the first one's update (the check and the rename are two calls, so
+    * this catches overlapping writers; it does not make two safe). Then
+    * drops the versions older than the newest [[StateVersionsKept]]: a
+    * reader holds the files a state names, never the state file itself.
     */
   private def commit(fs: FileSystem, path: String, st: IndexState): Unit = {
     val meta = new Path(s"$path/_meta")
-    val tmp = new Path(meta, s".v${st.version}.tmp")
-    val out = fs.create(tmp, true)
+    val dst = new Path(meta, s"v${st.version}")
+    val tmp = new Path(meta, s".v${st.version}.${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, false)
     try out.write(st.json.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, new Path(meta, s"v${st.version}")))
-      throw new java.io.IOException(s"could not commit $meta/v${st.version}")
-    fs.listStatus(meta).iterator.map(_.getPath.getName)
-      .collect { case StateVersion(v) if v.toLong <= st.version - StateVersionsKept => v }
+    if (fs.exists(dst)) {
+      fs.delete(tmp, false)
+      throw new java.util.ConcurrentModificationException(s"$dst already exists: another " +
+        s"writer committed it after this one read v${st.version - 1}; retry on the new state")
+    }
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"could not commit $dst")
+    numbered(fs, meta, "v").filter(_ <= st.version - StateVersionsKept)
       .foreach(v => fs.delete(new Path(meta, s"v$v"), false))
   }
 
@@ -720,6 +722,14 @@ object Similarity {
       val n = f.getPath.getName
       f.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The numbers `n` of the entries `<prefix><n>` directly under `dir`,
+    * ascending; none when it is missing.
+    */
+  private def numbered(fs: FileSystem, dir: Path, prefix: String): Seq[Long] =
+    try fs.listStatus(dir).toSeq.map(_.getPath.getName).filter(_.startsWith(prefix))
+      .flatMap(_.stripPrefix(prefix).toLongOption).sorted
     catch { case _: java.io.FileNotFoundException => Nil }
 
   /** Column names the cell-partitioned layout reserves for its own payload,
@@ -942,10 +952,7 @@ object Similarity {
     * creates cell directories without a commit, so no state lists them.
     */
   private def cellsOnDisk(fs: FileSystem, path: String): Seq[Long] =
-    try fs.listStatus(new Path(s"$path/assigned")).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .map(_.getPath.getName.stripPrefix("cell=").toLong).toSeq.sorted
-    catch { case _: java.io.FileNotFoundException => Nil }
+    numbered(fs, new Path(s"$path/assigned"), "cell=")
 
   /** The LIVE generation directories in state `st` of `cells` (every
     * on-disk cell when None; a cell not on disk has none), as explicit
@@ -1296,20 +1303,15 @@ object Similarity {
     // lagging readers; anything at or below K-1 has now survived a full
     // compaction cycle unreferenced
     targets.foreach { c =>
-      fs.listStatus(new Path(s"$assignedRoot/cell=$c")).map(_.getPath)
-        .filter(_.getName.startsWith("g="))
-        .filter(_.getName.stripPrefix("g=").toLong <= nextGen(c) - 2)
-        .foreach(fs.delete(_, true))
+      numbered(fs, new Path(s"$assignedRoot/cell=$c"), "g=").filter(_ <= nextGen(c) - 2)
+        .foreach(g => fs.delete(new Path(s"$assignedRoot/cell=$c/g=$g"), true))
     }
     fs.delete(staging, true)
     // and the tombstone epochs below the previous compaction's floor:
     // none is live, and a reader resolved after that compaction holds a
     // newer one. Deletes never prune.
-    try fs.listStatus(new Path(s"$path/tombstones")).map(_.getPath)
-      .filter(_.getName.startsWith("epoch="))
-      .filter(_.getName.stripPrefix("epoch=").toLong < st.tombFloor)
-      .foreach(fs.delete(_, true))
-    catch { case _: java.io.FileNotFoundException => () }
+    numbered(fs, new Path(s"$path/tombstones"), "epoch=").filter(_ < st.tombFloor)
+      .foreach(e => fs.delete(new Path(s"$path/tombstones/epoch=$e"), true))
     targets
   }
 

@@ -796,12 +796,19 @@ class IvfIndexSpec extends SparkSpec {
     Similarity.compactIvfIndex(spark, p)
     assert(lagging.collect().map(_.toSeq).toSet == expected,
       "one compaction must not delete the epoch a reader resolved before it")
-    val compacted = query().collect().map(_.toSeq).toSet
-    // a second compaction drops what the first left behind, and the live
-    // state still holds no tombstone epoch
+    // a delete after the first compaction writes epoch 2, and a reader
+    // resolved then holds it
+    Similarity.deleteFromIvfIndex(spark, p, corpus.filter("vec_id % 7 = 3").select("vec_id"))
+    val held = query()
+    held.inputFiles
+    val heldExpected = query().collect().map(_.toSeq).toSet
+    // a second compaction drops what the first left behind, and only that:
+    // the epoch written after the first one stays, though no longer live
     Similarity.compactIvfIndex(spark, p)
-    assert(epochs().isEmpty && liveTombIds(p).isEmpty)
-    assert(query().collect().map(_.toSeq).toSet == compacted)
+    assert(epochs() == Set(2L) && liveTombIds(p).isEmpty)
+    assert(held.collect().map(_.toSeq).toSet == heldExpected,
+      "a compaction must not delete the epoch written after the previous one")
+    assert(query().collect().map(_.toSeq).toSet == heldExpected)
   }
 
   test("curation hook applies only the drop DELTA: retired drops are never re-tombstoned") {
@@ -1434,6 +1441,37 @@ class IvfIndexSpec extends SparkSpec {
     assert(got == warm)
     check("re-listed query", relisted, 2)
     assert(RecordingLocalFs.beforeOpen.get == null)
+  }
+
+  test("two writers committing from one state: the second fails by name, the first's update stands") {
+    val p = java.nio.file.Files.createTempDirectory("ivftwowriters").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
+    val q = corpus.filter(SimQueries.QueryPred)
+    val (x, y) = ("vec_id % 7 = 1", "vec_id % 7 = 2")
+    def ids(pred: String): Set[Long] =
+      corpus.filter(pred).collect().map(_.getAs[Long]("vec_id")).toSet
+    val expected = Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe,
+        candidateFilter = Some(!col("c_id").isInCollection(ids(s"$x OR $y"))))
+      .collect().map(_.toSeq).toSet
+    def delete(pred: String): Long =
+      Similarity.deleteFromIvfIndex(spark, p, corpus.filter(pred).select("vec_id"))
+    delete(x)
+    val read = Similarity.indexState(spark, p)
+    assert(read.tombs.nonEmpty && read.gens.isEmpty)
+    // a compaction commits while a delete holds the state both read
+    RecordingLocalFs.beforeOpen.set(_ => Similarity.compactIvfIndex(spark, p))
+    val e = intercept[java.util.ConcurrentModificationException](recorded(delete(y)))
+    assert(RecordingLocalFs.beforeOpen.get == null)
+    assert(e.getMessage.contains(s"v${read.version + 1} already exists") &&
+      e.getMessage.contains("another writer"), e.getMessage)
+    // the compaction's version stands: nothing tombstoned, cells compacted
+    val won = Similarity.indexState(spark, p)
+    assert(won.version == read.version + 1 && won.tombs.isEmpty && won.gens.nonEmpty)
+    assert(!new java.io.File(s"$p/_meta").list().exists(_.endsWith(".tmp")))
+    // the losing delete, retried, applies on top of it
+    delete(y)
+    assert(answers(p, q) == expected)
+    assert(liveTombIds(p).contains(ids(y)))
   }
 }
 
