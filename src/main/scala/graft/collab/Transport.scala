@@ -101,53 +101,3 @@ final case class PartitionedLog(dir: String, partitions: Int = 4) extends LogTra
     if (frames.nonEmpty) publishRoundRobin(frames)
   }
 }
-
-/** The Kafka transport: one topic per domain (`alert<domain>` — the
-  * reference's topic naming), Spark's kafka source/sink as consumer and
-  * producer. The option mapping below is the entire adapter; the
-  * (offset, value) schema and at-least-once semantics line up with
-  * [[FileLog]] by construction (Kafka partition offsets ↔ segment
-  * offsets; producer retries ↔ segment re-append).
-  *
-  * NOT RUNNABLE IN THIS BUILD ENVIRONMENT: the spark-sql-kafka connector
-  * jar and a broker are both absent (offline container), so
-  * `format("kafka")` would fail source lookup at start. The pure option
-  * builders are unit-tested; the streaming contract (duplicate
-  * redelivery, checkpoint restart, C6 dispatch) is exercised against
-  * [[FileLog]] through the same trait — point `bootstrap` at a real
-  * cluster with the connector on the classpath and the same queries run
-  * unchanged.
-  */
-final case class KafkaLog(bootstrap: String, topic: String) extends LogTransport {
-
-  /** Consumer options: subscribe from the earliest retained offset; the
-    * query's checkpoint, not the broker group, owns progress (Spark's
-    * kafka source manages offsets itself — groupIdPrefix only labels it).
-    */
-  def readerOptions: Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> bootstrap,
-    "subscribe" -> topic,
-    "startingOffsets" -> "earliest",
-    "groupIdPrefix" -> s"graft-$topic")
-
-  /** Producer options: idempotent producer + all-replica acks — the
-    * at-least-once (not at-most-once) arm of the delivery contract.
-    */
-  def writerOptions: Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> bootstrap,
-    "topic" -> topic,
-    "kafka.enable.idempotence" -> "true",
-    "kafka.acks" -> "all")
-
-  def stream(spark: SparkSession): DataFrame =
-    spark.readStream.format("kafka").options(readerOptions).load()
-      .select(col("offset"), col("value").cast("string").as("value"))
-
-  def read(spark: SparkSession): DataFrame =
-    spark.read.format("kafka").options(readerOptions - "groupIdPrefix").load()
-      .select(col("offset"), col("value").cast("string").as("value"))
-
-  def sink: (Dataset[Row], Long) => Unit = (batch, _) =>
-    batch.select(col("value").cast("binary").as("value"))
-      .write.format("kafka").options(writerOptions).save()
-}

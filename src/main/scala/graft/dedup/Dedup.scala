@@ -113,14 +113,14 @@ object Dedup {
       .drop("__fp")
 
   /** Streaming NEAR-dup candidate gate (SimHash): emits (dup_id, of_id,
-    * hamming) for every arriving document within `maxHamming` bits of a
+    * hamming) for every arriving document within 3 bits of a
     * previously seen one — the approximate counterpart of
     * [[exactStream]], entirely at ingest.
     *
     * Shape: [[withSimhash]] is a map-only projection (no pre-state
     * shuffle), the 64-bit signature splits into `Bands` 16-bit blocks
     * (pigeonhole: Hamming ≤ 3 ⇒ some block identical, so the gate has NO
-    * false negatives at maxHamming ≤ 3, like the batch
+    * false negatives at Hamming ≤ 3, like the batch
     * [[simhashPairs]]), and each (band, block-value) bucket is one keyed
     * state entry holding the (id, simhash) of the docs seen in it — the
     * arriving doc checks EXACT Hamming distance against those 8-byte
@@ -134,7 +134,7 @@ object Dedup {
     * repeat across bands — `.distinct()` them per batch if consumed as a
     * set (the spec does).
     */
-  def nearDupStream(docs: DataFrame, maxHamming: Int = 3,
+  def nearDupStream(docs: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text",
                     idleTimeoutMs: Option[Long] = None)
       : org.apache.spark.sql.Dataset[(Long, Long, Int)] = {
@@ -164,7 +164,7 @@ object Dedup {
         if (reps.exists(_._1 == id)) (reps, Nil)
         else {
           val hits = reps.collect {
-            case (rid, rsig) if java.lang.Long.bitCount(rsig ^ sig) <= maxHamming =>
+            case (rid, rsig) if java.lang.Long.bitCount(rsig ^ sig) <= 3 =>
               (id, rid, java.lang.Long.bitCount(rsig ^ sig))
           }
           (reps :+ ((id, sig)), hits)
@@ -181,7 +181,7 @@ object Dedup {
   /** Benchmark decontamination: drop every corpus document sharing at
     * least one word k-gram with the benchmark set — the training-data
     * hygiene step of GPT-3 (Brown et al. 2020, §4/Appendix C, 13-gram)
-    * and PaLM (Chowdhery et al. 2022, §6.6, 8-gram); default k = 8.
+    * and PaLM (Chowdhery et al. 2022, §6.6, 8-gram); k = 8, PaLM's.
     * Benchmark documents present in the corpus remove themselves (full
     * self-overlap), which is the desired semantics — test rows must not
     * be trained on.
@@ -203,12 +203,12 @@ object Dedup {
     * decontaminating against something benchmark-shaped yet corpus-SIZED
     * passes `broadcastBench = false` and gets the planner's choice back.
     */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame, k: Int = 8,
+  def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text",
                     broadcastBench: Boolean = true): DataFrame = {
-    val benchGrams = docShingles(benchmark, k, idCol, textCol)
+    val benchGrams = docShingles(benchmark, 8, idCol, textCol)
       .select("sh").distinct()
-    val contaminated = docShingles(corpus, k, idCol, textCol)
+    val contaminated = docShingles(corpus, 8, idCol, textCol)
       .join(if (broadcastBench) broadcast(benchGrams) else benchGrams, "sh")
       .select(col("doc_id").as(idCol)).distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
@@ -514,7 +514,7 @@ object Dedup {
   }
 
   /** SimHash (64-bit): per distinct token, each bit's hash contributes +/-1;
-    * the signature bit is 1 iff the sum is positive. Computed as `bits`
+    * the signature bit is 1 iff the sum is positive. Computed as 64
     * sum-aggregates in one groupBy (map-side partial sums, one shuffle on
     * doc_id), then OR-packed into a long — bit 63 lands in the sign bit,
     * which every downstream op (xor, bit_count, shift+mask) treats as a
@@ -526,23 +526,22 @@ object Dedup {
     * a meaningful cross-implementation check precisely because they
     * compute the same signature through entirely different plans.
     */
-  def simhashSignatures(docs: DataFrame, bits: Int = 64): DataFrame = {
-    require(bits >= 1 && bits <= 64, "signature is packed into one long")
+  def simhashSignatures(docs: DataFrame): DataFrame = {
     val t = widen(docs).select(col("doc_id"),
         explode(array_distinct(Text.tokens(col("text")))).as("tok"))
       .withColumn("tid", strId(col("tok")))
-    val aggs = (0 until bits).map { j =>
+    val aggs = (0 until 64).map { j =>
       sum(when(perm(j, col("tid")) % 2 === 1, 1).otherwise(-1)).as(s"s$j")
     }
     val sums = t.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    val packed = (0 until bits).map { j =>
+    val packed = (0 until 64).map { j =>
       when(col(s"s$j") > 0, lit(1L << j)).otherwise(0L)
     }.reduce(_ bitwiseOR _)
     sums.select(col("doc_id"), packed.as("simhash"))
   }
 
   /** [[simhashSignatures]] as a PURE PROJECTION — no explode, no groupBy,
-    * no shuffle: all `bits` vote counters accumulate in a single pass
+    * no shuffle: all 64 vote counters accumulate in a single pass
     * over the (distinct) token array via the NATIVE kernel
     * [[graft.functions.SimhashSig]] (a higher-order fold here
     * interpreted its lambdas per token × per bit, which made the
@@ -563,12 +562,11 @@ object Dedup {
     * every other token-less doc downstream.
     */
   def withSimhash(docs0: DataFrame, textCol: String = "text",
-                  out: String = "simhash", bits: Int = 64,
+                  out: String = "simhash",
                   evalOnce: Boolean = false): DataFrame = {
-    require(bits >= 1 && bits <= 64, "signature is packed into one long")
     val docs = widen(docs0) // see withMinhash — no-op on streaming inputs
     val sig = graft.functions.SimhashSig(
-      array_distinct(Text.tokens(col(textCol))), bits)
+      array_distinct(Text.tokens(col(textCol))), 64)
     // evalOnce: see withMinhash — the streaming gates' anti-double-eval fence
     docs.withColumn(out, if (evalOnce) graft.functions.EvalOnce(sig) else sig)
   }
@@ -742,6 +740,13 @@ object Dedup {
     */
   @volatile var lastSweeps: Int = -1
 
+  /** Node count under which each [[dupClusters]] sweep broadcasts its
+    * node-sized relations (4M nodes ≈ 64 MB of packed labels), beside
+    * the closure's local-solve gate ([[graft.GraftConf.LocalSolveMaxPairs]],
+    * 4M pairs).
+    */
+  private val BroadcastMaxNodes = 4000000L
+
   def dupClusters(pairs: DataFrame, maxIters: Int = 25,
                   iCol: String = "i", jCol: String = "j"): DataFrame = {
     // localCheckpoint, NOT persist: each sweep embeds `edges` inside a
@@ -757,8 +762,7 @@ object Dedup {
     // two free projections of the materialized blocks)
     // barrier flavor: executor-local by default; reliable (DFS-backed,
     // survives executor loss mid-computation) behind one conf
-    val reliable = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.reliableCheckpoint").contains("true")
+    val reliable = graft.GraftConf.ReliableCheckpoint.get(pairs.sparkSession)
     def barrier(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     val p0 = barrier(
@@ -786,10 +790,7 @@ object Dedup {
     // the local relation of tuples this replaced). At the 4M-pair default
     // that is 64 MB of pairs (128 MB at the collect's peak) and ~80 MB of
     // labels at one node per pair, ~160 MB at two nodes per pair.
-    val localMaxPairs = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.localSolveMaxPairs")
-      .map(_.toLong).getOrElse(4000000L)
-    if (p0.count() <= localMaxPairs) {
+    if (p0.count() <= graft.GraftConf.LocalSolveMaxPairs.get(pairs.sparkSession)) {
       val parts = p0.rdd.mapPartitions { rows =>
         val is = Array.newBuilder[Long]; val js = Array.newBuilder[Long]
         var clean = true
@@ -877,16 +878,12 @@ object Dedup {
     // gate an explicit broadcast hint on the real node count: under the
     // gate every sweep joins the (checkpointed, never reshuffled) edge
     // list against a broadcast and the only exchange left is the
-    // map-side-combined neighbor-min aggregate; above the gate (conf
-    // `spark.graft.cc.broadcastMaxNodes`, default 4M nodes ≈ 64 MB of
-    // packed labels) the previous shuffle shape stands — same results,
-    // the hint never risks a query-time broadcast OOM at 100 TB.
+    // map-side-combined neighbor-min aggregate; above the gate
+    // ([[BroadcastMaxNodes]]) the previous shuffle shape stands — same
+    // results, the hint never risks a query-time broadcast OOM at 100 TB.
     val nodes = labelsCk.count()
-    val bGate = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.broadcastMaxNodes")
-      .map(_.toLong).getOrElse(4000000L)
     def maybeB(df: DataFrame): DataFrame =
-      if (nodes <= bGate) broadcast(df) else df
+      if (nodes <= BroadcastMaxNodes) broadcast(df) else df
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIters) {

@@ -77,9 +77,9 @@ final case class TimingRecord(domain: String, control_plane_s: Double, wall_ts: 
 /** Static topology dimension row (`portMaps`, `DIPA_Controller.py:138-144`):
   * one row per (switch, port) with the attached node. At any scale this
   * stays a dimension table. The J1 mitigation lookup (`Detect.mitigations`)
-  * collects it when the frame is built, into a host map literal that rides
-  * in the plan (a topology change takes a new frame or query); the J4/J5
-  * attribution paths broadcast-join it.
+  * and the J4/J5 attribution paths (`Detect.atHostPorts`) collect it when
+  * the frame is built, into a host map literal that rides in the plan (a
+  * topology change takes a new frame or query).
   */
 final case class TopologyEntry(
     switch_name: String, // not `switch`: Java reserved word breaks the encoder

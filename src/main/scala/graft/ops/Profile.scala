@@ -21,16 +21,16 @@ import org.apache.spark.sql.functions._
 object Profile {
 
   /** Profile `cols` (default: every column) of `df`. Returns one row per
-    * column: (column, n_rows, n_null, distinct_est, min, max).
+    * column: (column, n_rows, n_null, distinct_est, min, max), the
+    * distinct estimate at 5% relative error.
     */
-  def columns(df: DataFrame, cols: Seq[String] = Nil,
-              rsd: Double = 0.05): DataFrame = {
+  def columns(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
     val names = if (cols.nonEmpty) cols else df.columns.toSeq
     require(names.nonEmpty, "no columns to profile")
     val aggs = count(lit(1)).as("__n") +: names.flatMap { c =>
       Seq(
         count(col(c)).as(s"__cnt_$c"),
-        approx_count_distinct(col(c), rsd).as(s"__dst_$c"),
+        approx_count_distinct(col(c), 0.05).as(s"__dst_$c"),
         min(col(c)).cast("string").as(s"__min_$c"),
         max(col(c)).cast("string").as(s"__max_$c"))
     }

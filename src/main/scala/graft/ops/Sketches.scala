@@ -32,12 +32,12 @@ object Sketches {
 
   /** Per-key BINARY DataSketches-HLL sketch of `value` — the persistable
     * partial: write these per shard/day, merge later with [[hllUnion]].
-    * `lgK` buckets = 2^lgK (12 → ~3% error, 4 KB).
+    * 2^12 buckets (lgK 12: ~3% error, 4 KB).
     */
   def hllSketch(df: DataFrame, keys: Seq[String], value: Column,
-                lgK: Int = 12, out: String = "hll"): DataFrame =
+                out: String = "hll"): DataFrame =
     df.groupBy(keys.map(col): _*)
-      .agg(hll_sketch_agg(value, lit(lgK)).as(out))
+      .agg(hll_sketch_agg(value, lit(12)).as(out))
 
   /** Merge sketch blobs (column `sketch`) across rows per `keys` and
     * estimate the distinct count of the union.

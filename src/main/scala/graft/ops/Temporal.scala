@@ -160,24 +160,21 @@ object Temporal {
     * quadratic in per-bin density (every point × every overlapping
     * interval), which no join strategy can make linear — the reason
     * the century scale tier probes the keyed z3 but not keyless z2.
-    * When `densityGuard` is on (default) the keyless form estimates its
-    * match count first ([[keylessDensityDiagnosis]]) and prints the
-    * named diagnosis — pointing at the keyed variant — instead of
-    * letting a dense call discover the cliff as an executor OOM three
-    * stages later. COST: the guard runs two EAGER aggregate jobs at
-    * call time — `rangeJoin` is then no longer pure plan construction,
-    * and on UNCACHED inputs each job recomputes the full upstream
-    * lineage (a silent ~2× upstream tax when the inputs are expensive
-    * derivations rather than table scans). Cache the inputs first, or
-    * pass `densityGuard = false`, for repeated keyless calls or
-    * expensive lineage already known sparse.
+    * The keyless form therefore estimates its match count first
+    * ([[keylessDensityDiagnosis]]) and prints the named diagnosis —
+    * pointing at the keyed variant — instead of letting a dense call
+    * discover the cliff as an executor OOM three stages later. COST: the
+    * guard runs two EAGER aggregate jobs at call time — a keyless
+    * `rangeJoin` is not pure plan construction, and on UNCACHED inputs
+    * each job recomputes the full upstream lineage (a silent ~2×
+    * upstream tax when the inputs are expensive derivations rather than
+    * table scans). Cache the inputs first for repeated keyless calls.
     */
   def rangeJoin(points: DataFrame, ptTs: String, intervals: DataFrame,
                 startCol: String, endCol: String, binWidth: Long,
-                keys: Seq[String] = Nil,
-                densityGuard: Boolean = true): DataFrame = {
+                keys: Seq[String] = Nil): DataFrame = {
     require(binWidth > 0, "binWidth must be positive")
-    if (keys.isEmpty && densityGuard)
+    if (keys.isEmpty)
       keylessDensityDiagnosis(points, ptTs, intervals, startCol, endCol,
         binWidth).foreach(System.err.println)
     val clash = intervals.columns.toSeq.intersect(points.columns.toSeq)

@@ -106,7 +106,7 @@ object DetectQueries {
 
   /** J4/J5 — attacker attribution through the real attributeAttackers:
     * above-threshold rates toward victim MACs (semi-join), resolved to
-    * the attached host via the (dpid, port) topology broadcast join.
+    * the attached host via the (dpid, port) topology map lookup.
     */
   def j5Attribution(s: SparkSession, dir: String): DataFrame = {
     val e = ev(s, dir)

@@ -162,10 +162,8 @@ object Similarity {
     * bucket within Hamming `probeRadius` (multi-probe: near-misses of a few
     * sign bits are where near neighbors land). Candidates come from an
     * EQUI-join on (table, bucket) — the corpus side is never theta-joined
-    * or rescanned per probe: one broadcast hash join while the probe set
-    * is small (`hintBroadcast` true, the default), a plain shuffle hash
-    * join on (table, bucket) when the caller's query set outgrows
-    * broadcast and passes false (see [[lshMultiScored]]).
+    * or rescanned per probe: one broadcast hash join against the hinted
+    * probe rows (see [[lshMultiScored]]).
     *
     * Shapes: corpus side = |C| * tables index rows (map-side explode, no
     * shuffle before the join); probe side = |Q| * tables * |masks| slim
@@ -175,12 +173,11 @@ object Similarity {
     */
   def lshTopKMulti(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
                    planes: Int, tables: Int, probeRadius: Int,
-                   hintBroadcast: Boolean = true,
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    carry: Seq[String] = Nil,
                    candidateFilter: Option[Column] = None): DataFrame =
     rankTopK(lshMultiScored(queries, corpus, dim, planes, tables, probeRadius,
-      hintBroadcast, idCol, vecCol, carry, candidateFilter), k)
+      idCol, vecCol, carry, candidateFilter), k)
 
   /** The deduped candidate relation behind [[lshTopKMulti]]: one
     * (q_id, c_id, cos) row per scored candidate pair. Exposed so recall
@@ -188,11 +185,10 @@ object Similarity {
     * is the share of the corpus an index actually examined, the honest
     * denominator under any recall number.
     *
-    * `hintBroadcast` (default true) hints `broadcast()` on the probe rows
-    * and the query vectors — correct while |Q|·tables·|masks| stays
-    * driver-small. Spark honors the hint REGARDLESS of size, so a caller
-    * with a large query set must pass false, which leaves a plain shuffle
-    * hash join on (t, bk) for AQE to plan — same results, no driver OOM.
+    * The probe rows and the query vectors are hinted `broadcast()`: the
+    * query set is the driver-small side at every call site (|Q|·tables·
+    * |masks| slim rows). Spark honors the hint regardless of size, so a
+    * query set that outgrows the driver needs a plain join here.
     *
     * `carry` = metadata columns riding the corpus side of the bucket
     * index; `candidateFilter` = a predicate over them that prunes
@@ -205,14 +201,11 @@ object Similarity {
     */
   def lshMultiScored(queries: DataFrame, corpus: DataFrame, dim: Int,
                      planes: Int, tables: Int, probeRadius: Int,
-                     hintBroadcast: Boolean = true,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      carry: Seq[String] = Nil,
                      candidateFilter: Option[Column] = None): DataFrame = {
     require(planes * tables <= 63, "wide bucket must fit one long")
     val mask = (1L << planes) - 1
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (hintBroadcast) broadcast(df) else df
     def tableBucket(wide: Column, t: Int): Column =
       shiftright(wide, planes * t).bitwiseAND(lit(mask))
     def banded(wide: Column, as: String): Column =
@@ -241,9 +234,9 @@ object Similarity {
       .select(col("c_id"), col("cv"), col("cn"),
         col("tb.t").as("t"), col("tb.bk").as("bk"))
 
-    c.join(maybeBroadcast(probes), Seq("t", "bk"))
+    c.join(broadcast(probes), Seq("t", "bk"))
       .filter(col("q_id") =!= col("c_id"))
-      .join(maybeBroadcast(qv.select(col("q_id"), col("qv"), col("qn"))), Seq("q_id"))
+      .join(broadcast(qv.select(col("q_id"), col("qv"), col("qn"))), Seq("q_id"))
       .withColumn("cos", cosine(DotProduct(col("qv"), col("cv")), col("qn"), col("cn")))
       .groupBy(col("q_id"), col("c_id"))
       .agg(max(col("cos")).as("cos")) // a pair can match in several tables
@@ -319,18 +312,17 @@ object Similarity {
 
   /** IVF-flat with Lloyd-refined centroids: seed cells from `centroidPred`
     * (a sampling predicate — the init every IVF build starts from), run
-    * `refineIters` refinement sweeps, then query as [[ivfTopK]]. Each
-    * sweep is one corpus pass (map-only assignment, one shuffle for the
-    * cell means); one sweep is usually enough to snap sampled seeds onto
-    * cluster structure when the corpus has any — see PlantedClusters for
-    * the gate fixture.
+    * [[BuildRefineIters]] refinement sweeps (the index build's count),
+    * then query as [[ivfTopK]]. Each sweep is one corpus pass (map-only
+    * assignment, one shuffle for the cell means); one sweep is usually
+    * enough to snap sampled seeds onto cluster structure when the corpus
+    * has any — see PlantedClusters for the gate fixture.
     */
   def ivfTopKRefined(queries: DataFrame, corpus: DataFrame, k: Int,
                      centroidPred: String, nprobe: Int, dim: Int,
-                     refineIters: Int = 1,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     rankTopK(ivfRefinedScored(queries, corpus, centroidPred, nprobe, dim,
-      refineIters, idCol, vecCol), k)
+      BuildRefineIters, idCol, vecCol), k)
 
   /** The scored candidate relation behind [[ivfTopK]] and
     * [[ivfTopKRefined]] — one (q_id, c_id, cos) row per (query, corpus
@@ -509,11 +501,12 @@ object Similarity {
     */
   private[graft] final case class IndexManifest(storage: String, layout: StructType)
 
-  /** A tombstone epoch as its writer recorded it: the epoch id, its
-    * parquet data bytes (what the query path's broadcast decision is made
-    * on) and the type of its `c_id` column, so the read infers nothing.
+  /** A tombstone epoch as its writer recorded it: the epoch id and the
+    * type of its `c_id` column, so the read infers nothing. (States
+    * written before the query path left the broadcast call to Spark also
+    * carry the epoch's data bytes; the read ignores them.)
     */
-  private[graft] final case class TombEpoch(epoch: Long, bytes: Long, idType: DataType)
+  private[graft] final case class TombEpoch(epoch: Long, idType: DataType)
 
   /** One version of an index's state, the file `path/_meta/v<version>`:
     *  - `build`: an id per [[buildIvfIndex]] call, by which an open
@@ -545,7 +538,7 @@ object Similarity {
         "nextEpoch" -> JInt(nextEpoch),
         "tombFloor" -> JInt(tombFloor)) ++
         tombs.map(t => "tombs" -> JObject("epoch" -> JInt(t.epoch),
-          "bytes" -> JInt(t.bytes), "idType" -> parse(t.idType.json))) ++
+          "idType" -> parse(t.idType.json))) ++
         curationApplied.map(w => "curationApplied" -> JInt(w)))))
     }
   }
@@ -590,7 +583,7 @@ object Similarity {
       case _ => throw bad
     }
     IndexState(version, build, IndexManifest(storage, layout), gens,
-      opt("tombs").map(t => TombEpoch(num(t \ "epoch"), num(t \ "bytes"), dataType(t \ "idType"))),
+      opt("tombs").map(t => TombEpoch(num(t \ "epoch"), dataType(t \ "idType"))),
       num(j \ "nextEpoch"), num(j \ "tombFloor"), opt("curationApplied").map(num))
   }
 
@@ -974,11 +967,10 @@ object Similarity {
     * is the physical row set; query paths anti-join the live tombstone
     * epoch on top.
     */
-  def readIvfAssigned(spark: SparkSession, path: String,
-                      cells: Option[Seq[Long]] = None): DataFrame = {
+  def readIvfAssigned(spark: SparkSession, path: String): DataFrame = {
     val fs = hadoopFs(spark, path)
     val st = readState(fs, path)
-    val dirs = liveDirs(path, st, cellsOnDisk(fs, path), cells)
+    val dirs = liveDirs(path, st, cellsOnDisk(fs, path), None)
     require(dirs.nonEmpty, s"$path/assigned holds no cell directories")
     scanLive(spark, path, st, dirs)
   }
@@ -1010,41 +1002,20 @@ object Similarity {
     spark.read.schema(StructType(Seq(StructField("c_id", t.idType))))
       .parquet(s"$path/tombstones/epoch=${t.epoch}")
 
-  /** Above this many on-disk bytes, the live tombstone set stops being
-    * broadcast into the query path's anti-join and joins plain
-    * (shuffle-eligible). The contract bounds the live set by deletes
-    * since the last compaction, but nothing ENFORCES it — a mass
-    * re-curation with no intervening compaction grows the epoch
-    * unboundedly, and an explicit `broadcast()` hint strips Spark's own
-    * auto-size protection, so the failure mode at 100 TB would be a
-    * driver/executor OOM inside a QUERY (never acceptable; a slow query
-    * is). 64 MiB of raw parquet ids is far beyond any sane
-    * delete-between-compactions volume yet comfortably inside driver
-    * broadcast class — above it the query degrades gracefully to a
-    * shuffled anti-join and the operator keeps answering while the
-    * operator's fix (run [[compactIvfIndex]]) is one call away.
-    * Session conf `spark.graft.index.tombstoneBroadcastMaxBytes` moves the
-    * threshold (and lets the spec pin the fallback plan shape without
-    * materializing 64 MiB of ids).
-    */
-  val TombstoneBroadcastMaxBytes: Long = 64L << 20
-
-  private def tombstoneBroadcastMax(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.index.tombstoneBroadcastMaxBytes")
-      .map(_.toLong).getOrElse(TombstoneBroadcastMaxBytes)
-
   /** DELETE vectors from a persisted index — the way OUT of the store
     * that [[buildIvfIndex]]/[[appendToIvfIndex]] are the way into. Writes
     * a new TOMBSTONE EPOCH (the previous live set plus `ids`, one tiny
     * self-contained parquet — O(live tombstones), the index files are
     * untouched) and then commits it as the live epoch of a new state
     * version: [[ivfTopKIndexed]]/[[ivfTopKReranked]] anti-join the live
-    * epoch on the cell-pruned read, so deleted vectors stop being
-    * retrievable IMMEDIATELY, and the next [[compactIvfIndex]] physically
-    * reclaims them (rewrites exactly the cells holding tombstoned rows
-    * and commits the index with no live epoch). An epoch written but
-    * never committed (a crash between the two) is invisible to readers;
-    * the next delete takes its id and overwrites it.
+    * epoch on the cell-pruned read (a broadcast while the epoch is under
+    * Spark's `autoBroadcastJoinThreshold`, a shuffle past it), so deleted
+    * vectors stop being retrievable IMMEDIATELY, and the next
+    * [[compactIvfIndex]] physically reclaims them (rewrites exactly the
+    * cells holding tombstoned rows and commits the index with no live
+    * epoch). An epoch written but never committed (a crash between the
+    * two) is invisible to readers; the next delete takes its id and
+    * overwrites it.
     *
     * This is the dedup-consistency path a 100 TB deployment hits daily:
     * curation drop verdicts arrive AFTER embedding/indexing, and a corpus
@@ -1075,7 +1046,7 @@ object Similarity {
                          idCol: String = "vec_id"): Long = {
     val fs = hadoopFs(spark, path)
     val st = readState(fs, path)
-    val (epoch, next) = tombstone(spark, fs, path, st, ids, idCol)
+    val (epoch, next) = tombstone(spark, path, st, ids, idCol)
     if (next != st) commit(fs, path, next)
     epoch
   }
@@ -1085,7 +1056,7 @@ object Similarity {
     * already covers every id, else the next version with a new epoch
     * written under `st.nextEpoch`.
     */
-  private def tombstone(spark: SparkSession, fs: FileSystem, path: String,
+  private def tombstone(spark: SparkSession, path: String,
                         st: IndexState, ids: DataFrame,
                         idCol: String): (Long, IndexState) = {
     val add = ids.select(col(idCol).as("c_id")).distinct()
@@ -1112,9 +1083,8 @@ object Similarity {
         val dir = s"$path/tombstones/epoch=$e"
         // one file: the tombstone set is delete-volume sized, not corpus sized
         full.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
-        val bytes = dataFiles(fs, new Path(dir)).map(_.getLen).sum
         (e, st.copy(version = st.version + 1,
-          tombs = Some(TombEpoch(e, bytes, full.schema("c_id").dataType)),
+          tombs = Some(TombEpoch(e, full.schema("c_id").dataType)),
           nextEpoch = e + 1))
     }
   }
@@ -1130,9 +1100,10 @@ object Similarity {
     * DELTA DISCIPLINE (the convergence contract): curation epochs are
     * CUMULATIVE — each holds the full historical drop set — while the
     * index's live tombstone epoch must stay bounded by deletes since the
-    * index's last compaction (it is anti-joined, preferably broadcast,
-    * into every query). Naively tombstoning each epoch's full set would
-    * re-add ids the index's compaction already reclaimed, so the live set
+    * index's last compaction (it is anti-joined into every query, and
+    * Spark broadcasts it only while it stays small). Naively tombstoning
+    * each epoch's full set would re-add ids the index's compaction
+    * already reclaimed, so the live set
     * would grow to O(all drops ever) and never converge.
     * Instead this call (a) skips entirely when the newest curation epoch
     * id is at or below the curation watermark the index state records
@@ -1185,7 +1156,7 @@ object Similarity {
             a.select(col("c_id").as(dropIdCol)).distinct(),
             Seq(dropIdCol), "left_semi"))
     }
-    val (epoch, next) = tombstone(spark, indexFs, indexPath, st, delta, dropIdCol)
+    val (epoch, next) = tombstone(spark, indexPath, st, delta, dropIdCol)
     commit(indexFs, indexPath,
       next.copy(version = st.version + 1, curationApplied = Some(newest)))
     Some(epoch)
@@ -1414,8 +1385,11 @@ object Similarity {
     * anti-joins the live TOMBSTONE epoch ([[deleteFromIvfIndex]]) of
     * that same version, so concurrent compaction never breaks a resolved
     * plan and deleted vectors are unretrievable before any physical
-    * rewrite. Beyond the scan itself the call lists `_meta` and
-    * `assigned/` once each and reads one state file.
+    * rewrite. The anti-join carries no hint: Spark broadcasts the epoch
+    * while its scan's file bytes are under
+    * `spark.sql.autoBroadcastJoinThreshold` and shuffles a larger one.
+    * Beyond the scan itself the call lists `_meta` and `assigned/` once
+    * each and reads one state file.
     *
     * `probeWidenTarget = Some(m)` turns on selectivity-aware probe
     * widening for FILTERED search: the qualifying density is estimated
@@ -1491,18 +1465,13 @@ object Similarity {
     }
     // deleted-but-not-yet-reclaimed rows: anti-join the live tombstone
     // epoch so a delete is effective IMMEDIATELY, before any rewrite.
-    // Broadcast only while the set is broadcast-class by MEASURED size
-    // ([[TombstoneBroadcastMaxBytes]]) — the contract bounds it by
-    // deletes since the last compaction, but an unguarded broadcast()
-    // hint would turn a contract violation into a query-time OOM; the
-    // plain anti-join keeps the query correct (and merely slower) until
-    // the next compaction retires the set
-    val assignedLive = st.tombs.fold(assigned0) { t =>
-      val ids = tombIds(spark, path, t)
-      if (t.bytes <= tombstoneBroadcastMax(spark))
-        assigned0.join(broadcast(ids), Seq("c_id"), "left_anti")
-      else assigned0.join(ids, Seq("c_id"), "left_anti")
-    }
+    // No hint: Spark's planner broadcasts the epoch while its scan's
+    // file bytes are under `spark.sql.autoBroadcastJoinThreshold` (the
+    // contract bounds the set by deletes since the last compaction) and
+    // shuffles a set that outgrew it, which keeps the query correct (and
+    // merely slower) until the next compaction retires the set
+    val assignedLive = st.tombs.fold(assigned0)(t =>
+      assigned0.join(tombIds(spark, path, t), Seq("c_id"), "left_anti"))
     // FILTERED search: the predicate lands on the already-cell-pruned
     // scan over `carry` metadata (parquet predicate pushdown composes
     // with the partition pruning) — candidates are filtered BEFORE
@@ -1576,13 +1545,9 @@ object Similarity {
   def ivfTopKReranked(spark: SparkSession, path: String,
                       queries: DataFrame, corpus: DataFrame, k: Int,
                       nprobe: Int, rerankR: Int = 64,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      candidateFilter: Option[Column] = None,
-                      maxPrunedPaths: Int = MaxPrunedIndexPaths,
-                      probeWidenTarget: Option[Int] = None): DataFrame = {
+                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(rerankR >= k, s"rerankR $rerankR must be >= k $k")
-    val cand = ivfTopKIndexed(spark, path, queries, rerankR, nprobe,
-        idCol, vecCol, candidateFilter, maxPrunedPaths, probeWidenTarget)
+    val cand = ivfTopKIndexed(spark, path, queries, rerankR, nprobe, idCol, vecCol)
       .select(col("q_id"), col("c_id"))
     val c = corpus.select(col(idCol).as("c_id"), col(vecCol).as("cv"))
       .withColumn("cn", sqrt(DotProduct(col("cv"), col("cv"))))
@@ -1925,11 +1890,11 @@ object Similarity {
       .filter(!_.isNullAt(0)).map(_.getDouble(0)).getOrElse(0.0)
   }
 
-  /** Index selection for the ANN paths: measure [[clusterMass]] and route
-    * — at-or-above `threshold` the corpus has cluster structure an IVF
-    * coarse quantizer can match ("ivf"); below it, cells cannot beat
-    * direction-uniform buckets and multi-probe LSH is the right index
-    * ("lsh"). The default threshold is the midpoint of the two gate
+  /** Index selection for the ANN paths: measure [[clusterMass]] over its
+    * default sample and route — at or above 0.7 the corpus has cluster
+    * structure an IVF coarse quantizer can match ("ivf"); below it, cells
+    * cannot beat direction-uniform buckets and multi-probe LSH is the
+    * right index ("lsh"). 0.7 is the midpoint of the two gate
     * fixtures' measured masses (embeddings ≈ 0.5 uniform, PlantedClusters
     * ≈ 0.94 clustered — IndexSelectSpec pins both routes), which is
     * exactly the judgment a user could previously get wrong: pointing IVF
@@ -1940,11 +1905,10 @@ object Similarity {
     * This is an offline planning decision — one driver-side double, like
     * choosing a join strategy — not a per-query code path.
     */
-  def recommendIndex(corpus: DataFrame, sampleN: Int = 256,
-                     threshold: Double = 0.7,
+  def recommendIndex(corpus: DataFrame,
                      idCol: String = "vec_id", vecCol: String = "embedding")
       : (String, Double) = {
-    val mass = clusterMass(corpus, sampleN, idCol, vecCol)
-    (if (mass >= threshold) "ivf" else "lsh", mass)
+    val mass = clusterMass(corpus, idCol = idCol, vecCol = vecCol)
+    (if (mass >= 0.7) "ivf" else "lsh", mass)
   }
 }

@@ -93,10 +93,6 @@ object BpeTrain {
   // of fixed distributed cost per round gone (64-round learn at sf0.1:
   // 4.7 s → phase-one cost).
 
-  private def localLoopMaxVocab(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.bpe.localLoopMaxVocab")
-      .map(_.toLong).getOrElse(2000000L)
-
   /** The wrapped sym's symbol list — the driver twin of [[adjacentPairs]]'
     * split (strip the outer parens, split on ")("). */
   private def symsOf(sym: String): Array[String] =
@@ -206,7 +202,7 @@ object BpeTrain {
   /** Collect a checkpointed vocab when it is under the local-loop gate,
     * releasing its executor blocks; None keeps the distributed loop. */
   private def vocabLocal(vocab: DataFrame): Option[Array[(Long, String)]] =
-    if (vocab.count() > localLoopMaxVocab(vocab)) None
+    if (vocab.count() > graft.GraftConf.LocalLoopMaxVocab.get(vocab.sparkSession)) None
     else {
       val rows = vocab.collect().map(r => (r.getLong(0), r.getString(1)))
       graft.dedup.Dedup.releaseCheckpoint(vocab)

@@ -187,17 +187,18 @@ object Lexical {
   }
 
   /** Reciprocal-rank fusion of two rankings (q_id, doc_id, rank):
-    * fused = floor(1e9/(c + rank_a)) + floor(1e9/(c + rank_b)), with a
-    * missing entry contributing 0 — all-integer, so the fusion is exact
-    * in any engine. Output (q_id, doc_id, rrf_e9, rank), top-k per query,
+    * fused = floor(1e9/(60 + rank_a)) + floor(1e9/(60 + rank_b)), with a
+    * missing entry contributing 0 (60 is the constant of Cormack et al.
+    * 2009) — all-integer, so the fusion is exact in any engine.
+    * Output (q_id, doc_id, rrf_e9, rank), top-k per query,
     * ties by doc_id. The floor(1e9/x) form is safe: for x ≤ ~1e6 the true
     * quotient is ≥ 1/x away from any integer it doesn't equal, far outside
     * double rounding range.
     */
-  def rrfFuse(a: DataFrame, b: DataFrame, k: Int, c: Int = 60): DataFrame = {
+  def rrfFuse(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
     def contrib(r: Column): Column =
       when(r.isNull, lit(0L))
-        .otherwise(floor(lit(1e9) / (lit(c).cast("double") + r.cast("double"))).cast("long"))
+        .otherwise(floor(lit(1e9) / (lit(60.0d) + r.cast("double"))).cast("long"))
     val fused = a.select(col("q_id"), col("doc_id"), col("rank").as("rank_a"))
       .join(b.select(col("q_id"), col("doc_id"), col("rank").as("rank_b")),
         Seq("q_id", "doc_id"), "full_outer")
@@ -318,8 +319,7 @@ object Lexical {
     */
   def bm25TopKIndexed(spark: SparkSession, path: String,
                       queries: Seq[(String, String)], k: Int,
-                      nBuckets: Int = DefaultTermBuckets,
-                      excludeSelf: Boolean = false): DataFrame = {
+                      nBuckets: Int = DefaultTermBuckets): DataFrame = {
     import spark.implicits._
     val qdf = queries.toDF("q_id", "qtext")
     // same tokenizer, applied driver-side to the literal query strings:
@@ -350,6 +350,6 @@ object Lexical {
     // across them — 1-row relations, the aggregate is free
     val tot = spark.read.parquet(s"$path/totals")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_len")).as("s_len"))
-    bm25TopKFrom(post, tot, qdf, k, excludeSelf)
+    bm25TopKFrom(post, tot, qdf, k, excludeSelf = false)
   }
 }

@@ -82,13 +82,12 @@ object Text {
     * folds into the word GPT-Ġ-style, so it adds no symbol), count every
     * other pre-token (digits/punctuation/whitespace runs) as one token.
     * This is the step past [[bpeTokenCount]]'s pre-token proxy: actual
-    * vocabulary-dependent token budgeting.
+    * vocabulary-dependent token budgeting, under the [[Merges]] table.
     */
-  def bpeMergeTokenCount(text: Column,
-                         merges: Seq[(String, String)] = Merges): Column =
+  def bpeMergeTokenCount(text: Column): Column =
     aggregate(
       transform(bpeTokens(text), t =>
-        when(t.rlike("^ ?[A-Za-z]+$"), bpeSymbolCount(ltrim(t), merges))
+        when(t.rlike("^ ?[A-Za-z]+$"), bpeSymbolCount(ltrim(t)))
           .otherwise(lit(1))),
       lit(0), (acc, x) => acc + x)
 

@@ -43,7 +43,7 @@ object Exact {
   def davg(c: Column, dt: DecimalType = Money): Column =
     sum(c.cast(dt)).cast(DoubleType) / count(c)
 
-  /** Exact windowed mean. */
-  def davgOver(c: Column, w: WindowSpec, dt: DecimalType = Money): Column =
-    sum(c.cast(dt)).over(w).cast(DoubleType) / count(c).over(w)
+  /** Exact windowed mean, at [[Money]] scale. */
+  def davgOver(c: Column, w: WindowSpec): Column =
+    sum(c.cast(Money)).over(w).cast(DoubleType) / count(c).over(w)
 }

@@ -36,6 +36,23 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.recallViolations(stats("s4c_recall" -> 0.9999999999)).isEmpty)
   }
 
+  test("s7's int8 floor is keyed by scale factor: the sf0.01 near-tie only") {
+    def at(dir: String, r: Double) = Bench.recallViolations(stats("s7_recall" -> r),
+      Bench.recallFloors(dir))
+    // sf0.01 reads 39/40 on every version of the code (a 0.0002 cosine
+    // near-tie at rank 5 under int8's resolution)
+    assert(at("/data/sf0.01", 0.975).isEmpty)
+    assert(at("/data/sf0.01", 0.95).exists(_.startsWith("s7_recall=0.9500<0.975")))
+    // sf0.1 and above keep the equality gate
+    assert(at("/data/sf0.1", 0.975).exists(_.startsWith("s7_recall=0.9750<0.999")))
+    assert(at("/data/sf10/", 0.975).nonEmpty)
+    // a directory not named sf<scale> gates at the full floors, and no
+    // other floor moves with the scale
+    assert(Bench.recallFloors("/data/fixture") == Bench.RecallFloors)
+    assert(Bench.recallFloors("/data/sf0.01").filterNot(_._1 == "s7_recall") ==
+      Bench.RecallFloors.filterNot(_._1 == "s7_recall"))
+  }
+
   test("the documented resolution trades stay ungated") {
     // s4 on the structureless corpus (honest ceiling 0.6) and the raw
     // quantized rows (the refine tier's reason to exist) must not gate

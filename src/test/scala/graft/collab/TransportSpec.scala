@@ -8,10 +8,8 @@ import scala.collection.mutable
 
 /** The transport contract behind the collaboration plane, driven through
   * the [[LogTransport]] trait: at-least-once redelivery suppressed by the
-  * consumer, checkpointed resume, producer hook publishing. FileLog runs
-  * it here; KafkaLog exposes the identical surface (its pure option
-  * mapping is pinned below — the connector jar and a broker are absent
-  * in this offline container, so its streaming arm cannot start here).
+  * consumer, checkpointed resume, producer hook publishing — over
+  * FileLog and PartitionedLog alike.
   */
 class TransportSpec extends SparkSpec {
 
@@ -118,18 +116,5 @@ class TransportSpec extends SparkSpec {
       assert(inP.map(_._2).toSeq == (0L until 20L))
       assert(inP.map(_._3).toSeq == (0 until 20).map(i => s"p$p-$i"))
     }
-  }
-
-  test("KafkaLog maps the contract onto Spark's kafka source/sink options") {
-    val k = KafkaLog("broker1:9092,broker2:9092", "alertvm0")
-    assert(k.readerOptions("kafka.bootstrap.servers") == "broker1:9092,broker2:9092")
-    assert(k.readerOptions("subscribe") == "alertvm0")
-    // resume-from-checkpoint semantics: start earliest, let the query's
-    // checkpoint own progress (matching FileLog's file-source behavior)
-    assert(k.readerOptions("startingOffsets") == "earliest")
-    // at-least-once producer, never at-most-once
-    assert(k.writerOptions("kafka.enable.idempotence") == "true")
-    assert(k.writerOptions("kafka.acks") == "all")
-    assert(k.writerOptions("topic") == "alertvm0")
   }
 }

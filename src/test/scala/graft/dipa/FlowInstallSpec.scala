@@ -4,7 +4,10 @@ import java.sql.Timestamp
 
 import graft.SparkSpec
 import graft.model.PacketEvent
+import graft.streaming.StateMachines.MacEntry
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 /** §3.3 flow-install pipeline: LLDP drop, MAC learning, FLOOD fallback,
   * classification (incl. C7 triggers), and rule emission.
@@ -61,5 +64,36 @@ class FlowInstallSpec extends SparkSpec {
     val entries = FlowInstall.macStream(history.toDS()).collect()
       .sortBy(_.seq).map(e => (e.mac, e.port))
     assert(entries.toSeq == Seq(("aa", 1), ("bb", 2), ("aa", 3)))
+  }
+
+  test("streaming MAC learning over micro-batches emits what the batch run emits") {
+    // two switches in two domains; hosts move, repeat and return, LLDP
+    // interleaves; ids ascend through the history, as a switch's do
+    val h = Seq(
+      pkt(1, 1, "aa", "bb"), pkt(1, 2, "bb", "aa"), pkt(2, 5, "aa", "cc"),
+      pkt(1, 9, "cc", "dd", ethertype = 0x88cc), pkt(1, 1, "aa", "bb"),
+      pkt(1, 3, "aa", "bb"), pkt(2, 6, "cc", "aa"), pkt(1, 2, "bb", "aa"),
+      pkt(1, 9, "ee", "dd", ethertype = 0x88cc), pkt(1, 1, "aa", "bb"),
+      pkt(2, 5, "aa", "cc"), pkt(2, 7, "cc", "aa"), pkt(1, 4, "bb", "aa"))
+      .zipWithIndex.map { case (p, i) =>
+        p.copy(domain = if (p.dpid == 2) "vm1" else "vm0", buffer_id = i.toLong) }
+    def key(e: MacEntry) = (e.domain, e.dpid, e.mac, e.seq, e.port)
+    val batch = FlowInstall.macStream(h.toDS()).collect().map(key).sorted.toSeq
+    val in = MemoryStream[PacketEvent](spark)
+    val q = FlowInstall.macStream(in.toDS()).writeStream
+      .format("memory").queryName("mac_stream_out").outputMode(OutputMode.Update()).start()
+    try {
+      // three micro-batches cut across every key's history, so a key's
+      // state must carry from one batch into the next
+      Seq(h.take(4), h.slice(4, 9), h.drop(9)).foreach { part =>
+        in.addData(part)
+        q.processAllAvailable()
+      }
+      val streamed = spark.table("mac_stream_out").as[MacEntry].collect().map(key).sorted.toSeq
+      assert(streamed == batch)
+      assert(batch.size == 8)
+      assert(batch.map(e => (e._3, e._5)).toSet ==
+        Set(("aa", 1), ("bb", 2), ("aa", 5), ("aa", 3), ("cc", 6), ("cc", 7), ("bb", 4)))
+    } finally q.stop()
   }
 }

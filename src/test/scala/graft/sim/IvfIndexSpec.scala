@@ -708,16 +708,15 @@ class IvfIndexSpec extends SparkSpec {
     val q = corpus.filter(SimQueries.QueryPred)
     def anti(plan: String): Seq[String] =
       plan.linesIterator.filter(_.contains("LeftAnti")).toSeq
-    // default: broadcast-class set rides the explicit broadcast fast path
+    // default: Spark's planner broadcasts the small epoch by its file bytes
     val fast = Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe)
     val expected = fast.collect().map(_.toSeq).toSet
     assert(anti(fast.queryExecution.executedPlan.toString)
       .exists(_.contains("Broadcast")), "broadcast-class sets stay broadcast")
-    // over threshold (forced low) + Spark's own auto-broadcast disabled:
-    // the guard must NOT force a broadcast — the join plans shuffled, and
-    // at real scale Spark's size-guarded planner makes this exact call
-    withConf("spark.graft.index.tombstoneBroadcastMaxBytes" -> "1",
-             "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    // over Spark's threshold (here: no size is under it) nothing forces a
+    // broadcast — the join plans shuffled, the call an epoch that outgrew
+    // the threshold gets at real scale
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val slow = Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe)
       assert(slow.collect().map(_.toSeq).toSet == expected,
         "the fallback path must answer identically")
@@ -742,9 +741,9 @@ class IvfIndexSpec extends SparkSpec {
     val q = corpus.filter(SimQueries.QueryPred)
     // the checksummed local filesystem hides `.crc` files from listings; a
     // store that lists them (the raw local filesystem here, or an index
-    // copied with its sidecars) must not count them as tombstone data
-    withConf("spark.graft.index.tombstoneBroadcastMaxBytes" -> ((dataOnly + withCrc) / 2).toString,
-             "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    // copied with its sidecars) must not count them as tombstone data —
+    // Spark's file index sizes the epoch's scan without them
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> ((dataOnly + withCrc) / 2).toString,
              "fs.file.impl" -> classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName,
              "fs.file.impl.disable.cache" -> "true") {
       val df = Similarity.ivfTopKIndexed(spark, p, q, SimQueries.K, SimQueries.NProbe)
@@ -754,6 +753,32 @@ class IvfIndexSpec extends SparkSpec {
       assert(lines.nonEmpty && lines.forall(_.contains("Broadcast")),
         s"a data size under the threshold must stay broadcast:\n${lines.mkString("\n")}")
     }
+  }
+
+  test("a state that records its tombstone epoch's byte count still reads") {
+    val p = java.nio.file.Files.createTempDirectory("ivftombbytes").toString
+    Similarity.buildIvfIndex(corpus, SimQueries.ClusterCentPred, SimQueries.Dim, p)
+    val e = Similarity.deleteFromIvfIndex(spark, p,
+      corpus.filter(DeleteSpecPred).select("vec_id"))
+    val q = corpus.filter(SimQueries.QueryPred)
+    val expected = answers(p, q)
+    val st = Similarity.indexState(spark, p)
+    // the live state as a writer that recorded its epoch's data bytes wrote it
+    val f = java.nio.file.Paths.get(s"$p/_meta/v${st.version}")
+    val json = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    val withBytes = json.replace(s""""tombs":{"epoch":$e,""",
+      s""""tombs":{"epoch":$e,"bytes":1234,""")
+    assert(withBytes != json, s"precondition: the state names epoch $e: $json")
+    java.nio.file.Files.write(f, withBytes.getBytes("UTF-8"))
+    // (its checksum sidecar now describes the old bytes)
+    java.nio.file.Files.delete(f.resolveSibling(s".v${st.version}.crc"))
+    assert(Similarity.indexState(spark, p) == st)
+    assert(answers(p, q) == expected)
+    // the next commit writes the state without the field
+    Similarity.deleteFromIvfIndex(spark, p, corpus.filter("vec_id % 9 = 5").select("vec_id"))
+    val next = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$p/_meta/v${st.version + 1}")), "UTF-8")
+    assert(next.contains("\"tombs\"") && !next.contains("\"bytes\""), next)
   }
 
   test("re-deleting already-live ids skips the epoch write and returns the covering epoch") {
